@@ -73,7 +73,8 @@ def build_heavy_dir(spark, sf_dir: str, k: int) -> str:
         for i in range(1, k):
             c = df
             for key in keys:
-                c = c.withColumn(key, F.col(key) + i * SHIFT)
+                # long first: int32 keys would overflow under ANSI mode
+                c = c.withColumn(key, F.col(key).cast("long") + i * SHIFT)
             copies = copies.unionAll(c)
         copies.write.mode("overwrite").parquet(f"{out}/{table}.parquet")
     for table in VERBATIM:

@@ -24,6 +24,11 @@ join:
   wide vectors), emitting only the per-partition top-k candidates
   (the map-side 'heap'), finished by the same global window rank.
   Shuffle volume is O(partitions * queries * k), never O(n * queries).
+  The kernel is exact: BLAS-expansion distances with a rigorous error
+  radius prune every pair that cannot reach the top-k (lower-bound
+  pruning in the spirit of Odyssey/REPOSE), and only the survivors are
+  re-scored by the ``(q-b)^2`` diff cube. ``'numpy-gemm'`` ranks by the
+  expansion itself.
 
 At 100 TB the queries side stays a bounded sample (the algorithm's
 estimationRatio guarantees this — BASELINE.md complexity row), so the
@@ -33,7 +38,7 @@ broadcast is small and the scan side is never shuffled.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -47,11 +52,17 @@ from spark_relieffc_fselection_spark.functions.vector import euclidean_distance
 _MAX_BLOCK_CELLS = 4_000_000
 
 #: ``knn_strategy='auto'`` crossovers, in distance-kernel CELLS
-#: (n_queries x n_scan_rows x n_feat — the diff-cube volume one kNN
-#: call evaluates). Below _AUTO_GEMM_CELLS the bit-exact diff-cube
-#: kernel is sub-second and exactness is free; above it the BLAS
-#: expansion's ~10x kernel win (measured 30ms vs 300ms at 500x2000x64)
-#: dwarfs its ~1e-13 relative cancellation error. Above _AUTO_LSH_CELLS
+#: (n_queries x n_scan_rows x n_feat). Below _AUTO_GEMM_CELLS the exact
+#: tier runs outright. On typical data it now costs what gemm costs —
+#: it prunes with the same BLAS expansion and re-scores only the
+#: survivors (measured 51 ms exact vs 99 ms gemm at 500x2000x64, k=10,
+#: one BLAS thread) — but its cost depends on the data: every pair
+#: within the error radius of a query's k-th distance is re-scored, so
+#: on the worst case (all rows equal, every pair tied) it measured
+#: 3.1 s vs gemm's 0.14 s at 5000x1250x64. gemm's cost does not depend
+#: on the data, so above _AUTO_GEMM_CELLS 'auto' keeps trading ranks
+#: between near-tied distances (~1e-13 relative error) for that
+#: predictability. Above _AUTO_LSH_CELLS
 #: (~1e12 cells ≈ trillions of FLOPs per fit batch) even BLAS is
 #: minutes-scale — candidate generation must go sub-linear, so escalate
 #: to multi-table sign-LSH pruning. The reference's headline claim
@@ -85,13 +96,13 @@ def auto_lsh_tables(n_scan: int, n_feat: int) -> int:
 def resolve_auto_strategy(n_queries: int, n_scan: int, n_feat: int) -> str:
     """Pick the cheapest kNN strategy whose cost model fits the job.
 
-    Escalation: ``numpy`` (bit-exact diff cube) -> ``numpy-gemm`` (BLAS
-    expansion, exact ranks on integer grids, ~1e-13 relative error
-    otherwise) -> ``lsh`` (approximate sub-linear candidates). The
-    caller supplies the three cardinalities — they are knowable without
-    extra jobs wherever the fit already profiled the data (fit_relief
-    knows sampled_size, n_batches and n_feat from its one profiling
-    pass)."""
+    Escalation: ``numpy`` (exact: diff-cube distances, BLAS-pruned) ->
+    ``numpy-gemm`` (BLAS expansion, exact ranks on integer grids, ~1e-13
+    relative error otherwise) -> ``lsh`` (approximate sub-linear
+    candidates). The caller supplies the three cardinalities — they are
+    knowable without extra jobs wherever the fit already profiled the
+    data (fit_relief knows sampled_size, n_batches and n_feat from its
+    one profiling pass)."""
     cells = max(n_queries, 1) * max(n_scan, 1) * max(n_feat, 1)
     if cells <= _AUTO_GEMM_CELLS:
         return "numpy"
@@ -371,86 +382,249 @@ def _candidates_numpy(
     exclude_self: bool,
     gemm: bool = False,
 ) -> DataFrame:
-    """Arrow-batched blockwise scan emitting per-partition top-k.
-
-    ``gemm=False`` (default): direct ``(q-b)^2`` diff cube — bit-exact
-    against the SQL fold under any input, hence safe for oracle-gated
-    rank comparisons.
-
-    ``gemm=True``: the ``|q|^2 - 2 q.b + |b|^2`` expansion via a BLAS
-    matmul — ~10x faster (measured 30ms vs 300ms for 500x2000x64) and
-    the 100 TB scale path, where the kernel dominates wall time. Its
-    cancellation error (~1e-13 relative) can flip ranks between
-    *near-tied distinct* distances, so use it where that is impossible
-    or immaterial: integer-valued coordinates (products and sums are
-    exact in float64 — identical ranks guaranteed, e.g. discretized
-    features) or approximate/scale paths not gated on exact ranks.
-    Exact-duplicate pairs clamp to distance 0 via ``maximum(d2, 0)``.
-    """
+    """Arrow-batched blockwise scan emitting per-partition top-k; the
+    per-partition work is :func:`knn_scan`."""
     spark = instances.sparkSession
-    qrows = queries.select(id_col, features_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)  # (Q, d)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    out_schema = f"{query_id_col} long, neighbor_id long, distance double"
+    bc = spark.sparkContext.broadcast(_query_matrix(queries, id_col, features_col))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, mat = bc.value
-        nq = len(ids)
-        if nq == 0:
+        if len(ids) == 0:
             return
-        d = mat.shape[1] if mat.ndim == 2 else 1
-        # Running per-partition candidates: keep at most k per query.
-        best_d = np.full((nq, k), np.inf)
-        best_i = np.full((nq, k), -1, dtype=np.int64)
-        # Chunk so the intermediate stays bounded: the diff cube is
-        # (Q, B, d) cells, but gemm's intermediates (q.n^T and d2) are
-        # only (Q, B) — its chunks can be d times larger, which also
-        # divides the per-chunk top-k merge overhead by d.
-        chunk = max(1, _MAX_BLOCK_CELLS // max(nq * (1 if gemm else d), 1))
-        qq = np.einsum("qd,qd->q", mat, mat) if gemm else None
-        for pdf in batches:
-            n_ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-            n_mat_all = np.array(list(pdf[features_col]), dtype=np.float64)
+        q_id, n_id, dist = knn_scan(
+            ids,
+            mat,
+            (
+                (
+                    pdf[id_col].to_numpy(dtype=np.int64),
+                    np.array(list(pdf[features_col]), dtype=np.float64),
+                )
+                for pdf in batches
+            ),
+            k,
+            exclude_self,
+            gemm,
+        )
+        yield pd.DataFrame({query_id_col: q_id, "neighbor_id": n_id, "distance": dist})
+
+    out_schema = f"{query_id_col} long, neighbor_id long, distance double"
+    return instances.select(id_col, features_col).mapInPandas(scan, schema=out_schema)
+
+
+def _query_matrix(
+    queries: DataFrame, id_col: str, features_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The broadcast side as ``(ids (Q,), features (Q, d))``, fetched as
+    Arrow: the matrix is a reshape of the list column's flat values,
+    with no per-Row Python objects. Null ids, null or ragged feature
+    arrays and null elements raise instead of being reshaped."""
+    tbl = queries.select(id_col, features_col).toArrow()
+    ids, feats = tbl.column(0), tbl.column(1).combine_chunks()
+    if ids.null_count:
+        raise ValueError(f"knn_join: {ids.null_count} null {id_col!r} value(s) on the query side")
+    if feats.null_count:
+        raise ValueError(
+            f"knn_join: {feats.null_count} null {features_col!r} array(s) on the query side"
+        )
+    lengths = feats.value_lengths().to_numpy()
+    d = int(lengths[0]) if len(lengths) else 0
+    if (lengths != d).any():
+        raise ValueError(
+            f"knn_join: ragged {features_col!r} arrays on the query side "
+            f"(lengths {lengths.min()}..{lengths.max()})"
+        )
+    values = feats.flatten()
+    if values.null_count:
+        raise ValueError(
+            f"knn_join: {values.null_count} null element(s) in {features_col!r} on the query side"
+        )
+    mat = values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return (
+        ids.to_numpy().astype(np.int64, copy=False),
+        mat.reshape(len(lengths), d),
+    )
+
+
+def knn_scan(
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    blocks: Iterable[tuple[np.ndarray, np.ndarray]],
+    k: int,
+    exclude_self: bool = True,
+    gemm: bool = False,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One scan partition's top-k per query, by (distance, neighbor_id).
+
+    ``q_ids``/``q_mat`` are the (Q,) ids and (Q, d) features of the
+    queries; ``blocks`` yields ``(ids (B,), features (B, d))`` scan
+    blocks. Returns ``(query_id, neighbor_id, distance)`` arrays with
+    at most k rows per query; pairs with equal ids are excluded when
+    ``exclude_self``, and non-finite distances are never emitted.
+
+    ``gemm=False``: the squared distance of every emitted pair is the
+    diff cube's einsum reduction of ``(q - n)^2``, a deterministic
+    function of the two vectors, so the output does not depend on how
+    the scan side is partitioned or chunked. The BLAS expansion only
+    prunes (see ``_exact_merge``): it decides which pairs get that
+    exact re-score, never a distance.
+
+    It is not bit-exact against the ``'sql'`` strategy's left-to-right
+    fold: einsum's unrolled reduction rounds differently (measured: 75%
+    of pairs differ in the last bits, at most 1.1e-15 relative on the
+    squared distance, 300x300x64 with row scales up to 1e3). Both
+    errors are bounded by gamma_d relative, so ranks can differ from
+    ``'sql'`` only between distances that tie within rounding, and are
+    identical wherever every partial sum is exact (integer grids).
+
+    ``gemm=True``: the distances themselves come from the expansion
+    ``|q|^2 - 2 q.n + |n|^2`` (clamped at 0, so exact duplicates land on
+    0). Its cancellation error (~1e-13 relative to |q|^2 + |n|^2) can
+    flip ranks between *near-tied distinct* distances, so use it where
+    that is impossible or immaterial: integer-valued coordinates
+    (products and sums are exact in float64, e.g. discretized features)
+    or approximate/scale paths not gated on exact ranks.
+    """
+    nq = len(q_ids)
+    best_d = np.full((nq, k), np.inf)
+    best_i = np.full((nq, k), -1, dtype=np.int64)
+    # Both kernels keep only (Q, B) intermediates, so chunks hold
+    # _MAX_BLOCK_CELLS pairs.
+    chunk = max(1, _MAX_BLOCK_CELLS // max(nq, 1))
+    qq = np.einsum("qd,qd->q", q_mat, q_mat)
+    # NaN/inf coordinates are valid input: their distances come out
+    # NaN/inf and are never emitted.
+    with np.errstate(invalid="ignore", over="ignore"):
+        for n_ids_all, n_mat_all in blocks:
             for s in range(0, len(n_ids_all), chunk):
                 n_ids = n_ids_all[s : s + chunk]
                 n_mat = n_mat_all[s : s + chunk]
-                if gemm:
-                    nn = np.einsum("bd,bd->b", n_mat, n_mat)
-                    d2 = qq[:, None] - 2.0 * (mat @ n_mat.T) + nn[None, :]
-                    np.maximum(d2, 0.0, out=d2)
-                else:
-                    diff = mat[:, None, :] - n_mat[None, :, :]
-                    d2 = np.einsum("qbd,qbd->qb", diff, diff)
-                if exclude_self:
-                    d2[ids[:, None] == n_ids[None, :]] = np.inf
-                merged_d = np.concatenate([best_d, d2], axis=1)
-                merged_i = np.concatenate(
-                    [best_i, np.broadcast_to(n_ids, (nq, len(n_ids)))], axis=1
+                nn = np.einsum("bd,bd->b", n_mat, n_mat)
+                self_mask = (
+                    q_ids[:, None] == n_ids[None, :] if exclude_self else None
                 )
-                # Deterministic truncation by (distance, neighbor_id):
-                # argpartition alone keeps an ARBITRARY subset among
-                # distances tied at the k boundary, so a tied lower-id
-                # neighbor could be dropped in-partition and never
-                # recovered by the global window rank. lexsort's last
-                # key is primary -> sort by distance, then id.
-                order = np.lexsort((merged_i, merged_d), axis=1)
-                sel = order[:, :k]
-                rows = np.arange(nq)[:, None]
-                best_d = merged_d[rows, sel]
-                best_i = merged_i[rows, sel]
-        # isfinite: self-pairs are masked with inf distance but keep a
-        # valid id — they must not leak out as rank-k "neighbors" when a
-        # partition has fewer than k rows.
-        valid = (best_i >= 0) & np.isfinite(best_d)
-        qi, slot = np.nonzero(valid)
-        yield pd.DataFrame(
-            {
-                query_id_col: ids[qi],
-                "neighbor_id": best_i[qi, slot],
-                "distance": np.sqrt(best_d[qi, slot]),
-            }
-        )
+                if gemm:
+                    d2 = qq[:, None] - 2.0 * (q_mat @ n_mat.T) + nn[None, :]
+                    np.maximum(d2, 0.0, out=d2)
+                    if self_mask is not None:
+                        d2[self_mask] = np.inf
+                    best_d, best_i = _dense_merge(best_d, best_i, d2, n_ids, k)
+                else:
+                    best_d, best_i = _exact_merge(
+                        best_d, best_i, q_mat, qq, n_mat, n_ids, nn, self_mask, k
+                    )
+    # isfinite: self-pairs are masked with inf distance but keep a valid
+    # id (gemm) — they must not leak out as rank-k "neighbors" when a
+    # partition has fewer than k rows.
+    qi, slot = np.nonzero((best_i >= 0) & np.isfinite(best_d))
+    return q_ids[qi], best_i[qi, slot], np.sqrt(best_d[qi, slot])
 
-    return instances.select(id_col, features_col).mapInPandas(scan, schema=out_schema)
+
+def _dense_merge(
+    best_d: np.ndarray, best_i: np.ndarray, d2: np.ndarray, n_ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Running top-k merged with a full (Q, B) distance chunk."""
+    nq = len(best_d)
+    merged_d = np.concatenate([best_d, d2], axis=1)
+    merged_i = np.concatenate([best_i, np.broadcast_to(n_ids, (nq, len(n_ids)))], axis=1)
+    # Deterministic truncation by (distance, neighbor_id): argpartition
+    # alone keeps an ARBITRARY subset among distances tied at the k
+    # boundary, so a tied lower-id neighbor could be dropped in-partition
+    # and never recovered by the global window rank. lexsort's last key
+    # is primary -> sort by distance, then id.
+    sel = np.lexsort((merged_i, merged_d), axis=1)[:, :k]
+    rows = np.arange(nq)[:, None]
+    return merged_d[rows, sel], merged_i[rows, sel]
+
+
+def _exact_merge(
+    best_d: np.ndarray,
+    best_i: np.ndarray,
+    q_mat: np.ndarray,
+    qq: np.ndarray,
+    n_mat: np.ndarray,
+    n_ids: np.ndarray,
+    nn: np.ndarray,
+    self_mask: np.ndarray | None,
+    k: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Running top-k merged with one chunk, re-scoring by the diff cube
+    only the pairs that the BLAS expansion cannot rule out.
+
+    Bound: the diff cube and the expansion ``|q|^2 - 2 q.n + |n|^2``
+    each err from the exact squared distance by at most
+    gamma_{d+2} (|q| + |n|)^2 <= 2 gamma_{d+2} (|q|^2 + |n|^2), in any
+    summation order, FMA or not. The expansion shifted by the radius
+    ``e (|q|^2 + |n|^2)``, ``e = 8 gamma_{d+3}``, therefore brackets the
+    diff cube's value with 2x slack, which also covers the rounding of
+    the shifted sums themselves. The radius splits per row, so the
+    brackets cost two (Q, B) sums like the expansion itself.
+    ``finfo.tiny`` covers underflow (a few d half-ulps of the smallest
+    subnormal). Rows whose squared norm is not below 2^1018 (NaN/inf
+    coordinates, or overflow risk in either kernel) get the bracket
+    (-inf, inf).
+
+    Per query, ``ub`` is the smaller of the k-th smallest upper bound in
+    the chunk and the running k-th best exact distance. A pair whose
+    lower bound exceeds ub has an exact distance strictly above that of
+    k pairs that are kept or re-scored, so it can never enter the top-k
+    and is skipped. Self-pairs never enter (the diff-cube kernel gave
+    them inf, which is never emitted either)."""
+    # Higham's gamma_m = m u / (1 - m u), u = 2^-53, at m = d + 3
+    mu = (q_mat.shape[1] + 3) * 2.0**-53
+    e = 8.0 * mu / (1.0 - mu)
+    tiny = np.finfo(np.float64).tiny
+    g = q_mat @ n_mat.T
+    g *= -2.0
+    hi = g + (qq * (1.0 + e) + tiny)[:, None]
+    hi += (nn * (1.0 + e) + tiny)[None, :]
+    lo = np.add(g, (qq * (1.0 - e) - tiny)[:, None], out=g)
+    lo += (nn * (1.0 - e) - tiny)[None, :]
+    q_wild, n_wild = ~(qq < 2.0**1018), ~(nn < 2.0**1018)
+    hi[q_wild] = np.inf
+    hi[:, n_wild] = np.inf
+    lo[q_wild] = -np.inf
+    lo[:, n_wild] = -np.inf
+    if self_mask is not None:
+        hi[self_mask] = np.inf
+    if hi.shape[1] >= k:
+        kth_hi = np.partition(hi, k - 1, axis=1)[:, k - 1]
+    else:
+        kth_hi = np.full(len(hi), np.inf)
+    # best_d is never NaN: a NaN distance sorts after the inf fillers.
+    ub = np.minimum(kth_hi, best_d[:, k - 1])
+    keep = lo <= ub[:, None]
+    if self_mask is not None:
+        keep &= ~self_mask
+    qi, bi = np.nonzero(keep)
+    if not len(qi):
+        return best_d, best_i
+    d2 = np.empty(len(qi))
+    step = max(1, _MAX_BLOCK_CELLS // max(q_mat.shape[1], 1))
+    for s in range(0, len(qi), step):
+        diff = q_mat.take(qi[s : s + step], axis=0)
+        diff -= n_mat.take(bi[s : s + step], axis=0)
+        d2[s : s + step] = np.einsum("pd,pd->p", diff, diff)
+    return _sparse_merge(best_d, best_i, qi, n_ids[bi], d2, k)
+
+
+def _sparse_merge(
+    best_d: np.ndarray,
+    best_i: np.ndarray,
+    qi: np.ndarray,
+    cand_i: np.ndarray,
+    cand_d: np.ndarray,
+    k: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Running top-k merged with a ragged candidate list (query row,
+    neighbor id, distance), by (distance, neighbor_id) per query."""
+    nq = len(best_d)
+    all_q = np.concatenate([np.repeat(np.arange(nq), k), qi])
+    all_d = np.concatenate([best_d.ravel(), cand_d])
+    all_i = np.concatenate([best_i.ravel(), cand_i])
+    order = np.lexsort((all_i, all_d, all_q))
+    # Every query owns at least its k running slots, so its first k
+    # entries in sorted order start at its group offset.
+    counts = np.bincount(all_q, minlength=nq)
+    starts = np.cumsum(counts) - counts
+    take = order[(starts[:, None] + np.arange(k)).ravel()]
+    return all_d[take].reshape(nq, k), all_i[take].reshape(nq, k)

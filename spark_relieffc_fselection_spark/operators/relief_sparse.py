@@ -400,7 +400,14 @@ def sparse_pair_feature_table(
 
 def _pair_bin_counts(neighbors: DataFrame, labels: DataFrame) -> DataFrame:
     """classCounter from the neighbor table: counts EVERY pair, even
-    ones whose rows are fully absent from the sparse long table."""
+    ones whose rows are fully absent from the sparse long table.
+
+    Invariant: both label joins are inner joins that must keep every
+    neighbor row (query and neighbor ids are drawn from ``labels``), so
+    ``sum(bin_cnt) == neighbors.count()``. _fit_relief_sparse_batched
+    recovers ``n_pairs`` from these counts instead of counting the
+    neighbor table; a neighbor id outside ``labels`` would silently
+    undercount it."""
     return (
         neighbors.select("query_id", "neighbor_id")
         .join(
@@ -722,6 +729,7 @@ def _fit_relief_sparse_batched(
             for r in probe_rows
             if r["tag"] == 1
         }
+        # == neigh.count(): _pair_bin_counts is row-preserving
         n_pairs = sum(pc.values())
         total_pairs += n_pairs
         rel_b, marg_b = _collapse_bins_local(

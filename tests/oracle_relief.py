@@ -24,6 +24,44 @@ def knn_oracle(X: np.ndarray, k: int, exclude_self: bool = True) -> list[list[in
     return out
 
 
+def diffcube_scan_oracle(
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    blocks,
+    k: int,
+    exclude_self: bool = True,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The exact numpy kNN scan as it was before BLAS pruning: the full
+    (q - n)^2 diff cube in chunks of 4e6 // (Q * d) scan rows, merged into a running top-k by (distance, neighbor_id) after
+    each chunk. Same signature and output as operators.knn.knn_scan."""
+    nq = len(q_ids)
+    best_d = np.full((nq, k), np.inf)
+    best_i = np.full((nq, k), -1, dtype=np.int64)
+    if nq:
+        d = q_mat.shape[1] if q_mat.ndim == 2 else 1
+        chunk = max(1, 4_000_000 // max(nq * d, 1))
+        for n_ids_all, n_mat_all in blocks:
+            for s in range(0, len(n_ids_all), chunk):
+                n_ids = n_ids_all[s : s + chunk]
+                n_mat = n_mat_all[s : s + chunk]
+                diff = q_mat[:, None, :] - n_mat[None, :, :]
+                d2 = np.einsum("qbd,qbd->qb", diff, diff)
+                if exclude_self:
+                    d2[q_ids[:, None] == n_ids[None, :]] = np.inf
+                merged_d = np.concatenate([best_d, d2], axis=1)
+                merged_i = np.concatenate(
+                    [best_i, np.broadcast_to(n_ids, (nq, len(n_ids)))], axis=1
+                )
+                order = np.lexsort((merged_i, merged_d), axis=1)
+                sel = order[:, :k]
+                rows = np.arange(nq)[:, None]
+                best_d = merged_d[rows, sel]
+                best_i = merged_i[rows, sel]
+    valid = (best_i >= 0) & np.isfinite(best_d)
+    qi, slot = np.nonzero(valid)
+    return q_ids[qi], best_i[qi, slot], np.sqrt(best_d[qi, slot])
+
+
 def relief_relevance_oracle(
     X: np.ndarray,
     y: np.ndarray,

@@ -1,9 +1,12 @@
+import zlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from spark_relieffc_fselection_spark.operators.knn import knn_join
-from tests.oracle_relief import knn_oracle
+from spark_relieffc_fselection_spark.operators import knn as knn_mod
+from spark_relieffc_fselection_spark.operators.knn import knn_join, knn_scan
+from tests.oracle_relief import diffcube_scan_oracle, knn_oracle
 
 
 @pytest.fixture(scope="module")
@@ -247,3 +250,100 @@ def test_multiprobe_recall_contract_on_continuous_1e6(spark):
     assert r1 >= 0.60, f"Hamming-1 recall {r1:.3f} fell out of the 0.70 band"
     assert r2 >= r1, f"radius-2 recall {r2:.3f} < radius-1 {r1:.3f} (monotonicity)"
     assert r2 >= 0.85, f"Hamming-2 recall {r2:.3f} below its measured 0.96 band"
+
+
+def _scan_case(rng, family):
+    """One random partition: queries, scan blocks and k for a family."""
+    d = int(rng.integers(1, 12))
+    n = int(rng.integers(0, 50))
+    nq = int(rng.integers(1, 25))
+    k = int(rng.integers(1, 6))
+    scale = {
+        "column_scales": 10.0 ** rng.uniform(-6, 6, size=d),
+        # overflow and underflow territory for both kernels
+        "extreme_magnitudes": 10.0 ** rng.choice([-170, -155, 150, 153, 154, 300], size=d),
+    }.get(family, 1.0)
+    # far from the origin: the BLAS expansion cancels catastrophically
+    offset = 1e8 if family == "large_offset" else 0.0
+
+    def draw(m):
+        if family == "int_grid_ties":
+            return rng.integers(-2, 3, size=(m, d)).astype(float)
+        x = rng.normal(size=(m, d)) * scale + offset
+        if family == "non_finite":
+            x[rng.random(x.shape) < 0.05] = rng.choice([np.nan, np.inf, -np.inf])
+        return x
+
+    X = draw(n)
+    if family == "int_grid_ties" and n:
+        X[rng.integers(0, n, size=n // 3)] = X[0]  # duplicate rows
+    ids = np.arange(n, dtype=np.int64)
+    if family == "duplicate_ids":
+        ids = rng.integers(0, max(n // 2, 1), size=n).astype(np.int64)
+    # queries: scan rows (self-pairs exist) or fresh points of the family
+    if n and rng.random() < 0.6:
+        pick = rng.integers(0, n, size=nq)
+        q_ids, q_mat = ids[pick], X[pick].copy()
+    else:
+        q_ids, q_mat = np.arange(nq, dtype=np.int64) + 1000, draw(nq)
+    max_block = k if family == "blocks_below_k" else 12
+    sizes, rest = [], n
+    while rest > 0:
+        sizes.append(min(rest, int(rng.integers(1, max(max_block, 2)))))
+        rest -= sizes[-1]
+    bounds = np.cumsum([0] + sizes)
+    blocks = [(ids[a:b], X[a:b]) for a, b in zip(bounds[:-1], bounds[1:])]
+    return q_ids, q_mat, blocks, k
+
+
+@pytest.mark.parametrize("max_cells", [4_000_000, 40])
+@pytest.mark.parametrize("exclude_self", [True, False])
+@pytest.mark.parametrize(
+    "family",
+    [
+        "normal",
+        "int_grid_ties",
+        "duplicate_ids",
+        "column_scales",
+        "large_offset",
+        "extreme_magnitudes",
+        "non_finite",
+        "blocks_below_k",
+    ],
+)
+def test_knn_scan_bit_identical_to_diff_cube(monkeypatch, family, exclude_self, max_cells):
+    """The exact scan prunes with BLAS distances and re-scores the
+    survivors by the diff cube: its (query_id, neighbor_id, distance)
+    rows must equal the full diff-cube scan's bit for bit — on ties,
+    duplicate rows and ids, 1e-6..1e6 column scales, points far from the
+    origin (BLAS cancellation), overflow/underflow
+    magnitudes, NaN/inf coordinates and blocks smaller than k. A tiny
+    _MAX_BLOCK_CELLS runs the multi-chunk merge."""
+    monkeypatch.setattr(knn_mod, "_MAX_BLOCK_CELLS", max_cells)
+    rng = np.random.default_rng(zlib.crc32(f"{family}/{exclude_self}/{max_cells}".encode()))
+    for _ in range(40):
+        q_ids, q_mat, blocks, k = _scan_case(rng, family)
+        with np.errstate(all="ignore"):
+            want = diffcube_scan_oracle(q_ids, q_mat, blocks, k, exclude_self)
+        got = knn_scan(q_ids, q_mat, blocks, k, exclude_self)
+        for g, w in zip(got, want):
+            assert g.dtype == w.dtype and np.array_equal(g, w)
+
+
+@pytest.mark.parametrize(
+    "rows, match",
+    [
+        ([(0, [0.0, 1.0]), (1, [1.0])], "ragged"),
+        ([(0, [0.0, 1.0]), (1, None)], "null 'features' array"),
+        ([(0, [0.0, 1.0]), (1, [1.0, None])], "null element"),
+    ],
+)
+def test_knn_numpy_malformed_query_side_raises_named_error(spark, rows, match):
+    df = spark.createDataFrame(rows, "id long, features array<double>")
+    with pytest.raises(ValueError, match=match):
+        knn_join(df, df, 1, strategy="numpy")
+
+
+def test_knn_numpy_empty_query_side(spark, small_vectors):
+    df, _ = small_vectors
+    assert knn_join(df, df.limit(0), 3, strategy="numpy").count() == 0

@@ -396,3 +396,29 @@ def test_decimal_cast_replay_parity_probe(spark):
         if r["d"] != Decimal(repr(r["x"])).quantize(q18, ROUND_HALF_UP)
     ]
     assert not mismatches, mismatches[:5]
+
+
+def test_dense_numpy_fit_job_count_pinned(spark, labeled):
+    """A single-batch dense fit with the exact numpy kNN issues 10 Spark
+    jobs, counted by the status tracker under a dedicated job group.
+    The kNN kernel runs inside one mapInPandas stage and the query side
+    is one Arrow fetch, so kernel changes must leave this count alone."""
+    df, _, _ = labeled
+    sc = spark.sparkContext
+    group = "test-dense-numpy-fit-jobs"
+    sc.setJobGroup(group, "dense numpy fit job-count pin")
+    try:
+        fit_relief(
+            df,
+            num_top_features=2,
+            num_neighbors=5,
+            estimation_ratio=1.0,
+            batch_size=1.0,
+            redundancy_removal=False,
+            seed=42,
+            knn_strategy="numpy",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10

@@ -75,6 +75,22 @@ def test_sparse_pair_table_matches_dense_relevance(spark, sparse_fixture):
         assert abs(dense_w[f] - sparse_w.get(f, 0.0)) < 1e-9, f
 
 
+def test_pair_bin_counts_preserve_every_neighbor_row(spark, sparse_fixture):
+    """_pair_bin_counts' label joins must keep every neighbor row: the
+    batched sparse fit recovers n_pairs as sum(bin_cnt) instead of
+    counting the neighbor table."""
+    from spark_relieffc_fselection_spark.operators.relief_sparse import _pair_bin_counts
+
+    df, _, _ = sparse_fixture
+    long_df, labels = to_long_form(df)
+    neigh = sparse_knn_join(long_df, labels, labels.select("id"), 5).cache()
+    n_rows = neigh.count()
+    bins = _pair_bin_counts(neigh, labels).agg(F.sum("bin_cnt")).first()[0]
+    neigh.unpersist()
+    assert n_rows > 0
+    assert bins == n_rows
+
+
 def test_sparse_pair_table_union_matches_full_outer(spark, sparse_fixture):
     """r12 rewrite pin: sparse_pair_feature_table's tagged-union +
     max() aggregate must reproduce the former full_outer-join
