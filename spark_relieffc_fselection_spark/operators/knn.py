@@ -512,10 +512,12 @@ def knn_scan(
                     best_d, best_i = _exact_merge(
                         best_d, best_i, q_mat, qq, n_mat, n_ids, nn, self_mask, k
                     )
-    # isfinite: self-pairs are masked with inf distance but keep a valid
-    # id (gemm) — they must not leak out as rank-k "neighbors" when a
-    # partition has fewer than k rows.
-    qi, slot = np.nonzero((best_i >= 0) & np.isfinite(best_d))
+    # isfinite alone separates real neighbors: unfilled slots carry
+    # distance inf (their -1 id is no sentinel — caller ids may be
+    # negative), and self-pairs are masked with inf distance but keep a
+    # valid id (gemm) — they must not leak out as rank-k "neighbors"
+    # when a partition has fewer than k rows.
+    qi, slot = np.nonzero(np.isfinite(best_d))
     return q_ids[qi], best_i[qi, slot], np.sqrt(best_d[qi, slot])
 
 

@@ -44,7 +44,10 @@ reference's dense per-feature row-vector memory hazard (SURVEY §7.3).
 from __future__ import annotations
 
 import math
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
+from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -130,17 +133,6 @@ def explode_pairs(pairs: DataFrame) -> DataFrame:
     )
 
 
-def pair_feature_table(
-    batch: DataFrame,
-    neighbors: DataFrame,
-    id_col: str = "id",
-    features_col: str = "features",
-    label_col: str = "label",
-) -> DataFrame:
-    """``explode_pairs(pair_table(...))`` — the one-shot convenience."""
-    return explode_pairs(pair_table(batch, neighbors, id_col, features_col, label_col))
-
-
 def relevance_weights(
     long_pairs: DataFrame,
     priors: dict[float, float],
@@ -181,23 +173,6 @@ def relevance_weights(
     return _collapse_bins(bin_sums, prior_df, pair_counts)
 
 
-def relevance_from_bins(
-    bin_stats: DataFrame,
-    priors: dict[float, float],
-    pair_counts: DataFrame,
-) -> DataFrame:
-    """The A4 collapse applied to a precomputed ``feature_bin_stats``
-    frame (any frame with feature_idx, n_label, same_class, bin_sum)."""
-    spark = bin_stats.sparkSession
-    prior_df = F.broadcast(
-        spark.createDataFrame(
-            [(float(k), float(v)) for k, v in priors.items()],
-            "n_label double, prior double",
-        )
-    )
-    return _collapse_bins(bin_stats, prior_df, pair_counts)
-
-
 def _collapse_bins(
     bin_sums: DataFrame, prior_df: DataFrame, pair_counts: DataFrame
 ) -> DataFrame:
@@ -228,7 +203,7 @@ def feature_bin_stats(
 
     Returns ``(feature_idx, n_label, same_class, bin_sum, vote_sum,
     n_collisions)``; ~nFeat x nClasses x 2 rows, tiny at any scale.
-    ``relevance_from_bins`` collapses ``bin_sum``; summing ``vote_sum``
+    ``_collapse_bins_local`` collapses ``bin_sum``; summing ``vote_sum``
     / ``n_collisions`` over bins reproduces ``marginal_counts`` and the
     per-feature collision counts exactly (decimal addition is
     associative, so the two-level sum is bit-identical).
@@ -258,7 +233,7 @@ def per_feature_stats(
     marginal collision mass (A5), and collision counts.
 
     Returns ``(feature_idx, relevance, marginal, n_collisions)``.
-    Decimal-identical to running ``relevance_from_bins`` plus the two
+    Decimal-identical to running ``relevance_weights`` plus the two
     marginal aggregations separately (the contributions summed are the
     same values in the same decimal type; only the number of Spark jobs
     changes). Dense-only: uses ``n_rows`` as the bin's pair count.
@@ -316,10 +291,10 @@ def marginal_counts(collisions: DataFrame) -> DataFrame:
     )
 
 
-#: joint_counts uses the grouped-combos plan (one shuffle, per-pair
-#: arrays) when the per-pair collision count is bounded by this many
-#: features; wider spaces fall back to the self-join plan whose memory
-#: per task is O(1) rows.
+#: joint_counts_from_pairs generates per-pair combination arrays when
+#: the per-pair collision count is bounded by this many features; wider
+#: spaces fall back to the self-join plan whose memory per task is O(1)
+#: rows.
 _JOINT_COMBOS_MAX_FEATURES = 16_384
 
 
@@ -327,7 +302,6 @@ def joint_counts(
     collisions: DataFrame,
     top_features: list[int] | None,
     continuous: bool,
-    num_features: int | None = None,
 ) -> DataFrame:
     """Pairwise co-occurrence COO table (SURVEY A6).
 
@@ -338,25 +312,16 @@ def joint_counts(
     two features' current votes (continuous) or the left vote
     (discrete; identical since discrete votes are all 1.0).
 
-    Physical strategy: when the per-pair collision set is provably
-    small (``num_features`` <= _JOINT_COMBOS_MAX_FEATURES), group the
-    collisions into one array per pair and generate combinations
-    in-stage — ONE shuffle of the narrow collision rows, and the
-    combination explosion feeds straight into partial aggregation
-    (never shuffled). Otherwise self-join on the pair id (two shuffles
-    but O(1) memory per row) — the safe plan for millions of features.
+    Physical plan: self-join of the collision rows on the pair id (two
+    shuffles but O(1) memory per row), the safe plan for the sparse
+    fits' millions-wide feature spaces.
     """
     if top_features is not None and len(top_features) == 0:
         spark = collisions.sparkSession
         return spark.createDataFrame([], "f1 int, f2 int, joint double")
-    use_combos = (
-        num_features is not None and num_features <= _JOINT_COMBOS_MAX_FEATURES
+    return _mirror_and_sum(
+        _joint_selfjoin(collisions, top_features, continuous), continuous
     )
-    if use_combos:
-        ordered = _joint_combos(collisions, top_features, continuous)
-    else:
-        ordered = _joint_selfjoin(collisions, top_features, continuous)
-    return _mirror_and_sum(ordered, continuous)
 
 
 def joint_counts_from_pairs(
@@ -505,49 +470,6 @@ def _mirror_and_sum(ordered: DataFrame, continuous: bool) -> DataFrame:
     ).select("e.f1", "e.f2", "e.j_part")
     return mirrored.groupBy("f1", "f2").agg(
         F.sum("j_part").cast("double").alias("joint")
-    )
-
-
-def _joint_combos(
-    collisions: DataFrame, top_features: list[int] | None, continuous: bool
-) -> DataFrame:
-    # The grouped per-pair table is tiny in BYTES, so AQE coalesces it
-    # to ~1 partition — but the combination explode below multiplies
-    # each row by O(|top| * collisions), so a byte-based coalesce here
-    # serializes the whole expensive stage. Spread the compact rows
-    # across cores first; the shuffle moves only ~1 array row per pair.
-    par = collisions.sparkSession.sparkContext.defaultParallelism
-    # Discrete votes are all 1.0 and the downstream aggregation counts
-    # rows — collect bare feature indices (half the array bytes, no
-    # struct boxing in the explode).
-    elem = (
-        F.struct(F.col("feature_idx").alias("f"), F.col("vote").alias("v"))
-        if continuous
-        else F.col("feature_idx")
-    )
-    fv = (
-        collisions.groupBy("query_id", "neighbor_id")
-        .agg(F.collect_list(elem).alias("fv"))
-        .repartition(par, "query_id", "neighbor_id")
-    )
-    get_f = (lambda s: s["f"]) if continuous else (lambda s: s)
-    if top_features is not None:
-        top_lit = F.array(*[F.lit(int(f)) for f in top_features])
-        left = F.filter("fv", lambda s: F.array_contains(top_lit, get_f(s)))
-    else:
-        left = F.col("fv")
-    ex = (
-        fv.select(F.explode(left).alias("a"), "fv")
-        .select("a", F.explode("fv").alias("b"))
-        .filter(get_f(F.col("a")) != get_f(F.col("b")))
-    )
-    if continuous:
-        jv = (F.col("a.v") + F.col("b.v")) / 2.0
-        return ex.select(
-            F.col("a.f").alias("f1"), F.col("b.f").alias("f2"), jv.alias("jv")
-        )
-    return ex.select(
-        F.col("a").alias("f1"), F.col("b").alias("f2"), F.lit(1.0).alias("jv")
     )
 
 
@@ -705,7 +627,7 @@ def std_ranking(relevance: np.ndarray, num_top_features: int) -> list[int]:
     return [int(i) for i in order[: min(num_top_features, len(relevance))]]
 
 
-#: Feature-space width beyond which the SPARSE fit keeps its driver
+#: Feature-space width beyond which a fit keeps its driver
 #: state COO (dict keyed by active feature) instead of dense ndarrays:
 #: at the reference's own 30M-feature claim (README.md:11, kddb) a
 #: np.zeros(n_features) is a ~240 MB allocation PER ARRAY on the
@@ -858,8 +780,8 @@ def greedy_select_coo(
 class ReliefFitResult:
     """Everything fit produces; arrays are indexed by feature_idx.
 
-    ``relevance`` is a dense ndarray except on the sparse path past
-    ``DENSE_RELEVANCE_MAX_FEATURES``, where it is a
+    ``relevance`` is a dense ndarray except past
+    ``DENSE_RELEVANCE_MAX_FEATURES`` features, where it is a
     :class:`SparseRelevance` (same indexing/len contract, O(active)
     driver memory — VERDICT r8 #7)."""
 
@@ -952,6 +874,248 @@ def _collapse_bins_local(
     )
 
 
+def _class_priors(
+    label_counts: list[tuple[float, int]], fit_name: str
+) -> tuple[int, dict[float, float]]:
+    """(n_instances, priors) from per-class ``(label, count)`` rows — the
+    one place every fit derives its class priors, so every fit rejects
+    an empty dataset the same way."""
+    if not label_counts:
+        raise ValueError(
+            f"{fit_name} requires a non-empty dataset "
+            "(the reference would NPE on head(); we fail with intent)"
+        )
+    n = sum(int(c) for _, c in label_counts)
+    return n, {float(lbl): c / n for lbl, c in label_counts}
+
+
+class _Neighbourhood(NamedTuple):
+    """One batch as the engine consumes it, whatever the neighbourhood
+    source: the ``feature_bin_stats`` frame, the pair-level
+    ``(n_label, same_class, bin_cnt)`` counts, the joint COO for a
+    given top-feature scope, and the caches to release after the
+    batch."""
+
+    bins: DataFrame
+    pair_counts: DataFrame
+    joint: Callable[[list[int]], DataFrame]
+    caches: tuple[DataFrame, ...]
+
+
+def _probe_batch(
+    bins: DataFrame,
+    pair_counts: DataFrame,
+    joint: DataFrame | None,
+    priors: dict[float, float],
+) -> tuple[dict[int, float], dict[int, float], int]:
+    """ONE fused probe action per batch (r12 optimization; was three).
+
+    A tagged union collects the per-batch sufficient statistics — the
+    ``feature_bin_stats`` aggregate (tag 0: bin_sum AND the collision
+    vote mass, so no separate collision scan; decimal addition is
+    associative, so summing the per-bin vote_sum reproduces the
+    per-feature marginal exactly) and the pair-level bin counts
+    (tag 1) — and, in redundancy mode, pulls the joint COO cache
+    through as tag 2 so it is materialized before the batch's caches
+    are released (the VERDICT r6 #2 union trick). The collected stats
+    are nFeat x nClasses x 2 rows; the relevance and marginal collapse
+    then run on the driver via :func:`_collapse_bins_local` (bit-exact,
+    see its docstring).
+
+    Returns ``(relevance, marginal, n_pairs)``: every pair has exactly
+    one (n_label, same_class) bin, so the bin counts sum to the batch's
+    pair total (the classCounter total, ReliefFRSelector.scala:469-470).
+    """
+    null_dec = F.lit(None).cast(DEC)
+    probe = bins.select(
+        F.lit(0).alias("tag"),
+        F.col("feature_idx").cast("long").alias("f"),
+        F.col("n_label").alias("lbl"),
+        F.col("same_class").alias("sc"),
+        F.col("bin_sum").alias("d1"),
+        F.col("vote_sum").alias("d2"),
+        F.lit(None).cast("long").alias("c1"),
+    ).unionAll(
+        pair_counts.select(
+            F.lit(1).alias("tag"),
+            F.lit(None).cast("long").alias("f"),
+            F.col("n_label").alias("lbl"),
+            F.col("same_class").alias("sc"),
+            null_dec.alias("d1"),
+            null_dec.alias("d2"),
+            F.col("bin_cnt").cast("long").alias("c1"),
+        )
+    )
+    if joint is not None:
+        probe = probe.unionAll(
+            joint.select(
+                F.lit(2).alias("tag"),
+                F.col("f1").cast("long").alias("f"),
+                F.lit(None).cast("double").alias("lbl"),
+                F.lit(None).cast("boolean").alias("sc"),
+                null_dec.alias("d1"),
+                null_dec.alias("d2"),
+                F.lit(None).cast("long").alias("c1"),
+            )
+        )
+    rows = probe.collect()
+    pc = {(r["lbl"], r["sc"]): int(r["c1"]) for r in rows if r["tag"] == 1}
+    rel_b, marg_b = _collapse_bins_local(
+        ((r["f"], r["lbl"], r["sc"], r["d1"], r["d2"]) for r in rows if r["tag"] == 0),
+        pc,
+        priors,
+    )
+    return rel_b, marg_b, sum(pc.values())
+
+
+def _finalize_relevance(
+    raw: dict[int, float], n_features: int, num_top_features: int
+) -> tuple[np.ndarray | SparseRelevance, list[int]]:
+    """Driver-side min-max normalize + std-rank of the summed raw
+    weights (fit :300-312).
+
+    Up to ``DENSE_RELEVANCE_MAX_FEATURES`` this is the classic dense
+    ndarray; past it the driver state stays COO — a dict keyed by
+    ACTIVE feature (bounded by distinct nonzero features, never the
+    declared width), so a kddb-width fit (30M features, README.md:11)
+    does not allocate ~240 MB dense arrays for a frame that is sparse
+    by construction (VERDICT r8 #7)."""
+    if n_features > DENSE_RELEVANCE_MAX_FEATURES:
+        rel_map, default = normalize_relevance_coo(raw, n_features)
+        rel = SparseRelevance(rel_map, default, n_features)
+        return rel, std_ranking_coo(rel_map, default, n_features, num_top_features)
+    arr = np.zeros(n_features)
+    for f, v in raw.items():
+        arr[f] = v
+    mn, mx = float(arr.min()), float(arr.max())
+    arr = (arr - mn) / (mx - mn) if mx > mn else np.zeros(n_features)
+    return arr, std_ranking(arr, num_top_features)
+
+
+def _run_batches(
+    batches: Iterable,
+    neighbourhood: Callable[[object], _Neighbourhood],
+    *,
+    priors: dict[float, float],
+    n_features: int,
+    n_instances: int,
+    num_top_features: int,
+    lower_feat: int,
+    redundancy_removal: bool,
+    top_features: list[int] | None,
+    joint_share: float,
+    resolved_knn_strategy: str,
+    mark: Callable[[str], None] = lambda _label: None,
+) -> ReliefFitResult:
+    """The one RELIEF batch loop and its finalize
+    (ReliefFRSelector.scala:199-325); every fit runs through it and
+    differs only in its ``neighbourhood`` source.
+
+    Per batch: the source builds the batch's neighbourhood, one
+    :func:`_probe_batch` action collects its statistics, the batch
+    top-N becomes the next batch's joint scope, and the batch's caches
+    are released. Then: cross-batch sums, min-max + std ranking, MI
+    redundancy over the union of the batch joints, greedy selection.
+
+    ``top_features`` is the first batch's joint scope (the reference
+    starts from an empty one); ``None`` scopes the joint to the FINAL
+    std ranking instead — the single-pass sparse contract — so the one
+    batch's caches stay until that joint is built. ``joint_share``
+    scales the pair total into jointTotal (computeRedudancy,
+    ReliefFRSelector.scala:641-642).
+    """
+    final_scope = top_features is None
+    rel_sum: dict[int, float] = {}
+    marg_sum: dict[int, float] = {}
+    joints: list[DataFrame] = []
+    n_pairs = 0
+    n_batches = 0
+    for batch in batches:
+        nb = neighbourhood(batch)
+        n_batches += 1
+        j_b = None
+        if redundancy_removal and not final_scope:
+            j_b = nb.joint(top_features).cache()
+            joints.append(j_b)
+        rel_b, marg_b, n = _probe_batch(nb.bins, nb.pair_counts, j_b, priors)
+        mark("batch stats probe")
+        n_pairs += n
+        # Cross-batch sums on the driver, added in batch order.
+        # Bit-identity to the old Spark union-reduce holds for the
+        # <=2-batch configurations every gate and test pins (a
+        # two-operand IEEE add is commutative); with 3+ batches the
+        # fixed batch order may differ at ulp level from the old plan's
+        # shuffle order — which was itself nondeterministic (ADVICE r12).
+        for f, v in rel_b.items():
+            rel_sum[f] = rel_sum.get(f, 0.0) + v
+        if redundancy_removal:
+            for f, v in marg_b.items():
+                marg_sum[f] = marg_sum.get(f, 0.0) + v
+        if final_scope:
+            continue  # the one batch's caches serve the final-scope joint
+        # batch top-N steers the next batch's joint-stat scope
+        # (ReliefFRSelector.scala:281-283). The reference min-max
+        # normalizes before takeOrdered (:281, 328-332), but min-max is
+        # strictly monotone, so ranking the RAW relevance selects the
+        # identical feature set with one fewer min/max job per batch.
+        # Sort key mirrors orderBy(desc(relevance), asc(feature_idx)).
+        top_b = [
+            f for f, _ in sorted(rel_b.items(), key=lambda kv: (-kv[1], kv[0]))[:lower_feat]
+        ]
+        if top_b:
+            # empty batches keep the previous ranking — the reference
+            # only replaces topFeatures when results are non-empty
+            # (ReliefFRSelector.scala:279-283)
+            top_features = top_b
+        for cached in nb.caches:
+            cached.unpersist()
+    mark("batch loop end")
+
+    relevance, std_sel = _finalize_relevance(rel_sum, n_features, num_top_features)
+    mark("final weights collect")
+    red_coo: dict[tuple[int, int], float] = {}
+    if redundancy_removal:
+        scoped = joints + ([nb.joint(std_sel)] if final_scope else [])
+        joint_total = n_pairs * joint_share
+        if n_pairs > 0 and joint_total > 0:
+            joint_all = reduce(DataFrame.unionByName, scoped).groupBy("f1", "f2").agg(
+                F.sum("joint").alias("joint")
+            )
+            marg_all = scoped[0].sparkSession.createDataFrame(
+                [(int(f), float(v)) for f, v in sorted(marg_sum.items())],
+                "feature_idx long, marginal double",
+            )
+            red_df = mi_redundancy(joint_all, marg_all, float(n_pairs), joint_total)
+            for r in red_df.collect():
+                red_coo[(int(r["f1"]), int(r["f2"]))] = float(r["redundancy"])
+    # Everything is driver-side from here: release the caches so a
+    # long-lived session doesn't accumulate dead entries (each live
+    # entry also taxes every later cache lookup).
+    for cached in joints + list(nb.caches if final_scope else ()):
+        cached.unpersist()
+    mark("redundancy mi collect")
+
+    if not redundancy_removal:
+        red_sel = list(std_sel)
+    elif isinstance(relevance, SparseRelevance):
+        red_sel = greedy_select_coo(
+            relevance.data, relevance.default, relevance.n, red_coo, num_top_features
+        )
+    else:
+        red_sel = greedy_select(relevance, red_coo, num_top_features)
+    return ReliefFitResult(
+        relevance=relevance,
+        std_selection=std_sel,
+        redundancy_selection=red_sel,
+        n_features=n_features,
+        n_instances=n_instances,
+        priors=priors,
+        redundancy_coo=red_coo,
+        n_batches=n_batches,
+        resolved_knn_strategy=resolved_knn_strategy,
+    )
+
+
 def fit_relief(
     df: DataFrame,
     *,
@@ -974,12 +1138,14 @@ def fit_relief(
     lsh_probe_radius: int = 1,
     lsh_tables: int | None = None,
 ) -> ReliefFitResult:
-    """Full fit dataflow (ReliefFRSelector.scala:199-325, DataFrame IR).
+    """Dense fit (ReliefFRSelector.scala:199-325, DataFrame IR).
 
-    sample -> randomSplit batches -> per batch: kNN within batch ->
-    pair table -> relevance bins + collision stats; batch top-N feeds
-    the next batch's joint-stat scope -> union-sum -> min-max -> MI ->
-    greedy selection.
+    sample -> randomSplit batches -> the shared batch engine
+    (:func:`_run_batches`) over the dense neighbourhood source: per
+    batch, kNN within the batch (:func:`knn_join`) -> cached compact
+    :func:`pair_table` -> one stats probe; batch top-N feeds the next
+    batch's joint-stat scope -> union-sum -> min-max -> MI -> greedy
+    selection.
 
     DELIBERATE DEVIATION (SURVEY §8.5): per batch this engine scans
     the BATCH for neighbors, while the reference scans the FULL
@@ -1032,17 +1198,12 @@ def fit_relief(
             ).alias("ns")
         )
     label_rows = instances.groupBy("label").agg(*aggs).collect()
-    if not label_rows:
-        raise ValueError(
-            "fit_relief requires a non-empty dataset "
-            "(the reference would NPE on head(); we fail with intent)"
-        )
+    n_elems, priors = _class_priors(
+        [(r["label"], r["n"]) for r in label_rows], "fit_relief"
+    )
     _mark("profile")
-    n_elems = sum(r["n"] for r in label_rows)
-    n_feat = len(label_rows[0]["fx"]) if label_rows else 0
-    priors = {float(r["label"]): r["n"] / n_elems for r in label_rows}
-    n_classes = len(priors)
-    k = num_neighbors * n_classes
+    n_feat = len(label_rows[0]["fx"])
+    k = num_neighbors * len(priors)
     lower_feat = max(num_top_features, round(lower_feature_threshold * num_top_features))
 
     # sampling='engine': the reference's engine-seeded Bernoulli
@@ -1127,22 +1288,30 @@ def fit_relief(
             for i in range(n_batches)
         ]
 
-    top_features: list[int] | None = []  # batch 0 contributes no joint stats
-    batch_weights: list[dict[int, float]] = []
-    marginals: list[dict[int, float]] = []
-    joints: list[DataFrame] = []
-    total_interactions = 0
-
     # Partition count of every batch == partition count of `sample`
     # (filter and randomSplit are narrow); resolve it ONCE here instead
     # of an .rdd plan-analysis round-trip inside knn_join per batch
     # (VERDICT r6 #2).
     sample_parts = sample.rdd.getNumPartitions()
+    # Pair-cache partition COUNT is volume-derived (r12, guide §2.4),
+    # not a flat defaultParallelism: the widest consumer of the cache
+    # is the joint combination explode (~n_pairs x n_feat x (|top|+1)
+    # rows; the bin-stats explode is the n_pairs x n_feat floor), so
+    # size for ~256k exploded rows per task, capped at the old
+    # defaultParallelism. At bench SFs this collapses dozens of
+    # near-empty tasks per consumer stage into a few; at cluster
+    # volumes the derived count saturates the same cap as before. Sums
+    # downstream are decimal/integer (order-independent), so the
+    # layout changes cost, never values.
+    top_mult = min(lower_feat, n_feat) if redundancy_removal else 0
+    pair_vol = max(batch_rows, 1) * k * n_feat * (1 + top_mult)
+    pair_parts = max(1, min(spark.sparkContext.defaultParallelism, -(-pair_vol // 262144)))
+    continuous = not discrete_data
 
-    for batch in batches:
+    def neighbourhood(batch: DataFrame) -> _Neighbourhood:
         # No emptiness probe: an empty batch flows through as empty
         # DataFrames everywhere below (empty kNN -> empty pairs ->
-        # empty aggregates -> empty top_rows, which keeps the previous
+        # empty aggregates -> empty top-N, which keeps the previous
         # ranking) — one fewer job per batch.
         batch = batch.cache()
         neigh = knn_join(
@@ -1174,210 +1343,50 @@ def fit_relief(
         # key first — AQE coalesces the small join output to few
         # partitions, which would serialize every downstream explode;
         # clustering by pair also makes the joint groupBy exchange-free.
-        #
-        # Partition COUNT is volume-derived (r12, guide §2.4), not a
-        # flat defaultParallelism: the widest consumer of this cache is
-        # the joint combination explode (~n_pairs x n_feat x (|top|+1)
-        # rows; the bin-stats explode is the n_pairs x n_feat floor), so
-        # size for ~256k exploded rows per task, capped at the old
-        # defaultParallelism. At bench SFs this collapses dozens of
-        # near-empty tasks per consumer stage into a few; at cluster
-        # volumes the derived count saturates the same cap as before.
-        # Sums downstream are decimal/integer (order-independent), so
-        # the layout changes cost, never values.
-        par = spark.sparkContext.defaultParallelism
-        top_mult = (
-            min(lower_feat, n_feat) if redundancy_removal else 0
-        )
-        pair_vol = max(batch_rows, 1) * k * n_feat * (1 + top_mult)
-        pair_parts = max(1, min(par, -(-pair_vol // 262144)))
         pairs = (
             pair_table(batch, neigh)
             .repartition(pair_parts, "query_id", "neighbor_id")
             .cache()
         )
-        # classCounter total = number of (query, neighbor) pairs
-        # (ReliefFRSelector.scala:469-470 sums the per-bin pair counts);
-        # this count is also the action that materializes the cache.
         # r13 NOTE (measured, kept): dropping this count and letting
         # the fused probe materialize the cache was interleaved-A/B'd
         # same-session (plans/r13/fuse_ab.py) — the DENSE loop got
         # SLOWER (q72 min 8.37->8.86, med 8.67->10.03; the probe's
         # unioned legs then plan their joins against an unmaterialized
-        # InMemoryRelation without exact stats), while the sparse loop
-        # got faster and adopted the fusion (relief_sparse.py).
-        n_pairs = pairs.count()
+        # InMemoryRelation without exact stats), while the sparse
+        # source got faster and adopted the fusion (relief_sparse.py).
+        pairs.count()
         _mark("batch pairs count")
-        total_interactions += n_pairs
-        long_pairs = explode_pairs(pairs)
-
-        # ONE fused probe action per batch (r12 optimization; was
-        # three): a tagged union collects the per-batch sufficient
-        # statistics — the feature_bin_stats aggregate (tag 0, the one
-        # explode scan of the long form) and the pair-level bin counts
-        # (tag 1) — and, in redundancy mode, pulls the joint COO cache
-        # through as tag 2 so j_b is materialized before `pairs` is
-        # unpersisted (the VERDICT r6 #2 union trick, now carrying the
-        # stats legs too). Every leg reads the ALREADY-materialized
-        # pairs cache, so nothing upstream can be computed twice. The
-        # collected stats are nFeat x nClasses x 2 rows; the relevance
-        # collapse, marginal collapse and batch top-N then run on the
-        # driver via _collapse_bins_local (bit-exact, see its
-        # docstring) — eliminating the bins/w/m_b caches and the
-        # separate TakeOrdered job per batch.
-        bins = feature_bin_stats(
-            long_pairs, not discrete_data, lower_distance_threshold
-        )
-        null_dec = F.lit(None).cast(DEC)
-        probe = bins.select(
-            F.lit(0).alias("tag"),
-            F.col("feature_idx").cast("long").alias("f"),
-            F.col("n_label").alias("lbl"),
-            F.col("same_class").alias("sc"),
-            F.col("bin_sum").cast(DEC).alias("d1"),
-            F.col("vote_sum").cast(DEC).alias("d2"),
-            F.col("n_rows").cast("long").alias("c1"),
-        ).unionAll(
-            # pair-level bin counts — no distinct over the exploded
-            # table
-            pairs.groupBy("n_label", "same_class")
-            .agg(F.count("*").alias("bin_cnt"))
-            .select(
-                F.lit(1).alias("tag"),
-                F.lit(None).cast("long").alias("f"),
-                F.col("n_label").alias("lbl"),
-                F.col("same_class").alias("sc"),
-                null_dec.alias("d1"),
-                null_dec.alias("d2"),
-                F.col("bin_cnt").cast("long").alias("c1"),
-            )
-        )
-        j_b = None
-        if redundancy_removal:
+        return _Neighbourhood(
+            bins=feature_bin_stats(
+                explode_pairs(pairs), continuous, lower_distance_threshold
+            ),
+            # pair-level bin counts — no distinct over the exploded table
+            pair_counts=pairs.groupBy("n_label", "same_class").agg(
+                F.count("*").alias("bin_cnt")
+            ),
             # joint stats straight from the cached compact pair table —
             # no explode-then-collect_list round trip (decimal-identical,
             # see joint_counts_from_pairs)
-            j_b = joint_counts_from_pairs(
-                pairs, top_features, not discrete_data,
-                lower_distance_threshold, n_feat,
-            ).cache()
-            probe = probe.unionAll(
-                j_b.select(
-                    F.lit(2).alias("tag"),
-                    F.col("f1").cast("long").alias("f"),
-                    F.lit(None).cast("double").alias("lbl"),
-                    F.lit(None).cast("boolean").alias("sc"),
-                    null_dec.alias("d1"),
-                    null_dec.alias("d2"),
-                    F.lit(None).cast("long").alias("c1"),
-                )
-            )
-        probe_rows = probe.collect()
-        _mark("batch stats probe")
-        pc = {
-            (r["lbl"], r["sc"]): int(r["c1"])
-            for r in probe_rows
-            if r["tag"] == 1
-        }
-        rel_b, marg_b = _collapse_bins_local(
-            (
-                (r["f"], r["lbl"], r["sc"], r["d1"], r["d2"])
-                for r in probe_rows
-                if r["tag"] == 0
+            joint=lambda top: joint_counts_from_pairs(
+                pairs, top, continuous, lower_distance_threshold, n_feat
             ),
-            pc,
-            priors,
+            caches=(pairs, batch),
         )
-        batch_weights.append(rel_b)
-        if redundancy_removal:
-            marginals.append(marg_b)
-            joints.append(j_b)
 
-        # batch top-N steers the next batch's joint-stat scope
-        # (ReliefFRSelector.scala:281-283). The reference min-max
-        # normalizes before takeOrdered (:281, 328-332), but min-max is
-        # strictly monotone (order-preserving), so ranking the RAW
-        # relevance selects the identical feature set with one fewer
-        # min/max job per batch. Sort key mirrors the old
-        # orderBy(desc(relevance), asc(feature_idx)).limit(lower_feat).
-        top_feat_b = [
-            f
-            for f, _ in sorted(
-                rel_b.items(), key=lambda kv: (-kv[1], kv[0])
-            )[:lower_feat]
-        ]
-        if top_feat_b:
-            # empty batches keep the previous ranking — the reference
-            # only replaces topFeatures when results are non-empty
-            # (ReliefFRSelector.scala:279-283)
-            top_features = top_feat_b
-        pairs.unpersist()
-        batch.unpersist()
-
-    # Merge batches: sum raw weights then global min-max (fit :300-312).
-    # Cross-batch sums run on the driver over the per-batch float
-    # dicts, added in batch order. Bit-identity to the old Spark
-    # union-reduce holds for the <=2-batch configurations every gate
-    # and test pins (a two-operand IEEE add is commutative); with 3+
-    # batches the driver's fixed batch order may differ at ulp level
-    # from the old plan's shuffle order — which was itself
-    # nondeterministic, so this is a documented-scope note (ADVICE
-    # r12), not a regression.
-    from functools import reduce
-
-    _mark("batch loop end")
-    relevance = np.zeros(n_feat)
-    for rel_b in batch_weights:
-        for f, v in rel_b.items():
-            relevance[f] += v
-    mn, mx = float(relevance.min()), float(relevance.max())
-    relevance = (relevance - mn) / (mx - mn) if mx > mn else np.zeros(n_feat)
-
-    _mark("final weights collect")
-    std_sel = std_ranking(relevance, num_top_features)
-
-    red_coo: dict[tuple[int, int], float] = {}
-    if redundancy_removal and joints:
-        joint_all = reduce(DataFrame.unionByName, joints).groupBy("f1", "f2").agg(
-            F.sum("joint").alias("joint")
-        )
-        marg_sum: dict[int, float] = {}
-        for marg_b in marginals:
-            for f, v in marg_b.items():
-                marg_sum[f] = marg_sum.get(f, 0.0) + v
-        marg_all = spark.createDataFrame(
-            [(int(f), float(v)) for f, v in sorted(marg_sum.items())],
-            "feature_idx long, marginal double",
-        )
-        # jointTotal omits the first batch's share (no joint stats were
-        # collected there) — computeRedudancy, ReliefFRSelector.scala:641.
-        batch_perc = 1.0 / n_batches
-        joint_total = total_interactions * (1.0 - estimation_ratio * batch_perc)
-        if joint_total > 0 and total_interactions > 0:
-            red_df = mi_redundancy(joint_all, marg_all, float(total_interactions), joint_total)
-            for r in red_df.collect():
-                red_coo[(int(r["f1"]), int(r["f2"]))] = float(r["redundancy"])
-
-    # Everything is driver-side numpy from here: release the per-batch
-    # joint caches so a long-lived session doesn't accumulate dead
-    # entries (each live entry also taxes every later cache lookup).
-    for cached in joints:
-        cached.unpersist()
-
-    _mark("redundancy mi collect")
-    red_sel = (
-        greedy_select(relevance, red_coo, num_top_features)
-        if redundancy_removal
-        else list(std_sel)
-    )
-    return ReliefFitResult(
-        relevance=relevance,
-        std_selection=std_sel,
-        redundancy_selection=red_sel,
+    return _run_batches(
+        batches,
+        neighbourhood,
+        priors=priors,
         n_features=n_feat,
         n_instances=n_elems,
-        priors=priors,
-        redundancy_coo=red_coo,
-        n_batches=n_batches,
+        num_top_features=num_top_features,
+        lower_feat=lower_feat,
+        redundancy_removal=redundancy_removal,
+        top_features=[],  # batch 0 contributes no joint stats
+        # jointTotal omits the first batch's share (no joint stats were
+        # collected there) — computeRedudancy, ReliefFRSelector.scala:641.
+        joint_share=1.0 - estimation_ratio * (1.0 / n_batches),
         resolved_knn_strategy=knn_strategy,
+        mark=_mark,
     )

@@ -10,77 +10,41 @@ and mis-keys feature ids doing it (SURVEY §8.1). Here sparsity is just
     *shared nonzeros*, never with the nominal dimensionality. This is
     what makes "millions of features" (README.md:11, kddb 30M features)
     tractable: a dense scan is O(Q·N·d), this is O(Q·nnz).
-  * pair expansion: full-outer join of the two sides' active features
-    per (query, neighbor) pair — features inactive in BOTH sides are
+  * pair expansion: union of the two sides' active features per
+    (query, neighbor) pair — features inactive in BOTH sides are
     skipped (they contribute 0 distance; for collisions this matches
     the reference's sparse semantics of visiting active indices only).
-  * everything downstream — relevance_weights, collision_table,
-    marginal/joint counts, MI, greedy selection — is shared with the
-    dense path unchanged: the long-form design makes the aggregation
-    layer representation-agnostic.
+    The output is the same long ``(pair, feature_idx, fdist)`` form the
+    dense path's ``explode_pairs`` yields.
+  * pair counts: the relevance collapse divides by the per-bin PAIR
+    count, which the long table cannot give (a pair with no active
+    feature has no rows), so it comes from the neighbor table
+    (``_pair_bin_counts``).
+
+Those three pieces are this module's neighbourhood source.
+:func:`fit_relief_sparse` runs them through the same batch engine as
+the dense fit (``relief._run_batches``: one stats probe per batch,
+top-N feedback, one finalize); only the joint COO differs in plan — the
+O(1)-memory self-join ``joint_counts(collision_table(...))`` instead of
+the dense per-pair combination arrays, because a sparse feature space
+can be millions wide.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_relieffc_fselection_spark.operators.relief import (
     DEC,
-    _collapse_bins_local,
-    feature_bin_stats,
-    DENSE_RELEVANCE_MAX_FEATURES,
     ReliefFitResult,
-    SparseRelevance,
+    _class_priors,
+    _Neighbourhood,
+    _run_batches,
     collision_table,
-    greedy_select,
-    greedy_select_coo,
+    feature_bin_stats,
     joint_counts,
-    marginal_counts,
-    mi_redundancy,
-    normalize_relevance_coo,
-    relevance_weights,
-    std_ranking,
-    std_ranking_coo,
 )
-
-
-def _finalize_relevance(
-    w_rows, n_features: int, num_top_features: int
-) -> tuple[np.ndarray | SparseRelevance, list[int]]:
-    """Driver-side normalize + std-rank of collected raw weights.
-
-    Below ``DENSE_RELEVANCE_MAX_FEATURES`` this is the classic dense
-    ndarray path; above it the driver state stays COO — a dict keyed
-    by ACTIVE feature (bounded by distinct nonzero features, never the
-    declared width), so a kddb-width fit (30M features, README.md:11)
-    does not allocate ~240 MB dense arrays for a frame that is sparse
-    by construction (VERDICT r8 #7)."""
-    present = {int(r["feature_idx"]): float(r["relevance"]) for r in w_rows}
-    if n_features > DENSE_RELEVANCE_MAX_FEATURES:
-        rel_map, default = normalize_relevance_coo(present, n_features)
-        rel = SparseRelevance(rel_map, default, n_features)
-        return rel, std_ranking_coo(rel_map, default, n_features, num_top_features)
-    arr = np.zeros(n_features)
-    for f, v in present.items():
-        arr[f] = v
-    mn, mx = float(arr.min()), float(arr.max())
-    arr = (arr - mn) / (mx - mn) if mx > mn else np.zeros(n_features)
-    return arr, std_ranking(arr, num_top_features)
-
-
-def _greedy(
-    relevance_n: "np.ndarray | SparseRelevance",
-    red_coo: dict[tuple[int, int], float],
-    num_top_features: int,
-) -> list[int]:
-    if isinstance(relevance_n, SparseRelevance):
-        return greedy_select_coo(
-            relevance_n.data, relevance_n.default, relevance_n.n,
-            red_coo, num_top_features,
-        )
-    return greedy_select(relevance_n, red_coo, num_top_features)
 
 
 def to_long_form(
@@ -338,9 +302,9 @@ def sparse_pair_feature_table(
 ) -> DataFrame:
     """Long pair-feature table over the union of active features.
 
-    Output schema matches the dense ``pair_feature_table`` —
-    (query_id, neighbor_id, n_label, same_class, feature_idx, fdist) —
-    so every downstream aggregation is shared verbatim.
+    Output schema matches the dense ``explode_pairs(pair_table(...))``
+    — (query_id, neighbor_id, n_label, same_class, feature_idx, fdist)
+    — so ``feature_bin_stats`` and ``collision_table`` apply verbatim.
     """
     # One exchange instead of three (r12, guide §2.3/§3): the old plan
     # full_outer-joined a query-side and a neighbor-side long table
@@ -404,10 +368,10 @@ def _pair_bin_counts(neighbors: DataFrame, labels: DataFrame) -> DataFrame:
 
     Invariant: both label joins are inner joins that must keep every
     neighbor row (query and neighbor ids are drawn from ``labels``), so
-    ``sum(bin_cnt) == neighbors.count()``. _fit_relief_sparse_batched
-    recovers ``n_pairs`` from these counts instead of counting the
-    neighbor table; a neighbor id outside ``labels`` would silently
-    undercount it."""
+    ``sum(bin_cnt) == neighbors.count()``. The engine's stats probe
+    (``relief._probe_batch``) recovers ``n_pairs`` from these counts
+    instead of counting the neighbor table; a neighbor id outside
+    ``labels`` would silently undercount it."""
     return (
         neighbors.select("query_id", "neighbor_id")
         .join(
@@ -440,208 +404,87 @@ def fit_relief_sparse(
     estimation_ratio: float = 1.0,
     knn_probe: bool | None = None,
 ) -> ReliefFitResult:
-    """Sparse fit; single-pass by default, hash-batched on request.
+    """Sparse fit: the dense fit's batch engine (``relief._run_batches``)
+    over the sparse neighbourhood source — per batch
+    :func:`sparse_knn_join` -> :func:`sparse_pair_feature_table` ->
+    one stats probe with :func:`_pair_bin_counts` as the pair counts.
+    Semantics: ReliefFRSelector.scala:483-602, with corrected feature
+    indexing (SURVEY §8.1).
 
     ``batch_size=1.0`` (default) is the documented single-pass
     contract: one kNN + aggregation sweep, redundancy scoped to the
-    final std ranking (or the caller's ``top_features``). No sampling:
-    callers sample the long table upstream — at sparse scale, sampling
-    is a filter on id. ``estimation_ratio`` is the DECLARATION of that
-    upstream sampling (it filters nothing here): the batched loop's
-    jointTotal discount is ratio-dependent in the reference
-    (totalPairs * (1 - ratio * batchPerc), ReliefFRSelector.scala:642),
-    so a sampled+batched sparse fit must be told the ratio or its MI
-    redundancy deviates (ADVICE r8). Single-pass fits ignore it (their
-    jointTotal is the undiscounted pair count, matching the dense
-    single-batch path).
-
-    ``knn_probe`` overrides sparse_knn_join's no-overlap probe on BOTH
-    routes — the batched loop's nnz-density heuristic and the
-    single-pass call (None = decide from density; False = straight to
-    the norms grid; True = force the probe). The heuristic reads nominal density, which a caller can
-    know to be misleading — e.g. narrow-active data strided across a
-    huge declared width is nominally ultra-sparse but every pair
-    shares every active feature, so the probe only burns driver
-    rounds before falling back to the grid it should have started on.
+    final std ranking (or the caller's ``top_features``), jointTotal
+    the undiscounted pair count (matching the dense single-batch path).
+    No sampling: callers sample the long table upstream — at sparse
+    scale, sampling is a filter on id.
 
     ``batch_size<1.0`` runs the reference's BATCH LOOP with topFeatures
     feedback (ReliefFRSelector.scala:273-283): the instance set splits
-    into ceil(1/batch_size) deterministic hash batches (id % n — the
+    into int(1/batch_size) deterministic hash batches (pmod(id, n) — the
     same 'hash' batching mode the dense fit exposes, and the mode q72c
-    proved oracle-able end-to-end); batch 0 contributes no joint stats,
-    each later batch's joint-stat scope is the previous batch's raw-
-    relevance top-N, weights union-reduce across batches, and the MI
-    redundancy applies the jointTotal batch-share discount
-    (ReliefFRSelector.scala:641, with estimationRatio=1.0 — this path
-    never samples in-fit). Within-batch kNN scans the batch, not the
-    full set — the same deliberate deviation the dense fit documents.
-    ``top_features`` (when given) seeds batch 0's joint scope instead
-    of the empty reference seed.
+    proved oracle-able end-to-end); batch 0 contributes no joint stats
+    unless ``top_features`` seeds its scope, each later batch's scope is
+    the previous batch's raw-relevance top-N, weights union-reduce
+    across batches, and the MI redundancy applies the jointTotal
+    batch-share discount (ReliefFRSelector.scala:641). Within-batch kNN
+    scans the batch, not the full set — the same deliberate deviation
+    the dense fit documents. ``estimation_ratio`` is the DECLARATION of
+    the caller's upstream sampling (it filters nothing here): the
+    discount is totalPairs * (1 - ratio * batchPerc) in the reference
+    (:642), so a sampled+batched sparse fit must be told the ratio or
+    its MI redundancy deviates (ADVICE r8). Single-pass fits ignore it.
 
-    Shares the entire aggregation layer with the dense path; cites
-    ReliefFRSelector.scala:483-602 for the semantics it re-expresses
-    (with corrected feature indexing, SURVEY §8.1).
+    ``knn_probe`` overrides sparse_knn_join's no-overlap probe (None =
+    decide; False = straight to the norms grid; True = force the
+    probe). The single pass hands it through unchanged; the batched
+    loop otherwise decides from nominal nnz density once per fit. The
+    heuristic reads nominal density, which a caller can know to be
+    misleading — e.g. narrow-active data strided across a huge declared
+    width is nominally ultra-sparse but every pair shares every active
+    feature, so the probe only burns driver rounds before falling back
+    to the grid it should have started on.
     """
-    # ONE profiling job: per-class counts give priors AND (summed)
-    # the instance total — vs a count() + groupBy collect as two
-    # separate scans of the label table (same values, one fewer
-    # corpus-sized pass and one fewer driver action).
-    label_counts = labels.groupBy("label").count().collect()
-    n_elems = sum(int(r["count"]) for r in label_counts)
-    priors = {
-        float(r["label"]): r["count"] / n_elems for r in label_counts
-    }
+    n_elems, priors = _class_priors(
+        [(r["label"], r["count"]) for r in labels.groupBy("label").count().collect()],
+        "fit_relief_sparse",
+    )
     k = num_neighbors * len(priors)
     n_batches = max(1, int(1.0 / batch_size))
-    if n_batches > 1:
-        return _fit_relief_sparse_batched(
-            long_df,
-            labels,
-            n_features,
-            n_batches=n_batches,
-            n_elems=n_elems,
-            priors=priors,
-            k=k,
-            num_top_features=num_top_features,
-            lower_distance_threshold=lower_distance_threshold,
-            redundancy_removal=redundancy_removal,
-            discrete_data=discrete_data,
-            seed_top_features=top_features,
-            lower_feature_threshold=lower_feature_threshold,
-            estimation_ratio=estimation_ratio,
-            knn_probe=knn_probe,
-        )
-    knn_res: dict = {}
-    neigh = _coalesce_for_cache(
-        sparse_knn_join(
-            long_df, labels, labels.select("id"), k, num_corpus=n_elems,
-            probe=knn_probe, resolution_out=knn_res,
-        ),
-        n_elems * k,  # exact bound: <= k rows per query
-    ).cache()
-    # materialize NOW: both lp and pair_counts consume neigh, and a lazy
-    # cache computes the kNN subplan once per consumer concurrently
-    n_pairs = neigh.count()
-    # lp rows = n_pairs x |active-feature union per pair| — the union
-    # size is not driver-known, so x4 stands in; consumers are narrow
-    # map-side scans, so a low estimate costs only oversized cheap
-    # tasks (see _coalesce_for_cache)
-    lp = _coalesce_for_cache(
-        sparse_pair_feature_table(long_df, labels, neigh), n_pairs * 4
-    ).cache()
-
-    pair_counts = _pair_bin_counts(neigh, labels)
-    w_rows = relevance_weights(lp, priors, pair_counts=pair_counts).collect()
-    relevance_n, std_sel = _finalize_relevance(w_rows, n_features, num_top_features)
-
-    red_coo: dict[tuple[int, int], float] = {}
-    if redundancy_removal:
-        coll = _coalesce_for_cache(
-            collision_table(lp, not discrete_data, lower_distance_threshold),
-            n_pairs * 4,  # collisions subset the lp rows; same rationale
-        ).cache()
-        tf = top_features if top_features is not None else std_sel
-        # no num_features hint: sparse inputs can be millions-wide, so
-        # keep the O(1)-memory self-join plan
-        joint = joint_counts(coll, tf, not discrete_data)
-        marg = marginal_counts(coll)
-        if n_pairs:
-            red_df = mi_redundancy(joint, marg, float(n_pairs), float(n_pairs))
-            for r in red_df.collect():
-                red_coo[(int(r["f1"]), int(r["f2"]))] = float(r["redundancy"])
-    lp.unpersist()
-
-    neigh.unpersist()
-    if redundancy_removal:
-        coll.unpersist()
-
-    red_sel = (
-        _greedy(relevance_n, red_coo, num_top_features)
-        if redundancy_removal
-        else list(std_sel)
-    )
-    return ReliefFitResult(
-        relevance=relevance_n,
-        std_selection=std_sel,
-        redundancy_selection=red_sel,
-        n_features=n_features,
-        n_instances=n_elems,
-        priors=priors,
-        redundancy_coo=red_coo,
-        resolved_knn_strategy=f"sparse-inverted/{knn_res['route']}",
-    )
-
-
-def _fit_relief_sparse_batched(
-    long_df: DataFrame,
-    labels: DataFrame,
-    n_features: int,
-    *,
-    n_batches: int,
-    n_elems: int,
-    priors: dict[float, float],
-    k: int,
-    num_top_features: int,
-    lower_distance_threshold: float,
-    redundancy_removal: bool,
-    discrete_data: bool,
-    seed_top_features: list[int] | None,
-    lower_feature_threshold: float,
-    estimation_ratio: float = 1.0,
-    knn_probe: bool | None = None,
-) -> ReliefFitResult:
-    """The hash-batched sparse loop — mirrors fit_relief's batch
-    dataflow (operators/relief.py) on the long-form representation:
-    per batch kNN -> pair feature table -> relevance/marginal/joint,
-    topFeatures feedback between batches (ReliefFRSelector.scala:
-    273-283), cross-batch union-reduce, jointTotal discount (:641)."""
-    from functools import reduce
-
     lower_feat = max(
         num_top_features, round(lower_feature_threshold * num_top_features)
     )
-    # One upfront density probe steers every batch's kNN plan: on
-    # dense-ish input (nnz/cell > 0.25) the adaptive bottom-M probe
-    # inside sparse_knn_join would burn 2 driver actions per escalation
-    # round per batch before falling back to the norms grid anyway —
-    # tell it to go straight there (probe=False) and skip the per-batch
-    # exact corpus count the probe proof needs (the grid path never
-    # consults it). For parquet-backed long tables this count is
-    # metadata-only; for derived long forms it costs about one probe
-    # round and saves up to six per batch.
-    if knn_probe is None:
-        nnz = long_df.count()
-        dense_ish = nnz > 0.25 * n_elems * max(n_features, 1)
+    continuous = not discrete_data
+    probe_arg, dense_ish = knn_probe, not knn_probe
+    if n_batches > 1 and knn_probe is None:
+        # One upfront density probe steers every batch's kNN plan: on
+        # dense-ish input (nnz/cell > 0.25) the adaptive bottom-M probe
+        # inside sparse_knn_join would burn 2 driver actions per
+        # escalation round per batch before falling back to the norms
+        # grid anyway — tell it to go straight there (probe=False) and
+        # skip the per-batch exact corpus count the probe proof needs
+        # (the grid path never consults it). For parquet-backed long
+        # tables this count is metadata-only; for derived long forms it
+        # costs about one probe round and saves up to six per batch.
+        dense_ish = long_df.count() > 0.25 * n_elems * max(n_features, 1)
         probe_arg = False if dense_ish else None
-    else:
-        # caller knows better than nominal density (see fit_relief_sparse
-        # docstring) — also saves the nnz count job
-        dense_ish = not knn_probe
-        probe_arg = knn_probe
-    # batch 0 contributes no joint stats unless the caller seeds the
-    # scope explicitly (the reference starts with an empty topFeatures)
-    tf: list[int] = list(seed_top_features) if seed_top_features else []
-    knn_res: dict = {"route": "grid"}  # overwritten by batch 0's call
-    batch_weights: list[DataFrame] = []
-    margs: list[DataFrame] = []
-    joints: list[DataFrame] = []
-    total_pairs = 0
+    # batches share the data regime, so batch 0's route resolution is
+    # the fit's (forced modes resolve identically every batch)
+    knn_res: dict = {"route": "grid"}
 
-    for b in range(n_batches):
-        # pmod, NOT %: Spark's % follows the dividend's sign, so
-        # negative ids would silently fall out of every batch.
-        b_labels = labels.filter(
-            F.pmod(F.col("id"), F.lit(n_batches)) == b
-        ).cache()
-        b_long = long_df.filter(
-            F.pmod(F.col("id"), F.lit(n_batches)) == b
-        ).cache()
-        # exact per-batch count only where the probe's coverage proof
-        # consumes it; the grid path takes a uniform-split estimate
-        b_n = max(1, n_elems // n_batches) if dense_ish else b_labels.count()
-        # record batch 0's route resolution (batches share the data
-        # regime, so the first call's decision is the fit's decision;
-        # forced modes resolve identically every batch by construction)
+    def neighbourhood(b: int) -> _Neighbourhood:
+        if n_batches == 1:
+            b_long, b_labels, b_n, owned = long_df, labels, n_elems, ()
+        else:
+            # pmod, NOT %: Spark's % follows the dividend's sign, so
+            # negative ids would silently fall out of every batch.
+            in_batch = F.pmod(F.col("id"), F.lit(n_batches)) == b
+            b_labels = labels.filter(in_batch).cache()
+            b_long = long_df.filter(in_batch).cache()
+            # exact per-batch count only where the probe's coverage
+            # proof consumes it; the grid path takes a uniform-split
+            # estimate
+            b_n = max(1, n_elems // n_batches) if dense_ish else b_labels.count()
+            owned = (b_long, b_labels)
         neigh = _coalesce_for_cache(
             sparse_knn_join(
                 b_long, b_labels, b_labels.select("id"), k,
@@ -650,177 +493,50 @@ def _fit_relief_sparse_batched(
             ),
             b_n * k,  # exact bound: <= k rows per query
         ).cache()
-        # No separate materializing count() here (r13): the fused
-        # probe action below is the first consumer of BOTH caches, and
-        # RDD block-level loading locks make concurrent union legs
-        # compute each cached partition once (the second consumer
-        # blocks on the lock and reads the block). n_pairs is
-        # recovered from the tag-1 leg — every pair has exactly one
-        # (n_label, same_class) bin, so the bin counts sum to the pair
-        # total — and the lp partition estimate uses the exact upper
-        # bound b_n*k (layout-only). Interleaved same-session A/B
+        # No materializing count() here (r13): the fused probe action
+        # is the first consumer of BOTH caches, and RDD block-level
+        # loading locks make concurrent union legs compute each cached
+        # partition once (the second consumer blocks on the lock and
+        # reads the block). Interleaved same-session A/B
         # (plans/r13/fuse_ab.py): q158 med 17.06->14.83s, q161 med
-        # 8.82->8.42s; the DENSE loop measured the opposite way and
-        # keeps its count (relief.py).
-        # x4 stands in for the per-pair active-feature union size —
-        # narrow map-side consumers only (see _coalesce_for_cache)
+        # 8.82->8.42s; the DENSE source measured the opposite way and
+        # keeps its count (relief.py). x4 stands in for the per-pair
+        # active-feature union size — narrow map-side consumers only
+        # (see _coalesce_for_cache).
         lp = _coalesce_for_cache(
             sparse_pair_feature_table(b_long, b_labels, neigh), b_n * k * 4
         ).cache()
-
-        # ONE fused probe action per batch (r12 optimization — the
-        # dense loop's tagged-union trick, see fit_relief): collect
-        # the per-batch sufficient statistics — feature_bin_stats
-        # over the sparse long pair table (tag 0: bin_sum AND the
-        # collision vote mass, so marginal_counts' separate coll scan
-        # disappears; decimal addition is associative, so summing the
-        # per-bin vote_sum reproduces the per-feature marginal
-        # exactly) plus the neighbor-table pair counts (tag 1) —
-        # and, in redundancy mode, pull the joint COO cache through
-        # as tag 2 so j_b is materialized before lp is unpersisted.
-        # The relevance collapse, marginal collapse and batch top-N
-        # then run on the driver (_collapse_bins_local, bit-exact).
-        # lp is scanned by the tag-0 leg and (via collision_table
-        # inside j_b) the tag-2 leg — the same two concurrent scans
-        # the old fused m/j materializer issued.
-        bins = feature_bin_stats(
-            lp, not discrete_data, lower_distance_threshold
-        )
-        null_dec = F.lit(None).cast(DEC)
-        probe_df = bins.select(
-            F.lit(0).alias("tag"),
-            F.col("feature_idx").cast("long").alias("f"),
-            F.col("n_label").alias("lbl"),
-            F.col("same_class").alias("sc"),
-            F.col("bin_sum").alias("d1"),
-            F.col("vote_sum").alias("d2"),
-            F.lit(None).cast("long").alias("c1"),
-        ).unionAll(
-            _pair_bin_counts(neigh, b_labels).select(
-                F.lit(1).alias("tag"),
-                F.lit(None).cast("long").alias("f"),
-                F.col("n_label").alias("lbl"),
-                F.col("same_class").alias("sc"),
-                null_dec.alias("d1"),
-                null_dec.alias("d2"),
-                F.col("bin_cnt").cast("long").alias("c1"),
-            )
-        )
-        j_b = None
-        if redundancy_removal:
-            coll = collision_table(lp, not discrete_data, lower_distance_threshold)
-            # no num_features hint: sparse inputs can be millions-wide,
-            # keep the O(1)-memory self-join plan
-            j_b = joint_counts(coll, tf, not discrete_data).cache()
-            probe_df = probe_df.unionAll(
-                j_b.select(
-                    F.lit(2).alias("tag"),
-                    F.col("f1").cast("long").alias("f"),
-                    F.lit(None).cast("double").alias("lbl"),
-                    F.lit(None).cast("boolean").alias("sc"),
-                    null_dec.alias("d1"),
-                    null_dec.alias("d2"),
-                    F.lit(None).cast("long").alias("c1"),
-                )
-            )
-        probe_rows = probe_df.collect()
-        pc = {
-            (r["lbl"], r["sc"]): int(r["c1"])
-            for r in probe_rows
-            if r["tag"] == 1
-        }
-        # == neigh.count(): _pair_bin_counts is row-preserving
-        n_pairs = sum(pc.values())
-        total_pairs += n_pairs
-        rel_b, marg_b = _collapse_bins_local(
-            (
-                (r["f"], r["lbl"], r["sc"], r["d1"], r["d2"])
-                for r in probe_rows
-                if r["tag"] == 0
+        return _Neighbourhood(
+            bins=feature_bin_stats(lp, continuous, lower_distance_threshold),
+            pair_counts=_pair_bin_counts(neigh, b_labels),
+            # self-join plan: sparse inputs can be millions-wide, keep
+            # the O(1)-memory joint
+            joint=lambda top: joint_counts(
+                collision_table(lp, continuous, lower_distance_threshold),
+                top,
+                continuous,
             ),
-            pc,
-            priors,
+            caches=(lp, neigh, *owned),
         )
-        batch_weights.append(rel_b)
-        if redundancy_removal:
-            margs.append(marg_b)
-            joints.append(j_b)
 
-        # batch top-N steers the NEXT batch's joint-stat scope; raw
-        # relevance ranks identically to min-max-normalized (monotone).
-        # Sort key mirrors orderBy(desc(relevance), asc(feature_idx)).
-        top_feat_b = [
-            f
-            for f, _ in sorted(
-                rel_b.items(), key=lambda kv: (-kv[1], kv[0])
-            )[:lower_feat]
-        ]
-        if top_feat_b:  # empty batches keep the previous scope (:279-283)
-            tf = top_feat_b
-        lp.unpersist()
-        neigh.unpersist()
-        b_long.unpersist()
-        b_labels.unpersist()
-
-    # Cross-batch sums on the driver over the per-batch float dicts,
-    # added in batch order — bit-identical for the <=2-batch configs
-    # every gate and test pins (two-operand IEEE adds commute).
-    rel_sum: dict[int, float] = {}
-    for rel_b in batch_weights:
-        for f, v in rel_b.items():
-            rel_sum[f] = rel_sum.get(f, 0.0) + v
-    relevance_n, std_sel = _finalize_relevance(
-        [{"feature_idx": f, "relevance": v} for f, v in rel_sum.items()],
-        n_features,
-        num_top_features,
-    )
-
-    red_coo: dict[tuple[int, int], float] = {}
-    if redundancy_removal and joints and total_pairs:
-        joint_all = reduce(DataFrame.unionByName, joints).groupBy("f1", "f2").agg(
-            F.sum("joint").alias("joint")
-        )
-        marg_sum: dict[int, float] = {}
-        for marg_b in margs:
-            for f, v in marg_b.items():
-                marg_sum[f] = marg_sum.get(f, 0.0) + v
-        marg_all = long_df.sparkSession.createDataFrame(
-            [(int(f), float(v)) for f, v in sorted(marg_sum.items())],
-            "feature_idx long, marginal double",
-        )
-        # jointTotal omits batch 0's share (no joint stats there) —
-        # computeRedudancy, ReliefFRSelector.scala:641-642. The
-        # discount is estimationRatio-dependent: this path never
-        # samples in-fit, but callers that sampled the long table
-        # upstream declare the ratio so the discount replays the
-        # reference's (1 - ratio * batchPerc) exactly (ADVICE r8).
-        joint_total = total_pairs * (1.0 - estimation_ratio / n_batches)
-        if joint_total > 0:
-            red_df = mi_redundancy(
-                joint_all, marg_all, float(total_pairs), joint_total
-            )
-            for r in red_df.collect():
-                red_coo[(int(r["f1"]), int(r["f2"]))] = float(r["redundancy"])
-
-    for cached in joints:
-        cached.unpersist()
-
-    red_sel = (
-        _greedy(relevance_n, red_coo, num_top_features)
-        if redundancy_removal
-        else list(std_sel)
-    )
-    return ReliefFitResult(
-        relevance=relevance_n,
-        std_selection=std_sel,
-        redundancy_selection=red_sel,
+    res = _run_batches(
+        range(n_batches),
+        neighbourhood,
+        priors=priors,
         n_features=n_features,
         n_instances=n_elems,
-        priors=priors,
-        redundancy_coo=red_coo,
-        n_batches=n_batches,
-        resolved_knn_strategy=f"sparse-inverted/{knn_res['route']}",
+        num_top_features=num_top_features,
+        lower_feat=lower_feat,
+        redundancy_removal=redundancy_removal,
+        # single pass: the caller's scope, else the final std ranking
+        # (None); batched: the caller's seed, else the reference's
+        # empty first scope
+        top_features=top_features if n_batches == 1 else list(top_features or []),
+        joint_share=1.0 if n_batches == 1 else 1.0 - estimation_ratio / n_batches,
+        resolved_knn_strategy="",
     )
+    res.resolved_knn_strategy = f"sparse-inverted/{knn_res['route']}"
+    return res
 
 
 def compress_long(

@@ -5,6 +5,10 @@ DataFrame dataflow on small fixtures (SURVEY §5 test strategy item 1).
 Semantics match spark_relieffc_fselection_spark.operators.relief:
 within-batch kNN, self excluded, ties by id, class-bin collapse with
 priors, deterministic collision threshold, symmetric joint updates.
+
+:func:`sparse_single_pass_reference` is the exception: a Spark
+dataflow, kept as the reference the sparse single-pass fit is pinned
+to.
 """
 
 from __future__ import annotations
@@ -57,8 +61,7 @@ def diffcube_scan_oracle(
                 rows = np.arange(nq)[:, None]
                 best_d = merged_d[rows, sel]
                 best_i = merged_i[rows, sel]
-    valid = (best_i >= 0) & np.isfinite(best_d)
-    qi, slot = np.nonzero(valid)
+    qi, slot = np.nonzero(np.isfinite(best_d))
     return q_ids[qi], best_i[qi, slot], np.sqrt(best_d[qi, slot])
 
 
@@ -126,3 +129,100 @@ def collision_stats_oracle(
                     joint[(f1, f2)] = joint.get((f1, f2), 0.0) + jv
                     joint[(f2, f1)] = joint.get((f2, f1), 0.0) + jv
     return marginal, joint, total
+
+
+def sparse_single_pass_reference(
+    long_df,
+    labels,
+    n_features: int,
+    *,
+    num_top_features: int,
+    num_neighbors: int,
+    lower_distance_threshold: float = 0.8,
+    redundancy_removal: bool = True,
+    discrete_data: bool = False,
+    top_features: list[int] | None = None,
+    knn_probe: bool | None = None,
+) -> dict:
+    """The single-pass sparse fit as a plain chain of the Spark
+    operators, one stage after another: ``relevance_weights`` over the
+    sparse pair table -> min-max + std ranking -> ``collision_table``
+    -> ``joint_counts`` (scoped to ``top_features`` or the std ranking)
+    and ``marginal_counts`` -> ``mi_redundancy`` with jointTotal = the
+    pair count -> greedy selection. Returns relevance (as a list),
+    std_selection, redundancy_selection and redundancy_coo."""
+    from spark_relieffc_fselection_spark.operators.relief import (
+        DENSE_RELEVANCE_MAX_FEATURES,
+        collision_table,
+        greedy_select,
+        greedy_select_coo,
+        joint_counts,
+        marginal_counts,
+        mi_redundancy,
+        normalize_relevance_coo,
+        relevance_weights,
+        std_ranking,
+        std_ranking_coo,
+    )
+    from spark_relieffc_fselection_spark.operators.relief_sparse import (
+        _pair_bin_counts,
+        sparse_knn_join,
+        sparse_pair_feature_table,
+    )
+
+    label_counts = labels.groupBy("label").count().collect()
+    n = sum(int(r["count"]) for r in label_counts)
+    priors = {float(r["label"]): r["count"] / n for r in label_counts}
+    k = num_neighbors * len(priors)
+    continuous = not discrete_data
+    neigh = sparse_knn_join(
+        long_df, labels, labels.select("id"), k, num_corpus=n, probe=knn_probe
+    ).cache()
+    n_pairs = neigh.count()
+    lp = sparse_pair_feature_table(long_df, labels, neigh).cache()
+    raw = {
+        int(r["feature_idx"]): float(r["relevance"])
+        for r in relevance_weights(
+            lp, priors, pair_counts=_pair_bin_counts(neigh, labels)
+        ).collect()
+    }
+    if n_features > DENSE_RELEVANCE_MAX_FEATURES:
+        rel_map, default = normalize_relevance_coo(raw, n_features)
+        std_sel = std_ranking_coo(rel_map, default, n_features, num_top_features)
+        relevance = [rel_map.get(f, default) for f in range(n_features)]
+    else:
+        arr = np.zeros(n_features)
+        for f, v in raw.items():
+            arr[f] = v
+        mn, mx = float(arr.min()), float(arr.max())
+        arr = (arr - mn) / (mx - mn) if mx > mn else np.zeros(n_features)
+        std_sel = std_ranking(arr, num_top_features)
+        relevance = arr.tolist()
+
+    red_coo: dict[tuple[int, int], float] = {}
+    red_sel = list(std_sel)
+    if redundancy_removal:
+        coll = collision_table(lp, continuous, lower_distance_threshold).cache()
+        scope = top_features if top_features is not None else std_sel
+        joint = joint_counts(coll, scope, continuous)
+        if n_pairs:
+            red_df = mi_redundancy(
+                joint, marginal_counts(coll), float(n_pairs), float(n_pairs)
+            )
+            for r in red_df.collect():
+                red_coo[(int(r["f1"]), int(r["f2"]))] = float(r["redundancy"])
+        coll.unpersist()
+        if n_features > DENSE_RELEVANCE_MAX_FEATURES:
+            red_sel = greedy_select_coo(
+                rel_map, default, n_features, red_coo, num_top_features
+            )
+        else:
+            red_sel = greedy_select(arr, red_coo, num_top_features)
+    lp.unpersist()
+    neigh.unpersist()
+    return {
+        "relevance": relevance,
+        "std_selection": std_sel,
+        "redundancy_selection": red_sel,
+        "redundancy_coo": red_coo,
+    }

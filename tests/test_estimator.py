@@ -411,7 +411,7 @@ def test_sparse_model_stores_coo_relevance(spark, monkeypatch, tmp_path):
     The model stores active indices/values + the shared absent default,
     persists in O(active), and answers relevance_for identically to a
     dense-layout control fit of the same data."""
-    from spark_relieffc_fselection_spark.operators import relief_sparse as rs
+    from spark_relieffc_fselection_spark.operators import relief
 
     rng = np.random.default_rng(29)
     n, d = 50, 10
@@ -431,7 +431,7 @@ def test_sparse_model_stores_coo_relevance(spark, monkeypatch, tmp_path):
         batchSize=1.0, redundancyRemoval=True, seed=11,
     )
     dense_model = ReliefFSelector(**params).fit(df)
-    monkeypatch.setattr(rs, "DENSE_RELEVANCE_MAX_FEATURES", 4)
+    monkeypatch.setattr(relief, "DENSE_RELEVANCE_MAX_FEATURES", 4)
     coo_model = ReliefFSelector(**params).fit(df)
 
     assert coo_model.getOrDefault(coo_model.relevanceWeights) == []

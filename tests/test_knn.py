@@ -347,3 +347,23 @@ def test_knn_numpy_malformed_query_side_raises_named_error(spark, rows, match):
 def test_knn_numpy_empty_query_side(spark, small_vectors):
     df, _ = small_vectors
     assert knn_join(df, df.limit(0), 3, strategy="numpy").count() == 0
+
+
+def test_knn_negative_ids_agree_across_strategies(spark):
+    """Ids that span zero: the numpy kernels' unfilled top-k slots carry
+    id -1 and distance inf, so only the distance may mark them — real
+    neighbors with negative ids must survive. numpy, numpy-gemm and sql
+    return the same neighbors, and those of the oracle."""
+    rng = np.random.default_rng(5)
+    X = rng.normal(size=(10, 3)).round(3)
+    ids = list(range(-5, 5))
+    df = spark.createDataFrame(
+        [(ids[i], X[i].tolist()) for i in range(len(X))], "id long, features array<double>"
+    )
+    # the oracle ties by row index, which orders like the ids here
+    want = {ids[i]: [ids[j] for j in nb] for i, nb in enumerate(knn_oracle(X, 2))}
+    for strategy in ("sql", "numpy", "numpy-gemm"):
+        got: dict[int, list[int]] = {}
+        for r in knn_join(df, df, 2, strategy=strategy).orderBy("query_id", "rank").collect():
+            got.setdefault(r["query_id"], []).append(r["neighbor_id"])
+        assert got == want, strategy

@@ -5,11 +5,12 @@ from pyspark.sql import functions as F
 from spark_relieffc_fselection_spark.operators.knn import knn_join
 from spark_relieffc_fselection_spark.operators.relief import (
     collision_table,
+    explode_pairs,
     fit_relief,
     greedy_select,
     joint_counts,
     marginal_counts,
-    pair_feature_table,
+    pair_table,
     relevance_weights,
     std_ranking,
 )
@@ -32,7 +33,7 @@ def labeled(spark):
 
 def _long_pairs(df, k):
     neigh = knn_join(df, df, k)
-    return pair_feature_table(df, neigh)
+    return explode_pairs(pair_table(df, neigh))
 
 
 def test_relevance_matches_numpy_oracle(spark, labeled):
@@ -118,10 +119,12 @@ def test_fit_relief_batched_runs(spark, labeled):
 
 def test_feature_bin_stats_matches_separate_aggregations(spark, labeled):
     """The fused one-pass stats must be bit-identical to the separate
-    relevance_weights / marginal_counts / collision-count plans."""
+    relevance_weights / marginal_counts / collision-count plans; the
+    relevance side goes through the fits' driver collapse
+    (_collapse_bins_local) over the collected bins."""
     from spark_relieffc_fselection_spark.operators.relief import (
+        _collapse_bins_local,
         feature_bin_stats,
-        relevance_from_bins,
     )
 
     df, X, y = labeled
@@ -135,10 +138,14 @@ def test_feature_bin_stats_matches_separate_aggregations(spark, labeled):
     )
     bins = feature_bin_stats(lp, continuous=True, lower_distance_threshold=0.8)
 
-    w_fused = {
-        r["feature_idx"]: r["relevance"]
-        for r in relevance_from_bins(bins, priors, pair_counts).collect()
-    }
+    w_fused, _ = _collapse_bins_local(
+        (
+            (r["feature_idx"], r["n_label"], r["same_class"], r["bin_sum"], r["vote_sum"])
+            for r in bins.collect()
+        ),
+        {(r["n_label"], r["same_class"]): r["bin_cnt"] for r in pair_counts.collect()},
+        priors,
+    )
     w_sep = {
         r["feature_idx"]: r["relevance"]
         for r in relevance_weights(lp, priors, pair_counts).collect()
@@ -170,10 +177,12 @@ def test_feature_bin_stats_matches_separate_aggregations(spark, labeled):
 
 def test_joint_from_pairs_identical_to_generic_path(spark, labeled):
     """joint_counts_from_pairs must be EXACTLY equal (not approximately)
-    to joint_counts over collision_table(explode_pairs(...)): same IEEE
-    expressions, same decimal aggregation tail, so the faster plan is a
-    pure physical substitution. Checked continuous and discrete, with
-    and without a top-feature scope."""
+    to the self-join reference, joint_counts over
+    collision_table(explode_pairs(...)): same IEEE expressions, same
+    decimal aggregation tail, so the faster plan is a pure physical
+    substitution. Checked continuous and discrete, with and without a
+    top-feature scope, on both of its plans (per-pair combination
+    arrays, and the wide-space self-join fallback)."""
     from spark_relieffc_fselection_spark.operators.relief import (
         joint_counts_from_pairs,
     )
@@ -181,45 +190,26 @@ def test_joint_from_pairs_identical_to_generic_path(spark, labeled):
     df, X, y = labeled
     k = 3 * len(np.unique(y))
     neigh = knn_join(df, df, k)
-    from spark_relieffc_fselection_spark.operators.relief import pair_table
-
     pairs = pair_table(df, neigh).cache()
-    from spark_relieffc_fselection_spark.operators.relief import explode_pairs
-
     lp = explode_pairs(pairs)
     for continuous, ldt in ((True, 0.8), (True, 0.95), (False, 0.8)):
         for top in (None, [0, 2, 4]):
             coll = collision_table(
                 lp, continuous=continuous, lower_distance_threshold=ldt
             )
-            generic = {
+            reference = {
                 (r["f1"], r["f2"]): r["joint"]
-                for r in joint_counts(
-                    coll, top, continuous=continuous, num_features=X.shape[1]
-                ).collect()
+                for r in joint_counts(coll, top, continuous=continuous).collect()
             }
-            fast = {
-                (r["f1"], r["f2"]): r["joint"]
-                for r in joint_counts_from_pairs(
-                    pairs, top, continuous=continuous,
-                    lower_distance_threshold=ldt, num_features=X.shape[1],
-                ).collect()
-            }
-            assert generic == fast, (continuous, ldt, top)
-    # and the wide-feature (self-join) physical fallback agrees too
-    coll = collision_table(lp, continuous=True, lower_distance_threshold=0.8)
-    generic = {
-        (r["f1"], r["f2"]): r["joint"]
-        for r in joint_counts(coll, [0, 1], continuous=True, num_features=10**6).collect()
-    }
-    fast = {
-        (r["f1"], r["f2"]): r["joint"]
-        for r in joint_counts_from_pairs(
-            pairs, [0, 1], continuous=True,
-            lower_distance_threshold=0.8, num_features=10**6,
-        ).collect()
-    }
-    assert generic == fast
+            for num_features in (X.shape[1], 10**6):
+                fast = {
+                    (r["f1"], r["f2"]): r["joint"]
+                    for r in joint_counts_from_pairs(
+                        pairs, top, continuous=continuous,
+                        lower_distance_threshold=ldt, num_features=num_features,
+                    ).collect()
+                }
+                assert reference == fast, (continuous, ldt, top, num_features)
     pairs.unpersist()
 
 
@@ -422,3 +412,31 @@ def test_dense_numpy_fit_job_count_pinned(spark, labeled):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
+
+
+def test_dense_hash_batched_fit_job_count_pinned(spark, labeled):
+    """The two-batch hash-batched dense fit with redundancy removal
+    issues 26 Spark jobs (same job-group count as the single-batch pin
+    above): per batch the kNN, the pair-cache count and the one fused
+    stats probe, then the MI collect. A change to the batch loop that
+    adds or drops an action shows here."""
+    df, _, _ = labeled
+    sc = spark.sparkContext
+    group = "test-dense-hash-batched-fit-jobs"
+    sc.setJobGroup(group, "dense hash-batched fit job-count pin")
+    try:
+        fit_relief(
+            df,
+            num_top_features=3,
+            num_neighbors=3,
+            estimation_ratio=1.0,
+            batch_size=0.5,
+            batching="hash",
+            redundancy_removal=True,
+            seed=7,
+            knn_strategy="numpy",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 26

@@ -4,7 +4,8 @@ from pyspark.sql import functions as F
 
 from spark_relieffc_fselection_spark.operators.knn import knn_join
 from spark_relieffc_fselection_spark.operators.relief import (
-    pair_feature_table,
+    explode_pairs,
+    pair_table,
     relevance_weights,
 )
 from spark_relieffc_fselection_spark.operators.relief_sparse import (
@@ -53,7 +54,7 @@ def test_sparse_pair_table_matches_dense_relevance(spark, sparse_fixture):
     k = 6
     priors = {float(l): float((y == l).mean()) for l in np.unique(y)}
 
-    dense_lp = pair_feature_table(df, knn_join(df, df, k, strategy="sql"))
+    dense_lp = explode_pairs(pair_table(df, knn_join(df, df, k, strategy="sql")))
     dense_w = {
         r["feature_idx"]: r["relevance"]
         for r in relevance_weights(dense_lp, priors).collect()
@@ -77,8 +78,8 @@ def test_sparse_pair_table_matches_dense_relevance(spark, sparse_fixture):
 
 def test_pair_bin_counts_preserve_every_neighbor_row(spark, sparse_fixture):
     """_pair_bin_counts' label joins must keep every neighbor row: the
-    batched sparse fit recovers n_pairs as sum(bin_cnt) instead of
-    counting the neighbor table."""
+    sparse fits recover n_pairs as sum(bin_cnt) instead of counting the
+    neighbor table."""
     from spark_relieffc_fselection_spark.operators.relief_sparse import _pair_bin_counts
 
     df, _, _ = sparse_fixture
@@ -437,7 +438,7 @@ def test_sparse_fit_coo_mode_matches_dense_mode(spark, monkeypatch):
     exact: this fixture's smallest relevance gap is ~1.1e-2 and its kNN
     boundaries are tie-free (verified with numpy), so ulp noise cannot
     flip them."""
-    from spark_relieffc_fselection_spark.operators import relief_sparse as rs
+    from spark_relieffc_fselection_spark.operators import relief
     from spark_relieffc_fselection_spark.operators.relief import SparseRelevance
 
     rng = np.random.default_rng(23)
@@ -452,7 +453,7 @@ def test_sparse_fit_coo_mode_matches_dense_mode(spark, monkeypatch):
         redundancy_removal=True, batch_size=0.5,
     )
     dense_res = fit_relief_sparse(long_df, labels, **kwargs)
-    monkeypatch.setattr(rs, "DENSE_RELEVANCE_MAX_FEATURES", 4)
+    monkeypatch.setattr(relief, "DENSE_RELEVANCE_MAX_FEATURES", 4)
     coo_res = fit_relief_sparse(long_df, labels, **kwargs)
     assert isinstance(coo_res.relevance, SparseRelevance)
     assert not isinstance(dense_res.relevance, SparseRelevance)
@@ -572,3 +573,94 @@ def test_sparse_route_resolution_is_recorded(spark):
         num_neighbors=2, redundancy_removal=False, batch_size=0.5,
     )
     assert res.resolved_knn_strategy == "sparse-inverted/probe"
+
+
+def _discrete(df):
+    """The fixture floored to integers: zero-threshold collisions."""
+    return df.select(
+        "id", F.transform("features", lambda x: F.floor(x).cast("double")).alias("features"), "label"
+    )
+
+
+@pytest.mark.parametrize(
+    "redundancy, discrete, top_features",
+    [
+        (True, False, None),
+        (False, False, None),
+        (True, True, None),
+        (False, True, None),
+        (True, False, [0, 3, 5, 7]),
+        (True, True, [1, 2]),
+    ],
+)
+def test_sparse_single_pass_matches_reference_dataflow(
+    spark, sparse_fixture, redundancy, discrete, top_features
+):
+    """batch_size=1.0 runs the shared batch engine; it must return
+    exactly what the plain operator chain returns (relevance_weights ->
+    collision_table -> joint/marginal counts -> MI -> greedy, kept in
+    tests/oracle_relief.py): same relevance bits, selections and
+    redundancy COO, with redundancy on and off, continuous and
+    discrete, and with a caller-given joint scope."""
+    from tests.oracle_relief import sparse_single_pass_reference
+
+    df, X, _ = sparse_fixture
+    long_df, labels = to_long_form(_discrete(df) if discrete else df)
+    kwargs = dict(
+        num_top_features=3,
+        num_neighbors=4,
+        redundancy_removal=redundancy,
+        discrete_data=discrete,
+        top_features=top_features,
+    )
+    want = sparse_single_pass_reference(long_df, labels, X.shape[1], **kwargs)
+    got = fit_relief_sparse(long_df, labels, X.shape[1], batch_size=1.0, **kwargs)
+    assert [float(v) for v in got.relevance] == want["relevance"]
+    assert got.std_selection == want["std_selection"]
+    assert got.redundancy_selection == want["redundancy_selection"]
+    assert got.redundancy_coo == want["redundancy_coo"]
+    if redundancy:
+        assert got.redundancy_coo  # the comparison covered real entries
+
+
+@pytest.mark.parametrize(
+    "batch_size, redundancy, max_jobs",
+    [(1.0, True, 60), (1.0, False, 50), (0.5, True, 87), (0.5, False, 77)],
+)
+def test_sparse_fit_job_count_bounded(spark, sparse_fixture, batch_size, redundancy, max_jobs):
+    """Spark jobs per sparse fit, counted under a job group. A bound,
+    not an exact pin: the same fit's count varies between runs (by up
+    to three for the batched fit, by one for the single pass), as
+    AQE's shuffle-stage jobs vary. Each bound is the largest count
+    measured over six runs (two sessions of three) of the fit before
+    both sparse fits ran through the shared batch engine; the engine's
+    single pass issues fewer (it lets the stats probe materialize the
+    caches and collects relevance inside that probe)."""
+    df, X, _ = sparse_fixture
+    long_df, labels = to_long_form(df)
+    sc = spark.sparkContext
+    group = f"test-sparse-fit-jobs-{batch_size}-{redundancy}"
+    sc.setJobGroup(group, "sparse fit job-count bound")
+    try:
+        fit_relief_sparse(
+            long_df, labels, n_features=X.shape[1],
+            num_top_features=3, num_neighbors=4,
+            redundancy_removal=redundancy, batch_size=batch_size,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
+
+
+@pytest.mark.parametrize("batch_size", [1.0, 0.5])
+def test_fit_relief_sparse_empty_input_raises_clearly(spark, batch_size):
+    """Empty long/labels tables fail with the same named ValueError as
+    the dense fit, single-pass and batched."""
+    long_df = spark.createDataFrame([], "id long, feature_idx int, value double")
+    labels = spark.createDataFrame([], "id long, label double")
+    with pytest.raises(ValueError, match="non-empty"):
+        fit_relief_sparse(
+            long_df, labels, n_features=4, num_top_features=2,
+            num_neighbors=2, batch_size=batch_size,
+        )
