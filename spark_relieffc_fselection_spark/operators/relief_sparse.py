@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from spark_relieffc_fselection_spark.operators.relief import (
     DEC,
     ReliefFitResult,
+    _check_fit_counts,
     _class_priors,
     _Neighbourhood,
     _run_batches,
@@ -444,6 +445,7 @@ def fit_relief_sparse(
     feature, so the probe only burns driver rounds before falling back
     to the grid it should have started on.
     """
+    _check_fit_counts(num_top_features, num_neighbors, "fit_relief_sparse")
     n_elems, priors = _class_priors(
         [(r["label"], r["count"]) for r in labels.groupBy("label").count().collect()],
         "fit_relief_sparse",

@@ -19,12 +19,11 @@ from pyspark.sql import functions as F
 
 from spark_relieffc_fselection_spark.operators.knn import knn_join
 from spark_relieffc_fselection_spark.operators.relief import (
+    _collapse_bins_local,
     explode_pairs,
     feature_bin_stats,
     joint_counts_from_pairs,
     pair_table,
-    per_feature_stats,
-    relevance_weights,
 )
 from spark_relieffc_fselection_spark.queries import localize, register
 from spark_relieffc_fselection_spark.sources import load_table
@@ -115,7 +114,7 @@ def _pipe(spark: SparkSession, sf_dir: str) -> dict:
         )
         # Cache the COMPACT pair table (the exploded long form is nFeat
         # times bigger — never cached, re-derived per consumer in one
-        # in-core pass). NOT materialized eagerly: the per-feature job
+        # in-core pass). NOT materialized eagerly: the bin-stats job
         # below is its first and only consumer before the joint job, so
         # the cache fills as a side effect of useful work.
         # Repartition by the pair key before caching: AQE coalesces the
@@ -128,26 +127,24 @@ def _pipe(spark: SparkSession, sf_dir: str) -> dict:
             .repartition(par, "query_id", "neighbor_id")
             .cache()
         )
-        lp = explode_pairs(pairs)
         # TWO passes over the exploded long form total: one fused
-        # bin-stats aggregation (relevance sums + marginal votes +
-        # collision counts in a single scan — feature_bin_stats,
-        # collapsed per-feature by per_feature_stats in the SAME job),
-        # one collision explode feeding the joint combos. Both query
-        # results are TINY (64..~1000 rows): compute and cache them
+        # bin-stats aggregation (relevance sums, marginal votes and
+        # collision counts), one collision explode feeding the joint
+        # combos. Both results are TINY (64..~1000 rows): compute them
         # now, then release the big pair cache — a leaked
-        # multi-hundred-MB cache per sf_dir otherwise piles GC
-        # pressure onto every later query in the session.
-        bins = feature_bin_stats(lp, continuous=True, lower_distance_threshold=0.8)
-        # localize, not cache: the memoized results live for the whole
-        # session, and every retained cache entry slows later queries'
-        # cache lookups by its (huge) plan size. LocalRelations don't.
-        perfeat = localize(per_feature_stats(bins, priors))
-        _mark("perfeat")
+        # multi-hundred-MB cache per sf_dir piles GC pressure onto
+        # every later query in the session.
+        bins = feature_bin_stats(
+            explode_pairs(pairs), continuous=True, lower_distance_threshold=0.8
+        ).collect()
+        _mark("bins")
         # joint stats straight from the cached compact pair table — the
         # generic joint_counts would explode to long rows only to
         # collect_list them back per pair (decimal-identical result,
-        # see joint_counts_from_pairs)
+        # see joint_counts_from_pairs). localize, not cache: the
+        # memoized results live for the whole session, and every
+        # retained cache entry slows later queries' cache lookups by its
+        # (huge) plan size. LocalRelations don't.
         joint = localize(
             joint_counts_from_pairs(
                 pairs, JOINT_TOP, continuous=True,
@@ -155,13 +152,30 @@ def _pipe(spark: SparkSession, sf_dir: str) -> dict:
             )
         )
         _mark("joint")
-        # classCounter total (ReliefFRSelector.scala:469-470): the
-        # number of (query, neighbor) pairs — q72b's MI normalizer.
-        # One in-core action over the already-materialized cache.
-        n_pairs = pairs.count()
+        # classCounter per bin (the collapse divisor); its total is
+        # q72b's MI normalizer (ReliefFRSelector.scala:469-470).
+        pair_counts = {
+            (r["n_label"], r["same_class"]): r["count"]
+            for r in pairs.groupBy("n_label", "same_class").count().collect()
+        }
         pairs.unpersist()
+        relevance, marginal = _collapse_bins_local(
+            (
+                (r["feature_idx"], r["n_label"], r["same_class"], r["bin_sum"], r["vote_sum"])
+                for r in bins
+            ),
+            pair_counts,
+            priors,
+        )
+        n_coll = dict.fromkeys(relevance, 0)
+        for r in bins:
+            n_coll[r["feature_idx"]] += r["n_collisions"]
+        perfeat = spark.createDataFrame(
+            [(f, relevance[f], marginal[f], n_coll[f]) for f in sorted(relevance)],
+            "feature_idx int, relevance double, marginal double, n_collisions long",
+        )
         _PIPE_CACHE[key] = {
-            "perfeat": perfeat, "joint": joint, "n_pairs": n_pairs,
+            "perfeat": perfeat, "joint": joint, "n_pairs": sum(pair_counts.values()),
         }
     return _PIPE_CACHE[key]
 
@@ -730,9 +744,8 @@ st{step} AS MATERIALIZED (
         "is now just the engine-seeded multi-batch loop.",
 )
 def q72b_relief_greedy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from spark_relieffc_fselection_spark.operators.relief import (
+        _finalize_relevance,
         greedy_select,
         mi_redundancy,
     )
@@ -740,12 +753,11 @@ def q72b_relief_greedy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _pipe(spark, sf_dir)
     perfeat, joint, n_pairs = p["perfeat"], p["joint"], p["n_pairs"]
     rows = perfeat.collect()  # nFeat rows — driver-sized by construction
-    n_feat = 1 + max(r["feature_idx"] for r in rows)
-    rel = np.zeros(n_feat)
-    for r in rows:
-        rel[int(r["feature_idx"])] = float(r["relevance"])
-    mn, mx = float(rel.min()), float(rel.max())
-    rel = (rel - mn) / (mx - mn) if mx > mn else np.zeros(n_feat)
+    rel, _ = _finalize_relevance(
+        {int(r["feature_idx"]): float(r["relevance"]) for r in rows},
+        1 + max(r["feature_idx"] for r in rows),
+        GREEDY_K,
+    )
     red_df = mi_redundancy(
         joint,
         perfeat.select("feature_idx", "marginal"),
@@ -861,6 +873,7 @@ SPARSE_QUERY_MOD = 10  # deterministic 1-in-10 query sample (estimationRatio ana
         "deterministic, so the whole dataflow is SQL-oracle-able.",
 )
 def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from spark_relieffc_fselection_spark.operators.relief import _probe_batch
     from spark_relieffc_fselection_spark.operators.relief_sparse import (
         _pair_bin_counts,
         sparse_knn_join,
@@ -902,12 +915,20 @@ def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
         long_df, labels, query_ids, SPARSE_K, num_corpus=n_inst, probe=False
     ).cache()
     neigh.count()
-    lp = sparse_pair_feature_table(long_df, labels, neigh)
-    pair_counts = _pair_bin_counts(neigh, labels)
-    w = relevance_weights(lp, priors, pair_counts=pair_counts)
-    out = localize(
-        w.select("feature_idx", F.round("relevance", 6).alias("relevance"))
+    # the sparse fit's own stats probe and driver collapse, one action
+    relevance, _, _ = _probe_batch(
+        feature_bin_stats(
+            sparse_pair_feature_table(long_df, labels, neigh),
+            continuous=True,
+            lower_distance_threshold=0.8,
+        ),
+        _pair_bin_counts(neigh, labels),
+        None,
+        priors,
     )
+    out = spark.createDataFrame(
+        sorted(relevance.items()), "feature_idx int, relevance double"
+    ).select("feature_idx", F.round("relevance", 6).alias("relevance"))
     neigh.unpersist()
     long_df.unpersist()
     labels.unpersist()
@@ -1546,9 +1567,9 @@ def q72d_relief_fit_hash_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: q161 stretches the q158 dataflow across a DECLARED width past the
 #: COO threshold: every active feature f is re-indexed to f * STRIDE,
 #: so the fit runs with n_features = 64 * STRIDE = 524,288 (> 2^18)
-#: and the driver finalize takes the SparseRelevance/COO path
-#: (normalize_relevance_coo + std_ranking_coo + greedy_select_coo —
-#: the kddb-regime code VERDICT r8 #7 demanded). Semantics differ from
+#: and the driver finalize returns a SparseRelevance, ranked and
+#: greedily selected over O(active) candidates — the kddb-regime path
+#: VERDICT r8 #7 demanded. Semantics differ from
 #: q158 in exactly one way the oracle must replay: absent features
 #: exist now, carrying raw relevance 0.0 — the min-max extrema include
 #: that 0.0, and ONE absent representative (index 1, the smallest
@@ -1596,8 +1617,8 @@ _Q161_ORACLE = (
     doc="The COO-finalize sparse fit under the q72c-family oracle: the "
         "q158 dataflow with every feature re-indexed f -> f*8192 and a "
         "declared width of 524,288 (> the 2^18 COO threshold), so the "
-        "driver finalize runs normalize_relevance_coo / std_ranking_coo "
-        "/ greedy_select_coo on O(active) dicts — the kddb-width path "
+        "driver finalize keeps a SparseRelevance and ranks and selects "
+        "over O(active) candidates — the kddb-width path "
         "(30M features, README.md:11) hash-gated end-to-end, absent-"
         "feature normalization included (the min-max now spans the "
         "implicit raw-0.0 of never-active features; the oracle carries "

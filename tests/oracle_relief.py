@@ -6,9 +6,10 @@ Semantics match spark_relieffc_fselection_spark.operators.relief:
 within-batch kNN, self excluded, ties by id, class-bin collapse with
 priors, deterministic collision threshold, symmetric joint updates.
 
-:func:`sparse_single_pass_reference` is the exception: a Spark
-dataflow, kept as the reference the sparse single-pass fit is pinned
-to.
+:func:`relevance_weights` and :func:`sparse_single_pass_reference`
+are the exceptions: Spark dataflows, kept as the references the
+engine's driver-side bin collapse and its sparse single-pass fit are
+pinned to.
 """
 
 from __future__ import annotations
@@ -95,6 +96,125 @@ def relief_relevance_oracle(
     return w
 
 
+def relevance_weights(long_pairs, priors: dict[float, float], pair_counts=None):
+    """The Spark-side bin collapse, ``(feature_idx, relevance)`` per
+    aggregateWeightsByFeat (ReliefFRSelector.scala:605-629): bins where
+    the neighbor shares the query's class subtract, others add, each
+    weighted by the neighbor class's prior and divided by the bin's pair
+    count. The engine collapses on the driver
+    (``relief._collapse_bins_local``); this is the reference it must
+    match bit for bit.
+
+    The divisor is the number of (query, neighbor) PAIRS in the bin.
+    Without ``pair_counts`` it is counted from the distinct pairs of
+    ``long_pairs``, which is right only for dense long tables: sparse
+    callers pass counts from the neighbor table, because a fully
+    inactive pair has no rows. (Spark imports stay inside the function:
+    the benchmark kit imports this module for its numpy oracle.)
+    """
+    from pyspark.sql import functions as F
+
+    from spark_relieffc_fselection_spark.operators.relief import DEC
+
+    spark = long_pairs.sparkSession
+    prior_df = F.broadcast(
+        spark.createDataFrame(
+            [(float(k), float(v)) for k, v in priors.items()],
+            "n_label double, prior double",
+        )
+    )
+    if pair_counts is None:
+        pair_counts = (
+            long_pairs.select("query_id", "neighbor_id", "n_label", "same_class")
+            .distinct()
+            .groupBy("n_label", "same_class")
+            .agg(F.count("*").alias("bin_cnt"))
+        )
+    bin_sums = long_pairs.groupBy("feature_idx", "n_label", "same_class").agg(
+        F.sum(F.col("fdist").cast(DEC)).alias("bin_sum"),
+    )
+    return _collapse_bins(bin_sums, prior_df, pair_counts)
+
+
+def _collapse_bins(bin_sums, prior_df, pair_counts):
+    from pyspark.sql import functions as F
+
+    from spark_relieffc_fselection_spark.operators.relief import DEC
+
+    return (
+        bin_sums.join(pair_counts, ["n_label", "same_class"])
+        .join(prior_df, "n_label")
+        .withColumn(
+            "contrib",
+            F.when(F.col("same_class"), F.lit(-1.0)).otherwise(F.lit(1.0))
+            * F.col("prior")
+            * F.col("bin_sum").cast("double")
+            / F.col("bin_cnt"),
+        )
+        .groupBy("feature_idx")
+        .agg(F.sum(F.col("contrib").cast(DEC)).cast("double").alias("relevance"))
+    )
+
+
+def minmax_oracle(raw: dict[int, float], n_features: int) -> np.ndarray:
+    """Dense min-max of raw relevance over a zero-initialized array:
+    absent features carry raw 0.0; a degenerate range gives all 0.0."""
+    arr = np.zeros(n_features)
+    for f, v in raw.items():
+        arr[f] = v
+    if n_features == 0:
+        return arr
+    mn, mx = float(arr.min()), float(arr.max())
+    return (arr - mn) / (mx - mn) if mx > mn else np.zeros(n_features)
+
+
+def std_ranking_oracle(relevance: np.ndarray, num_top_features: int) -> list[int]:
+    """Top-k of a dense relevance array by (-relevance, feature_idx)."""
+    order = np.lexsort((np.arange(len(relevance)), -relevance))
+    return [int(i) for i in order[: max(0, min(num_top_features, len(relevance)))]]
+
+
+def greedy_oracle(
+    relevance: np.ndarray,
+    redundancy_coo: dict[tuple[int, int], float],
+    num_top_features: int,
+) -> list[int]:
+    """The greedy selection over a dense relevance array, as a plain
+    per-round numpy arg-max (selectFeatures, ReliefFRSelector.scala:
+    685-732): per-feature update counters, pure relevance until a
+    feature is first charged, ties to the lowest index. Returns [] for
+    k <= 0 and for an empty array."""
+    n_feat = len(relevance)
+    k = min(num_top_features, n_feat)
+    if k <= 0:
+        return []
+    red_acc = np.zeros(n_feat)
+    upd_cnt = np.zeros(n_feat, dtype=np.int64)
+    valid = np.ones(n_feat, dtype=bool)
+    by_f1: dict[int, list[tuple[int, float]]] = {}
+    for (f1, f2), v in redundancy_coo.items():
+        by_f1.setdefault(f1, []).append((f2, v))
+    first = int(np.lexsort((np.arange(n_feat), -relevance))[0])
+    selected = [first]
+    valid[first] = False
+    while len(selected) < k:
+        last = selected[-1]
+        for f2, v in by_f1.get(last, ()):
+            if valid[f2]:
+                red_acc[f2] += v
+                upd_cnt[f2] += 1
+        score = np.where(
+            upd_cnt > 0, relevance - red_acc / np.maximum(upd_cnt, 1), relevance
+        )
+        score = np.where(valid, score, -np.inf)
+        best = int(np.argmax(score))
+        if not np.isfinite(score[best]):
+            break
+        selected.append(best)
+        valid[best] = False
+    return selected
+
+
 def collision_stats_oracle(
     X: np.ndarray,
     y: np.ndarray,
@@ -145,24 +265,18 @@ def sparse_single_pass_reference(
     knn_probe: bool | None = None,
 ) -> dict:
     """The single-pass sparse fit as a plain chain of the Spark
-    operators, one stage after another: ``relevance_weights`` over the
-    sparse pair table -> min-max + std ranking -> ``collision_table``
-    -> ``joint_counts`` (scoped to ``top_features`` or the std ranking)
-    and ``marginal_counts`` -> ``mi_redundancy`` with jointTotal = the
-    pair count -> greedy selection. Returns relevance (as a list),
-    std_selection, redundancy_selection and redundancy_coo."""
+    operators, one stage after another: :func:`relevance_weights` over
+    the sparse pair table -> dense min-max + std ranking ->
+    ``collision_table`` -> ``joint_counts`` (scoped to ``top_features``
+    or the std ranking) and ``marginal_counts`` -> ``mi_redundancy``
+    with jointTotal = the pair count -> :func:`greedy_oracle`. Returns
+    relevance (as a dense list), std_selection, redundancy_selection
+    and redundancy_coo."""
     from spark_relieffc_fselection_spark.operators.relief import (
-        DENSE_RELEVANCE_MAX_FEATURES,
         collision_table,
-        greedy_select,
-        greedy_select_coo,
         joint_counts,
         marginal_counts,
         mi_redundancy,
-        normalize_relevance_coo,
-        relevance_weights,
-        std_ranking,
-        std_ranking_coo,
     )
     from spark_relieffc_fselection_spark.operators.relief_sparse import (
         _pair_bin_counts,
@@ -186,18 +300,8 @@ def sparse_single_pass_reference(
             lp, priors, pair_counts=_pair_bin_counts(neigh, labels)
         ).collect()
     }
-    if n_features > DENSE_RELEVANCE_MAX_FEATURES:
-        rel_map, default = normalize_relevance_coo(raw, n_features)
-        std_sel = std_ranking_coo(rel_map, default, n_features, num_top_features)
-        relevance = [rel_map.get(f, default) for f in range(n_features)]
-    else:
-        arr = np.zeros(n_features)
-        for f, v in raw.items():
-            arr[f] = v
-        mn, mx = float(arr.min()), float(arr.max())
-        arr = (arr - mn) / (mx - mn) if mx > mn else np.zeros(n_features)
-        std_sel = std_ranking(arr, num_top_features)
-        relevance = arr.tolist()
+    arr = minmax_oracle(raw, n_features)
+    std_sel = std_ranking_oracle(arr, num_top_features)
 
     red_coo: dict[tuple[int, int], float] = {}
     red_sel = list(std_sel)
@@ -212,16 +316,11 @@ def sparse_single_pass_reference(
             for r in red_df.collect():
                 red_coo[(int(r["f1"]), int(r["f2"]))] = float(r["redundancy"])
         coll.unpersist()
-        if n_features > DENSE_RELEVANCE_MAX_FEATURES:
-            red_sel = greedy_select_coo(
-                rel_map, default, n_features, red_coo, num_top_features
-            )
-        else:
-            red_sel = greedy_select(arr, red_coo, num_top_features)
+        red_sel = greedy_oracle(arr, red_coo, num_top_features)
     lp.unpersist()
     neigh.unpersist()
     return {
-        "relevance": relevance,
+        "relevance": arr.tolist(),
         "std_selection": std_sel,
         "redundancy_selection": red_sel,
         "redundancy_coo": red_coo,

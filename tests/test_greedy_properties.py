@@ -71,6 +71,22 @@ def test_greedy_per_feature_update_count_not_diluted():
     assert greedy_select(r, coo, 4) == [0, 2, 3, 1]
 
 
+def test_greedy_select_k_zero_selects_nothing():
+    """k = 0 selects nothing in both selectors (the greedy used to
+    return its first pick regardless of k)."""
+    r = np.array([0.2, 0.9, 0.5])
+    assert greedy_select(r, {}, 0) == []
+    assert std_ranking(r, 0) == []
+
+
+def test_std_ranking_negative_k_selects_nothing():
+    """A negative k selects nothing (it used to slice off the last
+    feature and return n - 1)."""
+    r = np.array([0.2, 0.9, 0.5])
+    assert std_ranking(r, -1) == []
+    assert greedy_select(r, {}, -1) == []
+
+
 # --- unigram-LM DP properties (pure Python, no Spark) -----------------
 
 

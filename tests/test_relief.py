@@ -11,11 +11,11 @@ from spark_relieffc_fselection_spark.operators.relief import (
     joint_counts,
     marginal_counts,
     pair_table,
-    relevance_weights,
     std_ranking,
 )
 from tests.oracle_relief import (
     collision_stats_oracle,
+    relevance_weights,
     relief_relevance_oracle,
 )
 
@@ -220,6 +220,52 @@ def test_fit_relief_empty_input_raises_clearly(spark):
     empty = spark.createDataFrame([], "id long, features array<double>, label double")
     with pytest.raises(ValueError, match="non-empty"):
         fit_relief(empty, num_top_features=3, num_neighbors=2)
+
+
+@pytest.mark.parametrize(
+    "fit, kwargs, param",
+    [
+        ("dense", dict(num_top_features=0), "num_top_features"),
+        ("dense", dict(num_top_features=-1), "num_top_features"),
+        # numpy used to fail inside the kernel with a bare IndexError,
+        # numpy-gemm used to return no neighbours and fit on zero pairs
+        ("dense", dict(num_neighbors=0, knn_strategy="numpy"), "num_neighbors"),
+        ("dense", dict(num_neighbors=0, knn_strategy="numpy-gemm"), "num_neighbors"),
+        ("sparse", dict(num_top_features=0), "num_top_features"),
+        ("sparse", dict(num_neighbors=0), "num_neighbors"),
+        ("estimator", dict(numTopFeatures=0), "num_top_features"),
+        ("estimator", dict(numNeighbors=0), "num_neighbors"),
+    ],
+)
+def test_fits_reject_counts_below_one_before_any_job(
+    spark, labeled, fit, kwargs, param
+):
+    """num_top_features and num_neighbors below 1 fail with a
+    ValueError naming the parameter, before the fit runs a Spark job;
+    the Estimator inherits the check from the fit it routes to."""
+    from spark_relieffc_fselection_spark.ml import ReliefFSelector
+    from spark_relieffc_fselection_spark.operators.relief_sparse import (
+        fit_relief_sparse,
+        to_long_form,
+    )
+
+    df, X, _ = labeled
+    long_df, labels = to_long_form(df)
+    sc = spark.sparkContext
+    group = f"test-reject-counts-{fit}-{sorted(kwargs.items())}"
+    sc.setJobGroup(group, "count validation")
+    try:
+        with pytest.raises(ValueError, match=param):
+            if fit == "dense":
+                fit_relief(df, **kwargs)
+            elif fit == "sparse":
+                fit_relief_sparse(long_df, labels, X.shape[1], **kwargs)
+            else:
+                ReliefFSelector(**kwargs).fit(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_fit_relief_lsh_strategy_overlaps_exact(spark):

@@ -6,7 +6,6 @@ from spark_relieffc_fselection_spark.operators.knn import knn_join
 from spark_relieffc_fselection_spark.operators.relief import (
     explode_pairs,
     pair_table,
-    relevance_weights,
 )
 from spark_relieffc_fselection_spark.operators.relief_sparse import (
     fit_relief_sparse,
@@ -14,6 +13,7 @@ from spark_relieffc_fselection_spark.operators.relief_sparse import (
     sparse_pair_feature_table,
     to_long_form,
 )
+from tests.oracle_relief import relevance_weights
 
 
 @pytest.fixture(scope="module")
@@ -385,17 +385,40 @@ def test_sparse_sampled_batched_fit_matches_dense(spark):
 
 
 def test_coo_ranking_and_greedy_match_dense():
-    """The COO finalize (VERDICT r8 #7) is semantics-identical to the
-    dense ndarray path: normalization (absent features carry raw 0.0),
-    std ranking, and the greedy per-feature-counter selection all agree
-    on randomized fixtures spanning empty/partial/full activity."""
+    """The one std_ranking / greedy_select answers the same on a dense
+    ndarray and on the equivalent SparseRelevance, and both equal the
+    plain numpy oracles (tests/oracle_relief.py), on randomized
+    fixtures spanning empty/partial/full activity, plus k=0, k>n, an
+    empty input and an all-absent input. The finalize's one min-max
+    rule (absent features carry raw 0.0) produces both
+    representations, value for value."""
+    from spark_relieffc_fselection_spark.operators import relief
     from spark_relieffc_fselection_spark.operators.relief import (
+        SparseRelevance,
+        _finalize_relevance,
         greedy_select,
-        greedy_select_coo,
-        normalize_relevance_coo,
-        std_ranking,
-        std_ranking_coo,
     )
+    from tests.oracle_relief import greedy_oracle, minmax_oracle, std_ranking_oracle
+
+    def both(raw, n, k):
+        dense, dense_std = _finalize_relevance(raw, n, k)
+        limit = relief.DENSE_RELEVANCE_MAX_FEATURES
+        try:
+            relief.DENSE_RELEVANCE_MAX_FEATURES = -1
+            coo, coo_std = _finalize_relevance(raw, n, k)
+        finally:
+            relief.DENSE_RELEVANCE_MAX_FEATURES = limit
+        assert isinstance(dense, np.ndarray)
+        assert isinstance(coo, SparseRelevance)
+        assert [float(v) for v in coo] == dense.tolist() == minmax_oracle(raw, n).tolist()
+        assert dense_std == coo_std == std_ranking_oracle(dense, k)
+        return dense, coo
+
+    def check(raw, n, k, red):
+        dense, coo = both(raw, n, k)
+        want = greedy_oracle(dense, red, k)
+        assert greedy_select(dense, red, k) == want
+        assert greedy_select(coo, red, k) == want
 
     rng = np.random.default_rng(17)
     for _ in range(40):
@@ -403,24 +426,28 @@ def test_coo_ranking_and_greedy_match_dense():
         n_active = int(rng.integers(0, n + 1))
         active = rng.choice(n, size=n_active, replace=False)
         raw = {int(f): float(rng.normal()) for f in active}
-        dense_raw = np.zeros(n)
-        for f, v in raw.items():
-            dense_raw[f] = v
-        mn, mx = dense_raw.min(), dense_raw.max()
-        dense = (dense_raw - mn) / (mx - mn) if mx > mn else np.zeros(n)
-        coo, default = normalize_relevance_coo(raw, n)
-        for i in range(n):
-            assert abs(dense[i] - coo.get(i, default)) < 1e-12
         k = int(rng.integers(1, n + 1))
-        assert std_ranking(dense, k) == std_ranking_coo(coo, default, n, k)
         red = {}
         for _ in range(int(rng.integers(0, 30))):
             f1, f2 = int(rng.integers(0, n)), int(rng.integers(0, n))
             if f1 != f2:
                 red[(f1, f2)] = float(rng.random())
-        assert greedy_select(dense, red, k) == greedy_select_coo(
-            coo, default, n, red, k
-        )
+        check(raw, n, k, red)
+        check(raw, n, 0, red)          # k = 0 selects nothing
+        check(raw, n, n + 3, red)      # k > n selects every feature
+    for _ in range(10):  # wide and mostly absent: COO touches absent ids
+        n = int(rng.integers(50, 500))
+        active = rng.choice(n, size=int(rng.integers(0, 10)), replace=False)
+        raw = {int(f): float(rng.normal()) for f in active}
+        red = {
+            (int(rng.integers(0, n)), int(rng.integers(0, 20))): float(rng.random())
+            for _ in range(15)
+        }
+        red = {key: v for key, v in red.items() if key[0] != key[1]}
+        check(raw, n, int(rng.integers(1, 25)), red)
+    check({}, 0, 3, {})                # empty input
+    check({}, 6, 4, {(1, 4): 0.5})     # every feature absent
+    check({}, 6, 4, {})
 
 
 def test_sparse_fit_coo_mode_matches_dense_mode(spark, monkeypatch):
