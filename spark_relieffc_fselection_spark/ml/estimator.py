@@ -9,8 +9,9 @@ Differences from the reference, by design (SURVEY §8):
   * deterministic, partition-invariant results for a given seed (the
     reference's goldens change with parallelism, TestHelper.scala:118);
   * input may be an ml Vector column OR a plain array<double> column;
-  * transform slices with Catalyst expressions (no row UDF), reference
-    uses a Vector=>Vector udf (ReliefFRSelector.scala:815-818);
+  * transform slices with Catalyst expressions (no row UDF, no
+    densified vector), reference uses a Vector=>Vector udf
+    (ReliefFRSelector.scala:815-818);
   * model metadata reflects the selection actually applied (the
     reference's metadata/data mismatch is a defect, SURVEY §8.7).
 """
@@ -27,7 +28,12 @@ from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_relieffc_fselection_spark.operators.relief import fit_relief
+from spark_relieffc_fselection_spark.operators.relief import (
+    _check_fit_modes,
+    _draw_sample,
+    dual_ranking,
+    fit_relief,
+)
 from spark_relieffc_fselection_spark.operators.relief_sparse import fit_relief_sparse
 
 
@@ -83,8 +89,11 @@ class _ReliefFParams(HasInputCol, HasOutputCol, HasLabelCol, HasSeed):
         Params._dummy(), "knnStrategy",
         "'sql' (pure DataFrame), 'numpy' (Arrow blockwise kernel), "
         "'numpy-gemm' (BLAS expansion — exact for integer/discretized "
-        "coordinates), or 'lsh' (approximate multi-table sign-LSH "
-        "candidate pruning for very large corpora).",
+        "coordinates), 'lsh' (approximate multi-table sign-LSH "
+        "candidate pruning for very large corpora), or 'auto' (picks "
+        "numpy, numpy-gemm or lsh by the per-batch distance volume; "
+        "resolvedKnnStrategy records the pick). Dense route only; "
+        "still validated on the sparse route.",
         typeConverter=TypeConverters.toString,
     )
     batching = Param(
@@ -167,11 +176,15 @@ class ReliefFSelector(
         return self._set(**kwargs)
 
     def _fit(self, dataset: DataFrame) -> "ReliefFSelectorModel":
-        # validate the estimator-level enum/range Params up front and
-        # on BOTH routes (fit_relief validates its own enums; these two
-        # never reach it) — a typo'd value must fail loudly before the
-        # prepare/cache pipeline runs, not as a KeyError mid-fit or a
-        # silent no-op on the route that doesn't consult it
+        # validate every enum/range Param up front and on BOTH routes,
+        # before the sparsity sniff's Spark job — a typo'd value must
+        # fail loudly, not as a KeyError mid-fit or a silent no-op on
+        # the route that doesn't consult it
+        _check_fit_modes(
+            self.getOrDefault(self.knnStrategy),
+            self.getOrDefault(self.batching),
+            self.getOrDefault(self.samplingMode),
+        )
         probe_mode = self.getOrDefault(self.sparseKnnProbe)
         if probe_mode not in ("auto", "probe", "grid"):
             raise ValueError(f"unknown sparseKnnProbe mode {probe_mode!r}")
@@ -212,14 +225,7 @@ class ReliefFSelector(
             id_col="__rid",
             features_col="__features",
             label_col="__label",
-            num_top_features=self.getOrDefault(self.numTopFeatures),
-            num_neighbors=self.getOrDefault(self.numNeighbors),
-            estimation_ratio=self.getOrDefault(self.estimationRatio),
-            batch_size=self.getOrDefault(self.batchSize),
-            lower_feature_threshold=self.getOrDefault(self.lowerFeatureThreshold),
-            lower_distance_threshold=self.getOrDefault(self.lowerDistanceThreshold),
-            redundancy_removal=self.getOrDefault(self.redundancyRemoval),
-            discrete_data=self.getOrDefault(self.discreteData),
+            **self._fit_kwargs(),
             seed=self.getOrDefault(self.seed),
             knn_strategy=self.getOrDefault(self.knnStrategy),
             batching=self.getOrDefault(self.batching),
@@ -270,19 +276,12 @@ class ReliefFSelector(
             entries.alias("__entries"),
             F.col(self.getLabelCol()).cast("double").alias("label"),
         ).cache()
-        ratio = float(self.getOrDefault(self.estimationRatio))
-        if ratio >= 1.0:
-            sample = base
-        elif self.getOrDefault(self.samplingMode) == "hash":
-            # the portable draw (q72d's mode) — same uniform law as the
-            # engine-seeded sample, but re-run-stable
-            from spark_relieffc_fselection_spark.operators.sampling import (
-                hash_uniform,
-            )
-
-            sample = base.filter(hash_uniform(F.col("id")) < ratio)
-        else:
-            sample = base.sample(fraction=ratio, seed=self.getOrDefault(self.seed))
+        sample = _draw_sample(
+            base,
+            self.getOrDefault(self.estimationRatio),
+            self.getOrDefault(self.samplingMode),
+            self.getOrDefault(self.seed),
+        )
         labels = sample.select("id", "label")
         long_df = (
             sample.select("id", F.explode("__entries").alias("e"))
@@ -293,23 +292,29 @@ class ReliefFSelector(
             long_df,
             labels,
             n_features,
-            num_top_features=self.getOrDefault(self.numTopFeatures),
-            num_neighbors=self.getOrDefault(self.numNeighbors),
-            lower_distance_threshold=self.getOrDefault(self.lowerDistanceThreshold),
-            redundancy_removal=self.getOrDefault(self.redundancyRemoval),
-            discrete_data=self.getOrDefault(self.discreteData),
-            batch_size=float(self.getOrDefault(self.batchSize)),
-            lower_feature_threshold=self.getOrDefault(self.lowerFeatureThreshold),
-            # declares the upstream sample so the batched loop's
-            # jointTotal discount replays the reference's
-            # (1 - ratio * batchPerc), ReliefFRSelector.scala:642
-            estimation_ratio=ratio,
+            # estimation_ratio declares the upstream sample to the
+            # batched loop's jointTotal discount
+            **self._fit_kwargs(),
             knn_probe={"auto": None, "probe": True, "grid": False}[
                 self.getOrDefault(self.sparseKnnProbe)
             ],
         )
         base.unpersist()
         return self._make_model(res)
+
+    def _fit_kwargs(self) -> dict:
+        """The fit keywords both routes take from the Params."""
+        get = self.getOrDefault
+        return dict(
+            num_top_features=get(self.numTopFeatures),
+            num_neighbors=get(self.numNeighbors),
+            estimation_ratio=get(self.estimationRatio),
+            batch_size=get(self.batchSize),
+            lower_feature_threshold=get(self.lowerFeatureThreshold),
+            lower_distance_threshold=get(self.lowerDistanceThreshold),
+            redundancy_removal=get(self.redundancyRemoval),
+            discrete_data=get(self.discreteData),
+        )
 
     def _make_model(self, res) -> "ReliefFSelectorModel":
         from spark_relieffc_fselection_spark.operators.relief import (
@@ -476,26 +481,14 @@ class ReliefFSelectorModel(
         return float(self.getOrDefault(self.relevanceDefault))
 
     def ranking(self, spark) -> DataFrame:
-        """Dual ranking as a DataFrame — the engine's form of the
-        reference's console TSV dump (S5, ReliefFRSelector.scala:
-        318-321): one row per rank with both selection orders and
-        their normalized relevance."""
-        std = self.getOrDefault(self.stdSelection)
-        red = self.getOrDefault(self.redundancySelection)
-        rows = [
-            (
-                i + 1,
-                int(s),
-                self.relevance_for(int(s)),
-                int(r),
-                self.relevance_for(int(r)),
-            )
-            for i, (s, r) in enumerate(zip(std, red))
-        ]
-        return spark.createDataFrame(
-            rows,
-            "rank int, std_feature int, std_relevance double, "
-            "redundancy_feature int, redundancy_relevance double",
+        """Dual ranking as a DataFrame (:func:`dual_ranking`): one row
+        per rank with both selection orders and their normalized
+        relevance."""
+        return dual_ranking(
+            spark,
+            self.getOrDefault(self.stdSelection),
+            self.getOrDefault(self.redundancySelection),
+            self.relevance_for,
         )
 
     def _ml_attrs(self, dataset: DataFrame, input_col: str, indices: list[int]) -> dict:
@@ -537,14 +530,22 @@ class ReliefFSelectorModel(
         output_col = self.getOutputCol()
         indices = self.selected_indices()
         is_vector = isinstance(dataset.schema[input_col].dataType, VectorUDT)
-        arr = (
-            vector_to_array(F.col(input_col))
-            if is_vector
-            else F.col(input_col)
-        )
         # Catalyst-side gather — the vector-slice projection (SURVEY P8,
         # FeatureSelectionUtils.scala:38-73) with no Python UDF.
-        sliced = F.array(*[arr.getItem(i) for i in indices])
-        out = array_to_vector(sliced) if is_vector else sliced
+        if is_vector:
+            # Slice the unwrapped struct, never a densified array: a
+            # sparse row at kddb width would be nFeat doubles per
+            # selected index. Sparse rows look each index up in their
+            # (indices, values) map; absent entries are 0.0.
+            u = F.unwrap_udt(F.col(input_col))
+            values = u.getField("values")
+            by_index = F.map_from_arrays(u.getField("indices"), values)
+            sliced = F.when(
+                u.getField("type") == 0,
+                F.array(*[F.coalesce(F.try_element_at(by_index, F.lit(i)), F.lit(0.0)) for i in indices]),
+            ).otherwise(F.array(*[values.getItem(i) for i in indices]))
+            out = array_to_vector(sliced)
+        else:
+            out = F.array(*[F.col(input_col).getItem(i) for i in indices])
         meta = self._ml_attrs(dataset, input_col, indices)
         return dataset.withColumn(output_col, out.alias(output_col, metadata=meta))

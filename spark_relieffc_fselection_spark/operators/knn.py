@@ -111,6 +111,19 @@ def resolve_auto_strategy(n_queries: int, n_scan: int, n_feat: int) -> str:
     return "lsh"
 
 
+#: The strategies :func:`knn_join` runs. Fits also take ``'auto'``,
+#: which :func:`resolve_auto_strategy` turns into one of these.
+STRATEGIES = ("sql", "numpy", "numpy-gemm", "lsh")
+
+
+def check_strategy(strategy: str, *, allow_auto: bool = False) -> None:
+    """Raise a ``ValueError`` naming ``strategy`` unless it is one of
+    :data:`STRATEGIES` (or ``'auto'`` where a fit resolves it)."""
+    names = STRATEGIES + (("auto",) if allow_auto else ())
+    if strategy not in names:
+        raise ValueError(f"unknown knn strategy {strategy!r}; expected one of {names}")
+
+
 def knn_join(
     instances: DataFrame,
     queries: DataFrame,
@@ -152,6 +165,7 @@ def knn_join(
     classic RELIEF-F neighborhoods exclude the instance. Pass False to
     reproduce the reference's behavior.
     """
+    check_strategy(strategy)
     # Small files arrive as one partition; spread the scan side or the
     # kernel runs on one core. But every extra partition adds k
     # candidate rows per query to the rank-merge shuffle, so cap at
@@ -209,7 +223,7 @@ def knn_join(
             exclude_self,
             gemm=(strategy == "numpy-gemm"),
         )
-    else:
+    else:  # 'sql' (check_strategy rejected every other name)
         cand = _candidates_sql(instances, queries, id_col, features_col, query_id_col)
         if exclude_self:
             cand = cand.filter(F.col(query_id_col) != F.col("neighbor_id"))
@@ -269,18 +283,14 @@ def _candidates_lsh(
     neighbors: this is the approximate scale path, never the
     oracle-gated default.
 
-    ``multiprobe``: Hamming-1 multiprobe (Lv et al., VLDB'07 shape) —
-    each QUERY also probes the n_bits buckets one sign-flip away, so a
-    pair becomes a candidate when some table window disagrees in at
-    most one coordinate sign instead of none. The expansion is on the
-    broadcast (query) side only: broadcast rows x(1+n_bits), zero extra
-    scan-side work. Measured on the KAIS fixtures (auto-sized buckets):
-    kNN recall 0.964 -> 1.000 (XOR100, d=99), 0.729 -> 1.000 (Corral,
-    d=6). The RELIEF fit escalation tier turns this ON — RELIEF weights
-    are exactly as good as the neighborhoods, and planted-signal
-    selection (XOR) demonstrably does not survive the ~4-27% neighbor
-    loss of single-probe."""
+    ``multiprobe``: each query also probes the buckets within Hamming
+    distance ``probe_radius`` (simsearch._multiprobe). Measured on the
+    KAIS fixtures (auto-sized buckets, radius 1): kNN recall 0.964 ->
+    1.000 (XOR100, d=99), 0.729 -> 1.000 (Corral, d=6). The RELIEF fit
+    turns it ON: planted-signal selection (XOR) does not survive the
+    ~4-27% neighbor loss of single-probe."""
     from spark_relieffc_fselection_spark.operators.simsearch import (
+        _multiprobe,
         _with_table_buckets,
     )
 
@@ -298,38 +308,10 @@ def _candidates_lsh(
         # total).
         n = num_instances if num_instances is not None else instances.count()
         n_bits = auto_lsh_bits(n)
-    if probe_radius not in (1, 2):
-        raise ValueError(f"probe_radius must be 1 or 2, got {probe_radius}")
-    q_b = _with_table_buckets(q, "_q_features", n_bits, n_tables)
-    n_probes = 1
-    if multiprobe:
-        # Probe set: the bucket itself plus every bucket within Hamming
-        # distance `probe_radius` (Lv et al., VLDB'07 shape) — each
-        # single-bit flip, and at radius 2 each two-bit flip as well
-        # (the escalation knob when radius-1 recall isn't enough:
-        # candidates only grow, so recall is monotone in the radius).
-        # explode() multiplies only the broadcast side; the downstream
-        # pair-distinct absorbs cross-probe duplicates.
-        masks = [1 << i for i in range(n_bits)]
-        if probe_radius >= 2:
-            masks += [
-                (1 << i) | (1 << j)
-                for i in range(n_bits)
-                for j in range(i + 1, n_bits)
-            ]
-        n_probes = 1 + len(masks)
-        q_b = q_b.withColumn(
-            "bucket",
-            F.explode(
-                F.array(
-                    F.col("bucket"),
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(m).cast("bigint"))
-                        for m in masks
-                    ],
-                )
-            ),
-        )
+    q_b, n_probes = _multiprobe(
+        _with_table_buckets(q, "_q_features", n_bits, n_tables),
+        n_bits, probe_radius, multiprobe,
+    )
     i_b = _with_table_buckets(inst, "_n_features", n_bits, n_tables)
     # Broadcast the probe table only when it is provably small: at the
     # fit's escalation scale (batch == queries, 32 tables x 17 probes)

@@ -38,9 +38,9 @@ from pyspark.sql import functions as F
 from spark_relieffc_fselection_spark.operators.relief import (
     DEC,
     ReliefFitResult,
-    _check_fit_counts,
-    _class_priors,
+    _hash_batch,
     _Neighbourhood,
+    _plan_fit,
     _run_batches,
     collision_table,
     feature_bin_stats,
@@ -399,7 +399,6 @@ def fit_relief_sparse(
     lower_distance_threshold: float = 0.8,
     redundancy_removal: bool = True,
     discrete_data: bool = False,
-    top_features: list[int] | None = None,
     batch_size: float = 1.0,
     lower_feature_threshold: float = 3.0,
     estimation_ratio: float = 1.0,
@@ -414,26 +413,18 @@ def fit_relief_sparse(
 
     ``batch_size=1.0`` (default) is the documented single-pass
     contract: one kNN + aggregation sweep, redundancy scoped to the
-    final std ranking (or the caller's ``top_features``), jointTotal
-    the undiscounted pair count (matching the dense single-batch path).
+    final std ranking, jointTotal the undiscounted pair count.
     No sampling: callers sample the long table upstream — at sparse
     scale, sampling is a filter on id.
 
-    ``batch_size<1.0`` runs the reference's BATCH LOOP with topFeatures
-    feedback (ReliefFRSelector.scala:273-283): the instance set splits
-    into int(1/batch_size) deterministic hash batches (pmod(id, n) — the
-    same 'hash' batching mode the dense fit exposes, and the mode q72c
-    proved oracle-able end-to-end); batch 0 contributes no joint stats
-    unless ``top_features`` seeds its scope, each later batch's scope is
-    the previous batch's raw-relevance top-N, weights union-reduce
-    across batches, and the MI redundancy applies the jointTotal
-    batch-share discount (ReliefFRSelector.scala:641). Within-batch kNN
-    scans the batch, not the full set — the same deliberate deviation
-    the dense fit documents. ``estimation_ratio`` is the DECLARATION of
-    the caller's upstream sampling (it filters nothing here): the
-    discount is totalPairs * (1 - ratio * batchPerc) in the reference
-    (:642), so a sampled+batched sparse fit must be told the ratio or
-    its MI redundancy deviates (ADVICE r8). Single-pass fits ignore it.
+    ``batch_size<1.0`` runs the reference's batch loop with topFeatures
+    feedback (ReliefFRSelector.scala:273-283) over int(1/batch_size)
+    deterministic hash batches — the dense fit's 'hash' batching, which
+    q72c proved oracle-able. Within-batch kNN scans the batch, not the
+    full set, the deviation the dense fit documents.
+    ``estimation_ratio`` DECLARES the caller's upstream sampling (it
+    filters nothing): the batched jointTotal discount depends on it
+    (ReliefFRSelector.scala:642). Single-pass fits ignore it.
 
     ``knn_probe`` overrides sparse_knn_join's no-overlap probe (None =
     decide; False = straight to the norms grid; True = force the
@@ -445,16 +436,15 @@ def fit_relief_sparse(
     feature, so the probe only burns driver rounds before falling back
     to the grid it should have started on.
     """
-    _check_fit_counts(num_top_features, num_neighbors, "fit_relief_sparse")
-    n_elems, priors = _class_priors(
-        [(r["label"], r["count"]) for r in labels.groupBy("label").count().collect()],
-        "fit_relief_sparse",
+    plan = _plan_fit(
+        lambda: labels.groupBy("label").agg(F.count("*").alias("n")).collect(),
+        num_top_features=num_top_features,
+        num_neighbors=num_neighbors,
+        lower_feature_threshold=lower_feature_threshold,
+        fit_name="fit_relief_sparse",
     )
-    k = num_neighbors * len(priors)
+    n_elems, k = plan.n_instances, plan.k
     n_batches = max(1, int(1.0 / batch_size))
-    lower_feat = max(
-        num_top_features, round(lower_feature_threshold * num_top_features)
-    )
     continuous = not discrete_data
     probe_arg, dense_ish = knn_probe, not knn_probe
     if n_batches > 1 and knn_probe is None:
@@ -469,17 +459,12 @@ def fit_relief_sparse(
         # costs about one probe round and saves up to six per batch.
         dense_ish = long_df.count() > 0.25 * n_elems * max(n_features, 1)
         probe_arg = False if dense_ish else None
-    # batches share the data regime, so batch 0's route resolution is
-    # the fit's (forced modes resolve identically every batch)
-    knn_res: dict = {"route": "grid"}
 
     def neighbourhood(b: int) -> _Neighbourhood:
         if n_batches == 1:
             b_long, b_labels, b_n, owned = long_df, labels, n_elems, ()
         else:
-            # pmod, NOT %: Spark's % follows the dividend's sign, so
-            # negative ids would silently fall out of every batch.
-            in_batch = F.pmod(F.col("id"), F.lit(n_batches)) == b
+            in_batch = _hash_batch(b, n_batches)
             b_labels = labels.filter(in_batch).cache()
             b_long = long_df.filter(in_batch).cache()
             # exact per-batch count only where the probe's coverage
@@ -487,11 +472,11 @@ def fit_relief_sparse(
             # estimate
             b_n = max(1, n_elems // n_batches) if dense_ish else b_labels.count()
             owned = (b_long, b_labels)
+        knn_res: dict = {}
         neigh = _coalesce_for_cache(
             sparse_knn_join(
                 b_long, b_labels, b_labels.select("id"), k,
-                num_corpus=b_n, probe=probe_arg,
-                resolution_out=knn_res if b == 0 else None,
+                num_corpus=b_n, probe=probe_arg, resolution_out=knn_res,
             ),
             b_n * k,  # exact bound: <= k rows per query
         ).cache()
@@ -519,26 +504,19 @@ def fit_relief_sparse(
                 continuous,
             ),
             caches=(lp, neigh, *owned),
+            route=f"sparse-inverted/{knn_res['route']}",
         )
 
-    res = _run_batches(
+    return _run_batches(
         range(n_batches),
         neighbourhood,
-        priors=priors,
+        plan=plan,
         n_features=n_features,
-        n_instances=n_elems,
         num_top_features=num_top_features,
-        lower_feat=lower_feat,
         redundancy_removal=redundancy_removal,
-        # single pass: the caller's scope, else the final std ranking
-        # (None); batched: the caller's seed, else the reference's
-        # empty first scope
-        top_features=top_features if n_batches == 1 else list(top_features or []),
-        joint_share=1.0 if n_batches == 1 else 1.0 - estimation_ratio / n_batches,
-        resolved_knn_strategy="",
+        estimation_ratio=estimation_ratio,
+        final_scope=n_batches == 1,
     )
-    res.resolved_knn_strategy = f"sparse-inverted/{knn_res['route']}"
-    return res
 
 
 def compress_long(

@@ -123,39 +123,16 @@ def lsh_bucketed_topk(
     n_tables * corpus / 2^n_bits. Exact cosine ranking within the
     candidate set; fully deterministic, hence SQL-oracle-able.
 
-    ``multiprobe``: Hamming-probe expansion on the QUERY (broadcast)
-    side — same remedy the RELIEF fit's kNN tier ships (knn.py
-    `_candidates_lsh`): each query also probes every bucket within
-    Hamming distance ``probe_radius`` (1 = each sign-flip; 2 adds
-    every two-bit flip — the recall escalation knob, candidates only
-    grow so recall is monotone in the radius). x(1 + b [+ b(b-1)/2])
-    broadcast rows, zero extra corpus-side work.
+    ``multiprobe``: each query also probes every bucket within Hamming
+    distance ``probe_radius`` (:func:`_multiprobe`, shared with the
+    RELIEF fit's kNN tier): x(1 + b [+ b(b-1)/2]) broadcast rows, zero
+    extra corpus-side work.
     """
-    if probe_radius not in (1, 2):
-        raise ValueError(f"probe_radius must be 1 or 2, got {probe_radius}")
     q = _prep_normed(queries, id_col, vec_col, "query_id", "q_vec", "q_nrm")
     c = _prep_normed(corpus, id_col, vec_col, "neighbor_id", "n_vec", "n_nrm")
-    q_b = _with_table_buckets(q, "q_vec", n_bits, n_tables)
-    if multiprobe:
-        masks = [1 << i for i in range(n_bits)]
-        if probe_radius >= 2:
-            masks += [
-                (1 << i) | (1 << j)
-                for i in range(n_bits)
-                for j in range(i + 1, n_bits)
-            ]
-        q_b = q_b.withColumn(
-            "bucket",
-            F.explode(
-                F.array(
-                    F.col("bucket"),
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(m).cast("bigint"))
-                        for m in masks
-                    ],
-                )
-            ),
-        )
+    q_b, _ = _multiprobe(
+        _with_table_buckets(q, "q_vec", n_bits, n_tables), n_bits, probe_radius, multiprobe
+    )
     c_b = _with_table_buckets(c, "n_vec", n_bits, n_tables)
     cand = (
         c_b.join(F.broadcast(q_b), ["table", "bucket"])
@@ -174,6 +151,28 @@ def lsh_bucketed_topk(
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
+
+
+def _multiprobe(
+    buckets: DataFrame, n_bits: int, probe_radius: int, enabled: bool
+) -> tuple[DataFrame, int]:
+    """``(rows, probes per row)``: with ``enabled``, each
+    :func:`_with_table_buckets` row is exploded to its own bucket plus
+    every bucket within Hamming distance ``probe_radius`` (1 = each
+    single-bit flip, 2 adds each two-bit flip; Lv et al., VLDB'07).
+    Candidates only grow with the radius, so recall is monotone in it.
+    Applied to the query (broadcast) side only, it costs no scan-side
+    work; the callers' pair-distinct absorbs cross-probe duplicates."""
+    if probe_radius not in (1, 2):
+        raise ValueError(f"probe_radius must be 1 or 2, got {probe_radius}")
+    if not enabled:
+        return buckets, 1
+    masks = [1 << i for i in range(n_bits)]
+    if probe_radius == 2:
+        masks += [(1 << i) | (1 << j) for i in range(n_bits) for j in range(i + 1, n_bits)]
+    bucket = F.col("bucket")
+    probes = [bucket, *[bucket.bitwiseXOR(F.lit(m).cast("bigint")) for m in masks]]
+    return buckets.withColumn("bucket", F.explode(F.array(*probes))), len(probes)
 
 
 def _with_table_buckets(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from spark_relieffc_fselection_spark.operators.knn import knn_join
 from spark_relieffc_fselection_spark.operators.relief import (
     _collapse_bins_local,
+    dual_ranking,
     explode_pairs,
     feature_bin_stats,
     joint_counts_from_pairs,
@@ -70,6 +71,25 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("features"),
         F.col("label").cast("double").alias("label"),
+    )
+
+
+def _fit_ranking(spark: SparkSession, res, oracle: str | None = None) -> DataFrame:
+    """A fit's dual ranking with relevance rounded to 6 places. An
+    ``oracle`` of the q72c family hard-codes the id%2 split: the
+    broadcast-memory guard raises n_batches past 2 only above ~8M
+    instances at 64 features — fail loudly there instead of
+    hash-diverging."""
+    if oracle is not None and res.n_batches != 2:
+        raise ValueError(
+            f"{oracle} oracle models exactly 2 hash batches, fit used "
+            f"{res.n_batches} (broadcast guard?)"
+        )
+    return dual_ranking(
+        spark,
+        res.std_selection,
+        res.redundancy_selection,
+        lambda f: round(float(res.relevance[f]), 6),
     )
 
 
@@ -209,20 +229,17 @@ _KNN_LSH_BUCKET_BITS = " + ".join(
 )
 
 
-@register(
-    "q73_knn_lsh_recall",
-    oracle=f"""
+def _lsh_recall_oracle(cands: str) -> str:
+    """The q73-family oracle: exact kNN vs the LSH candidates' top-k,
+    recall per query; ``cands`` is the candidate CTE chain."""
+    return f"""
     WITH {_knn_cte(KNN_K, queries_pred="q.id % 10 = 0")},
     bucketed AS (
       SELECT id, t.tbl AS tbl, {_KNN_LSH_BUCKET_BITS} AS bucket
       FROM inst,
            LATERAL (SELECT unnest(generate_series(0, {KNN_LSH_TABLES - 1})) AS tbl) t
     ),
-    cands AS (
-      SELECT DISTINCT b.id AS query_id, a.id AS neighbor_id
-      FROM bucketed a JOIN bucketed b ON a.tbl = b.tbl AND a.bucket = b.bucket
-      WHERE a.id <> b.id AND b.id % 10 = 0
-    ),
+    {cands}
     lsh_pairs AS (
       SELECT c.query_id, c.neighbor_id,
              sqrt(list_sum(list_transform(generate_series(1, len(q.f)),
@@ -243,7 +260,55 @@ _KNN_LSH_BUCKET_BITS = " + ".join(
     LEFT JOIN lsh_topk l
       ON k.query_id = l.query_id AND k.neighbor_id = l.neighbor_id
     GROUP BY k.query_id
-    """,
+    """
+
+
+def _probed_cands(masks: list[int]) -> str:
+    """Candidate CTEs of a multiprobe tier: each query probes its
+    bucket xor every mask (mask 0 is the bucket itself)."""
+    return f"""qprobes AS (
+      SELECT id, tbl, xor(bucket, CAST(v.m AS BIGINT)) AS bucket
+      FROM bucketed,
+           LATERAL (SELECT unnest({masks}) AS m) v
+      WHERE id % 10 = 0
+    ),
+    cands AS (
+      SELECT DISTINCT b.id AS query_id, a.id AS neighbor_id
+      FROM bucketed a JOIN qprobes b ON a.tbl = b.tbl AND a.bucket = b.bucket
+      WHERE a.id <> b.id
+    ),"""
+
+
+def _lsh_recall(spark: SparkSession, sf_dir: str, **lsh) -> DataFrame:
+    """Recall@KNN_K of ``knn_join(strategy='lsh', **lsh)`` against the
+    exact kNN, for every 10th instance as a query."""
+    inst = _embeddings(spark, sf_dir)
+    queries = inst.filter(F.col("id") % 10 == 0)
+    exact = knn_join(inst, queries, KNN_K, strategy="sql").select(
+        "query_id", "neighbor_id"
+    )
+    hits = knn_join(
+        inst, queries, KNN_K, strategy="lsh",
+        lsh_bits=KNN_LSH_BITS, lsh_tables=KNN_LSH_TABLES, **lsh,
+    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    hit = F.coalesce(F.col("hit"), F.lit(0))
+    return (
+        exact.join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.sum(hit).cast("bigint").alias("n_hits"),
+            F.round(F.sum(hit) / F.lit(float(KNN_K)), 6).alias("recall"),
+        )
+    )
+
+
+@register(
+    "q73_knn_lsh_recall",
+    oracle=_lsh_recall_oracle("""cands AS (
+      SELECT DISTINCT b.id AS query_id, a.id AS neighbor_id
+      FROM bucketed a JOIN bucketed b ON a.tbl = b.tbl AND a.bucket = b.bucket
+      WHERE a.id <> b.id AND b.id % 10 = 0
+    ),"""),
     doc="Recall@k of the kNN LSH tier (knn_join strategy='lsh', the "
         "SURVEY §7.3 sub-linear scale path) against the exact broadcast "
         "kNN — same accuracy/throughput metric as q49 but for the "
@@ -251,76 +316,16 @@ _KNN_LSH_BUCKET_BITS = " + ".join(
         "make it exactly oracle-checkable.",
 )
 def q73_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    inst = _embeddings(spark, sf_dir)
-    queries = inst.filter(F.col("id") % 10 == 0)
-    exact = knn_join(inst, queries, KNN_K, strategy="sql").select(
-        "query_id", "neighbor_id"
-    )
-    lsh = knn_join(
-        inst,
-        queries,
-        KNN_K,
-        strategy="lsh",
-        lsh_bits=KNN_LSH_BITS,
-        lsh_tables=KNN_LSH_TABLES,
-    ).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(lsh, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(float(KNN_K)), 6
-            ).alias("recall"),
-        )
-    )
+    return _lsh_recall(spark, sf_dir)
+
+
+#: q157: the radius-1 probe mask set (bucket itself, every 1-bit flip)
+_H1_MASKS = [0] + [1 << i for i in range(KNN_LSH_BITS)]
 
 
 @register(
     "q157_knn_lsh_multiprobe_recall",
-    oracle=f"""
-    WITH {_knn_cte(KNN_K, queries_pred="q.id % 10 = 0")},
-    bucketed AS (
-      SELECT id, t.tbl AS tbl, {_KNN_LSH_BUCKET_BITS} AS bucket
-      FROM inst,
-           LATERAL (SELECT unnest(generate_series(0, {KNN_LSH_TABLES - 1})) AS tbl) t
-    ),
-    qprobes AS (
-      SELECT id, tbl,
-             CASE WHEN v.j = 0 THEN bucket
-                  ELSE xor(bucket, CAST(1 << (v.j - 1) AS BIGINT)) END AS bucket
-      FROM bucketed,
-           LATERAL (SELECT unnest(generate_series(0, {KNN_LSH_BITS})) AS j) v
-      WHERE id % 10 = 0
-    ),
-    cands AS (
-      SELECT DISTINCT b.id AS query_id, a.id AS neighbor_id
-      FROM bucketed a JOIN qprobes b ON a.tbl = b.tbl AND a.bucket = b.bucket
-      WHERE a.id <> b.id
-    ),
-    lsh_pairs AS (
-      SELECT c.query_id, c.neighbor_id,
-             sqrt(list_sum(list_transform(generate_series(1, len(q.f)),
-                  i -> (q.f[i] - x.f[i]) * (q.f[i] - x.f[i])))) AS dist
-      FROM cands c JOIN inst q ON q.id = c.query_id JOIN inst x ON x.id = c.neighbor_id
-    ),
-    lsh_topk AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rnk
-        FROM lsh_pairs
-      ) WHERE rnk <= {KNN_K}
-    )
-    SELECT k.query_id,
-           CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hits,
-           ROUND(COUNT(l.neighbor_id) / CAST({KNN_K} AS DOUBLE), 6) AS recall
-    FROM knn k
-    LEFT JOIN lsh_topk l
-      ON k.query_id = l.query_id AND k.neighbor_id = l.neighbor_id
-    GROUP BY k.query_id
-    """,
+    oracle=_lsh_recall_oracle(_probed_cands(_H1_MASKS)),
     doc="Recall@k of the MULTIPROBE kNN LSH tier: q73's single-probe "
         "candidate generation plus Hamming-1 probe expansion on the "
         "query (broadcast) side — the remedy that restored the RELIEF "
@@ -330,90 +335,21 @@ def q73_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "approximate path exactly checkable.",
 )
 def q157_knn_lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    inst = _embeddings(spark, sf_dir)
-    queries = inst.filter(F.col("id") % 10 == 0)
-    exact = knn_join(inst, queries, KNN_K, strategy="sql").select(
-        "query_id", "neighbor_id"
-    )
-    lsh = knn_join(
-        inst,
-        queries,
-        KNN_K,
-        strategy="lsh",
-        lsh_bits=KNN_LSH_BITS,
-        lsh_tables=KNN_LSH_TABLES,
-        lsh_multiprobe=True,
-    ).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(lsh, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(float(KNN_K)), 6
-            ).alias("recall"),
-        )
-    )
+    return _lsh_recall(spark, sf_dir, lsh_multiprobe=True)
 
 
 #: q160: the radius-2 probe mask set (bucket itself, every 1-bit flip,
-#: every 2-bit flip) — generated from the same formula as the engine's
-#: _candidates_lsh mask list, so the oracle replays the identical
-#: probe expansion via xor().
-_H2_MASKS = (
-    [0]
-    + [1 << i for i in range(KNN_LSH_BITS)]
-    + [
-        (1 << i) | (1 << j)
-        for i in range(KNN_LSH_BITS)
-        for j in range(i + 1, KNN_LSH_BITS)
-    ]
-)
+#: every 2-bit flip) — the same formula as the engine's
+#: simsearch._multiprobe, so the oracle replays the identical probe
+#: expansion via xor().
+_H2_MASKS = _H1_MASKS + [
+    (1 << i) | (1 << j) for i in range(KNN_LSH_BITS) for j in range(i + 1, KNN_LSH_BITS)
+]
 
 
 @register(
     "q160_knn_lsh_hamming2_recall",
-    oracle=f"""
-    WITH {_knn_cte(KNN_K, queries_pred="q.id % 10 = 0")},
-    bucketed AS (
-      SELECT id, t.tbl AS tbl, {_KNN_LSH_BUCKET_BITS} AS bucket
-      FROM inst,
-           LATERAL (SELECT unnest(generate_series(0, {KNN_LSH_TABLES - 1})) AS tbl) t
-    ),
-    qprobes AS (
-      SELECT id, tbl, xor(bucket, CAST(v.m AS BIGINT)) AS bucket
-      FROM bucketed,
-           LATERAL (SELECT unnest({_H2_MASKS}) AS m) v
-      WHERE id % 10 = 0
-    ),
-    cands AS (
-      SELECT DISTINCT b.id AS query_id, a.id AS neighbor_id
-      FROM bucketed a JOIN qprobes b ON a.tbl = b.tbl AND a.bucket = b.bucket
-      WHERE a.id <> b.id
-    ),
-    lsh_pairs AS (
-      SELECT c.query_id, c.neighbor_id,
-             sqrt(list_sum(list_transform(generate_series(1, len(q.f)),
-                  i -> (q.f[i] - x.f[i]) * (q.f[i] - x.f[i])))) AS dist
-      FROM cands c JOIN inst q ON q.id = c.query_id JOIN inst x ON x.id = c.neighbor_id
-    ),
-    lsh_topk AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY dist, neighbor_id) AS rnk
-        FROM lsh_pairs
-      ) WHERE rnk <= {KNN_K}
-    )
-    SELECT k.query_id,
-           CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hits,
-           ROUND(COUNT(l.neighbor_id) / CAST({KNN_K} AS DOUBLE), 6) AS recall
-    FROM knn k
-    LEFT JOIN lsh_topk l
-      ON k.query_id = l.query_id AND k.neighbor_id = l.neighbor_id
-    GROUP BY k.query_id
-    """,
+    oracle=_lsh_recall_oracle(_probed_cands(_H2_MASKS)),
     doc="Recall@k of the RADIUS-2 multiprobe kNN LSH tier "
         "(knn_join lsh_probe_radius=2, VERDICT r8 #3's escalation "
         "knob): q157's Hamming-1 probe set extended with every 2-bit "
@@ -424,33 +360,7 @@ _H2_MASKS = (
         "the exact mask set via xor() bucket flips.",
 )
 def q160_knn_lsh_hamming2_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    inst = _embeddings(spark, sf_dir)
-    queries = inst.filter(F.col("id") % 10 == 0)
-    exact = knn_join(inst, queries, KNN_K, strategy="sql").select(
-        "query_id", "neighbor_id"
-    )
-    lsh = knn_join(
-        inst,
-        queries,
-        KNN_K,
-        strategy="lsh",
-        lsh_bits=KNN_LSH_BITS,
-        lsh_tables=KNN_LSH_TABLES,
-        lsh_multiprobe=True,
-        lsh_probe_radius=2,
-    ).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(lsh, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(float(KNN_K)), 6
-            ).alias("recall"),
-        )
-    )
+    return _lsh_recall(spark, sf_dir, lsh_multiprobe=True, lsh_probe_radius=2)
 
 
 # --- A2-A4: RELIEF relevance -------------------------------------------------
@@ -1402,31 +1312,7 @@ def q72c_relief_fit_hash_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_strategy="numpy",
         batching="hash",          # deterministic split -> oracle-able
     )
-    if res.n_batches != 2:
-        # the oracle hard-codes the id%2 split; the broadcast-memory
-        # guard raises n_batches past 2 only above ~8M instances at 64
-        # features — fail loudly there instead of hash-diverging
-        raise ValueError(
-            f"q72c oracle models exactly 2 hash batches, fit used "
-            f"{res.n_batches} (broadcast guard?)"
-        )
-    rows = [
-        (
-            i + 1,
-            int(s),
-            round(float(res.relevance[s]), 6),
-            int(r),
-            round(float(res.relevance[r]), 6),
-        )
-        for i, (s, r) in enumerate(
-            zip(res.std_selection, res.redundancy_selection)
-        )
-    ]
-    return spark.createDataFrame(
-        rows,
-        "rank int, std_feature int, std_relevance double, "
-        "redundancy_feature int, redundancy_relevance double",
-    )
+    return _fit_ranking(spark, res, oracle="q72c")
 
 
 @register(
@@ -1468,27 +1354,7 @@ def q158_sparse_fit_hash_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
         discrete_data=False,
         batch_size=0.5,  # exactly the oracle's id%2 split
     )
-    if res.n_batches != 2:
-        raise ValueError(
-            f"q158 oracle models exactly 2 hash batches, fit used {res.n_batches}"
-        )
-    rows = [
-        (
-            i + 1,
-            int(s),
-            round(float(res.relevance[s]), 6),
-            int(r),
-            round(float(res.relevance[r]), 6),
-        )
-        for i, (s, r) in enumerate(
-            zip(res.std_selection, res.redundancy_selection)
-        )
-    ]
-    return spark.createDataFrame(
-        rows,
-        "rank int, std_feature int, std_relevance double, "
-        "redundancy_feature int, redundancy_relevance double",
-    )
+    return _fit_ranking(spark, res, oracle="q158")
 
 
 #: q72d: the SAMPLED fit under the full oracle. Portable md5-uniform
@@ -1539,27 +1405,7 @@ def q72d_relief_fit_hash_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_strategy="numpy",
         batching="hash",
     )
-    if res.n_batches != 2:
-        raise ValueError(
-            f"q72d oracle models exactly 2 hash batches, fit used {res.n_batches}"
-        )
-    rows = [
-        (
-            i + 1,
-            int(s),
-            round(float(res.relevance[s]), 6),
-            int(r),
-            round(float(res.relevance[r]), 6),
-        )
-        for i, (s, r) in enumerate(
-            zip(res.std_selection, res.redundancy_selection)
-        )
-    ]
-    return spark.createDataFrame(
-        rows,
-        "rank int, std_feature int, std_relevance double, "
-        "redundancy_feature int, redundancy_relevance double",
-    )
+    return _fit_ranking(spark, res, oracle="q72d")
 
 
 # --- q161: the COO-finalize sparse fit (kddb-width driver path) ---------------
@@ -1657,10 +1503,6 @@ def q161_sparse_fit_coo_width(spark: SparkSession, sf_dir: str) -> DataFrame:
         # probe and grid produce the same candidate set.
         knn_probe=False,
     )
-    if res.n_batches != 2:
-        raise ValueError(
-            f"q161 oracle models exactly 2 hash batches, fit used {res.n_batches}"
-        )
     if not isinstance(res.relevance, SparseRelevance):
         raise ValueError(
             "q161 exists to gate the COO finalize — the fit returned a "
@@ -1673,20 +1515,4 @@ def q161_sparse_fit_coo_width(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"selection includes absent features {bad} beyond the "
                 "single representative (index 1) the oracle models"
             )
-    rows = [
-        (
-            i + 1,
-            int(s),
-            round(float(res.relevance[s]), 6),
-            int(r),
-            round(float(res.relevance[r]), 6),
-        )
-        for i, (s, r) in enumerate(
-            zip(res.std_selection, res.redundancy_selection)
-        )
-    ]
-    return spark.createDataFrame(
-        rows,
-        "rank int, std_feature int, std_relevance double, "
-        "redundancy_feature int, redundancy_relevance double",
-    )
+    return _fit_ranking(spark, res, oracle="q161")

@@ -749,7 +749,7 @@ def q82_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q72_relief_fit_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_relieffc_fselection_spark.operators.relief import fit_relief
-    from spark_relieffc_fselection_spark.queries.relief_q import _embeddings
+    from spark_relieffc_fselection_spark.queries.relief_q import _embeddings, _fit_ranking
 
     inst = _embeddings(spark, sf_dir)
     res = fit_relief(
@@ -763,21 +763,7 @@ def q72_relief_fit_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed=42,
         knn_strategy="numpy",
     )
-    rows = [
-        (
-            i + 1,
-            int(s),
-            round(float(res.relevance[s]), 6),
-            int(r),
-            round(float(res.relevance[r]), 6),
-        )
-        for i, (s, r) in enumerate(zip(res.std_selection, res.redundancy_selection))
-    ]
-    return spark.createDataFrame(
-        rows,
-        "rank int, std_feature int, std_relevance double, "
-        "redundancy_feature int, redundancy_relevance double",
-    )
+    return _fit_ranking(spark, res)
 
 
 #: q72a: deterministic single-batch fit — instances, neighbors

@@ -261,14 +261,13 @@ def sparse_single_pass_reference(
     lower_distance_threshold: float = 0.8,
     redundancy_removal: bool = True,
     discrete_data: bool = False,
-    top_features: list[int] | None = None,
     knn_probe: bool | None = None,
 ) -> dict:
     """The single-pass sparse fit as a plain chain of the Spark
     operators, one stage after another: :func:`relevance_weights` over
     the sparse pair table -> dense min-max + std ranking ->
-    ``collision_table`` -> ``joint_counts`` (scoped to ``top_features``
-    or the std ranking) and ``marginal_counts`` -> ``mi_redundancy``
+    ``collision_table`` -> ``joint_counts`` (scoped to the std
+    ranking) and ``marginal_counts`` -> ``mi_redundancy``
     with jointTotal = the pair count -> :func:`greedy_oracle`. Returns
     relevance (as a dense list), std_selection, redundancy_selection
     and redundancy_coo."""
@@ -307,8 +306,7 @@ def sparse_single_pass_reference(
     red_sel = list(std_sel)
     if redundancy_removal:
         coll = collision_table(lp, continuous, lower_distance_threshold).cache()
-        scope = top_features if top_features is not None else std_sel
-        joint = joint_counts(coll, scope, continuous)
+        joint = joint_counts(coll, std_sel, continuous)
         if n_pairs:
             red_df = mi_redundancy(
                 joint, marginal_counts(coll), float(n_pairs), float(n_pairs)

@@ -534,3 +534,107 @@ def test_estimator_param_validation_fails_loudly(vec_df):
         ReliefFSelector(
             numTopFeatures=2, numNeighbors=2, lshTables=-2
         ).fit(vec_df)
+
+
+@pytest.fixture(scope="module")
+def sparse_vec_df(spark):
+    rng = np.random.default_rng(17)
+    n, d = 60, 12
+    X = rng.normal(loc=2.0, size=(n, d)).round(3)
+    X[rng.random((n, d)) < 0.8] = 0.0
+    y = (X[:, 0] > 0).astype(float)
+    rows = [
+        (Vectors.sparse(d, {j: X[i, j] for j in range(d) if X[i, j] != 0.0}), float(y[i]))
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, ["features", "label"])
+
+
+@pytest.mark.parametrize("route", ["dense", "sparse"])
+@pytest.mark.parametrize(
+    "param, value",
+    [("samplingMode", "hsh"), ("knnStrategy", "nump"), ("batching", "rnd")],
+)
+def test_typoed_modes_fail_before_any_job(spark, vec_df, sparse_vec_df, route, param, value):
+    """A typo'd samplingMode, knnStrategy or batching fails with a
+    ValueError naming the value on BOTH routes — the sparse route
+    checks the modes it does not consult too — before the sparsity
+    sniff or any other Spark job."""
+    df = vec_df if route == "dense" else sparse_vec_df
+    sc = spark.sparkContext
+    group = f"test-typoed-modes-{route}-{param}"
+    sc.setJobGroup(group, "mode validation")
+    try:
+        with pytest.raises(ValueError, match=repr(value)):
+            ReliefFSelector(numTopFeatures=2, numNeighbors=2, **{param: value}).fit(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.parametrize(
+    "route, params, want",
+    [
+        ("dense", dict(knnStrategy="numpy"), "numpy"),
+        ("dense", dict(knnStrategy="lsh"), "lsh"),
+        ("dense", dict(knnStrategy="auto"), "numpy"),  # tiny data: exact tier
+        ("sparse", dict(sparseKnnProbe="probe"), "sparse-inverted/probe"),
+        ("sparse", dict(sparseKnnProbe="grid"), "sparse-inverted/grid"),
+        ("sparse", dict(sparseKnnProbe="probe", batchSize=0.5), "sparse-inverted/probe"),
+    ],
+)
+def test_model_records_the_route_the_fit_ran(vec_df, sparse_vec_df, route, params, want):
+    """resolvedKnnStrategy is the kNN route batch 0 ran: the resolved
+    dense strategy, or the sparse no-overlap route."""
+    df = vec_df if route == "dense" else sparse_vec_df
+    model = ReliefFSelector(
+        **{
+            **dict(
+                numTopFeatures=2, numNeighbors=2, estimationRatio=1.0,
+                batchSize=1.0, redundancyRemoval=False, seed=5,
+            ),
+            **params,
+        }
+    ).fit(df)
+    assert model.getOrDefault(model.resolvedKnnStrategy) == want
+
+
+def test_transform_slices_kddb_width_sparse_vectors(spark):
+    """transform gathers the selected entries of sparse vectors without
+    densifying them: at declared width 2^24 the fit and transform run
+    and give the values of the same rows at a narrow width, and the
+    plan holds no vector-to-array UDF over the input."""
+    from pyspark.ml.linalg import SparseVector
+
+    rng = np.random.default_rng(23)
+    n, active = 40, 20
+    X = rng.normal(loc=2.0, size=(n, active)).round(3)
+    X[rng.random((n, active)) < 0.6] = 0.0
+    y = (X[:, 3] > 0).astype(float)
+
+    def frame(width):
+        rows = [
+            (SparseVector(width, {j: X[i, j] for j in range(active) if X[i, j] != 0.0}), float(y[i]))
+            for i in range(n)
+        ]
+        return spark.createDataFrame(rows, ["features", "label"])
+
+    params = dict(
+        numTopFeatures=5, numNeighbors=3, estimationRatio=1.0,
+        batchSize=1.0, redundancyRemoval=True, seed=9,
+    )
+    out = {}
+    for width in (32, 1 << 24):
+        df = frame(width)
+        model = ReliefFSelector(**params).fit(df)
+        t = model.transform(df)
+        out[width] = (
+            model.selected_indices(),
+            [r["selectedFeatures"].toArray().tolist() for r in t.select("selectedFeatures").collect()],
+        )
+        plan = t._jdf.queryExecution().optimizedPlan().toString()
+        assert "UDF(features" not in plan, plan
+        assert "vector_to_array" not in plan, plan
+    assert out[1 << 24] == out[32]
+    assert any(any(v != 0.0 for v in row) for row in out[32][1])

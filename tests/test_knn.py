@@ -36,6 +36,24 @@ def test_knn_matches_oracle(spark, small_vectors, strategy):
         assert ids == expected[qid], f"query {qid}"
 
 
+@pytest.mark.parametrize("strategy", ["auto", "nump", "SQL"])
+def test_knn_join_rejects_strategies_it_does_not_run(spark, small_vectors, strategy):
+    """Only the four strategies knn_join runs are accepted: 'auto' is a
+    fit-level choice and a typo must not fall through to the 'sql'
+    cross join. The check precedes any Spark job."""
+    df, _ = small_vectors
+    sc = spark.sparkContext
+    group = f"test-knn-strategy-{strategy}"
+    sc.setJobGroup(group, "knn_join strategy check")
+    try:
+        with pytest.raises(ValueError, match=repr(strategy)):
+            knn_join(df, df, 3, strategy=strategy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_knn_distances_correct(spark, small_vectors):
     df, X = small_vectors
     rows = knn_join(df, df, 3, strategy="sql").collect()

@@ -610,25 +610,24 @@ def _discrete(df):
 
 
 @pytest.mark.parametrize(
-    "redundancy, discrete, top_features",
+    "redundancy, discrete, knn_probe",
     [
         (True, False, None),
         (False, False, None),
         (True, True, None),
         (False, True, None),
-        (True, False, [0, 3, 5, 7]),
-        (True, True, [1, 2]),
+        (True, False, False),
     ],
 )
 def test_sparse_single_pass_matches_reference_dataflow(
-    spark, sparse_fixture, redundancy, discrete, top_features
+    spark, sparse_fixture, redundancy, discrete, knn_probe
 ):
     """batch_size=1.0 runs the shared batch engine; it must return
     exactly what the plain operator chain returns (relevance_weights ->
     collision_table -> joint/marginal counts -> MI -> greedy, kept in
     tests/oracle_relief.py): same relevance bits, selections and
     redundancy COO, with redundancy on and off, continuous and
-    discrete, and with a caller-given joint scope."""
+    discrete, on the adaptive kNN route and straight to the grid."""
     from tests.oracle_relief import sparse_single_pass_reference
 
     df, X, _ = sparse_fixture
@@ -638,7 +637,7 @@ def test_sparse_single_pass_matches_reference_dataflow(
         num_neighbors=4,
         redundancy_removal=redundancy,
         discrete_data=discrete,
-        top_features=top_features,
+        knn_probe=knn_probe,
     )
     want = sparse_single_pass_reference(long_df, labels, X.shape[1], **kwargs)
     got = fit_relief_sparse(long_df, labels, X.shape[1], batch_size=1.0, **kwargs)
@@ -648,6 +647,39 @@ def test_sparse_single_pass_matches_reference_dataflow(
     assert got.redundancy_coo == want["redundancy_coo"]
     if redundancy:
         assert got.redundancy_coo  # the comparison covered real entries
+
+
+def test_batched_fits_share_one_joint_total(spark, sparse_fixture, monkeypatch):
+    """Dense and sparse batched fits scale the pair total into
+    jointTotal with the same share, 1 - ratio * (1 / n_batches)
+    (ReliefFRSelector.scala:641-642), bit for bit — also at a ratio and
+    batch count where 1 - ratio / n_batches rounds differently."""
+    from spark_relieffc_fselection_spark.operators import relief as relief_mod
+
+    ratio, n_batches = 0.48, 3
+    share = 1.0 - ratio * (1.0 / n_batches)
+    assert share != 1.0 - ratio / n_batches  # the case discriminates
+    seen = []
+    mi = relief_mod.mi_redundancy
+
+    def spy(joint, marginal, total, joint_total):
+        seen.append((total, joint_total))
+        return mi(joint, marginal, total, joint_total)
+
+    monkeypatch.setattr(relief_mod, "mi_redundancy", spy)
+    df, X, _ = sparse_fixture
+    kwargs = dict(num_top_features=3, num_neighbors=3, redundancy_removal=True, batch_size=0.3)
+    dense = relief_mod.fit_relief(
+        df, estimation_ratio=ratio, sampling="hash", batching="hash", **kwargs
+    )
+    long_df, labels = to_long_form(df)
+    sparse = fit_relief_sparse(
+        long_df, labels, X.shape[1], estimation_ratio=ratio, **kwargs
+    )
+    assert dense.n_batches == sparse.n_batches == n_batches
+    assert len(seen) == 2
+    for total, joint_total in seen:
+        assert joint_total == total * share
 
 
 @pytest.mark.parametrize(
