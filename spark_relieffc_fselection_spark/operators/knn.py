@@ -30,6 +30,11 @@ join:
   re-scored by the ``(q-b)^2`` diff cube. ``'numpy-gemm'`` ranks by the
   expansion itself.
 
+The RELIEF fit's self-kNN on those two tiers skips the window rank and
+the pair joins altogether: :func:`self_knn_pairs` gives each slice of
+queries the whole broadcast batch to scan, so every slice's top-k is
+already global, and emits the fit's pair rows from the broadcast arrays.
+
 At 100 TB the queries side stays a bounded sample (the algorithm's
 estimationRatio guarantees this — BASELINE.md complexity row), so the
 broadcast is small and the scan side is never shuffled.
@@ -367,7 +372,8 @@ def _candidates_numpy(
     """Arrow-batched blockwise scan emitting per-partition top-k; the
     per-partition work is :func:`knn_scan`."""
     spark = instances.sparkSession
-    bc = spark.sparkContext.broadcast(_query_matrix(queries, id_col, features_col))
+    ids, mat, _ = _fetch_rows(queries, id_col, features_col)
+    bc = spark.sparkContext.broadcast((ids, mat))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, mat = bc.value
@@ -393,37 +399,143 @@ def _candidates_numpy(
     return instances.select(id_col, features_col).mapInPandas(scan, schema=out_schema)
 
 
-def _query_matrix(
-    queries: DataFrame, id_col: str, features_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """The broadcast side as ``(ids (Q,), features (Q, d))``, fetched as
-    Arrow: the matrix is a reshape of the list column's flat values,
-    with no per-Row Python objects. Null ids, null or ragged feature
-    arrays and null elements raise instead of being reshaped."""
-    tbl = queries.select(id_col, features_col).toArrow()
+def _fetch_rows(
+    df: DataFrame,
+    id_col: str,
+    features_col: str,
+    label_col: str | None = None,
+    *,
+    side: str = "the query side",
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """A broadcast side as ``(ids (R,), features (R, d), labels (R,) or
+    None)``, fetched in one Arrow action: the matrix is a reshape of the
+    list column's flat values, with no per-Row Python objects. Null ids,
+    null or ragged feature arrays and null elements raise instead of
+    being reshaped; ``side`` names the frame in the errors."""
+    cols = [id_col, features_col] + ([label_col] if label_col is not None else [])
+    tbl = df.select(*cols).toArrow()
     ids, feats = tbl.column(0), tbl.column(1).combine_chunks()
     if ids.null_count:
-        raise ValueError(f"knn_join: {ids.null_count} null {id_col!r} value(s) on the query side")
+        raise ValueError(f"knn: {ids.null_count} null {id_col!r} value(s) on {side}")
     if feats.null_count:
-        raise ValueError(
-            f"knn_join: {feats.null_count} null {features_col!r} array(s) on the query side"
-        )
+        raise ValueError(f"knn: {feats.null_count} null {features_col!r} array(s) on {side}")
     lengths = feats.value_lengths().to_numpy()
     d = int(lengths[0]) if len(lengths) else 0
     if (lengths != d).any():
         raise ValueError(
-            f"knn_join: ragged {features_col!r} arrays on the query side "
+            f"knn: ragged {features_col!r} arrays on {side} "
             f"(lengths {lengths.min()}..{lengths.max()})"
         )
     values = feats.flatten()
     if values.null_count:
         raise ValueError(
-            f"knn_join: {values.null_count} null element(s) in {features_col!r} on the query side"
+            f"knn: {values.null_count} null element(s) in {features_col!r} on {side}"
         )
     mat = values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    labels = (
+        tbl.column(2).to_numpy().astype(np.float64, copy=False)
+        if label_col is not None
+        else None
+    )
     return (
         ids.to_numpy().astype(np.int64, copy=False),
         mat.reshape(len(lengths), d),
+        labels,
+    )
+
+
+#: feature values per list column in one Arrow batch the pair kernel
+#: emits, so the list offsets stay far below int32 at any width
+_PAIR_BATCH_VALUES = 1 << 24
+
+
+def self_knn_pairs(
+    batch: DataFrame,
+    k: int,
+    *,
+    slices: int,
+    exclude_self: bool = True,
+    gemm: bool = False,
+) -> DataFrame:
+    """Every row's k nearest neighbours within ``batch`` (the fit's
+    ``(id, features, label)`` frame), emitted as
+    ``relief.pair_table(batch, knn_join(batch, batch, k,
+    strategy='numpy' or 'numpy-gemm'))`` rows: ``(query_id,
+    neighbor_id, n_label, same_class, q_features, n_features)``.
+
+    The reference broadcasts the batch and lets every partition answer
+    its own queries against it, looking neighbour rows up by position
+    (ReliefFRSelector.scala:254-260, 423-433). Here the driver fetches
+    the batch once as Arrow (:func:`_fetch_rows`), rejects repeated ids
+    (a pair row finds its vectors by id) and broadcasts the batch sorted
+    by id. ``slices`` tasks each take a contiguous slice of the queries
+    and run :func:`knn_scan` against the WHOLE batch, so each slice's
+    top-k is already the global top-k by (distance, neighbor_id) — no
+    cross-partition rank merge — and each pair's two feature vectors
+    and labels come out of the broadcast arrays by ``searchsorted`` — no
+    joins. The pair rows land in ``slices`` partitions without a
+    shuffle.
+
+    The same neighbours as :func:`knn_join`: the exact tier's distances
+    are per-pair diff-cube values (see :func:`knn_scan`), independent of
+    how queries and scan rows are sliced. ``gemm=True`` ranks by the
+    BLAS expansion, whose last bits can follow the matrix shapes, so it
+    matches ``'numpy-gemm'`` exactly where products and sums are exact
+    (integer grids)."""
+    import pyarrow as pa
+
+    spark = batch.sparkSession
+    ids, mat, labels = _fetch_rows(batch, "id", "features", "label", side="the fit batch")
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    dup = np.unique(ids[1:][ids[1:] == ids[:-1]])
+    if len(dup):
+        shown = ", ".join(str(i) for i in dup[:10]) + (", ..." if len(dup) > 10 else "")
+        raise ValueError(f"knn: {len(dup)} duplicate 'id' value(s) in the fit batch: {shown}")
+    bc = spark.sparkContext.broadcast((ids, mat[order], labels[order]))
+    n_rows, d = mat.shape
+    slices = max(1, min(slices, n_rows))
+    step = max(1, _PAIR_BATCH_VALUES // max(d, 1))
+
+    def vectors(rows: np.ndarray, mat: np.ndarray) -> pa.Array:
+        offsets = np.arange(0, (len(rows) + 1) * d, d, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, mat[rows].ravel())
+
+    def kernel(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ids, mat, labels = bc.value
+        for part in parts:
+            for s in part.column(0).to_numpy():
+                lo, hi = s * n_rows // slices, (s + 1) * n_rows // slices
+                if hi <= lo:
+                    continue
+                q_id, n_id, _ = knn_scan(
+                    ids[lo:hi], mat[lo:hi], [(ids, mat)], k, exclude_self, gemm
+                )
+                qi, ni = np.searchsorted(ids, q_id), np.searchsorted(ids, n_id)
+                q_lbl, n_lbl = labels[qi], labels[ni]
+                # Spark's `=` holds for NaN = NaN
+                same = (n_lbl == q_lbl) | (np.isnan(n_lbl) & np.isnan(q_lbl))
+                for a in range(0, len(qi), step):
+                    b = slice(a, a + step)
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(q_id[b]),
+                            pa.array(n_id[b]),
+                            pa.array(n_lbl[b]),
+                            pa.array(same[b]),
+                            vectors(qi[b], mat),
+                            vectors(ni[b], mat),
+                        ],
+                        names=[
+                            "query_id", "neighbor_id", "n_label", "same_class",
+                            "q_features", "n_features",
+                        ],
+                    )
+
+    return spark.range(0, slices, numPartitions=slices).mapInArrow(
+        kernel,
+        "query_id long, neighbor_id long, n_label double, same_class boolean, "
+        "q_features array<double>, n_features array<double>",
     )
 
 

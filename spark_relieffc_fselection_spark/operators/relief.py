@@ -57,6 +57,7 @@ from spark_relieffc_fselection_spark.operators.knn import (
     check_strategy,
     knn_join,
     resolve_auto_strategy,
+    self_knn_pairs,
 )
 
 #: All floating-point SUMs accumulate through this decimal type: double
@@ -798,8 +799,8 @@ class _Neighbourhood(NamedTuple):
     """One batch as the engine consumes it, whatever the neighbourhood
     source: the ``feature_bin_stats`` frame, the pair-level
     ``(n_label, same_class, bin_cnt)`` counts, the joint COO for a
-    given top-feature scope, the caches to release after the batch,
-    and the kNN route the batch ran."""
+    given top-feature scope, the caches to release after the fit, and
+    the kNN route the batch ran."""
 
     bins: DataFrame
     pair_counts: DataFrame
@@ -808,70 +809,67 @@ class _Neighbourhood(NamedTuple):
     route: str
 
 
-def _probe_batch(
-    bins: DataFrame,
-    pair_counts: DataFrame,
-    joint: DataFrame | None,
-    priors: dict[float, float],
-) -> tuple[dict[int, float], dict[int, float], int]:
-    """ONE fused probe action per batch (r12 optimization; was three).
+def _probe_batches(
+    batch_stats: list[tuple[DataFrame, DataFrame]], priors: dict[float, float]
+) -> list[tuple[dict[int, float], dict[int, float], int]]:
+    """ONE tagged collect for the statistics of EVERY batch.
 
-    A tagged union collects the per-batch sufficient statistics — the
+    ``batch_stats`` holds each batch's ``(bins, pair_counts)`` frames
+    (see :class:`_Neighbourhood`). Per batch ``b`` the union carries the
     ``feature_bin_stats`` aggregate (tag 0: bin_sum AND the collision
     vote mass, so no separate collision scan; decimal addition is
     associative, so summing the per-bin vote_sum reproduces the
-    per-feature marginal exactly) and the pair-level bin counts
-    (tag 1) — and, in redundancy mode, pulls the joint COO cache
-    through as tag 2 so it is materialized before the batch's caches
-    are released (the VERDICT r6 #2 union trick). The collected stats
-    are nFeat x nClasses x 2 rows; the relevance and marginal collapse
-    then run on the driver via :func:`_collapse_bins_local` (bit-exact,
-    see its docstring).
+    per-feature marginal exactly) and the pair-level bin counts (tag 1),
+    keyed by ``b``. The collected
+    stats are batches x nFeat x nClasses x 2 rows; each batch's
+    relevance and marginal collapse then run on the driver via
+    :func:`_collapse_bins_local` (bit-exact, see its docstring).
 
-    Returns ``(relevance, marginal, n_pairs)``: every pair has exactly
-    one (n_label, same_class) bin, so the bin counts sum to the batch's
-    pair total (the classCounter total, ReliefFRSelector.scala:469-470).
+    Returns ``(relevance, marginal, n_pairs)`` per batch, in batch
+    order: every pair has exactly one (n_label, same_class) bin, so the
+    bin counts sum to the batch's pair total (the classCounter total,
+    ReliefFRSelector.scala:469-470).
     """
     null_dec = F.lit(None).cast(DEC)
-    probe = bins.select(
-        F.lit(0).alias("tag"),
-        F.col("feature_idx").cast("long").alias("f"),
-        F.col("n_label").alias("lbl"),
-        F.col("same_class").alias("sc"),
-        F.col("bin_sum").alias("d1"),
-        F.col("vote_sum").alias("d2"),
-        F.lit(None).cast("long").alias("c1"),
-    ).unionAll(
-        pair_counts.select(
-            F.lit(1).alias("tag"),
-            F.lit(None).cast("long").alias("f"),
-            F.col("n_label").alias("lbl"),
-            F.col("same_class").alias("sc"),
-            null_dec.alias("d1"),
-            null_dec.alias("d2"),
-            F.col("bin_cnt").cast("long").alias("c1"),
-        )
-    )
-    if joint is not None:
-        probe = probe.unionAll(
-            joint.select(
-                F.lit(2).alias("tag"),
-                F.col("f1").cast("long").alias("f"),
-                F.lit(None).cast("double").alias("lbl"),
-                F.lit(None).cast("boolean").alias("sc"),
-                null_dec.alias("d1"),
-                null_dec.alias("d2"),
+    legs = []
+    for b, (bins, pair_counts) in enumerate(batch_stats):
+        legs.append(
+            bins.select(
+                F.lit(b).alias("b"),
+                F.lit(0).alias("tag"),
+                F.col("feature_idx").cast("long").alias("f"),
+                F.col("n_label").alias("lbl"),
+                F.col("same_class").alias("sc"),
+                F.col("bin_sum").alias("d1"),
+                F.col("vote_sum").alias("d2"),
                 F.lit(None).cast("long").alias("c1"),
             )
         )
-    rows = probe.collect()
-    pc = {(r["lbl"], r["sc"]): int(r["c1"]) for r in rows if r["tag"] == 1}
-    rel_b, marg_b = _collapse_bins_local(
-        ((r["f"], r["lbl"], r["sc"], r["d1"], r["d2"]) for r in rows if r["tag"] == 0),
-        pc,
-        priors,
-    )
-    return rel_b, marg_b, sum(pc.values())
+        legs.append(
+            pair_counts.select(
+                F.lit(b).alias("b"),
+                F.lit(1).alias("tag"),
+                F.lit(None).cast("long").alias("f"),
+                F.col("n_label").alias("lbl"),
+                F.col("same_class").alias("sc"),
+                null_dec.alias("d1"),
+                null_dec.alias("d2"),
+                F.col("bin_cnt").cast("long").alias("c1"),
+            )
+        )
+    by_batch: list[list] = [[] for _ in batch_stats]
+    for r in reduce(DataFrame.unionAll, legs).collect():
+        by_batch[r["b"]].append(r)
+    out = []
+    for rows in by_batch:
+        pc = {(r["lbl"], r["sc"]): int(r["c1"]) for r in rows if r["tag"] == 1}
+        rel_b, marg_b = _collapse_bins_local(
+            ((r["f"], r["lbl"], r["sc"], r["d1"], r["d2"]) for r in rows if r["tag"] == 0),
+            pc,
+            priors,
+        )
+        out.append((rel_b, marg_b, sum(pc.values())))
+    return out
 
 
 def _finalize_relevance(
@@ -916,42 +914,44 @@ def _run_batches(
     final_scope: bool = False,
     mark: Callable[[str], None] = lambda _label: None,
 ) -> ReliefFitResult:
-    """The one RELIEF batch loop and its finalize
+    """The one RELIEF batch engine and its finalize
     (ReliefFRSelector.scala:199-325); every fit runs through it and
-    differs only in its ``neighbourhood`` source.
+    differs only in its ``neighbourhood`` source. Two phases, each one
+    action, however many batches:
 
-    Per batch: the source builds the batch's neighbourhood, one
-    :func:`_probe_batch` action collects its statistics, the batch
-    top-N becomes the next batch's joint scope, and the batch's caches
-    are released. Then: cross-batch sums, min-max + std ranking, MI
-    redundancy over the union of the batch joints, greedy selection.
-    The result records batch 0's kNN route: batches share the data
-    regime, so it is the fit's.
+    1. Every batch's neighbourhood is built, and ONE tagged collect
+       (:func:`_probe_batches`) returns every batch's bin statistics and
+       pair counts. The driver collapses each batch and sums them in
+       batch order, then replays the top-N feedback
+       (ReliefFRSelector.scala:279-283): batch i's joint scope is the
+       top-N of the last non-empty batch before it. The scope only
+       steers the joint, so nothing in phase 1 waits for it.
+    2. The union of every batch's scoped joint goes straight into
+       :func:`mi_redundancy`'s one collect; then every cache is
+       released.
+
+    Then min-max + std ranking and greedy selection, on the driver. The
+    result records batch 0's kNN route: batches share the data regime,
+    so it is the fit's. Every batch's caches are alive together until
+    phase 2 ends: the footprint of a single-batch fit on the same
+    sample, which the broadcast guard already admits.
 
     Batch 0's joint scope is empty, as in the reference, and jointTotal
     omits that batch's share of the pairs (computeRedudancy,
     ReliefFRSelector.scala:641-642). ``final_scope`` instead scopes the
     joint of a single pass to the FINAL std ranking, over all its
-    pairs — the single-pass sparse contract — so the one batch's caches
-    stay until that joint is built.
+    pairs — the single-pass sparse contract.
     """
+    nbs = [neighbourhood(batch) for batch in batches]
+    stats = _probe_batches([(nb.bins, nb.pair_counts) for nb in nbs], plan.priors)
+    mark("batch stats probe")
     top_features: list[int] = []
+    scopes: list[list[int]] = []
     rel_sum: dict[int, float] = {}
     marg_sum: dict[int, float] = {}
-    joints: list[DataFrame] = []
     n_pairs = 0
-    n_batches = 0
-    for batch in batches:
-        nb = neighbourhood(batch)
-        n_batches += 1
-        if n_batches == 1:
-            route = nb.route
-        j_b = None
-        if redundancy_removal and not final_scope:
-            j_b = nb.joint(top_features).cache()
-            joints.append(j_b)
-        rel_b, marg_b, n = _probe_batch(nb.bins, nb.pair_counts, j_b, plan.priors)
-        mark("batch stats probe")
+    for rel_b, marg_b, n in stats:
+        scopes.append(top_features)
         n_pairs += n
         # Cross-batch sums on the driver, added in batch order.
         # Bit-identity to the old Spark union-reduce holds for the
@@ -964,13 +964,11 @@ def _run_batches(
         if redundancy_removal:
             for f, v in marg_b.items():
                 marg_sum[f] = marg_sum.get(f, 0.0) + v
-        if final_scope:
-            continue  # the one batch's caches serve the final-scope joint
         # batch top-N steers the next batch's joint-stat scope
         # (ReliefFRSelector.scala:281-283). The reference min-max
         # normalizes before takeOrdered (:281, 328-332), but min-max is
         # strictly monotone, so ranking the RAW relevance selects the
-        # identical feature set with one fewer min/max job per batch.
+        # identical feature set.
         # Sort key mirrors orderBy(desc(relevance), asc(feature_idx)).
         top_b = [
             f for f, _ in sorted(rel_b.items(), key=lambda kv: (-kv[1], kv[0]))[: plan.lower_feat]
@@ -980,22 +978,22 @@ def _run_batches(
             # only replaces topFeatures when results are non-empty
             # (ReliefFRSelector.scala:279-283)
             top_features = top_b
-        for cached in nb.caches:
-            cached.unpersist()
-    mark("batch loop end")
 
     relevance, std_sel = _finalize_relevance(rel_sum, n_features, num_top_features)
-    mark("final weights collect")
+    mark("final weights")
     red_coo: dict[tuple[int, int], float] = {}
     if redundancy_removal:
-        scoped = joints + ([nb.joint(std_sel)] if final_scope else [])
-        joint_share = 1.0 if final_scope else 1.0 - estimation_ratio * (1.0 / n_batches)
+        if final_scope:
+            scopes = [std_sel]
+        joint_share = 1.0 if final_scope else 1.0 - estimation_ratio * (1.0 / len(nbs))
         joint_total = n_pairs * joint_share
         if n_pairs > 0 and joint_total > 0:
-            joint_all = reduce(DataFrame.unionByName, scoped).groupBy("f1", "f2").agg(
-                F.sum("joint").alias("joint")
+            joint_all = (
+                reduce(DataFrame.unionByName, [nb.joint(s) for nb, s in zip(nbs, scopes)])
+                .groupBy("f1", "f2")
+                .agg(F.sum("joint").alias("joint"))
             )
-            marg_all = scoped[0].sparkSession.createDataFrame(
+            marg_all = joint_all.sparkSession.createDataFrame(
                 [(int(f), float(v)) for f, v in sorted(marg_sum.items())],
                 "feature_idx long, marginal double",
             )
@@ -1005,8 +1003,9 @@ def _run_batches(
     # Everything is driver-side from here: release the caches so a
     # long-lived session doesn't accumulate dead entries (each live
     # entry also taxes every later cache lookup).
-    for cached in joints + list(nb.caches if final_scope else ()):
-        cached.unpersist()
+    for nb in nbs:
+        for cached in nb.caches:
+            cached.unpersist()
     mark("redundancy mi collect")
 
     red_sel = (
@@ -1022,8 +1021,8 @@ def _run_batches(
         n_instances=plan.n_instances,
         priors=plan.priors,
         redundancy_coo=red_coo,
-        n_batches=n_batches,
-        resolved_knn_strategy=route,
+        n_batches=len(nbs),
+        resolved_knn_strategy=nbs[0].route,
     )
 
 
@@ -1051,11 +1050,17 @@ def fit_relief(
 ) -> ReliefFitResult:
     """Dense fit (ReliefFRSelector.scala:199-325, DataFrame IR).
 
-    sample -> randomSplit batches -> the shared batch engine
-    (:func:`_run_batches`) over the dense neighbourhood source: per
-    batch, kNN within the batch (:func:`knn_join`) -> cached compact
-    :func:`pair_table` -> one stats probe; batch top-N feeds the next
-    batch's joint-stat scope -> union-sum -> min-max -> MI -> greedy
+    sample -> randomSplit/hash batches -> the shared two-phase batch
+    engine (:func:`_run_batches`) over the dense neighbourhood source.
+    Per batch, the exact tiers (``numpy``, ``numpy-gemm``) fetch the
+    batch once as Arrow, broadcast it and let each slice task find its
+    queries' k nearest neighbours in the whole batch and emit the pair
+    rows itself (:func:`knn.self_knn_pairs`); the ``sql`` and ``lsh``
+    tiers run :func:`knn_join` and the joins of :func:`pair_table`.
+    Either way the compact pair table is cached. Then ONE stats probe
+    covers every batch, the driver sums the batches and replays the
+    top-N feedback into each batch's joint scope, and ONE action
+    unions the scoped joints into the MI -> min-max -> greedy
     selection.
 
     DELIBERATE DEVIATION (SURVEY §8.5): per batch this engine scans
@@ -1170,11 +1175,6 @@ def fit_relief(
         # production fit would pick.
         batches = [sample.filter(_hash_batch(i, n_batches)) for i in range(n_batches)]
 
-    # Partition count of every batch == partition count of `sample`
-    # (filter and randomSplit are narrow); resolve it ONCE here instead
-    # of an .rdd plan-analysis round-trip inside knn_join per batch
-    # (VERDICT r6 #2).
-    sample_parts = sample.rdd.getNumPartitions()
     # Pair-cache partition COUNT is volume-derived (r12, guide §2.4),
     # not a flat defaultParallelism: the widest consumer of the cache
     # is the joint combination explode (~n_pairs x n_feat x (|top|+1)
@@ -1187,58 +1187,84 @@ def fit_relief(
     # layout changes cost, never values.
     top_mult = min(lower_feat, n_feat) if redundancy_removal else 0
     pair_vol = max(batch_rows, 1) * k * n_feat * (1 + top_mult)
-    pair_parts = max(1, min(spark.sparkContext.defaultParallelism, -(-pair_vol // 262144)))
+    parallelism = spark.sparkContext.defaultParallelism
+    pair_parts = max(1, min(parallelism, -(-pair_vol // 262144)))
     continuous = not discrete_data
+    # The exact tiers' batch already rides to every executor for the
+    # kNN, so each slice task answers its queries against it and emits
+    # the pair rows itself (knn.self_knn_pairs). The other tiers join.
+    pair_kernel = knn_strategy in ("numpy", "numpy-gemm")
+    # The kernel's slices are also its kNN tasks, whose work grows with
+    # the batch squared: give them at least the ~256-rows-per-task
+    # spread knn_join gives its scan side, not only the pair cache's.
+    kernel_slices = max(pair_parts, min(parallelism, batch_rows // 256))
+    # Partition count of every batch == partition count of `sample`
+    # (filter and randomSplit are narrow); resolve it ONCE here instead
+    # of an .rdd plan-analysis round-trip inside knn_join per batch
+    # (VERDICT r6 #2).
+    sample_parts = None if pair_kernel else sample.rdd.getNumPartitions()
 
     def neighbourhood(batch: DataFrame) -> _Neighbourhood:
         # No emptiness probe: an empty batch flows through as empty
         # DataFrames everywhere below (empty kNN -> empty pairs ->
         # empty aggregates -> empty top-N, which keeps the previous
         # ranking) — one fewer job per batch.
-        batch = batch.cache()
-        neigh = knn_join(
-            batch, batch, k,
-            id_col="id", features_col="features",
-            exclude_self=exclude_self, strategy=knn_strategy,
-            # partition-sizing estimate only — saves a count() job
-            num_instances=batch_rows,
-            # queries == batch here: lets the lsh tier drop its probe-
-            # table broadcast hint when the batch is escalation-sized
-            num_queries=batch_rows,
-            scan_partitions=sample_parts,
-            lsh_tables=lsh_tables,
-            # Hamming-1 multiprobe: single-probe's ~4-27% neighbor loss
-            # measurably breaks planted-signal selection (XOR100 top-2
-            # [4,75] vs [4,6]); multiprobe restores kNN recall to 1.000
-            # on the KAIS fixtures at broadcast-side-only cost. Callers
-            # needing better than the ~0.70 continuous-data recall of
-            # radius 1 escalate via lsh_probe_radius=2 (measured 0.96,
-            # SCALE.md round-9 row).
-            lsh_multiprobe=True,
-            lsh_probe_radius=lsh_probe_radius,
-        )
-        # Cache the COMPACT pair table (nFeat times smaller than the
-        # exploded long form) and materialize it eagerly: a lazy cache
-        # with multiple downstream consumers computes the whole
-        # kNN+join subplan once per consumer concurrently (the cache
-        # dedupes storage, not computation). Repartition by the pair
-        # key first — AQE coalesces the small join output to few
-        # partitions, which would serialize every downstream explode;
-        # clustering by pair also makes the joint groupBy exchange-free.
-        pairs = (
-            pair_table(batch, neigh)
-            .repartition(pair_parts, "query_id", "neighbor_id")
-            .cache()
-        )
-        # r13 NOTE (measured, kept): dropping this count and letting
-        # the fused probe materialize the cache was interleaved-A/B'd
-        # same-session (plans/r13/fuse_ab.py) — the DENSE loop got
-        # SLOWER (q72 min 8.37->8.86, med 8.67->10.03; the probe's
-        # unioned legs then plan their joins against an unmaterialized
-        # InMemoryRelation without exact stats), while the sparse
-        # source got faster and adopted the fusion (relief_sparse.py).
-        pairs.count()
-        _mark("batch pairs count")
+        if pair_kernel:
+            # One Arrow fetch of the batch, no batch cache: nothing
+            # reads the batch again. The slices are the pair cache's
+            # partitions, so no repartition either. No materializing
+            # count: the stats probe is the cache's first consumer, and
+            # block-level loading locks let its two legs compute each
+            # cached partition once (as in relief_sparse). Unlike the
+            # join-side pair table below, which measured slower without
+            # its count, no join plans against the cache's statistics.
+            pairs = self_knn_pairs(
+                batch, k, slices=kernel_slices, exclude_self=exclude_self,
+                gemm=knn_strategy == "numpy-gemm",
+            ).cache()
+            caches = (pairs,)
+        else:
+            batch = batch.cache()
+            neigh = knn_join(
+                batch, batch, k,
+                id_col="id", features_col="features",
+                exclude_self=exclude_self, strategy=knn_strategy,
+                # partition-sizing estimate only — saves a count() job
+                num_instances=batch_rows,
+                # queries == batch here: lets the lsh tier drop its
+                # probe-table broadcast hint when the batch is
+                # escalation-sized
+                num_queries=batch_rows,
+                scan_partitions=sample_parts,
+                lsh_tables=lsh_tables,
+                # Hamming-1 multiprobe: single-probe's ~4-27% neighbor
+                # loss measurably breaks planted-signal selection
+                # (XOR100 top-2 [4,75] vs [4,6]); multiprobe restores
+                # kNN recall to 1.000 on the KAIS fixtures at
+                # broadcast-side-only cost. Callers needing better than
+                # the ~0.70 continuous-data recall of radius 1 escalate
+                # via lsh_probe_radius=2 (measured 0.96, SCALE.md
+                # round-9 row).
+                lsh_multiprobe=True,
+                lsh_probe_radius=lsh_probe_radius,
+            )
+            # Cache the COMPACT pair table (nFeat times smaller than
+            # the exploded long form). Repartition by the pair key
+            # first — AQE coalesces the small join output to few
+            # partitions, which would serialize every downstream
+            # explode.
+            pairs = (
+                pair_table(batch, neigh)
+                .repartition(pair_parts, "query_id", "neighbor_id")
+                .cache()
+            )
+            # Materialized before the stats probe: left lazy, the
+            # probe's legs plan their joins against an unmaterialized
+            # InMemoryRelation without exact statistics, and the dense
+            # q72 fit measured slower that way (OPTIMIZATION_r13.md).
+            pairs.count()
+            caches = (pairs, batch)
+        _mark("batch pairs")
         return _Neighbourhood(
             bins=feature_bin_stats(
                 explode_pairs(pairs), continuous, lower_distance_threshold
@@ -1253,7 +1279,7 @@ def fit_relief(
             joint=lambda top: joint_counts_from_pairs(
                 pairs, top, continuous, lower_distance_threshold, n_feat
             ),
-            caches=(pairs, batch),
+            caches=caches,
             route=knn_strategy,
         )
 

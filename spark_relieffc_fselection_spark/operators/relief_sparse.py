@@ -23,8 +23,9 @@ and mis-keys feature ids doing it (SURVEY §8.1). Here sparsity is just
 
 Those three pieces are this module's neighbourhood source.
 :func:`fit_relief_sparse` runs them through the same batch engine as
-the dense fit (``relief._run_batches``: one stats probe per batch,
-top-N feedback, one finalize); only the joint COO differs in plan — the
+the dense fit (``relief._run_batches``: one stats probe for every
+batch, top-N feedback replayed on the driver, one joint/MI action, one
+finalize); only the joint COO differs in plan — the
 O(1)-memory self-join ``joint_counts(collision_table(...))`` instead of
 the dense per-pair combination arrays, because a sparse feature space
 can be millions wide.
@@ -370,7 +371,7 @@ def _pair_bin_counts(neighbors: DataFrame, labels: DataFrame) -> DataFrame:
     Invariant: both label joins are inner joins that must keep every
     neighbor row (query and neighbor ids are drawn from ``labels``), so
     ``sum(bin_cnt) == neighbors.count()``. The engine's stats probe
-    (``relief._probe_batch``) recovers ``n_pairs`` from these counts
+    (``relief._probe_batches``) recovers ``n_pairs`` from these counts
     instead of counting the neighbor table; a neighbor id outside
     ``labels`` would silently undercount it."""
     return (
@@ -406,8 +407,9 @@ def fit_relief_sparse(
 ) -> ReliefFitResult:
     """Sparse fit: the dense fit's batch engine (``relief._run_batches``)
     over the sparse neighbourhood source — per batch
-    :func:`sparse_knn_join` -> :func:`sparse_pair_feature_table` ->
-    one stats probe with :func:`_pair_bin_counts` as the pair counts.
+    :func:`sparse_knn_join` -> :func:`sparse_pair_feature_table`, with
+    :func:`_pair_bin_counts` as the pair counts, all batches' statistics
+    in the engine's one stats probe.
     Semantics: ReliefFRSelector.scala:483-602, with corrected feature
     indexing (SURVEY §8.1).
 
@@ -480,14 +482,13 @@ def fit_relief_sparse(
             ),
             b_n * k,  # exact bound: <= k rows per query
         ).cache()
-        # No materializing count() here (r13): the fused probe action
+        # No materializing count() here: the engine's one stats probe
         # is the first consumer of BOTH caches, and RDD block-level
         # loading locks make concurrent union legs compute each cached
         # partition once (the second consumer blocks on the lock and
-        # reads the block). Interleaved same-session A/B
-        # (plans/r13/fuse_ab.py): q158 med 17.06->14.83s, q161 med
-        # 8.82->8.42s; the DENSE source measured the opposite way and
-        # keeps its count (relief.py). x4 stands in for the per-pair
+        # reads the block), so a count would only add an action per
+        # batch (OPTIMIZATION_r13.md §1: 7->5 actions per fit; its A/B
+        # read neutral within noise). x4 stands in for the per-pair
         # active-feature union size — narrow map-side consumers only
         # (see _coalesce_for_cache).
         lp = _coalesce_for_cache(

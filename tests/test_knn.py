@@ -5,7 +5,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_relieffc_fselection_spark.operators import knn as knn_mod
-from spark_relieffc_fselection_spark.operators.knn import knn_join, knn_scan
+from spark_relieffc_fselection_spark.operators.knn import knn_join, knn_scan, self_knn_pairs
+from spark_relieffc_fselection_spark.operators.relief import pair_table
 from tests.oracle_relief import diffcube_scan_oracle, knn_oracle
 
 
@@ -385,3 +386,66 @@ def test_knn_negative_ids_agree_across_strategies(spark):
         for r in knn_join(df, df, 2, strategy=strategy).orderBy("query_id", "rank").collect():
             got.setdefault(r["query_id"], []).append(r["neighbor_id"])
         assert got == want, strategy
+
+
+def _pair_fixture(kind: str) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, features) of one batch for the pair-kernel property test.
+    Every fixture but 'continuous' is an integer grid, where numpy-gemm
+    distances are exact."""
+    rng = np.random.default_rng(zlib.crc32(kind.encode()))
+    if kind == "ties":  # few coordinate values: most distances tie
+        return np.arange(40), rng.integers(0, 3, size=(40, 3)).astype(float)
+    if kind == "identical_rows":  # each row four times, distinct ids
+        X = np.repeat(rng.integers(-2, 3, size=(10, 4)), 4, axis=0).astype(float)
+        return rng.permutation(40) * 3 + 7, X
+    if kind == "negative_ids":
+        return np.arange(-15, 15), rng.integers(-4, 5, size=(30, 5)).astype(float)
+    if kind == "few_rows":  # k >= rows - 1: every other row is a neighbour
+        return np.array([9, 2, 5, 0, 7]), rng.integers(0, 4, size=(5, 3)).astype(float)
+    if kind == "empty":
+        return np.arange(0), np.zeros((0, 3))
+    X = rng.normal(size=(50, 6)).round(3) * (10.0 ** rng.integers(-3, 4, size=(1, 6)))
+    return np.arange(50), X  # 'continuous'
+
+
+@pytest.mark.parametrize("exclude_self", [True, False])
+@pytest.mark.parametrize(
+    "kind", ["ties", "identical_rows", "negative_ids", "few_rows", "empty", "continuous"]
+)
+@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm"])
+def test_self_knn_pairs_equal_pair_table_of_knn_join(spark, strategy, kind, exclude_self):
+    """The fit's pair kernel answers each query slice against the whole
+    broadcast batch and emits pair rows from the broadcast arrays. Its
+    rows must equal ``pair_table(batch, knn_join(batch, batch, k))``'s,
+    whatever the slice count: on distance ties, identical rows under
+    distinct ids, negative ids, k >= rows - 1, with and without self
+    pairs, and on an empty batch. numpy-gemm is compared on integer
+    grids only: elsewhere its last bits follow the matrix shapes, so a
+    different slicing may rank near-ties differently."""
+    if strategy == "numpy-gemm" and kind == "continuous":
+        pytest.skip("numpy-gemm distances are exact on integer grids only")
+    ids, X = _pair_fixture(kind)
+    labels = (np.arange(len(ids)) % 3).astype(float)
+    batch = spark.createDataFrame(
+        [(int(i), x.tolist(), float(lbl)) for i, x, lbl in zip(ids, X, labels)],
+        "id long, features array<double>, label double",
+    )
+    k = 6
+    cols = ["query_id", "neighbor_id", "n_label", "same_class", "q_features", "n_features"]
+    want = sorted(
+        map(
+            tuple,
+            pair_table(batch, knn_join(batch, batch, k, exclude_self=exclude_self, strategy=strategy))
+            .select(*cols)
+            .collect(),
+        )
+    )
+    if kind == "few_rows":
+        assert len(want) == len(ids) * (len(ids) - (1 if exclude_self else 0))
+    for slices in (1, 3):
+        got = self_knn_pairs(
+            batch, k, slices=slices, exclude_self=exclude_self,
+            gemm=strategy == "numpy-gemm",
+        )
+        assert got.columns == cols
+        assert sorted(map(tuple, got.collect())) == want, slices

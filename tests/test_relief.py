@@ -435,10 +435,11 @@ def test_decimal_cast_replay_parity_probe(spark):
 
 
 def test_dense_numpy_fit_job_count_pinned(spark, labeled):
-    """A single-batch dense fit with the exact numpy kNN issues 10 Spark
-    jobs, counted by the status tracker under a dedicated job group.
-    The kNN kernel runs inside one mapInPandas stage and the query side
-    is one Arrow fetch, so kernel changes must leave this count alone."""
+    """A single-batch dense fit with the exact numpy kNN issues 6 Spark
+    jobs, counted by the status tracker under a dedicated job group: the
+    profiling collect, the one Arrow fetch of the batch, and the stats
+    probe, whose first pass also fills the pair cache the kernel emits
+    (no rank shuffle, no pair joins, no materializing count)."""
     df, _, _ = labeled
     sc = spark.sparkContext
     group = "test-dense-numpy-fit-jobs"
@@ -457,15 +458,15 @@ def test_dense_numpy_fit_job_count_pinned(spark, labeled):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
 
 
 def test_dense_hash_batched_fit_job_count_pinned(spark, labeled):
     """The two-batch hash-batched dense fit with redundancy removal
-    issues 26 Spark jobs (same job-group count as the single-batch pin
-    above): per batch the kNN, the pair-cache count and the one fused
-    stats probe, then the MI collect. A change to the batch loop that
-    adds or drops an action shows here."""
+    issues 14 Spark jobs (same job-group count as the single-batch pin
+    above): the profiling collect, one Arrow fetch per batch, ONE stats
+    probe for both batches and ONE joint/MI collect. A change to the
+    batch engine that adds or drops an action shows here."""
     df, _, _ = labeled
     sc = spark.sparkContext
     group = "test-dense-hash-batched-fit-jobs"
@@ -485,4 +486,109 @@ def test_dense_hash_batched_fit_job_count_pinned(spark, labeled):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 26
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 14
+
+
+def _fit_jobs(spark, group: str, fit) -> list[list[str]]:
+    """Run ``fit`` under a job group; the stage names of each job it
+    issued, in job order."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fit()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return [
+        [tracker.getStageInfo(st).name for st in tracker.getJobInfo(j).stageIds]
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+
+
+@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm"])
+def test_fit_rejects_duplicate_ids_at_the_batch_fetch(spark, labeled, strategy):
+    """Repeated ids used to multiply rows silently through the pair
+    joins. The exact tiers' pair kernel holds every id of the batch on
+    the driver, so it names the repeats there: the fit's last job is
+    that fetch, and no kNN, pair or stats job runs after it."""
+    df, _, _ = labeled
+    dup = df.unionByName(df.filter(F.col("id").isin(17, 42)))
+
+    def fit():
+        with pytest.raises(ValueError, match=r"2 duplicate 'id' value\(s\).*: 17, 42"):
+            fit_relief(
+                dup, num_top_features=2, num_neighbors=3, estimation_ratio=1.0,
+                batch_size=1.0, knn_strategy=strategy,
+            )
+
+    jobs = _fit_jobs(spark, f"test-duplicate-ids-{strategy}", fit)
+    fetches = [i for i, stages in enumerate(jobs) if any("toArrow" in n for n in stages)]
+    assert fetches == [len(jobs) - 1]
+
+
+@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm"])
+@pytest.mark.parametrize(
+    "bad_row, match",
+    [
+        ((None, [0.0, 1.0, 2.0], 1.0), "null 'id'"),
+        ((99, None, 1.0), "null 'features' array"),
+        ((99, [0.0, 1.0], 1.0), "ragged"),
+        ((99, [0.0, None, 2.0], 1.0), "null element"),
+    ],
+)
+def test_fit_rejects_malformed_rows_on_both_exact_tiers(spark, strategy, bad_row, match):
+    """Both exact tiers read the batch through the one checked Arrow
+    fetch, so a null id, a null or ragged feature array or a null
+    element fails with a named error instead of a reshape error or a
+    silent fit."""
+    rows = [(i, [float(i % 3), float(i % 5), float(i % 7)], float(i % 2)) for i in range(30)]
+    df = spark.createDataFrame(
+        rows + [bad_row], "id long, features array<double>, label double"
+    ).coalesce(1)
+    with pytest.raises(ValueError, match=match):
+        fit_relief(
+            df, num_top_features=2, num_neighbors=2, estimation_ratio=1.0,
+            batch_size=1.0, knn_strategy=strategy,
+        )
+
+
+@pytest.mark.parametrize("strategy", ["numpy", "sql"])
+def test_three_hash_batches_replay_the_scope_chain_past_an_empty_batch(spark, labeled, strategy):
+    """Three hash batches with ids = 0 or 2 (mod 3): batch 1 is empty.
+    Batch 0's joint scope is empty, the empty batch keeps batch 0's
+    top-3, so batch 2's joint is scoped to it, and the joint union of
+    all three batches feeds the MI. The expected values are the
+    per-batch engine's (one probe and one cached joint per batch, in
+    sequence), which this fit must reproduce exactly."""
+    _, X, y = labeled
+    ids = [3 * (i // 2) + 2 * (i % 2) for i in range(len(y))]
+    df = spark.createDataFrame(
+        [(ids[i], X[i].tolist(), float(y[i])) for i in range(len(y))],
+        "id long, features array<double>, label double",
+    )
+    res = fit_relief(
+        df, num_top_features=3, num_neighbors=3, estimation_ratio=1.0,
+        batch_size=0.3, batching="hash", lower_feature_threshold=1.0,
+        redundancy_removal=True, knn_strategy=strategy,
+    )
+    assert res.n_batches == 3
+    assert res.std_selection == [0, 4, 5]
+    assert res.redundancy_selection == [0, 1, 2]
+    assert [float(v) for v in res.relevance] == [
+        1.0, 0.12767835886371007, 0.0805352281017754, 0.0,
+        0.37292427136694956, 0.26614910463941444,
+    ]
+    # batch 0's top-3 is {0, 4, 5}: every entry touches it
+    assert res.redundancy_coo == {
+        (0, 1): 0.03565400671218221, (0, 2): 0.02833993655663358,
+        (0, 3): 0.030305288664696287, (0, 4): 1.0, (0, 5): 0.9220193809125794,
+        (1, 0): 0.03565400671218221, (1, 4): 0.033972486219396386, (1, 5): 0.0,
+        (2, 0): 0.02833993655663358, (2, 4): 0.022317198512595497,
+        (2, 5): 0.003876820039498254, (3, 0): 0.030305288664696287,
+        (3, 4): 0.007325912966319972, (3, 5): 0.015090560027890401,
+        (4, 0): 1.0, (4, 1): 0.033972486219396386, (4, 2): 0.022317198512595497,
+        (4, 3): 0.007325912966319972, (4, 5): 0.8652400472324117,
+        (5, 0): 0.9220193809125794, (5, 1): 0.0, (5, 2): 0.003876820039498254,
+        (5, 3): 0.015090560027890401, (5, 4): 0.8652400472324117,
+    }
