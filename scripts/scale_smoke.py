@@ -881,7 +881,8 @@ def main() -> None:
     # q158-shaped fit IN ITS REGIME: genuinely sparse long-form input
     # (8 nnz of 10k features per row — the kddb shape, nnz/cell 8e-4),
     # where the inverted-index kNN's join work is O(shared nonzeros)
-    # and the adaptive bottom-M probe covers the no-overlap pairs.
+    # and the per-query merge takes the no-overlap pairs from a short
+    # norm-sorted prefix of the corpus.
     # Expected near-linear in rows; contrast with the dense-data bench
     # cost SCALE.md adjudicates (every pair sharing every feature is
     # the plan's worst case).

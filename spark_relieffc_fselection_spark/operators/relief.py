@@ -607,8 +607,7 @@ class ReliefFitResult:
     #: the kNN route batch 0 ACTUALLY ran (``_Neighbourhood.route``):
     #: the requested strategy, or the tier 'auto' resolved to — 'lsh'
     #: means the weights are approximate, and 'auto' also warns there —
-    #: or, for the sparse fit, 'sparse-inverted/probe' or '/grid', the
-    #: no-overlap route its density heuristic took (both exact).
+    #: or, for the sparse fit, its one exact route 'sparse-inverted'.
     resolved_knn_strategy: str = "numpy"
 
 
@@ -1087,17 +1086,23 @@ def fit_relief(
         F.col(features_col).cast("array<double>").alias("features"),
         F.col(label_col).cast("double").alias("label"),
     )
-    # ONE profiling job: per-class counts (-> priors + total) and a
-    # feature row (-> dimensionality) — vs count() + first() + a
-    # priors collect as three separate scans. In hash-sampling mode
-    # the SAMPLED size rides the same job as a conditional count (the
-    # draw is a pure function of the id, so the predicate evaluated
-    # here and in the sample's filter selects the identical row set) —
-    # one fewer action AND one fewer full pass over the instance set;
-    # engine mode can't fuse (Spark's sample draw is partition-seeded,
-    # not a column expression) and keeps its count below.
+    # ONE profiling job: per-class counts (-> priors + total), the
+    # first non-null feature row (-> dimensionality) and the null-array
+    # count (a null array fails by name on every tier) — vs count() +
+    # first() + a priors collect as three separate scans. In
+    # hash-sampling mode the SAMPLED size rides the same job as a
+    # conditional count (the draw is a pure function of the id, so the
+    # predicate evaluated here and in the sample's filter selects the
+    # identical row set) — one fewer action AND one fewer full pass
+    # over the instance set; engine mode can't fuse (Spark's sample
+    # draw is partition-seeded, not a column expression) and keeps its
+    # count below.
     fuse_sampled = estimation_ratio < 1.0 and sampling == "hash"
-    aggs = [F.count("*").alias("n"), F.first("features").alias("fx")]
+    aggs = [
+        F.count("*").alias("n"),
+        F.first("features", ignorenulls=True).alias("fx"),
+        F.count(F.when(F.col("features").isNull(), 1)).alias("n_null"),
+    ]
     if fuse_sampled:
         aggs.append(F.count(F.when(_hash_drawn(estimation_ratio), 1)).alias("ns"))
     plan = _plan_fit(
@@ -1108,6 +1113,9 @@ def fit_relief(
         fit_name="fit_relief",
     )
     _mark("profile")
+    n_null = sum(int(r["n_null"]) for r in plan.label_rows)
+    if n_null:
+        raise ValueError(f"fit_relief: {n_null} null {features_col!r} array(s) in the input")
     n_feat = len(plan.label_rows[0]["fx"])
     k, lower_feat = plan.k, plan.lower_feat
 

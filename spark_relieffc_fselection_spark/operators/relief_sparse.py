@@ -9,7 +9,11 @@ and mis-keys feature ids doing it (SURVEY §8.1). Here sparsity is just
     from an inverted-index join on feature_idx — cost scales with
     *shared nonzeros*, never with the nominal dimensionality. This is
     what makes "millions of features" (README.md:11, kddb 30M features)
-    tractable: a dense scan is O(Q·N·d), this is O(Q·nnz).
+    tractable: a dense scan is O(Q·N·d), this is O(Q·nnz). Pairs that
+    share no feature need no join at all: their distance is monotone
+    in the neighbour's norm, so one partition-local merge per query
+    takes them from the norm-sorted corpus (:func:`sparse_knn_join`,
+    one exact route).
   * pair expansion: union of the two sides' active features per
     (query, neighbor) pair — features inactive in BOTH sides are
     skipped (they contribute 0 distance; for collisions this matches
@@ -33,9 +37,15 @@ can be millions wide.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Iterator
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_relieffc_fselection_spark.operators.knn import _sparse_merge
 from spark_relieffc_fselection_spark.operators.relief import (
     DEC,
     ReliefFitResult,
@@ -73,23 +83,12 @@ def to_long_form(
     return long_df, labels
 
 
-def _coalesce_for_cache(
-    df: DataFrame, est_rows: int, per_task: int = 65536
-) -> DataFrame:
-    """Narrow-coalesce a shuffle-produced frame to ~est_rows/per_task
-    partitions before caching. Cache materialization pins the
-    shuffle_partitions-wide layout (AQE cannot re-coalesce a cached
-    plan), so at bench SFs every later scan of a tiny cached frame is
-    a stage of near-empty tasks; deriving the count from a driver-held
-    row estimate collapses that (guide §2.4: scale-adaptive, not
-    constant-tuned). At production volumes the derived count exceeds
-    the physical partition count and coalesce() is a no-op. No extra
-    exchange; no value change (downstream sums are decimal/integer,
-    ranks are computed upstream). Only used for caches whose later
-    scans are NARROW map-side reads — an under-estimate then costs a
-    few oversized cheap tasks, never a serialized wide stage."""
-    n = max(1, -(-int(est_rows) // per_task))
-    return df.coalesce(n)
+#: the route every sparse fit records
+SPARSE_ROUTE = "sparse-inverted"
+
+#: rows per task of the sparse fit's cached frames: the kNN merge emits
+#: at most k rows per query
+_ROWS_PER_TASK = 65536
 
 
 def sparse_knn_join(
@@ -99,51 +98,47 @@ def sparse_knn_join(
     k: int,
     exclude_self: bool = True,
     num_corpus: int | None = None,
-    probe: bool | None = None,
     resolution_out: dict | None = None,
 ) -> DataFrame:
-    """kNN via inverted-index dot products + the norm expansion —
+    """Exact kNN via inverted-index dot products and the norm expansion,
     WITHOUT ever materializing the O(|queries| x |corpus|) grid.
 
-    ``long_df``: (id, feature_idx, value); ``query_ids``: (id) subset.
-    Returns (query_id, neighbor_id, distance, rank).
+    ``long_df``: (id, feature_idx, value); ``labels``: (id, ...), the
+    corpus (an all-zero row has no long rows but is an instance of norm
+    0; long rows of other ids are ignored); ``query_ids``: (id). Returns
+    (query_id, neighbor_id, distance, rank), the k nearest by
+    (distance, neighbor_id), rank 1..k.
 
-    Exact candidate set, two parts:
+    Spark computes the decimal-exact squared norms and, from the
+    inverted-index join, the dot of every pair that shares an active
+    feature. The driver fetches the corpus's ``(id, sq_norm)`` once as
+    Arrow, rejecting null and repeated ids, and broadcasts it sorted by
+    (sq_norm, id). The dot terms,
+    plus one sentinel row per query (a query sharing no feature still
+    appears), are partitioned by query and sorted, and one
+    ``mapInArrow`` merge (:func:`_merge_queries`) answers each query
+    from two candidate sets:
 
-    * **Sharing pairs** — pairs with >= 1 common active feature get the
-      exact distance sqrt(|q|^2 + |n|^2 - 2<q,n>) from the
-      inverted-index join. Cost scales with shared nonzeros.
-    * **No-overlap pairs** — <q,n> = 0, so within a query's no-overlap
-      set the distance sqrt(|q|^2 + |n|^2) ranks by NEIGHBOR NORM
-      ALONE. Hence only the globally smallest-norm rows can matter:
-      take the bottom-M norm list (M adaptive), pair each query with
-      the members it shares no feature with, and that covers every
-      no-overlap pair that could reach the top k. M starts at
-      2(k+1) and doubles until every query sees >= k+1 no-overlap
-      members in the list (one cheap broadcast-sized check per round;
-      the first M suffices unless the smallest-norm rows happen to
-      overlap nearly every query). Any no-overlap row outside the
-      list has norm >= those k+1 covered candidates, so it is
-      dominated and can never enter the top k.
+    * **sharing pairs**, scored ``sqrt(greatest((q_sq + n_sq) -
+      2.0 * dot, 0))`` — the IEEE expression of the old norms grid;
+    * **no-overlap rows**: dot is 0, so their distance
+      ``sqrt(q_sq + n_sq)`` is monotone non-decreasing in ``n_sq``. The
+      norm-sorted prefix of length k + |sharing ∪ self| holds at least
+      k of them, and every no-overlap row nearer than its last row lies
+      inside it. A row past the prefix can only TIE that last row — when
+      ``q_sq + n_sq`` or its root rounds to the same double for
+      distinct norms — and the prefix is extended through those rows,
+      so the lowest-id tied rows are never missed.
 
-    At 100 TB this replaces the old norms-grid crossJoin (O(Q x N)
-    narrow rows — the sparse path's one quadratic stage) with
-    O(shared nonzeros) join work plus a driver-bounded probe list.
+    The top k by (distance, neighbor_id) is the dense kernels' merge
+    (:func:`knn._sparse_merge`), so the result equals the full grid's
+    window rank row for row, with no cross-partition rank merge.
 
-    ``resolution_out`` (VERDICT r9 #5): pass a dict and the operator
-    records which no-overlap route it actually took —
-    ``{'route': 'probe' | 'grid'}`` — the decision the adaptive loop
-    makes at call time. Cost-only (both routes are exact), but the
-    same audit argument as the dense tier's resolved_knn_strategy:
-    a fit whose plan the heuristic chose should say which plan ran.
+    ``num_corpus`` sizes the merge at ``num_corpus x k`` output rows
+    (default: the fetched corpus size); ``resolution_out['route']``
+    records :data:`SPARSE_ROUTE`.
     """
-    # id universe comes from `labels`, NOT the long table: an all-zero
-    # row has no long-form rows at all but is still a real instance
-    # (norm 0) for both the query and neighbor sides.
-    # Decimal-accumulated norms/dots (the engine-wide posture, SCALE.md
-    # "Global posture"): float sums are shuffle-order-sensitive, so a
-    # double-summed distance could flip near-tied neighbor ranks
-    # between runs — and between this engine and the SQL oracle.
+    spark = long_df.sparkSession
     norms = (
         labels.select("id")
         .join(
@@ -156,147 +151,182 @@ def sparse_knn_join(
             "left",
         )
         .na.fill({"sq_norm": 0.0})
+        .toArrow()
     )
-    q_norms = norms.join(query_ids.select(F.col("id")), "id").select(
-        F.col("id").alias("query_id"), F.col("sq_norm").alias("q_sq")
+    ids_col = norms.column("id")
+    if ids_col.null_count:
+        raise ValueError(f"sparse_knn_join: {ids_col.null_count} null 'id' value(s) in labels")
+    ids = ids_col.to_numpy().astype(np.int64, copy=False)
+    sq_norm = norms.column("sq_norm").to_numpy().astype(np.float64, copy=False)
+    by_id = np.argsort(ids, kind="stable")
+    sorted_ids = ids[by_id]
+    dup = np.unique(sorted_ids[1:][sorted_ids[1:] == sorted_ids[:-1]])
+    if len(dup):
+        shown = ", ".join(str(i) for i in dup[:10]) + (", ..." if len(dup) > 10 else "")
+        raise ValueError(
+            f"sparse_knn_join: {len(dup)} duplicate 'id' value(s) in labels: {shown}"
+        )
+    order = np.lexsort((ids, sq_norm))
+    pos = np.empty(len(ids), dtype=np.int64)
+    pos[order] = np.arange(len(ids))
+    bc = spark.sparkContext.broadcast(
+        _Corpus(ids[order], sq_norm[order], sorted_ids, pos[by_id])
     )
-    q_long = long_df.join(
-        F.broadcast(query_ids.select(F.col("id").alias("query_id"))),
-        long_df.id == F.col("query_id"),
-    ).select("query_id", "feature_idx", F.col("value").alias("q_val"))
-
-    # ---- no-overlap candidates: bottom-M norm probe, grid fallback ----
-    # For a GENUINELY sparse corpus (nnz/row << nFeat — the kddb-style
-    # regime this path exists for), the smallest-norm rows rarely share
-    # features with a query, so a small probe list covers every
-    # no-overlap candidate. For dense-ish data most bottom rows DO
-    # overlap most queries and the probe would have to grow toward the
-    # whole corpus — detect that cheaply and fall back to the
-    # O(Q x |corpus|) norms grid (narrow rows, windowed immediately),
-    # which is the better plan exactly when the data is dense.
-    # The probe artifacts are DRIVER-BOUNDED (bottom list: M rows;
-    # overlap pairs: <= |queries| x M): collect them and feed
-    # LocalRelations back, so the final anti join broadcasts with no
-    # shuffle.
-    # `num_corpus` (when the caller already counted labels) saves a job
-    spark = long_df.sparkSession
-    n_corpus = num_corpus if num_corpus is not None else labels.count()
-    need = k + 1 if exclude_self else k  # self may sit in the list
-    m = min(2 * (k + 1), n_corpus)
-    # ``probe``: None = adaptive (try the probe, fall back on
-    # escalation); False = caller knows the data is dense-ish, go
-    # straight to the grid; True = force the probe (escalate to the
-    # full corpus if needed — never falls back).
-    m_cap = n_corpus if probe else min(n_corpus, 8 * (k + 1))
-    probe_ok = False
-    while probe is not False:
-        bottom_rows = (
-            norms.orderBy(F.asc("sq_norm"), F.asc("id")).limit(m).collect()
-        )
-        bottom_ids = [int(r["id"]) for r in bottom_rows]
-        # long rows of the listed ids: pushed-down isin filter, no join
-        bottom_long = long_df.filter(F.col("id").isin(bottom_ids)).select(
-            F.col("id").alias("neighbor_id"), "feature_idx"
-        )
-        # (query, listed-id) pairs that DO share a feature
-        overlap_rows = (
-            q_long.join(F.broadcast(bottom_long), "feature_idx")
-            .select("query_id", "neighbor_id")
-            .distinct()
-            .collect()
-        )
-        if m >= n_corpus:
-            probe_ok = True  # probe degenerated to the full corpus
-            break
-        per_q: dict = {}
-        for r in overlap_rows:
-            per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + 1
-        if m - max(per_q.values(), default=0) >= need:
-            probe_ok = True
-            break
-        if m >= m_cap:
-            break  # dense regime: grid fallback
-        m = min(4 * m, m_cap)
     if resolution_out is not None:
-        resolution_out["route"] = "probe" if probe_ok else "grid"
-    # ---- sharing pairs: exact distance from the inverted index ----
+        resolution_out["route"] = SPARSE_ROUTE
+
     # queries are a bounded sample (the operator contract): broadcast
     # their long rows so the inverted-index join never shuffles the
-    # corpus-side long table.
+    # corpus-side long table
+    q_ids = query_ids.select(F.col("id").alias("query_id"))
+    q_long = long_df.join(F.broadcast(q_ids), long_df.id == F.col("query_id")).select(
+        "query_id", "feature_idx", F.col("value").alias("q_val")
+    )
     dots = (
-        long_df.select(F.col("id").alias("neighbor_id"), "feature_idx", F.col("value").alias("n_val"))
+        long_df.select(
+            F.col("id").alias("neighbor_id"), "feature_idx", F.col("value").alias("n_val")
+        )
         .join(F.broadcast(q_long), "feature_idx")
         .groupBy("query_id", "neighbor_id")
-        .agg(
-            F.sum((F.col("q_val") * F.col("n_val")).cast(DEC))
-            .cast("double")
-            .alias("dot")
-        )
+        .agg(F.sum((F.col("q_val") * F.col("n_val")).cast(DEC)).cast("double").alias("dot"))
     )
-    if probe_ok:
-        bottom_df = spark.createDataFrame(
-            [(int(r["id"]), float(r["sq_norm"])) for r in bottom_rows],
-            "neighbor_id long, n_sq double",
-        )
-        overlap_df = spark.createDataFrame(
-            [(int(r["query_id"]), int(r["neighbor_id"])) for r in overlap_rows],
-            "query_id long, neighbor_id long",
-        )
-        no_overlap = (
-            q_norms.crossJoin(F.broadcast(bottom_df))
-            .join(F.broadcast(overlap_df), ["query_id", "neighbor_id"], "left_anti")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.sqrt(F.greatest(F.col("q_sq") + F.col("n_sq"), F.lit(0.0))).alias(
-                    "distance"
-                ),
-            )
-        )
-        sharing = (
-            dots.join(
-                norms.select(
-                    F.col("id").alias("neighbor_id"), F.col("sq_norm").alias("n_sq")
-                ),
-                "neighbor_id",
-            )
-            .join(F.broadcast(q_norms), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.sqrt(
-                    F.greatest(
-                        F.col("q_sq") + F.col("n_sq") - 2.0 * F.col("dot"), F.lit(0.0)
-                    )
-                ).alias("distance"),
-            )
-        )
-        cand = sharing.unionByName(no_overlap)
-    else:
-        # Dense regime: the probe would approach the corpus size, so
-        # take the classic narrow norms grid and correct the sharing
-        # pairs' distances with a left join against `dots` — every pair
-        # appears exactly once.
-        grid = norms.select(
-            F.col("id").alias("neighbor_id"), F.col("sq_norm").alias("n_sq")
-        ).crossJoin(F.broadcast(q_norms))
-        cand = (
-            grid.join(dots, ["query_id", "neighbor_id"], "left")
-            .na.fill({"dot": 0.0})
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.sqrt(
-                    F.greatest(
-                        F.col("q_sq") + F.col("n_sq") - 2.0 * F.col("dot"), F.lit(0.0)
-                    )
-                ).alias("distance"),
-            )
-        )
+    sentinels = q_ids.select(
+        "query_id",
+        F.lit(None).cast("long").alias("neighbor_id"),
+        F.lit(None).cast("double").alias("dot"),
+    )
+    n_rows = (num_corpus if num_corpus is not None else len(ids)) * k
+    parts = max(1, -(-n_rows // _ROWS_PER_TASK))
+
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        corpus, held = bc.value, []  # held: rows whose last query may continue
+        if not len(corpus.ids):
+            return
+        for rb in batches:
+            held.append(_dot_terms(rb))
+            if len(held[-1][0]) and held[-1][0][0] != held[-1][0][-1]:
+                rows = _in_query_order(held)
+                cut = int(np.searchsorted(rows[0], rows[0][-1]))
+                yield _merge_queries([a[:cut] for a in rows], corpus, k, exclude_self)
+                held = [tuple(a[cut:] for a in rows)]
+        if held:
+            yield _merge_queries(_in_query_order(held), corpus, k, exclude_self)
+
+    return (
+        dots.unionByName(sentinels)
+        .repartition(parts, "query_id")
+        .sortWithinPartitions("query_id")
+        .mapInArrow(merge, "query_id long, neighbor_id long, distance double, rank int")
+    )
+
+
+class _Corpus(NamedTuple):
+    """The broadcast corpus in (sq_norm, id) order, plus an id index."""
+
+    ids: np.ndarray
+    sq_norm: np.ndarray
+    sorted_ids: np.ndarray  # the ids, ascending
+    pos_of: np.ndarray  # the norm-order position of each sorted id
+
+    def locate(self, x: np.ndarray) -> np.ndarray:
+        """Norm-order positions of the ids ``x``; -1 where absent."""
+        i = np.minimum(np.searchsorted(self.sorted_ids, x), len(self.sorted_ids) - 1)
+        return np.where(self.sorted_ids[i] == x, self.pos_of[i], -1)
+
+
+def _distance(q_sq: np.ndarray, n_sq: np.ndarray, dot) -> np.ndarray:
+    """Spark's ``sqrt(greatest((q_sq + n_sq) - 2.0 * dot, 0.0))``, in
+    the same IEEE operation order."""
+    return np.sqrt(np.maximum((q_sq + n_sq) - 2.0 * dot, 0.0))
+
+
+def _dot_terms(rb: pa.RecordBatch) -> tuple[np.ndarray, ...]:
+    """(query_id, neighbor_id, is_sentinel, dot) of one Arrow batch; a
+    null dot (a decimal sum past DECIMAL(38,18)) counts as 0."""
+    n = rb.column(1)
+    return (
+        rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+        n.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+        n.is_null().to_numpy(zero_copy_only=False),
+        rb.column(2).fill_null(0.0).to_numpy(zero_copy_only=False),
+    )
+
+
+def _in_query_order(held: list[tuple[np.ndarray, ...]]) -> list[np.ndarray]:
+    """The held dot terms as one set of columns, checked to be in query
+    order: the merge answers each query from one contiguous run."""
+    rows = [np.concatenate(cols) for cols in zip(*held)]
+    if (np.diff(rows[0]) < 0).any():
+        raise RuntimeError("sparse_knn_join: dot terms reached the merge out of query order")
+    return rows
+
+
+def _merge_queries(
+    rows: list[np.ndarray], corpus: _Corpus, k: int, exclude_self: bool
+) -> pa.RecordBatch:
+    """The k nearest neighbours of every query in ``rows`` (every dot
+    term of each query, sorted by query id), as a (query_id,
+    neighbor_id, distance, rank) batch. See :func:`sparse_knn_join` for
+    why the two candidate sets are exact."""
+    q, n, sentinel, dot = rows
+    n_corpus = len(corpus.ids)
+    uq, grp = np.unique(q, return_inverse=True)
+    q_pos = corpus.locate(uq)
+    live = q_pos >= 0  # a query outside the corpus has no norm
+    uq, q_pos = uq[live], q_pos[live]
+    n_q = len(uq)
+    q_sq = corpus.sq_norm[q_pos]
+    # sharing pairs with both ends in the corpus
+    keep = ~sentinel & live[grp]
+    s_grp, s_pos = (np.cumsum(live) - 1)[grp[keep]], corpus.locate(n[keep])
+    found = s_pos >= 0
+    s_grp, s_pos = s_grp[found], s_pos[found]
+    s_dist = _distance(q_sq[s_grp], corpus.sq_norm[s_pos], dot[keep][found])
+    s_key = s_grp * n_corpus + s_pos
+    self_key = np.arange(n_q) * n_corpus + q_pos
+    # no-overlap rows: the norm-order prefix of k + |sharing ∪ self|,
+    # extended through the rows tied with its last one
+    span = np.minimum(
+        n_corpus, k + np.bincount(s_grp, minlength=n_q) + ~np.isin(self_key, s_key)
+    )
+    last = _distance(q_sq, corpus.sq_norm[span - 1], 0.0)
+    tied = span < n_corpus
+    tied[tied] = _distance(q_sq[tied], corpus.sq_norm[span[tied]], 0.0) == last[tied]
+    for g in np.flatnonzero(tied):
+        lo, hi = int(span[g]) + 1, n_corpus
+        while lo < hi:  # distance is monotone in the norm order
+            mid = (lo + hi) // 2
+            if _distance(q_sq[g], corpus.sq_norm[mid], 0.0) <= last[g]:
+                lo = mid + 1
+            else:
+                hi = mid
+        span[g] = lo
+    p_grp = np.repeat(np.arange(n_q), span)
+    p_pos = np.arange(len(p_grp)) - np.repeat(np.cumsum(span) - span, span)
+    skip = np.concatenate([s_key, self_key]) if exclude_self else s_key
+    free = ~np.isin(p_grp * n_corpus + p_pos, skip)
+    p_grp, p_pos = p_grp[free], p_pos[free]
     if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        other = s_pos != q_pos[s_grp]
+        s_grp, s_pos, s_dist = s_grp[other], s_pos[other], s_dist[other]
+    best_d, best_i = _sparse_merge(
+        np.full((n_q, k), np.inf),
+        np.full((n_q, k), -1, dtype=np.int64),
+        np.concatenate([s_grp, p_grp]),
+        corpus.ids[np.concatenate([s_pos, p_pos])],
+        np.concatenate([s_dist, _distance(q_sq[p_grp], corpus.sq_norm[p_pos], 0.0)]),
+        k,
+    )
+    qi, slot = np.nonzero(np.isfinite(best_d))
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(uq[qi]),
+            pa.array(best_i[qi, slot]),
+            pa.array(best_d[qi, slot]),
+            pa.array((slot + 1).astype(np.int32)),
+        ],
+        names=["query_id", "neighbor_id", "distance", "rank"],
+    )
 
 
 def sparse_pair_feature_table(
@@ -403,7 +433,6 @@ def fit_relief_sparse(
     batch_size: float = 1.0,
     lower_feature_threshold: float = 3.0,
     estimation_ratio: float = 1.0,
-    knn_probe: bool | None = None,
 ) -> ReliefFitResult:
     """Sparse fit: the dense fit's batch engine (``relief._run_batches``)
     over the sparse neighbourhood source — per batch
@@ -428,15 +457,8 @@ def fit_relief_sparse(
     filters nothing): the batched jointTotal discount depends on it
     (ReliefFRSelector.scala:642). Single-pass fits ignore it.
 
-    ``knn_probe`` overrides sparse_knn_join's no-overlap probe (None =
-    decide; False = straight to the norms grid; True = force the
-    probe). The single pass hands it through unchanged; the batched
-    loop otherwise decides from nominal nnz density once per fit. The
-    heuristic reads nominal density, which a caller can know to be
-    misleading — e.g. narrow-active data strided across a huge declared
-    width is nominally ultra-sparse but every pair shares every active
-    feature, so the probe only burns driver rounds before falling back
-    to the grid it should have started on.
+    Every batch's kNN is :func:`sparse_knn_join`, whose norms fetch
+    names repeated ids before any statistics job runs.
     """
     plan = _plan_fit(
         lambda: labels.groupBy("label").agg(F.count("*").alias("n")).collect(),
@@ -448,39 +470,19 @@ def fit_relief_sparse(
     n_elems, k = plan.n_instances, plan.k
     n_batches = max(1, int(1.0 / batch_size))
     continuous = not discrete_data
-    probe_arg, dense_ish = knn_probe, not knn_probe
-    if n_batches > 1 and knn_probe is None:
-        # One upfront density probe steers every batch's kNN plan: on
-        # dense-ish input (nnz/cell > 0.25) the adaptive bottom-M probe
-        # inside sparse_knn_join would burn 2 driver actions per
-        # escalation round per batch before falling back to the norms
-        # grid anyway — tell it to go straight there (probe=False) and
-        # skip the per-batch exact corpus count the probe proof needs
-        # (the grid path never consults it). For parquet-backed long
-        # tables this count is metadata-only; for derived long forms it
-        # costs about one probe round and saves up to six per batch.
-        dense_ish = long_df.count() > 0.25 * n_elems * max(n_features, 1)
-        probe_arg = False if dense_ish else None
+    # partition-sizing estimate only: hash batches split evenly
+    b_n = max(1, n_elems // n_batches)
 
     def neighbourhood(b: int) -> _Neighbourhood:
         if n_batches == 1:
-            b_long, b_labels, b_n, owned = long_df, labels, n_elems, ()
+            b_long, b_labels, owned = long_df, labels, ()
         else:
             in_batch = _hash_batch(b, n_batches)
             b_labels = labels.filter(in_batch).cache()
             b_long = long_df.filter(in_batch).cache()
-            # exact per-batch count only where the probe's coverage
-            # proof consumes it; the grid path takes a uniform-split
-            # estimate
-            b_n = max(1, n_elems // n_batches) if dense_ish else b_labels.count()
             owned = (b_long, b_labels)
-        knn_res: dict = {}
-        neigh = _coalesce_for_cache(
-            sparse_knn_join(
-                b_long, b_labels, b_labels.select("id"), k,
-                num_corpus=b_n, probe=probe_arg, resolution_out=knn_res,
-            ),
-            b_n * k,  # exact bound: <= k rows per query
+        neigh = sparse_knn_join(
+            b_long, b_labels, b_labels.select("id"), k, num_corpus=b_n
         ).cache()
         # No materializing count() here: the engine's one stats probe
         # is the first consumer of BOTH caches, and RDD block-level
@@ -488,12 +490,17 @@ def fit_relief_sparse(
         # partition once (the second consumer blocks on the lock and
         # reads the block), so a count would only add an action per
         # batch (OPTIMIZATION_r13.md §1: 7->5 actions per fit; its A/B
-        # read neutral within noise). x4 stands in for the per-pair
-        # active-feature union size — narrow map-side consumers only
-        # (see _coalesce_for_cache).
-        lp = _coalesce_for_cache(
-            sparse_pair_feature_table(b_long, b_labels, neigh), b_n * k * 4
-        ).cache()
+        # read neutral within noise).
+        # A cache pins its plan's partition count (AQE cannot coalesce
+        # it later), so size it from the rows: ~64k per task, x4 for
+        # the per-pair active-feature union. Its consumers are narrow
+        # map-side reads, where an under-estimate costs only a few
+        # oversized cheap tasks; at scale the coalesce is a no-op.
+        lp = (
+            sparse_pair_feature_table(b_long, b_labels, neigh)
+            .coalesce(max(1, -(-b_n * k * 4 // _ROWS_PER_TASK)))
+            .cache()
+        )
         return _Neighbourhood(
             bins=feature_bin_stats(lp, continuous, lower_distance_threshold),
             pair_counts=_pair_bin_counts(neigh, b_labels),
@@ -505,7 +512,7 @@ def fit_relief_sparse(
                 continuous,
             ),
             caches=(lp, neigh, *owned),
-            route=f"sparse-inverted/{knn_res['route']}",
+            route=SPARSE_ROUTE,
         )
 
     return _run_batches(

@@ -394,12 +394,12 @@ def two_stage_maxsim(
         .filter(F.col("r1") <= first_stage_c)
         .select("query_id", "doc_id")
     )
-    # Materialize the candidate list as a LocalRelation (the
-    # sparse_knn_join probe-artifact pattern): it is DRIVER-BOUNDED by
-    # contract (|queries| x C rows), and stage 2 references it twice
-    # (the assembly semi-join and the pair join) — a lazy frame would
-    # re-run the whole stage-1 corpus pass per reference (ReuseExchange
-    # does not unify aliased subtrees; SCALE.md round 5).
+    # Materialize the candidate list as a LocalRelation: it is
+    # DRIVER-BOUNDED by contract (|queries| x C rows), and stage 2
+    # references it twice (the assembly semi-join and the pair join) —
+    # a lazy frame would re-run the whole stage-1 corpus pass per
+    # reference (ReuseExchange does not unify aliased subtrees;
+    # SCALE.md round 5).
     spark = doc_tokens.sparkSession
     # LIMIT bound+1 BEFORE the collect: the driver never materializes
     # more than the sanity bound even when the contract is violated —

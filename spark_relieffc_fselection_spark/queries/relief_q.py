@@ -804,25 +804,20 @@ def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
     long_df, labels = long_df.cache(), labels.cache()
     query_ids = labels.select("id").filter(F.col("id") % SPARSE_QUERY_MOD == 0)
     # ONE job for the priors (sum of label counts == total); it fills
-    # the LABELS cache. The long cache needs its own materialization:
-    # the priors job never touches long_df, and the kNN job consumes it
-    # from four concurrent subplans (dots' both sides, norms, probe) —
-    # racing consumers each recompute unfilled cached partitions, so
-    # without this the sparsify+explode ran 4x (caught by the
-    # duplicate-subtree plan scan).
+    # the LABELS cache. The kNN's norms fetch is the long cache's first
+    # consumer and reads it once, so it fills that cache before the dot
+    # join's two references read it (racing consumers of an unfilled
+    # cache would each recompute the sparsify+explode).
     label_rows = labels.groupBy("label").agg(F.count("*").alias("n")).collect()
-    long_df.count()
     n_inst = sum(r["n"] for r in label_rows)
     priors = {float(r["label"]): r["n"] / n_inst for r in label_rows}
     # Cache + materialize the tiny neighbor table: it feeds the pair
     # explode THREE times (q-side, n-side, final label join) plus the
     # pair-count aggregation — uncached, the whole inverted-index kNN
-    # subplan (grid cross-join + rank window) would re-execute per
+    # subplan (dot join + per-query merge) would re-execute per
     # consumer.
-    # probe=False: the |x| > 0.15 sparsifier leaves ~25% density, so
-    # the bottom-norm probe would escalate; go straight to the grid.
     neigh = sparse_knn_join(
-        long_df, labels, query_ids, SPARSE_K, num_corpus=n_inst, probe=False
+        long_df, labels, query_ids, SPARSE_K, num_corpus=n_inst
     ).cache()
     neigh.count()
     # the sparse fit's own stats probe and driver collapse, one action
@@ -1499,12 +1494,6 @@ def q161_sparse_fit_coo_width(spark: SparkSession, sf_dir: str) -> DataFrame:
         redundancy_removal=True,
         discrete_data=False,
         batch_size=0.5,  # exactly the oracle's id%2 split
-        # nominal density here is 1/8192 but every pair shares every
-        # ACTIVE feature — tell the loop to skip the no-overlap probe
-        # (it would escalate m for nothing and fall back to the grid),
-        # saving ~6 driver round-trips per batch. Exactness unchanged:
-        # probe and grid produce the same candidate set.
-        knn_probe=False,
     )
     if not isinstance(res.relevance, SparseRelevance):
         raise ValueError(

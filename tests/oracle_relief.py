@@ -29,6 +29,51 @@ def knn_oracle(X: np.ndarray, k: int, exclude_self: bool = True) -> list[list[in
     return out
 
 
+def sparse_knn_oracle(
+    long_rows: list[tuple[int, int, float]],
+    label_ids: list[int],
+    query_ids: list[int],
+    k: int,
+    exclude_self: bool = True,
+) -> list[tuple[int, int, float, int]]:
+    """Brute-force sparse kNN in Spark's arithmetic: every product cast
+    to DECIMAL(38,18) as ``Decimal(repr(p)).quantize(1E-18,
+    ROUND_HALF_UP)`` (the cast ``_collapse_bins_local`` replays), exact
+    decimal sums back to double, then ``sqrt(max((q_sq + n_sq) -
+    2.0 * dot, 0.0))`` for EVERY (query, corpus row) pair, top k by
+    (distance, id). The corpus is ``label_ids``; long rows of other ids
+    and queries outside it take no part. Returns (query_id,
+    neighbor_id, distance, rank) rows in (query_id, rank) order."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal, localcontext
+
+    vec: dict[int, dict[int, float]] = {}
+    for i, f, v in long_rows:
+        vec.setdefault(i, {})[f] = v
+    corpus = sorted(set(label_ids))
+    out = []
+    with localcontext() as ctx:
+        ctx.prec = 80  # exact: no sum here rounds before the double cast
+
+        def dot(a: dict, b: dict) -> float:
+            q18 = Decimal("1E-18")
+            terms = (
+                Decimal(repr(a[f] * b[f])).quantize(q18, ROUND_HALF_UP)
+                for f in a.keys() & b.keys()
+            )
+            return float(sum(terms, Decimal(0)))
+
+        sq = {i: dot(vec.get(i, {}), vec.get(i, {})) for i in corpus}
+        for q in sorted(set(query_ids) & set(corpus)):
+            cands = sorted(
+                (math.sqrt(max((sq[q] + sq[n]) - 2.0 * dot(vec.get(q, {}), vec.get(n, {})), 0.0)), n)
+                for n in corpus
+                if not (exclude_self and n == q)
+            )
+            out += [(q, n, dist, r + 1) for r, (dist, n) in enumerate(cands[:k])]
+    return out
+
+
 def diffcube_scan_oracle(
     q_ids: np.ndarray,
     q_mat: np.ndarray,
@@ -261,7 +306,6 @@ def sparse_single_pass_reference(
     lower_distance_threshold: float = 0.8,
     redundancy_removal: bool = True,
     discrete_data: bool = False,
-    knn_probe: bool | None = None,
 ) -> dict:
     """The single-pass sparse fit as a plain chain of the Spark
     operators, one stage after another: :func:`relevance_weights` over
@@ -288,9 +332,7 @@ def sparse_single_pass_reference(
     priors = {float(r["label"]): r["count"] / n for r in label_counts}
     k = num_neighbors * len(priors)
     continuous = not discrete_data
-    neigh = sparse_knn_join(
-        long_df, labels, labels.select("id"), k, num_corpus=n, probe=knn_probe
-    ).cache()
+    neigh = sparse_knn_join(long_df, labels, labels.select("id"), k, num_corpus=n).cache()
     n_pairs = neigh.count()
     lp = sparse_pair_feature_table(long_df, labels, neigh).cache()
     raw = {

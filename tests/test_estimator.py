@@ -339,7 +339,7 @@ def test_sparse_model_records_inverted_strategy(spark):
         numTopFeatures=2, numNeighbors=2, estimationRatio=1.0,
         batchSize=1.0, redundancyRemoval=False,
     ).fit(df)
-    assert m.getOrDefault(m.resolvedKnnStrategy).startswith("sparse-inverted/")
+    assert m.getOrDefault(m.resolvedKnnStrategy) == "sparse-inverted"
 
 
 def test_sampling_mode_param_reaches_the_fit(spark, vec_df, tmp_path):
@@ -388,7 +388,7 @@ def test_sparse_estimator_honors_sampling_mode(spark):
     )
     m1, m2 = sel.fit(df), sel.fit(df)
     assert m1.getOrDefault(m1.stdSelection) == m2.getOrDefault(m2.stdSelection)
-    assert m1.getOrDefault(m1.resolvedKnnStrategy).startswith("sparse-inverted/")
+    assert m1.getOrDefault(m1.resolvedKnnStrategy) == "sparse-inverted"
 
 
 def test_lsh_probe_radius_param_roundtrip(spark, tmp_path):
@@ -482,10 +482,10 @@ def test_lsh_tables_param_reaches_the_fit(vec_df, tmp_path):
 
 
 def test_sparse_knn_probe_param_reaches_the_fit(spark, tmp_path):
-    """sparseKnnProbe='grid' skips the no-overlap probe (the q161
-    lesson: nominal density can mislead the heuristic). Both probe
-    modes are EXACT candidate strategies, so the selections must
-    agree with the default fit."""
+    """sparseKnnProbe is ignored: the sparse route runs one exact kNN
+    plan, so 'grid' and 'probe' fit the same selections as the default
+    and record the same route. The Param stays declared so a saved
+    selector or model that carries it still loads."""
     rng = np.random.default_rng(31)
     n, d = 60, 10
     X = rng.normal(loc=3.0, size=(n, d)).round(3)
@@ -504,17 +504,11 @@ def test_sparse_knn_probe_param_reaches_the_fit(spark, tmp_path):
         batchSize=1.0, redundancyRemoval=False, seed=7,
     )
     m_auto = ReliefFSelector(**params).fit(df)
-    m_grid = ReliefFSelector(**params, sparseKnnProbe="grid").fit(df)
-    assert m_grid.getOrDefault(m_grid.stdSelection) == m_auto.getOrDefault(
-        m_auto.stdSelection
-    )
-    # the persisted model records WHICH route ran (VERDICT r9 #5)
-    assert m_grid.getOrDefault(
-        m_grid.resolvedKnnStrategy
-    ) == "sparse-inverted/grid"
-    assert m_auto.getOrDefault(m_auto.resolvedKnnStrategy).startswith(
-        "sparse-inverted/"
-    )
+    for mode in ("grid", "probe"):
+        m = ReliefFSelector(**params, sparseKnnProbe=mode).fit(df)
+        assert m.getOrDefault(m.stdSelection) == m_auto.getOrDefault(m_auto.stdSelection)
+        assert m.getOrDefault(m.resolvedKnnStrategy) == "sparse-inverted"
+    assert m_auto.getOrDefault(m_auto.resolvedKnnStrategy) == "sparse-inverted"
     path = str(tmp_path / "probe-est")
     sel = ReliefFSelector(sparseKnnProbe="grid")
     sel.write().overwrite().save(path)
@@ -579,14 +573,15 @@ def test_typoed_modes_fail_before_any_job(spark, vec_df, sparse_vec_df, route, p
         ("dense", dict(knnStrategy="numpy"), "numpy"),
         ("dense", dict(knnStrategy="lsh"), "lsh"),
         ("dense", dict(knnStrategy="auto"), "numpy"),  # tiny data: exact tier
-        ("sparse", dict(sparseKnnProbe="probe"), "sparse-inverted/probe"),
-        ("sparse", dict(sparseKnnProbe="grid"), "sparse-inverted/grid"),
-        ("sparse", dict(sparseKnnProbe="probe", batchSize=0.5), "sparse-inverted/probe"),
+        ("sparse", dict(sparseKnnProbe="probe"), "sparse-inverted"),
+        ("sparse", dict(sparseKnnProbe="grid"), "sparse-inverted"),
+        ("sparse", dict(sparseKnnProbe="probe", batchSize=0.5), "sparse-inverted"),
     ],
 )
 def test_model_records_the_route_the_fit_ran(vec_df, sparse_vec_df, route, params, want):
     """resolvedKnnStrategy is the kNN route batch 0 ran: the resolved
-    dense strategy, or the sparse no-overlap route."""
+    dense strategy, or the one sparse route whatever the ignored
+    sparseKnnProbe says."""
     df = vec_df if route == "dense" else sparse_vec_df
     model = ReliefFSelector(
         **{

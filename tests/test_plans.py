@@ -715,7 +715,7 @@ def test_maxsim_rerank_single_scan_no_token_pair_explosion(spark, qs):
 def test_two_stage_retrieval_two_corpus_passes(spark, qs):
     """q168: two corpus passes TOTAL — stage 1's centroid pass runs
     eagerly (the candidate list materializes as a driver-bounded
-    LocalRelation, the sparse_knn_join probe pattern), so the RETURNED
+    LocalRelation), so the RETURNED
     plan carries exactly ONE corpus scan (the candidate-restricted
     token assembly), candidate/query sides local or broadcast, no
     cartesian, no token-pair explosion."""

@@ -553,25 +553,59 @@ def test_fit_rejects_malformed_rows_on_both_exact_tiers(spark, strategy, bad_row
         )
 
 
-@pytest.mark.parametrize("strategy", ["numpy", "sql"])
+@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm", "sql", "lsh"])
+def test_fit_rejects_a_null_first_array_in_the_profiling_job(spark, strategy):
+    """The feature width comes from the first non-null array, and the
+    profiling job also counts null arrays, so a null array fails by name
+    on every tier — also in the first row, which used to end in a bare
+    TypeError — and the profiling job is the fit's only job."""
+    rows = [(i, [float(i % 3), float(i % 5), float(i % 7)], float(i % 2)) for i in range(30)]
+    df = spark.createDataFrame(
+        [(99, None, 1.0)] + rows, "id long, features array<double>, label double"
+    ).coalesce(1)
+
+    def fit():
+        with pytest.raises(ValueError, match=r"1 null 'features' array"):
+            fit_relief(
+                df, num_top_features=2, num_neighbors=2, estimation_ratio=1.0,
+                batch_size=1.0, knn_strategy=strategy,
+            )
+
+    jobs = _fit_jobs(spark, f"test-null-first-array-{strategy}", fit)
+    assert len(jobs) == 1, jobs
+
+
+@pytest.mark.parametrize("strategy", ["numpy", "sql", "sparse"])
 def test_three_hash_batches_replay_the_scope_chain_past_an_empty_batch(spark, labeled, strategy):
     """Three hash batches with ids = 0 or 2 (mod 3): batch 1 is empty.
     Batch 0's joint scope is empty, the empty batch keeps batch 0's
     top-3, so batch 2's joint is scoped to it, and the joint union of
     all three batches feeds the MI. The expected values are the
     per-batch engine's (one probe and one cached joint per batch, in
-    sequence), which this fit must reproduce exactly."""
+    sequence), which this fit must reproduce exactly. The sparse fit
+    (``strategy='sparse'``, the same rows in long form; the fixture has
+    no zeros) reproduces the same values through its own kNN."""
+    from spark_relieffc_fselection_spark.operators.relief_sparse import (
+        fit_relief_sparse,
+        to_long_form,
+    )
+
     _, X, y = labeled
     ids = [3 * (i // 2) + 2 * (i % 2) for i in range(len(y))]
     df = spark.createDataFrame(
         [(ids[i], X[i].tolist(), float(y[i])) for i in range(len(y))],
         "id long, features array<double>, label double",
     )
-    res = fit_relief(
-        df, num_top_features=3, num_neighbors=3, estimation_ratio=1.0,
-        batch_size=0.3, batching="hash", lower_feature_threshold=1.0,
-        redundancy_removal=True, knn_strategy=strategy,
+    kwargs = dict(
+        num_top_features=3, num_neighbors=3, batch_size=0.3,
+        lower_feature_threshold=1.0, redundancy_removal=True,
     )
+    if strategy == "sparse":
+        res = fit_relief_sparse(*to_long_form(df), X.shape[1], **kwargs)
+    else:
+        res = fit_relief(
+            df, estimation_ratio=1.0, batching="hash", knn_strategy=strategy, **kwargs
+        )
     assert res.n_batches == 3
     assert res.std_selection == [0, 4, 5]
     assert res.redundancy_selection == [0, 1, 2]

@@ -161,39 +161,82 @@ def test_fit_relief_sparse_end_to_end(spark, sparse_fixture):
     assert res.n_instances == len(X)
 
 
-def test_sparse_knn_probe_matches_grid(spark):
-    """The bottom-M probe plan and the grid plan must produce identical
-    neighbor sets — exercised on genuinely sparse data (2 nnz out of
-    50 features per row), where the probe is the intended plan."""
-    import numpy as np
-
-    from spark_relieffc_fselection_spark.operators.relief_sparse import (
-        sparse_knn_join,
-    )
-
+def _two_of_fifty(ids=range(120)):
+    """2 active features of 50 per row; ids 120-124 are all-zero rows."""
     rng = np.random.default_rng(11)
     rows = []
-    for i in range(120):
+    for i in ids:
         f1, f2 = rng.choice(50, size=2, replace=False)
         rows.append((i, int(f1), round(float(rng.normal()), 3)))
         rows.append((i, int(f2), round(float(rng.normal()), 3)))
-    # a few all-zero instances: no long rows, norm 0
+    return rows
+
+
+def _rounding_tie():
+    """40 tiny-norm rows, each on its own feature, with norms falling as
+    the id rises, and one row of norm^2 1e16 on feature 0:
+    1e16 + n_sq rounds to 1e16 for every tiny row, so all 40 tie at
+    distance 1e8 from it and ids 0, 1, 2 must win — not the smallest
+    norms 39, 38, 37, which a norm-ordered candidate list holds first."""
+    return [(i, i + 1, (40 - i) * 0.01) for i in range(40)] + [(40, 0, 1e8)]
+
+
+#: name -> (long rows, label ids, query ids or None for all, k, exclude_self)
+_KNN_FIXTURES = {
+    "rounding-tie": (_rounding_tie(), range(41), None, 3, True),
+    "integer-ties": (
+        [(i, f, float((i + f) % 3)) for i in range(30) for f in range(4) if (i + f) % 3],
+        range(30), None, 5, True,
+    ),
+    "all-zero-rows": (_two_of_fifty(), range(125), None, 7, True),
+    "query-subset": (_two_of_fifty(), range(125), range(0, 125, 5), 7, True),
+    "negative-ids": (
+        [(i - 60, f, v) for i, f, v in _two_of_fifty()], range(-60, 65), None, 4, True,
+    ),
+    "keep-self": (_two_of_fifty(), range(125), range(0, 125, 3), 4, False),
+    "k-covers-corpus": (_two_of_fifty(range(8)), range(10), None, 9, True),
+    "everyone-shares-f0": (
+        [(i, 0, 1.0 + (i % 7) / 10.0) for i in range(40)]
+        + [(i, 1 + i % 5, 0.5) for i in range(40)],
+        range(40), None, 6, True,
+    ),
+    "no-queries": (_two_of_fifty(), range(125), [], 4, True),
+    "ids-absent-from-labels": (
+        _two_of_fifty(range(130)), range(125), list(range(0, 130, 4)), 5, True,
+    ),
+}
+
+
+@pytest.mark.parametrize("fixture", list(_KNN_FIXTURES))
+def test_sparse_knn_join_matches_brute_force_oracle(spark, fixture):
+    """sparse_knn_join returns exactly the brute-force kNN in Spark's
+    decimal arithmetic (tests/oracle_relief.sparse_knn_oracle): every
+    pair scored, ties by id, distances bit for bit — on ties (integer
+    and rounding), all-zero rows, negative ids, a query subset (the q44
+    shape), self kept, k >= rows - 1, every row sharing one feature, an
+    empty query set and long rows whose ids are not in ``labels``."""
+    from tests.oracle_relief import sparse_knn_oracle
+
+    rows, label_ids, query_ids, k, exclude_self = _KNN_FIXTURES[fixture]
+    label_ids = list(label_ids)
+    query_ids = label_ids if query_ids is None else list(query_ids)
     long_df = spark.createDataFrame(rows, "id long, feature_idx int, value double")
     labels = spark.createDataFrame(
-        [(i, float(i % 3)) for i in range(125)], "id long, label double"
+        [(i, float(i % 3)) for i in label_ids], "id long, label double"
     )
-    queries = labels.select("id").filter("id % 5 = 0")
-    cols = ["query_id", "neighbor_id", "rank"]
-    a = (
-        sparse_knn_join(long_df, labels, queries, 7, probe=True)
-        .select(*cols).orderBy(*cols).collect()
+    queries = spark.createDataFrame([(i,) for i in query_ids], "id long")
+    got = sorted(
+        (
+            tuple(r)
+            for r in sparse_knn_join(
+                long_df, labels, queries, k, exclude_self=exclude_self
+            ).select("query_id", "neighbor_id", "distance", "rank").collect()
+        ),
+        key=lambda r: (r[0], r[3]),
     )
-    b = (
-        sparse_knn_join(long_df, labels, queries, 7, probe=False)
-        .select(*cols).orderBy(*cols).collect()
-    )
-    assert a == b
-    assert len(a) > 0
+    want = sparse_knn_oracle(rows, label_ids, query_ids, k, exclude_self)
+    assert got == want
+    assert len(want) > 0 or fixture == "no-queries"
 
 
 def test_compress_long_matches_dense_slice(spark):
@@ -537,69 +580,53 @@ def test_sparse_fit_kddb_width_driver_stays_coo(spark):
 
 
 def test_sparse_route_resolution_is_recorded(spark):
-    """VERDICT r9 #5: the fit records WHICH no-overlap route the
-    sparse kNN actually took — 'sparse-inverted/probe' when the
-    adaptive bottom-M probe covers, 'sparse-inverted/grid' under the
-    dense-regime fallback or a caller override — mirroring the dense
-    tier's resolved_knn_strategy audit trail (both routes are exact;
-    this is a cost audit, not an exactness one)."""
-    import numpy as np
-
-    from spark_relieffc_fselection_spark.operators.relief_sparse import (
-        sparse_knn_join,
-    )
-
-    # genuinely sparse: 2 of 50 features per row -> the probe covers
-    rng = np.random.default_rng(7)
+    """The fit records the one exact sparse route, 'sparse-inverted',
+    single pass and batched, on genuinely sparse data and on data where
+    every row shares feature 0 (the q161 regime, which used to fall
+    back from a norm probe to a norms grid), and so does
+    ``resolution_out``. Calling sparse_knn_join runs one action, the
+    norms fetch: no probe rounds."""
     rows = []
+    rng = np.random.default_rng(7)
     for i in range(120):
         f1, f2 = rng.choice(50, size=2, replace=False)
         rows.append((i, int(f1), round(float(rng.normal()), 3)))
         rows.append((i, int(f2), round(float(rng.normal()), 3)))
-    sparse_long = spark.createDataFrame(
-        rows, "id long, feature_idx int, value double"
-    )
+    sparse_long = spark.createDataFrame(rows, "id long, feature_idx int, value double")
     sparse_labels = spark.createDataFrame(
         [(i, float(i % 2)) for i in range(120)], "id long, label double"
     )
-    res = fit_relief_sparse(
-        sparse_long, sparse_labels, n_features=50, num_top_features=3,
-        num_neighbors=2, redundancy_removal=False,
-    )
-    assert res.resolved_knn_strategy == "sparse-inverted/probe"
-
-    # the q161 regime: every instance shares feature 0, so no-overlap
-    # coverage is impossible and the adaptive loop must fall back;
-    # a knn_probe=False override goes straight there
-    # corpus must exceed the adaptive cap 8*(k+1), or the probe
-    # legally degenerates to full-corpus coverage and records 'probe'
     shared = [(i, 0, 1.0 + (i % 7) / 10.0) for i in range(100)] + [
         (i, 1 + i % 5, 0.5) for i in range(100)
     ]
-    shared_long = spark.createDataFrame(
-        shared, "id long, feature_idx int, value double"
-    )
+    shared_long = spark.createDataFrame(shared, "id long, feature_idx int, value double")
     shared_labels = spark.createDataFrame(
         [(i, float(i % 2)) for i in range(100)], "id long, label double"
     )
-    for override in (None, False):
-        res = fit_relief_sparse(
-            shared_long, shared_labels, n_features=6, num_top_features=3,
-            num_neighbors=2, redundancy_removal=False, knn_probe=override,
-        )
-        assert res.resolved_knn_strategy == "sparse-inverted/grid", override
-    # forcing the probe escalates to full-corpus coverage -> 'probe'
-    res = fit_relief_sparse(
-        shared_long, shared_labels, n_features=6, num_top_features=3,
-        num_neighbors=2, redundancy_removal=False, knn_probe=True,
-    )
-    assert res.resolved_knn_strategy == "sparse-inverted/probe"
-    # the batched loop records batch 0's resolution the same way
-    res = fit_relief_sparse(
-        sparse_long, sparse_labels, n_features=50, num_top_features=3,
-        num_neighbors=2, redundancy_removal=False, batch_size=0.5,
-    )
-    assert res.resolved_knn_strategy == "sparse-inverted/probe"
+    for long_df, labels, width in ((sparse_long, sparse_labels, 50), (shared_long, shared_labels, 6)):
+        for batch_size in (1.0, 0.5):
+            res = fit_relief_sparse(
+                long_df, labels, n_features=width, num_top_features=3,
+                num_neighbors=2, redundancy_removal=False, batch_size=batch_size,
+            )
+            assert res.resolved_knn_strategy == "sparse-inverted", (width, batch_size)
+        sc = spark.sparkContext
+        group = f"test-sparse-knn-call-{width}"
+        route: dict = {}
+        sc.setJobGroup(group, "sparse kNN call")
+        try:
+            sparse_knn_join(long_df, labels, labels.select("id"), 4, resolution_out=route)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert route == {"route": "sparse-inverted"}
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        stages = {
+            sc.statusTracker().getStageInfo(st).name
+            for j in jobs
+            for st in sc.statusTracker().getJobInfo(j).stageIds
+        }
+        assert jobs and all("toArrow" in name for name in stages), stages
 
 
 def _discrete(df):
@@ -610,24 +637,26 @@ def _discrete(df):
 
 
 @pytest.mark.parametrize(
-    "redundancy, discrete, knn_probe",
+    "redundancy, discrete, estimation_ratio",
     [
         (True, False, None),
         (False, False, None),
         (True, True, None),
         (False, True, None),
-        (True, False, False),
+        (True, False, 0.5),
     ],
 )
 def test_sparse_single_pass_matches_reference_dataflow(
-    spark, sparse_fixture, redundancy, discrete, knn_probe
+    spark, sparse_fixture, redundancy, discrete, estimation_ratio
 ):
     """batch_size=1.0 runs the shared batch engine; it must return
     exactly what the plain operator chain returns (relevance_weights ->
     collision_table -> joint/marginal counts -> MI -> greedy, kept in
     tests/oracle_relief.py): same relevance bits, selections and
     redundancy COO, with redundancy on and off, continuous and
-    discrete, on the adaptive kNN route and straight to the grid."""
+    discrete. The single pass ignores a declared ``estimation_ratio``
+    (its jointTotal is the undiscounted pair count); None declares
+    none."""
     from tests.oracle_relief import sparse_single_pass_reference
 
     df, X, _ = sparse_fixture
@@ -637,9 +666,10 @@ def test_sparse_single_pass_matches_reference_dataflow(
         num_neighbors=4,
         redundancy_removal=redundancy,
         discrete_data=discrete,
-        knn_probe=knn_probe,
     )
     want = sparse_single_pass_reference(long_df, labels, X.shape[1], **kwargs)
+    if estimation_ratio is not None:
+        kwargs["estimation_ratio"] = estimation_ratio
     got = fit_relief_sparse(long_df, labels, X.shape[1], batch_size=1.0, **kwargs)
     assert [float(v) for v in got.relevance] == want["relevance"]
     assert got.std_selection == want["std_selection"]
@@ -682,6 +712,11 @@ def test_batched_fits_share_one_joint_total(spark, sparse_fixture, monkeypatch):
         assert joint_total == total * share
 
 
+#: the largest job count of each sparse fit over six runs (two sessions
+#: of three) on the one exact sparse kNN route
+_SPARSE_FIT_MAX_JOBS = {(1.0, True): 35, (1.0, False): 28, (0.5, True): 55, (0.5, False): 49}
+
+
 @pytest.mark.parametrize(
     "batch_size, redundancy, max_jobs",
     [(1.0, True, 60), (1.0, False, 50), (0.5, True, 87), (0.5, False, 77)],
@@ -689,12 +724,12 @@ def test_batched_fits_share_one_joint_total(spark, sparse_fixture, monkeypatch):
 def test_sparse_fit_job_count_bounded(spark, sparse_fixture, batch_size, redundancy, max_jobs):
     """Spark jobs per sparse fit, counted under a job group. A bound,
     not an exact pin: the same fit's count varies between runs (by up
-    to three for the batched fit, by one for the single pass), as
-    AQE's shuffle-stage jobs vary. Each bound is the largest count
-    measured over six runs (two sessions of three) of the fit before
-    both sparse fits ran through the shared batch engine; the engine's
-    single pass issues fewer (it lets the stats probe materialize the
-    caches and collects relevance inside that probe)."""
+    to three), as AQE's shuffle-stage jobs vary. ``max_jobs`` is the
+    largest count measured over six runs of the fit before both sparse
+    fits ran through the shared batch engine; the assertion uses the
+    tighter :data:`_SPARSE_FIT_MAX_JOBS`, measured the same way once the
+    norm probe loop, the norms grid and the density and per-batch
+    counts were gone."""
     df, X, _ = sparse_fixture
     long_df, labels = to_long_form(df)
     sc = spark.sparkContext
@@ -709,7 +744,40 @@ def test_sparse_fit_job_count_bounded(spark, sparse_fixture, batch_size, redunda
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
+    bound = _SPARSE_FIT_MAX_JOBS[(batch_size, redundancy)]
+    assert bound < max_jobs
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= bound
+
+
+@pytest.mark.parametrize("batch_size", [1.0, 0.5])
+def test_sparse_fit_rejects_duplicate_ids_at_the_norms_fetch(spark, sparse_fixture, batch_size):
+    """Repeated ids have no single norm and used to multiply rows
+    silently. Each batch's norms fetch holds every id of the batch, so
+    it names the repeats (18 and 42 both land in hash batch 0 of 2): the
+    fetch is the fit's last action, and no kNN, pair or stats job runs
+    after it."""
+    df, X, _ = sparse_fixture
+    long_df, labels = to_long_form(df)
+    labels = labels.unionByName(labels.filter(F.col("id").isin(18, 42)))
+    sc = spark.sparkContext
+    group = f"test-sparse-duplicate-ids-{batch_size}"
+    sc.setJobGroup(group, "sparse duplicate ids")
+    try:
+        with pytest.raises(ValueError, match=r"2 duplicate 'id' value\(s\).*: 18, 42"):
+            fit_relief_sparse(
+                long_df, labels, n_features=X.shape[1], num_top_features=3,
+                num_neighbors=4, batch_size=batch_size,
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = [
+        [tracker.getStageInfo(st).name for st in tracker.getJobInfo(j).stageIds]
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+    fetches = [i for i, names in enumerate(jobs) if any("toArrow" in n for n in names)]
+    assert fetches and fetches == list(range(fetches[0], len(jobs))), jobs
 
 
 @pytest.mark.parametrize("batch_size", [1.0, 0.5])
