@@ -886,13 +886,17 @@ def main() -> None:
     # Expected near-linear in rows; contrast with the dense-data bench
     # cost SCALE.md adjudicates (every pair sharing every feature is
     # the plan's worst case).
-    def sparse_fit_timed(label: str, scale_features: bool = False) -> None:
+    def sparse_fit_timed(
+        label: str, scale_features: bool = False, binary: bool = False
+    ) -> None:
         """``scale_features``: grow the feature space with the corpus
         (D x kk — how real vocabularies behave), keeping per-feature
         density constant; False holds D fixed, so replicas RAISE
         density and the shared-nonzero pair count grows superlinearly
         — the two together separate the O(shared nonzeros) claim from
-        the density confound."""
+        the density confound. ``binary``: one-hot rows (value 1.0, nnz
+        4, 6 or 8), whose norm^2 is the nnz count, so the corpus falls
+        into three norm runs whose no-overlap distances tie."""
         if label_filters and not any(f in label.lower() for f in label_filters):
             return
         from spark_relieffc_fselection_spark.operators.relief_sparse import (
@@ -910,13 +914,16 @@ def main() -> None:
                     "id",
                     F.explode(F.sequence(F.lit(0), F.lit(NNZ - 1))).alias("j"),
                 )
+                .filter(~F.lit(binary) | (F.col("j") < F.pmod("id", F.lit(3)) * 2 + 4))
                 .select(
                     "id",
                     F.pmod(F.hash(F.col("id") * 13 + F.col("j")), F.lit(D)).alias(
                         "feature_idx"
                     ),
                     (
-                        (F.pmod(F.hash(F.col("id") * 7 + F.col("j")), F.lit(100)) + 1)
+                        F.lit(1.0)
+                        if binary
+                        else (F.pmod(F.hash(F.col("id") * 7 + F.col("j")), F.lit(100)) + 1)
                         / 50.0
                     ).alias("value"),
                 )
@@ -947,6 +954,11 @@ def main() -> None:
     sparse_fit_timed(
         "q158-shaped sparse fit (kddb regime, D scales with corpus)",
         scale_features=True,
+    )
+    sparse_fit_timed(
+        "q158-shaped sparse fit (binary one-hot rows, 4-8/10k nnz, D scales)",
+        scale_features=True,
+        binary=True,
     )
 
     # driver-width family (VERDICT r8 #7): corpus FIXED, declared

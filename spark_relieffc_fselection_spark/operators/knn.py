@@ -488,10 +488,7 @@ def self_knn_pairs(
     ids, mat, labels = _fetch_rows(batch, "id", "features", "label", side="the fit batch")
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
-    dup = np.unique(ids[1:][ids[1:] == ids[:-1]])
-    if len(dup):
-        shown = ", ".join(str(i) for i in dup[:10]) + (", ..." if len(dup) > 10 else "")
-        raise ValueError(f"knn: {len(dup)} duplicate 'id' value(s) in the fit batch: {shown}")
+    _reject_duplicate_ids(ids, "knn", "the fit batch")
     bc = spark.sparkContext.broadcast((ids, mat[order], labels[order]))
     n_rows, d = mat.shape
     slices = max(1, min(slices, n_rows))
@@ -701,6 +698,15 @@ def _exact_merge(
         diff -= n_mat.take(bi[s : s + step], axis=0)
         d2[s : s + step] = np.einsum("pd,pd->p", diff, diff)
     return _sparse_merge(best_d, best_i, qi, n_ids[bi], d2, k)
+
+
+def _reject_duplicate_ids(sorted_ids: np.ndarray, who: str, where: str) -> None:
+    """Raise a ValueError naming the repeated values (up to 10) of the
+    ascending ``sorted_ids``: a pair row finds its instance by id."""
+    dup = np.unique(sorted_ids[1:][sorted_ids[1:] == sorted_ids[:-1]])
+    if len(dup):
+        shown = ", ".join(str(i) for i in dup[:10]) + (", ..." if len(dup) > 10 else "")
+        raise ValueError(f"{who}: {len(dup)} duplicate 'id' value(s) in {where}: {shown}")
 
 
 def _sparse_merge(

@@ -1088,15 +1088,11 @@ def fit_relief(
     )
     # ONE profiling job: per-class counts (-> priors + total), the
     # first non-null feature row (-> dimensionality) and the null-array
-    # count (a null array fails by name on every tier) — vs count() +
-    # first() + a priors collect as three separate scans. In
-    # hash-sampling mode the SAMPLED size rides the same job as a
-    # conditional count (the draw is a pure function of the id, so the
-    # predicate evaluated here and in the sample's filter selects the
-    # identical row set) — one fewer action AND one fewer full pass
-    # over the instance set; engine mode can't fuse (Spark's sample
-    # draw is partition-seeded, not a column expression) and keeps its
-    # count below.
+    # count (a null array fails by name on every tier). In hash-sampling
+    # mode the SAMPLED size rides it as a conditional count: the draw
+    # is a pure function of the id, so this predicate and the sample's
+    # filter select the same rows. Engine mode can't fuse (Spark's
+    # sample draw is partition-seeded) and keeps its count below.
     fuse_sampled = estimation_ratio < 1.0 and sampling == "hash"
     aggs = [
         F.count("*").alias("n"),

@@ -9,11 +9,7 @@ and mis-keys feature ids doing it (SURVEY §8.1). Here sparsity is just
     from an inverted-index join on feature_idx — cost scales with
     *shared nonzeros*, never with the nominal dimensionality. This is
     what makes "millions of features" (README.md:11, kddb 30M features)
-    tractable: a dense scan is O(Q·N·d), this is O(Q·nnz). Pairs that
-    share no feature need no join at all: their distance is monotone
-    in the neighbour's norm, so one partition-local merge per query
-    takes them from the norm-sorted corpus (:func:`sparse_knn_join`,
-    one exact route).
+    tractable: a dense scan is O(Q·N·d), this is O(Q·nnz).
   * pair expansion: union of the two sides' active features per
     (query, neighbor) pair — features inactive in BOTH sides are
     skipped (they contribute 0 distance; for collisions this matches
@@ -45,7 +41,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_relieffc_fselection_spark.operators.knn import _sparse_merge
+from spark_relieffc_fselection_spark.operators.knn import _reject_duplicate_ids, _sparse_merge
 from spark_relieffc_fselection_spark.operators.relief import (
     DEC,
     ReliefFitResult,
@@ -113,22 +109,26 @@ def sparse_knn_join(
     inverted-index join, the dot of every pair that shares an active
     feature. The driver fetches the corpus's ``(id, sq_norm)`` once as
     Arrow, rejecting null and repeated ids, and broadcasts it sorted by
-    (sq_norm, id). The dot terms,
-    plus one sentinel row per query (a query sharing no feature still
-    appears), are partitioned by query and sorted, and one
-    ``mapInArrow`` merge (:func:`_merge_queries`) answers each query
-    from two candidate sets:
+    (sq_norm, id). The dot terms, plus one sentinel row per query (a
+    query sharing no feature still appears), are partitioned by query
+    and sorted, and one ``mapInArrow`` merge (:func:`_merge_queries`)
+    answers each query from two candidate sets:
 
     * **sharing pairs**, scored ``sqrt(greatest((q_sq + n_sq) -
       2.0 * dot, 0))`` — the IEEE expression of the old norms grid;
     * **no-overlap rows**: dot is 0, so their distance
-      ``sqrt(q_sq + n_sq)`` is monotone non-decreasing in ``n_sq``. The
-      norm-sorted prefix of length k + |sharing ∪ self| holds at least
-      k of them, and every no-overlap row nearer than its last row lies
-      inside it. A row past the prefix can only TIE that last row — when
-      ``q_sq + n_sq`` or its root rounds to the same double for
-      distinct norms — and the prefix is extended through those rows,
-      so the lowest-id tied rows are never missed.
+      ``sqrt(q_sq + n_sq)`` is monotone non-decreasing in ``n_sq``, and
+      equal within a norm run (rows of equal ``sq_norm``, ids
+      ascending). With cap = k + |sharing ∪ self|, the norm-order
+      prefix of cap rows holds at least k of them, and every
+      no-overlap row nearer than its last row lies inside it. A row
+      past the prefix can only TIE that last row: it shares its norm,
+      or ``q_sq + n_sq`` rounds to the same double for distinct norms.
+      Each tied run adds its first cap rows past the prefix: a later
+      row of the run has k no-overlap rows of its distance and lower id
+      ahead of it. So ties go to the lowest ids, and a tied run adds at
+      most cap candidates however much of the corpus it holds (binary
+      rows, whose norm² is their nnz, fall into a few large runs).
 
     The top k by (distance, neighbor_id) is the dense kernels' merge
     (:func:`knn._sparse_merge`), so the result equals the full grid's
@@ -156,22 +156,12 @@ def sparse_knn_join(
     ids_col = norms.column("id")
     if ids_col.null_count:
         raise ValueError(f"sparse_knn_join: {ids_col.null_count} null 'id' value(s) in labels")
-    ids = ids_col.to_numpy().astype(np.int64, copy=False)
-    sq_norm = norms.column("sq_norm").to_numpy().astype(np.float64, copy=False)
-    by_id = np.argsort(ids, kind="stable")
-    sorted_ids = ids[by_id]
-    dup = np.unique(sorted_ids[1:][sorted_ids[1:] == sorted_ids[:-1]])
-    if len(dup):
-        shown = ", ".join(str(i) for i in dup[:10]) + (", ..." if len(dup) > 10 else "")
-        raise ValueError(
-            f"sparse_knn_join: {len(dup)} duplicate 'id' value(s) in labels: {shown}"
-        )
-    order = np.lexsort((ids, sq_norm))
-    pos = np.empty(len(ids), dtype=np.int64)
-    pos[order] = np.arange(len(ids))
-    bc = spark.sparkContext.broadcast(
-        _Corpus(ids[order], sq_norm[order], sorted_ids, pos[by_id])
+    corpus = _Corpus.of(
+        ids_col.to_numpy().astype(np.int64, copy=False),
+        norms.column("sq_norm").to_numpy().astype(np.float64, copy=False),
     )
+    _reject_duplicate_ids(corpus.sorted_ids, "sparse_knn_join", "labels")
+    bc = spark.sparkContext.broadcast(corpus)
     if resolution_out is not None:
         resolution_out["route"] = SPARSE_ROUTE
 
@@ -195,7 +185,7 @@ def sparse_knn_join(
         F.lit(None).cast("long").alias("neighbor_id"),
         F.lit(None).cast("double").alias("dot"),
     )
-    n_rows = (num_corpus if num_corpus is not None else len(ids)) * k
+    n_rows = (num_corpus if num_corpus is not None else len(corpus.ids)) * k
     parts = max(1, -(-n_rows // _ROWS_PER_TASK))
 
     def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -203,8 +193,11 @@ def sparse_knn_join(
         if not len(corpus.ids):
             return
         for rb in batches:
-            held.append(_dot_terms(rb))
-            if len(held[-1][0]) and held[-1][0][0] != held[-1][0][-1]:
+            terms = _dot_terms(rb)
+            if not len(terms[0]):
+                continue
+            held.append(terms)
+            if held[0][0][0] != held[-1][0][-1]:  # a query is complete
                 rows = _in_query_order(held)
                 cut = int(np.searchsorted(rows[0], rows[0][-1]))
                 yield _merge_queries([a[:cut] for a in rows], corpus, k, exclude_self)
@@ -225,8 +218,17 @@ class _Corpus(NamedTuple):
 
     ids: np.ndarray
     sq_norm: np.ndarray
+    run_start: np.ndarray  # where each run of equal sq_norm starts, then len
     sorted_ids: np.ndarray  # the ids, ascending
     pos_of: np.ndarray  # the norm-order position of each sorted id
+
+    @classmethod
+    def of(cls, ids: np.ndarray, sq_norm: np.ndarray) -> _Corpus:
+        order = np.lexsort((ids, sq_norm))
+        by_id = np.argsort(ids, kind="stable")
+        norm = sq_norm[order]
+        run_start = np.r_[0, np.flatnonzero(norm[1:] != norm[:-1]) + 1, len(ids)]
+        return cls(ids[order], norm, run_start, ids[by_id], np.argsort(order)[by_id])
 
     def locate(self, x: np.ndarray) -> np.ndarray:
         """Norm-order positions of the ids ``x``; -1 where absent."""
@@ -261,6 +263,12 @@ def _in_query_order(held: list[tuple[np.ndarray, ...]]) -> list[np.ndarray]:
     return rows
 
 
+def _ranges(grp: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, ...]:
+    """(group, value) for every value of the half-open ranges [lo, hi)."""
+    n = np.maximum(hi - lo, 0)
+    return np.repeat(grp, n), np.arange(n.sum()) - np.repeat(np.cumsum(n) - n - lo, n)
+
+
 def _merge_queries(
     rows: list[np.ndarray], corpus: _Corpus, k: int, exclude_self: bool
 ) -> pa.RecordBatch:
@@ -284,25 +292,26 @@ def _merge_queries(
     s_dist = _distance(q_sq[s_grp], corpus.sq_norm[s_pos], dot[keep][found])
     s_key = s_grp * n_corpus + s_pos
     self_key = np.arange(n_q) * n_corpus + q_pos
-    # no-overlap rows: the norm-order prefix of k + |sharing ∪ self|,
-    # extended through the rows tied with its last one
-    span = np.minimum(
-        n_corpus, k + np.bincount(s_grp, minlength=n_q) + ~np.isin(self_key, s_key)
-    )
+    # no-overlap rows: the norm-order prefix of cap = k + |sharing ∪
+    # self| rows, then the first cap rows past it of each norm run tied
+    # with its last row, found by binary search (distance is monotone
+    # in the norm order)
+    cap = k + np.bincount(s_grp, minlength=n_q) + ~np.isin(self_key, s_key)
+    span = np.minimum(n_corpus, cap)
     last = _distance(q_sq, corpus.sq_norm[span - 1], 0.0)
-    tied = span < n_corpus
-    tied[tied] = _distance(q_sq[tied], corpus.sq_norm[span[tied]], 0.0) == last[tied]
-    for g in np.flatnonzero(tied):
-        lo, hi = int(span[g]) + 1, n_corpus
-        while lo < hi:  # distance is monotone in the norm order
-            mid = (lo + hi) // 2
-            if _distance(q_sq[g], corpus.sq_norm[mid], 0.0) <= last[g]:
-                lo = mid + 1
-            else:
-                hi = mid
-        span[g] = lo
-    p_grp = np.repeat(np.arange(n_q), span)
-    p_pos = np.arange(len(p_grp)) - np.repeat(np.cumsum(span) - span, span)
+    starts, n_runs = corpus.run_start, len(corpus.run_start) - 1
+    first = np.searchsorted(starts, span - 1, side="right") - 1  # the last row's run
+    end, hi = first + 1, np.full(n_q, n_runs)
+    while (open_ := end < hi).any():
+        mid = np.minimum((end + hi) // 2, n_runs - 1)
+        near = open_ & (_distance(q_sq, corpus.sq_norm[starts[mid]], 0.0) <= last)
+        end, hi = np.where(near, mid + 1, end), np.where(open_ & ~near, mid, hi)
+    t_grp, t_run = _ranges(np.arange(n_q), first, end)
+    p_grp, p_pos = _ranges(
+        np.r_[np.arange(n_q), t_grp],
+        np.r_[np.zeros(n_q, dtype=np.int64), np.maximum(starts[t_run], span[t_grp])],
+        np.r_[span, np.minimum(starts[t_run + 1], starts[t_run] + cap[t_grp])],
+    )
     skip = np.concatenate([s_key, self_key]) if exclude_self else s_key
     free = ~np.isin(p_grp * n_corpus + p_pos, skip)
     p_grp, p_pos = p_grp[free], p_pos[free]
@@ -338,17 +347,11 @@ def sparse_pair_feature_table(
     — (query_id, neighbor_id, n_label, same_class, feature_idx, fdist)
     — so ``feature_bin_stats`` and ``collision_table`` apply verbatim.
     """
-    # One exchange instead of three (r12, guide §2.3/§3): the old plan
-    # full_outer-joined a query-side and a neighbor-side long table
-    # (two exchanges + a sort-merge over the same bytes) and joined
-    # `pairs` — an UNCACHED neigh-x-labels-x-labels subtree — three
-    # times, re-running its label joins per reference. Tag the two
-    # sides, union them, and take max() per (pair, feature): each side
-    # contributes at most one non-null value per key (long form is
-    # unique on (id, feature)), so max == the full_outer's coalesce
-    # pick, bit-for-bit, and the union shuffles the identical rows
-    # once with a hash aggregate instead of twice with sorts. Labels
-    # attach once, at the end, to the bare pair keys.
+    # One exchange: tag the query and neighbour sides, union them and
+    # take max() per (pair, feature). Each side gives at most one
+    # non-null value per key (long form is unique on (id, feature)), so
+    # max is a full outer join's coalesce, bit for bit, at one hash
+    # aggregate. Labels attach once, at the end, to the bare pair keys.
     base = neighbors.select("query_id", "neighbor_id")
     null_d = F.lit(None).cast("double")
     qf = base.join(
@@ -484,13 +487,9 @@ def fit_relief_sparse(
         neigh = sparse_knn_join(
             b_long, b_labels, b_labels.select("id"), k, num_corpus=b_n
         ).cache()
-        # No materializing count() here: the engine's one stats probe
-        # is the first consumer of BOTH caches, and RDD block-level
-        # loading locks make concurrent union legs compute each cached
-        # partition once (the second consumer blocks on the lock and
-        # reads the block), so a count would only add an action per
-        # batch (OPTIMIZATION_r13.md §1: 7->5 actions per fit; its A/B
-        # read neutral within noise).
+        # No materializing count(): the engine's stats probe is the
+        # first consumer of both caches, and block-level loading locks
+        # compute each cached partition once.
         # A cache pins its plan's partition count (AQE cannot coalesce
         # it later), so size it from the rows: ~64k per task, x4 for
         # the per-pair active-feature union. Its consumers are narrow

@@ -181,9 +181,34 @@ def _rounding_tie():
     return [(i, i + 1, (40 - i) * 0.01) for i in range(40)] + [(40, 0, 1e8)]
 
 
+def _binary(ids=range(90)):
+    """Value 1.0 on 1-3 of 30 features per row: norm^2 is the nnz count,
+    so the corpus falls into a few norm runs of ~30 rows whose
+    no-overlap distances tie within the run (the kddb one-hot shape);
+    labels add five all-zero rows."""
+    rng = np.random.default_rng(5)
+    return [
+        (i, int(f), 1.0) for i in ids for f in rng.choice(30, size=1 + i % 3, replace=False)
+    ]
+
+
+def _tie_across_norm_runs():
+    """Like :func:`_rounding_tie`, but the tied tiny rows form two norm
+    runs: ids 10-11 (norm^2 1e-4) sort before ids 0-3 (norm^2 4e-4),
+    so the norm-order prefix of the big row's k + 1 = 4 candidates ends
+    inside the second run, and its winners 0, 1, 2 need the rest of
+    that run, past the prefix."""
+    return (
+        [(i, i + 1, 0.01) for i in (10, 11)]
+        + [(i, i + 1, 0.02) for i in range(4)]
+        + [(40, 0, 1e8)]
+    )
+
+
 #: name -> (long rows, label ids, query ids or None for all, k, exclude_self)
 _KNN_FIXTURES = {
     "rounding-tie": (_rounding_tie(), range(41), None, 3, True),
+    "tie-across-norm-runs": (_tie_across_norm_runs(), [0, 1, 2, 3, 10, 11, 40], None, 3, True),
     "integer-ties": (
         [(i, f, float((i + f) % 3)) for i in range(30) for f in range(4) if (i + f) % 3],
         range(30), None, 5, True,
@@ -201,6 +226,7 @@ _KNN_FIXTURES = {
         range(40), None, 6, True,
     ),
     "no-queries": (_two_of_fifty(), range(125), [], 4, True),
+    "binary-values": (_binary(), range(95), None, 5, True),
     "ids-absent-from-labels": (
         _two_of_fifty(range(130)), range(125), list(range(0, 130, 4)), 5, True,
     ),
@@ -211,10 +237,11 @@ _KNN_FIXTURES = {
 def test_sparse_knn_join_matches_brute_force_oracle(spark, fixture):
     """sparse_knn_join returns exactly the brute-force kNN in Spark's
     decimal arithmetic (tests/oracle_relief.sparse_knn_oracle): every
-    pair scored, ties by id, distances bit for bit — on ties (integer
-    and rounding), all-zero rows, negative ids, a query subset (the q44
-    shape), self kept, k >= rows - 1, every row sharing one feature, an
-    empty query set and long rows whose ids are not in ``labels``."""
+    pair scored, ties by id, distances bit for bit — on ties (integer,
+    rounding, and binary rows' equal norms), all-zero rows, negative
+    ids, a query subset (the q44 shape), self kept, k >= rows - 1,
+    every row sharing one feature, an empty query set and long rows
+    whose ids are not in ``labels``."""
     from tests.oracle_relief import sparse_knn_oracle
 
     rows, label_ids, query_ids, k, exclude_self = _KNN_FIXTURES[fixture]
@@ -237,6 +264,44 @@ def test_sparse_knn_join_matches_brute_force_oracle(spark, fixture):
     want = sparse_knn_oracle(rows, label_ids, query_ids, k, exclude_self)
     assert got == want
     assert len(want) > 0 or fixture == "no-queries"
+
+
+def test_merge_takes_at_most_cap_rows_from_a_tied_norm_run(monkeypatch):
+    """3 all-zero rows and 5000 rows of norm^2 1 that share no feature:
+    every norm-1 row ties every other, so extending the prefix through
+    its last row's ties would read the whole run per query. The merge
+    reads at most 2 x (k + 1) candidates per query — the prefix of
+    k + 1 rows and at most k + 1 more from the tied run — and still
+    returns the brute-force top k by
+    (distance, id)."""
+    from spark_relieffc_fselection_spark.operators import relief_sparse as rs
+
+    n, k = 5000, 4
+    ids = np.r_[np.arange(n)[::-1], 1000000, 1000001, 1000002].astype(np.int64)
+    sq = np.r_[np.ones(n), np.zeros(3)]
+    corpus = rs._Corpus.of(ids, sq)
+    read, merge = [], rs._sparse_merge
+
+    def counting(best_d, best_i, qi, cand_i, cand_d, kk):
+        read.append(np.bincount(qi, minlength=len(best_d)))
+        return merge(best_d, best_i, qi, cand_i, cand_d, kk)
+
+    monkeypatch.setattr(rs, "_sparse_merge", counting)
+    q = np.r_[np.arange(0, n, 97), 1000001].astype(np.int64)
+    out = rs._merge_queries(
+        [q, np.zeros_like(q), np.ones(len(q), dtype=bool), np.zeros(len(q))],
+        corpus, k, True,
+    )
+    assert read[0].max() <= 2 * (k + 1)
+    got = sorted(zip(*(out.column(c).to_pylist() for c in range(4))))
+    q_sq = dict(zip(ids.tolist(), sq.tolist()))
+    want = []
+    for qid in q.tolist():
+        cand = sorted(
+            (float(np.sqrt(q_sq[qid] + q_sq[i])), i) for i in ids.tolist() if i != qid
+        )[:k]
+        want += [(qid, i, d, r + 1) for r, (d, i) in enumerate(cand)]
+    assert got == sorted(want)
 
 
 def test_compress_long_matches_dense_slice(spark):
@@ -621,12 +686,15 @@ def test_sparse_route_resolution_is_recorded(spark):
             sc.setLocalProperty("spark.job.description", None)
         assert route == {"route": "sparse-inverted"}
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        stages = {
-            sc.statusTracker().getStageInfo(st).name
+        infos = [
+            sc.statusTracker().getStageInfo(st)
             for j in jobs
             for st in sc.statusTracker().getJobInfo(j).stageIds
-        }
-        assert jobs and all("toArrow" in name for name in stages), stages
+        ]
+        # past spark.ui.retainedStages, a long session's status store
+        # evicts stage infos (getStageInfo gives None): check those kept
+        stages = {info.name for info in infos if info is not None}
+        assert jobs and stages and all("toArrow" in name for name in stages), stages
 
 
 def _discrete(df):
