@@ -30,10 +30,11 @@ join:
   re-scored by the ``(q-b)^2`` diff cube. ``'numpy-gemm'`` ranks by the
   expansion itself.
 
-The RELIEF fit's self-kNN on those two tiers skips the window rank and
-the pair joins altogether: :func:`self_knn_pairs` gives each slice of
-queries the whole broadcast batch to scan, so every slice's top-k is
-already global, and emits the fit's pair rows from the broadcast arrays.
+The RELIEF fit's pair rows come from :func:`self_knn_pairs` on every
+tier, emitted from the broadcast batch with no pair joins. On the two
+numpy tiers each query slice scans the whole batch, so there is no
+window rank either; ``'sql'`` and ``'lsh'`` hand it :func:`knn_join`'s
+id pairs.
 
 At 100 TB the queries side stays a bounded sample (the algorithm's
 estimationRatio guarantees this — BASELINE.md complexity row), so the
@@ -456,32 +457,31 @@ def self_knn_pairs(
     slices: int,
     exclude_self: bool = True,
     gemm: bool = False,
+    neighbors: DataFrame | None = None,
 ) -> DataFrame:
-    """Every row's k nearest neighbours within ``batch`` (the fit's
-    ``(id, features, label)`` frame), emitted as
-    ``relief.pair_table(batch, knn_join(batch, batch, k,
-    strategy='numpy' or 'numpy-gemm'))`` rows: ``(query_id,
-    neighbor_id, n_label, same_class, q_features, n_features)``.
+    """The fit's pair rows for ``batch`` (its ``(id, features, label)``
+    frame), on every kNN tier: ``relief.pair_table(batch, knn_join(batch,
+    batch, k, strategy=...))``'s ``(query_id, neighbor_id, n_label,
+    same_class, q_features, n_features)`` rows.
 
-    The reference broadcasts the batch and lets every partition answer
-    its own queries against it, looking neighbour rows up by position
-    (ReliefFRSelector.scala:254-260, 423-433). Here the driver fetches
-    the batch once as Arrow (:func:`_fetch_rows`), rejects repeated ids
-    (a pair row finds its vectors by id) and broadcasts the batch sorted
-    by id. ``slices`` tasks each take a contiguous slice of the queries
-    and run :func:`knn_scan` against the WHOLE batch, so each slice's
-    top-k is already the global top-k by (distance, neighbor_id) — no
-    cross-partition rank merge — and each pair's two feature vectors
-    and labels come out of the broadcast arrays by ``searchsorted`` — no
-    joins. The pair rows land in ``slices`` partitions without a
-    shuffle.
+    The reference broadcasts the batch and looks neighbour rows up by
+    position (ReliefFRSelector.scala:254-260, 423-433). Here the driver
+    fetches the batch once as checked Arrow (:func:`_fetch_rows`),
+    rejects repeated ids and broadcasts it sorted by id; tasks emit each
+    pair's vectors and labels from it by ``searchsorted`` — no joins. An
+    id the broadcast does not hold raises instead of being indexed.
 
-    The same neighbours as :func:`knn_join`: the exact tier's distances
-    are per-pair diff-cube values (see :func:`knn_scan`), independent of
-    how queries and scan rows are sliced. ``gemm=True`` ranks by the
-    BLAS expansion, whose last bits can follow the matrix shapes, so it
-    matches ``'numpy-gemm'`` exactly where products and sums are exact
-    (integer grids)."""
+    ``neighbors=None`` (the exact tiers): ``slices`` tasks each run
+    :func:`knn_scan` for a contiguous slice of the queries against the
+    WHOLE batch, so each slice's top-k is already global by (distance,
+    neighbor_id): no rank merge, no shuffle. The exact tier's distances
+    are per-pair diff-cube values, independent of the slicing;
+    ``gemm=True`` ranks by the BLAS expansion, whose last bits follow
+    the matrix shapes, so it matches ``'numpy-gemm'`` exactly on integer
+    grids. Otherwise ``neighbors`` is the ``(query_id, neighbor_id)``
+    table of a :func:`knn_join` over ``batch`` (``'sql'``, ``'lsh'``),
+    hash-partitioned into ``slices`` partitions; ``k``, ``exclude_self``
+    and ``gemm`` are then the join's."""
     import pyarrow as pa
 
     spark = batch.sparkSession
@@ -493,47 +493,74 @@ def self_knn_pairs(
     n_rows, d = mat.shape
     slices = max(1, min(slices, n_rows))
     step = max(1, _PAIR_BATCH_VALUES // max(d, 1))
+    names = ["query_id", "neighbor_id", "n_label", "same_class", "q_features", "n_features"]
 
     def vectors(rows: np.ndarray, mat: np.ndarray) -> pa.Array:
         offsets = np.arange(0, (len(rows) + 1) * d, d, dtype=np.int32)
         return pa.ListArray.from_arrays(offsets, mat[rows].ravel())
 
-    def kernel(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def emit(q_id: np.ndarray, n_id: np.ndarray) -> Iterator[pa.RecordBatch]:
         ids, mat, labels = bc.value
+        qi, ni = _rows_of(ids, q_id), _rows_of(ids, n_id)
+        q_lbl, n_lbl = labels[qi], labels[ni]
+        # Spark's `=` holds for NaN = NaN
+        same = (n_lbl == q_lbl) | (np.isnan(n_lbl) & np.isnan(q_lbl))
+        for a in range(0, len(qi), step):
+            b = slice(a, a + step)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(q_id[b]),
+                    pa.array(n_id[b]),
+                    pa.array(n_lbl[b]),
+                    pa.array(same[b]),
+                    vectors(qi[b], mat),
+                    vectors(ni[b], mat),
+                ],
+                names=names,
+            )
+
+    def kernel(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ids, mat, _ = bc.value
         for part in parts:
             for s in part.column(0).to_numpy():
                 lo, hi = s * n_rows // slices, (s + 1) * n_rows // slices
-                if hi <= lo:
-                    continue
-                q_id, n_id, _ = knn_scan(
-                    ids[lo:hi], mat[lo:hi], [(ids, mat)], k, exclude_self, gemm
-                )
-                qi, ni = np.searchsorted(ids, q_id), np.searchsorted(ids, n_id)
-                q_lbl, n_lbl = labels[qi], labels[ni]
-                # Spark's `=` holds for NaN = NaN
-                same = (n_lbl == q_lbl) | (np.isnan(n_lbl) & np.isnan(q_lbl))
-                for a in range(0, len(qi), step):
-                    b = slice(a, a + step)
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(q_id[b]),
-                            pa.array(n_id[b]),
-                            pa.array(n_lbl[b]),
-                            pa.array(same[b]),
-                            vectors(qi[b], mat),
-                            vectors(ni[b], mat),
-                        ],
-                        names=[
-                            "query_id", "neighbor_id", "n_label", "same_class",
-                            "q_features", "n_features",
-                        ],
+                if hi > lo:
+                    q_id, n_id, _ = knn_scan(
+                        ids[lo:hi], mat[lo:hi], [(ids, mat)], k, exclude_self, gemm
                     )
+                    yield from emit(q_id, n_id)
 
-    return spark.range(0, slices, numPartitions=slices).mapInArrow(
-        kernel,
+    def lookup(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for part in parts:
+            yield from emit(part.column(0).to_numpy(), part.column(1).to_numpy())
+
+    schema = (
         "query_id long, neighbor_id long, n_label double, same_class boolean, "
-        "q_features array<double>, n_features array<double>",
+        "q_features array<double>, n_features array<double>"
     )
+    if neighbors is None:
+        return spark.range(0, slices, numPartitions=slices).mapInArrow(kernel, schema)
+    # an explicit count: AQE would coalesce the small id table into a
+    # few partitions and serialize every explode downstream
+    return (
+        neighbors.select("query_id", "neighbor_id")
+        .repartition(slices, "query_id", "neighbor_id")
+        .mapInArrow(lookup, schema)
+    )
+
+
+def _rows_of(sorted_ids: np.ndarray, wanted: np.ndarray) -> np.ndarray:
+    """Positions of ``wanted`` in the ascending ``sorted_ids``; an id it
+    does not hold raises a ValueError naming it (up to 10)."""
+    pos = np.searchsorted(sorted_ids, wanted)
+    found = pos < len(sorted_ids)
+    found[found] = sorted_ids[pos[found]] == wanted[found]
+    if not found.all():
+        miss = np.unique(wanted[~found])
+        raise ValueError(
+            f"knn: {len(miss)} neighbour-table id(s) not in the fit batch: {_listed(miss)}"
+        )
+    return pos
 
 
 def knn_scan(
@@ -705,8 +732,12 @@ def _reject_duplicate_ids(sorted_ids: np.ndarray, who: str, where: str) -> None:
     ascending ``sorted_ids``: a pair row finds its instance by id."""
     dup = np.unique(sorted_ids[1:][sorted_ids[1:] == sorted_ids[:-1]])
     if len(dup):
-        shown = ", ".join(str(i) for i in dup[:10]) + (", ..." if len(dup) > 10 else "")
-        raise ValueError(f"{who}: {len(dup)} duplicate 'id' value(s) in {where}: {shown}")
+        raise ValueError(f"{who}: {len(dup)} duplicate 'id' value(s) in {where}: {_listed(dup)}")
+
+
+def _listed(values: np.ndarray) -> str:
+    """The first 10 of ``values`` for an error message."""
+    return ", ".join(str(i) for i in values[:10]) + (", ..." if len(values) > 10 else "")
 
 
 def _sparse_merge(

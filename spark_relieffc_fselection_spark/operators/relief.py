@@ -87,11 +87,9 @@ def pair_table(
     """(query, neighbor) pairs with both feature vectors attached.
 
     Returns ``(query_id, neighbor_id, n_label, same_class, q_features,
-    n_features)``. Replaces the reference's positional (partition,
-    offset) lookup (ReliefFRSelector.scala:423-433) with two equi-joins
-    (SURVEY J3). This compact (pre-explode) form is the one worth
-    caching: it is nFeat times smaller than the exploded long table,
-    and re-deriving the explode from it is one in-core pass.
+    n_features)`` by two equi-joins (SURVEY J3). The fit emits the same
+    rows from its broadcast batch (:func:`knn.self_knn_pairs`); this
+    join form serves neighbour tables against a larger corpus.
 
     ``instances`` supplies the NEIGHBOR side; it defaults to ``batch``
     (self-kNN) but MUST be the full corpus whenever ``neighbors`` was
@@ -381,7 +379,27 @@ def mi_redundancy(
     total: float,
     joint_total: float,
 ) -> DataFrame:
-    """MI-style entropy transform + global min-max (SURVEY A10).
+    """MI-style entropy transform + global min-max (SURVEY A10) as an
+    ``(f1, f2, redundancy)`` frame: :func:`_mi_redundancy_coo`'s
+    entries, typed like ``joint``'s keys."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    coo = _mi_redundancy_coo(joint, marginal, total, joint_total)
+    out_schema = StructType(
+        [joint.schema["f1"], joint.schema["f2"], StructField("redundancy", DoubleType(), True)]
+    )
+    return joint.sparkSession.createDataFrame(
+        [(f1, f2, v) for (f1, f2), v in coo.items()], out_schema
+    )
+
+
+def _mi_redundancy_coo(
+    joint: DataFrame,
+    marginal: DataFrame,
+    total: float,
+    joint_total: float,
+) -> dict[tuple[int, int], float]:
+    """The redundancy COO ``{(f1, f2): redundancy}`` in ONE collect.
 
     red(f1,f2) = jprob*log2(jprob/(p1*p2)) with NaN/inf -> 0
     (computeRedudancy, ReliefFRSelector.scala:645-661), then min-max
@@ -406,46 +424,20 @@ def mi_redundancy(
             ).otherwise(F.col("red_raw")),
         )
     )
-    # ONE action, not a min/max pass plus a normalize pass (r12
-    # optimization): the COO is bounded by the topFeatures scope (every
-    # fit caller collects it to a driver dict anyway), but ``jp``'s
-    # UPSTREAM is not free — in the single-pass fits the joint
-    # aggregation is consumed only here, so a second action re-ran the
-    # whole collision self-join/combos subplan (measured: two complete
-    # executions in the q44/q158 stage profiles). Collect the raw
-    # entries once and apply the min-max on the driver: (x - mn) /
-    # (mx - mn) over collected float64s is the same IEEE arithmetic
-    # Spark's minmax_norm projection evaluates, so the values are
-    # bit-identical; min/max themselves involve no arithmetic at all.
-    # The log2 transform deliberately STAYS in Spark (above): JVM and
-    # CPython log2 are not guaranteed to round identically.
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            jp.schema["f1"],
-            jp.schema["f2"],
-            StructField("redundancy", DoubleType(), True),
-        ]
-    )
-    spark = jp.sparkSession
+    # ONE action: a separate min/max pass re-ran the whole joint subplan
+    # (two complete executions in the q44/q158 stage profiles). The
+    # COO is bounded by the topFeatures scope, so the min-max runs on
+    # the driver: (x - mn) / (mx - mn) over collected float64s is the
+    # IEEE arithmetic Spark's projection evaluates, bit-identical. The
+    # log2 STAYS in Spark: JVM and CPython log2 may round differently.
     rows = jp.select("f1", "f2", "red_raw").collect()
-    if not rows:
-        return spark.createDataFrame([], out_schema)
-    mn = min(r["red_raw"] for r in rows)
-    mx = max(r["red_raw"] for r in rows)
+    mn = min((r["red_raw"] for r in rows), default=0.0)
+    mx = max((r["red_raw"] for r in rows), default=0.0)
     span = mx - mn
-    return spark.createDataFrame(
-        [
-            (
-                r["f1"],
-                r["f2"],
-                0.0 if mx == mn else (r["red_raw"] - mn) / span,
-            )
-            for r in rows
-        ],
-        out_schema,
-    )
+    return {
+        (r["f1"], r["f2"]): 0.0 if mx == mn else (r["red_raw"] - mn) / span
+        for r in rows
+    }
 
 
 #: Feature-space width beyond which a fit's relevance result is a
@@ -731,12 +723,14 @@ def _plan_fit(
     num_neighbors: int,
     lower_feature_threshold: float,
     fit_name: str,
+    label_col: str,
 ) -> _FitPlan:
     """The one fit plan. Counts below 1 fail before any Spark action (a
     zero-neighbour kNN fails inside the kernel or yields no pairs to
     weigh); then ``count_labels`` runs the fit's one profiling action,
     returning per-class rows with ``label`` and count ``n``. An empty
-    dataset fails the same way in every fit."""
+    dataset, and a null label (its own class row), fail the same way in
+    every fit."""
     for name, value in (("num_top_features", num_top_features), ("num_neighbors", num_neighbors)):
         if value < 1:
             raise ValueError(f"{fit_name}: {name} must be >= 1, got {value!r}")
@@ -746,6 +740,9 @@ def _plan_fit(
             f"{fit_name} requires a non-empty dataset "
             "(the reference would NPE on head(); we fail with intent)"
         )
+    n_null = sum(int(r["n"]) for r in rows if r["label"] is None)
+    if n_null:
+        raise ValueError(f"{fit_name}: {n_null} null {label_col!r} value(s) in the input")
     n = sum(int(r["n"]) for r in rows)
     priors = {float(r["label"]): r["n"] / n for r in rows}
     return _FitPlan(
@@ -926,7 +923,7 @@ def _run_batches(
        top-N of the last non-empty batch before it. The scope only
        steers the joint, so nothing in phase 1 waits for it.
     2. The union of every batch's scoped joint goes straight into
-       :func:`mi_redundancy`'s one collect; then every cache is
+       :func:`_mi_redundancy_coo`'s one collect; then every cache is
        released.
 
     Then min-max + std ranking and greedy selection, on the driver. The
@@ -996,9 +993,7 @@ def _run_batches(
                 [(int(f), float(v)) for f, v in sorted(marg_sum.items())],
                 "feature_idx long, marginal double",
             )
-            red_df = mi_redundancy(joint_all, marg_all, float(n_pairs), joint_total)
-            for r in red_df.collect():
-                red_coo[(int(r["f1"]), int(r["f2"]))] = float(r["redundancy"])
+            red_coo = _mi_redundancy_coo(joint_all, marg_all, float(n_pairs), joint_total)
     # Everything is driver-side from here: release the caches so a
     # long-lived session doesn't accumulate dead entries (each live
     # entry also taxes every later cache lookup).
@@ -1051,16 +1046,18 @@ def fit_relief(
 
     sample -> randomSplit/hash batches -> the shared two-phase batch
     engine (:func:`_run_batches`) over the dense neighbourhood source.
-    Per batch, the exact tiers (``numpy``, ``numpy-gemm``) fetch the
-    batch once as Arrow, broadcast it and let each slice task find its
-    queries' k nearest neighbours in the whole batch and emit the pair
-    rows itself (:func:`knn.self_knn_pairs`); the ``sql`` and ``lsh``
-    tiers run :func:`knn_join` and the joins of :func:`pair_table`.
-    Either way the compact pair table is cached. Then ONE stats probe
-    covers every batch, the driver sums the batches and replays the
-    top-N feedback into each batch's joint scope, and ONE action
-    unions the scoped joints into the MI -> min-max -> greedy
-    selection.
+    Per batch, one pair builder serves every kNN tier
+    (:func:`knn.self_knn_pairs`): it fetches the batch once as checked
+    Arrow (null ids, null or ragged arrays, null elements and repeated
+    ids fail by name), broadcasts it and emits the pair rows from the
+    broadcast arrays. On the exact tiers (``numpy``, ``numpy-gemm``)
+    each slice task finds its queries' k nearest neighbours in the
+    whole batch; on ``sql`` and ``lsh`` the tasks take the id pairs of
+    a :func:`knn_join` over the cached batch. The compact pair table is
+    cached. Then ONE stats probe covers every batch, the driver sums
+    the batches and replays the top-N feedback into each batch's joint
+    scope, and ONE action unions the scoped joints into the MI ->
+    min-max -> greedy selection.
 
     DELIBERATE DEVIATION (SURVEY §8.5): per batch this engine scans
     the BATCH for neighbors, while the reference scans the FULL
@@ -1107,6 +1104,7 @@ def fit_relief(
         num_neighbors=num_neighbors,
         lower_feature_threshold=lower_feature_threshold,
         fit_name="fit_relief",
+        label_col=label_col,
     )
     _mark("profile")
     n_null = sum(int(r["n_null"]) for r in plan.label_rows)
@@ -1179,95 +1177,59 @@ def fit_relief(
         # production fit would pick.
         batches = [sample.filter(_hash_batch(i, n_batches)) for i in range(n_batches)]
 
-    # Pair-cache partition COUNT is volume-derived (r12, guide §2.4),
-    # not a flat defaultParallelism: the widest consumer of the cache
-    # is the joint combination explode (~n_pairs x n_feat x (|top|+1)
-    # rows; the bin-stats explode is the n_pairs x n_feat floor), so
-    # size for ~256k exploded rows per task, capped at the old
-    # defaultParallelism. At bench SFs this collapses dozens of
-    # near-empty tasks per consumer stage into a few; at cluster
-    # volumes the derived count saturates the same cap as before. Sums
-    # downstream are decimal/integer (order-independent), so the
-    # layout changes cost, never values.
+    # Pair-cache partition COUNT is volume-derived (r12): its widest
+    # consumer is the joint combination explode (~n_pairs x n_feat x
+    # (|top|+1) rows), so size for ~256k exploded rows per task, capped
+    # at defaultParallelism. Sums downstream are decimal/integer
+    # (order-independent), so the layout changes cost, never values.
     top_mult = min(lower_feat, n_feat) if redundancy_removal else 0
     pair_vol = max(batch_rows, 1) * k * n_feat * (1 + top_mult)
     parallelism = spark.sparkContext.defaultParallelism
     pair_parts = max(1, min(parallelism, -(-pair_vol // 262144)))
     continuous = not discrete_data
-    # The exact tiers' batch already rides to every executor for the
-    # kNN, so each slice task answers its queries against it and emits
-    # the pair rows itself (knn.self_knn_pairs). The other tiers join.
-    pair_kernel = knn_strategy in ("numpy", "numpy-gemm")
+    # Every tier's pairs come from knn.self_knn_pairs: one checked Arrow
+    # fetch of the batch, broadcast, and tasks that emit the pair rows
+    # from it. The exact tiers find the neighbours in those tasks; the
+    # other tiers hand it knn_join's id pairs.
+    exact_tier = knn_strategy in ("numpy", "numpy-gemm")
     # The kernel's slices are also its kNN tasks, whose work grows with
     # the batch squared: give them at least the ~256-rows-per-task
     # spread knn_join gives its scan side, not only the pair cache's.
-    kernel_slices = max(pair_parts, min(parallelism, batch_rows // 256))
+    slices = max(pair_parts, min(parallelism, batch_rows // 256)) if exact_tier else pair_parts
     # Partition count of every batch == partition count of `sample`
     # (filter and randomSplit are narrow); resolve it ONCE here instead
     # of an .rdd plan-analysis round-trip inside knn_join per batch
     # (VERDICT r6 #2).
-    sample_parts = None if pair_kernel else sample.rdd.getNumPartitions()
+    sample_parts = None if exact_tier else sample.rdd.getNumPartitions()
 
     def neighbourhood(batch: DataFrame) -> _Neighbourhood:
         # No emptiness probe: an empty batch flows through as empty
         # DataFrames everywhere below (empty kNN -> empty pairs ->
         # empty aggregates -> empty top-N, which keeps the previous
         # ranking) — one fewer job per batch.
-        if pair_kernel:
-            # One Arrow fetch of the batch, no batch cache: nothing
-            # reads the batch again. The slices are the pair cache's
-            # partitions, so no repartition either. No materializing
-            # count: the stats probe is the cache's first consumer, and
-            # block-level loading locks let its two legs compute each
-            # cached partition once (as in relief_sparse). Unlike the
-            # join-side pair table below, which measured slower without
-            # its count, no join plans against the cache's statistics.
-            pairs = self_knn_pairs(
-                batch, k, slices=kernel_slices, exclude_self=exclude_self,
-                gemm=knn_strategy == "numpy-gemm",
-            ).cache()
-            caches = (pairs,)
-        else:
+        neighbors = None
+        if not exact_tier:
+            # cached so the fetch and knn_join read the same rows
             batch = batch.cache()
-            neigh = knn_join(
-                batch, batch, k,
-                id_col="id", features_col="features",
-                exclude_self=exclude_self, strategy=knn_strategy,
-                # partition-sizing estimate only — saves a count() job
-                num_instances=batch_rows,
-                # queries == batch here: lets the lsh tier drop its
-                # probe-table broadcast hint when the batch is
-                # escalation-sized
-                num_queries=batch_rows,
-                scan_partitions=sample_parts,
-                lsh_tables=lsh_tables,
-                # Hamming-1 multiprobe: single-probe's ~4-27% neighbor
-                # loss measurably breaks planted-signal selection
-                # (XOR100 top-2 [4,75] vs [4,6]); multiprobe restores
-                # kNN recall to 1.000 on the KAIS fixtures at
-                # broadcast-side-only cost. Callers needing better than
-                # the ~0.70 continuous-data recall of radius 1 escalate
-                # via lsh_probe_radius=2 (measured 0.96, SCALE.md
-                # round-9 row).
-                lsh_multiprobe=True,
-                lsh_probe_radius=lsh_probe_radius,
+            # num_instances/num_queries: sizing estimates that save a
+            # count() job and let lsh drop its probe-table broadcast
+            # hint at escalation size. Multiprobe: single-probe's ~4-27%
+            # neighbour loss breaks planted-signal selection (XOR100
+            # top-2 [4,75] vs [4,6]); radius 2 lifts continuous recall
+            # 0.70 -> 0.96 (SCALE.md round-9 row).
+            neighbors = knn_join(
+                batch, batch, k, exclude_self=exclude_self, strategy=knn_strategy,
+                num_instances=batch_rows, num_queries=batch_rows,
+                scan_partitions=sample_parts, lsh_tables=lsh_tables,
+                lsh_multiprobe=True, lsh_probe_radius=lsh_probe_radius,
             )
-            # Cache the COMPACT pair table (nFeat times smaller than
-            # the exploded long form). Repartition by the pair key
-            # first — AQE coalesces the small join output to few
-            # partitions, which would serialize every downstream
-            # explode.
-            pairs = (
-                pair_table(batch, neigh)
-                .repartition(pair_parts, "query_id", "neighbor_id")
-                .cache()
-            )
-            # Materialized before the stats probe: left lazy, the
-            # probe's legs plan their joins against an unmaterialized
-            # InMemoryRelation without exact statistics, and the dense
-            # q72 fit measured slower that way (OPTIMIZATION_r13.md).
-            pairs.count()
-            caches = (pairs, batch)
+        # No materializing count: the stats probe is the pair cache's
+        # first consumer, and block-level loading locks let its two legs
+        # compute each cached partition once (as in relief_sparse).
+        pairs = self_knn_pairs(
+            batch, k, slices=slices, exclude_self=exclude_self,
+            gemm=knn_strategy == "numpy-gemm", neighbors=neighbors,
+        ).cache()
         _mark("batch pairs")
         return _Neighbourhood(
             bins=feature_bin_stats(
@@ -1283,7 +1245,9 @@ def fit_relief(
             joint=lambda top: joint_counts_from_pairs(
                 pairs, top, continuous, lower_distance_threshold, n_feat
             ),
-            caches=caches,
+            # the exact tiers never cache the batch: its unpersist is a
+            # no-op there
+            caches=(pairs, batch),
             route=knn_strategy,
         )
 

@@ -469,6 +469,7 @@ def fit_relief_sparse(
         num_neighbors=num_neighbors,
         lower_feature_threshold=lower_feature_threshold,
         fit_name="fit_relief_sparse",
+        label_col="label",
     )
     n_elems, k = plan.n_instances, plan.k
     n_batches = max(1, int(1.0 / batch_size))

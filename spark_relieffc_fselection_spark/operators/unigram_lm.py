@@ -51,7 +51,7 @@ def _log2(x: float) -> float:
     Python's fused ``math.log2`` (29% of samples differ by 1 ulp from
     the division form; the division form matches Spark's raw double in
     98.4% of samples and the 6dp-ROUNDED value in 100% of 200k
-    trainer-shaped samples, plans/r12/log2_parity_probe.py)."""
+    trainer-shaped samples, OPTIMIZATION_r12.md change 4)."""
     return math.log(x) / _LN2
 
 
@@ -591,7 +591,7 @@ def train_unigram(
             # ROUND(log2(u/t), 6) — same IEEE division, a <=1-ulp log,
             # and the identical BigDecimal.valueOf/HALF_UP quantize —
             # verified 0 rounded-value mismatches over 200k
-            # trainer-shaped samples (plans/r12/log2_parity_probe.py)
+            # trainer-shaped samples (OPTIMIZATION_r12.md change 4)
             # plus the all-SF oracle sweep; one LocalRelation job
             # fewer per round.
             surv = [(p, support.get(p, 0)) for p in alphabet] + [

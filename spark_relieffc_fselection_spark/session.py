@@ -49,7 +49,7 @@ def get_spark(
         # runs on size ESTIMATES, so a post-filter misestimate at
         # production scale can build an oversized local hash map and
         # OOM where SMJ would have spilled — and a 3-arm interleaved
-        # same-session A/B (plans/r13/dedup_conf_ab.py) measured the
+        # same-session A/B (OPTIMIZATION_r13.md §2) measured the
         # static knob worth nothing beyond the AQE rewrite at sf0.1:
         # q108 1.33/1.36, q44 5.57/5.71, q72c 5.16/5.45, q158
         # 17.01/17.31, q161 7.31/7.44 (r12-arm/aqe-only-arm mins; all

@@ -412,15 +412,16 @@ def _pair_fixture(kind: str) -> tuple[np.ndarray, np.ndarray]:
 @pytest.mark.parametrize(
     "kind", ["ties", "identical_rows", "negative_ids", "few_rows", "empty", "continuous"]
 )
-@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm"])
+@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm", "sql", "lsh"])
 def test_self_knn_pairs_equal_pair_table_of_knn_join(spark, strategy, kind, exclude_self):
-    """The fit's pair kernel answers each query slice against the whole
-    broadcast batch and emits pair rows from the broadcast arrays. Its
-    rows must equal ``pair_table(batch, knn_join(batch, batch, k))``'s,
-    whatever the slice count: on distance ties, identical rows under
-    distinct ids, negative ids, k >= rows - 1, with and without self
-    pairs, and on an empty batch. numpy-gemm is compared on integer
-    grids only: elsewhere its last bits follow the matrix shapes, so a
+    """The fit's one pair builder emits pair rows from the broadcast
+    batch. Its rows must equal ``pair_table(batch, knn_join(batch,
+    batch, k))``'s, whatever the slice count: on distance ties,
+    identical rows under distinct ids, negative ids, k >= rows - 1,
+    with and without self pairs, and on an empty batch. The exact tiers
+    find the neighbours in the kernel; sql and lsh hand it the
+    ``knn_join`` table itself. numpy-gemm is compared on integer grids
+    only: elsewhere its last bits follow the matrix shapes, so a
     different slicing may rank near-ties differently."""
     if strategy == "numpy-gemm" and kind == "continuous":
         pytest.skip("numpy-gemm distances are exact on integer grids only")
@@ -432,20 +433,27 @@ def test_self_knn_pairs_equal_pair_table_of_knn_join(spark, strategy, kind, excl
     )
     k = 6
     cols = ["query_id", "neighbor_id", "n_label", "same_class", "q_features", "n_features"]
-    want = sorted(
-        map(
-            tuple,
-            pair_table(batch, knn_join(batch, batch, k, exclude_self=exclude_self, strategy=strategy))
-            .select(*cols)
-            .collect(),
-        )
-    )
-    if kind == "few_rows":
+    neigh = knn_join(batch, batch, k, exclude_self=exclude_self, strategy=strategy)
+    want = sorted(map(tuple, pair_table(batch, neigh).select(*cols).collect()))
+    if kind == "few_rows" and strategy != "lsh":
         assert len(want) == len(ids) * (len(ids) - (1 if exclude_self else 0))
     for slices in (1, 3):
         got = self_knn_pairs(
             batch, k, slices=slices, exclude_self=exclude_self,
             gemm=strategy == "numpy-gemm",
+            neighbors=neigh if strategy in ("sql", "lsh") else None,
         )
         assert got.columns == cols
         assert sorted(map(tuple, got.collect())) == want, slices
+
+
+def test_self_knn_pairs_names_a_neighbour_id_missing_from_the_batch(spark):
+    """A neighbour table naming an id the broadcast batch does not hold
+    fails by name instead of emitting another row's vectors."""
+    batch = spark.createDataFrame(
+        [(i, [float(i), 1.0], float(i % 2)) for i in (2, 4, 6)],
+        "id long, features array<double>, label double",
+    )
+    neigh = spark.createDataFrame([(2, 4), (4, 5), (6, 999)], "query_id long, neighbor_id long")
+    with pytest.raises(Exception, match=r"2 neighbour-table id\(s\) not in the fit batch: 5, 999"):
+        self_knn_pairs(batch, 1, slices=1, neighbors=neigh).collect()

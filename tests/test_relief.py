@@ -461,15 +461,11 @@ def test_dense_numpy_fit_job_count_pinned(spark, labeled):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
 
 
-def test_dense_hash_batched_fit_job_count_pinned(spark, labeled):
-    """The two-batch hash-batched dense fit with redundancy removal
-    issues 14 Spark jobs (same job-group count as the single-batch pin
-    above): the profiling collect, one Arrow fetch per batch, ONE stats
-    probe for both batches and ONE joint/MI collect. A change to the
-    batch engine that adds or drops an action shows here."""
-    df, _, _ = labeled
+def _hash_batched_fit_jobs(spark, df, strategy: str) -> int:
+    """Spark jobs of the two-batch hash-batched fit with redundancy
+    removal, counted under a dedicated job group."""
     sc = spark.sparkContext
-    group = "test-dense-hash-batched-fit-jobs"
+    group = f"test-dense-hash-batched-fit-jobs-{strategy}"
     sc.setJobGroup(group, "dense hash-batched fit job-count pin")
     try:
         fit_relief(
@@ -481,12 +477,30 @@ def test_dense_hash_batched_fit_job_count_pinned(spark, labeled):
             batching="hash",
             redundancy_removal=True,
             seed=7,
-            knn_strategy="numpy",
+            knn_strategy=strategy,
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 14
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dense_hash_batched_fit_job_count_pinned(spark, labeled):
+    """The two-batch hash-batched dense fit with redundancy removal
+    issues 13 Spark jobs (same job-group count as the single-batch pin
+    above): the profiling collect, one Arrow fetch per batch, ONE stats
+    probe for both batches and ONE joint/MI collect, whose rows become
+    the redundancy COO on the driver. A change to the batch engine that
+    adds or drops an action shows here."""
+    assert _hash_batched_fit_jobs(spark, labeled[0], "numpy") == 13
+
+
+def test_dense_sql_hash_batched_fit_job_count_pinned(spark, labeled):
+    """The same fit on the sql tier runs the same actions through the
+    same pair builder (the batch cache fills under the batch's Arrow
+    fetch); the extra jobs are the AQE stage jobs of its kNN window and
+    joins under the stats probe."""
+    assert _hash_batched_fit_jobs(spark, labeled[0], "sql") == 19
 
 
 def _fit_jobs(spark, group: str, fit) -> list[list[str]]:
@@ -500,18 +514,21 @@ def _fit_jobs(spark, group: str, fit) -> list[list[str]]:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     tracker = sc.statusTracker()
-    return [
-        [tracker.getStageInfo(st).name for st in tracker.getJobInfo(j).stageIds]
+    # past spark.ui.retainedStages, a long session's status store evicts
+    # stage infos (getStageInfo gives None): name the stages it kept
+    infos = [
+        [tracker.getStageInfo(st) for st in tracker.getJobInfo(j).stageIds]
         for j in sorted(tracker.getJobIdsForGroup(group))
     ]
+    return [[info.name for info in job if info is not None] for job in infos]
 
 
-@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm"])
+@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm", "sql", "lsh"])
 def test_fit_rejects_duplicate_ids_at_the_batch_fetch(spark, labeled, strategy):
     """Repeated ids used to multiply rows silently through the pair
-    joins. The exact tiers' pair kernel holds every id of the batch on
-    the driver, so it names the repeats there: the fit's last job is
-    that fetch, and no kNN, pair or stats job runs after it."""
+    joins. Every tier's pair builder holds every id of the batch on the
+    driver, so it names the repeats there: the fit's last job is that
+    fetch, and no kNN, pair or stats job runs after it."""
     df, _, _ = labeled
     dup = df.unionByName(df.filter(F.col("id").isin(17, 42)))
 
@@ -527,7 +544,7 @@ def test_fit_rejects_duplicate_ids_at_the_batch_fetch(spark, labeled, strategy):
     assert fetches == [len(jobs) - 1]
 
 
-@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm"])
+@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm", "sql", "lsh"])
 @pytest.mark.parametrize(
     "bad_row, match",
     [
@@ -538,10 +555,10 @@ def test_fit_rejects_duplicate_ids_at_the_batch_fetch(spark, labeled, strategy):
     ],
 )
 def test_fit_rejects_malformed_rows_on_both_exact_tiers(spark, strategy, bad_row, match):
-    """Both exact tiers read the batch through the one checked Arrow
-    fetch, so a null id, a null or ragged feature array or a null
-    element fails with a named error instead of a reshape error or a
-    silent fit."""
+    """Every tier, the two exact ones and sql/lsh alike, reads the batch
+    through the one checked Arrow fetch, so a null id, a null or ragged
+    feature array or a null element fails with a named error instead of
+    a reshape error or a silent fit."""
     rows = [(i, [float(i % 3), float(i % 5), float(i % 7)], float(i % 2)) for i in range(30)]
     df = spark.createDataFrame(
         rows + [bad_row], "id long, features array<double>, label double"
@@ -551,6 +568,48 @@ def test_fit_rejects_malformed_rows_on_both_exact_tiers(spark, strategy, bad_row
             df, num_top_features=2, num_neighbors=2, estimation_ratio=1.0,
             batch_size=1.0, knn_strategy=strategy,
         )
+
+
+def _with_null_labels(spark):
+    rows = [(i, [float(i % 3), float(i % 5), float(i % 7)], float(i % 2)) for i in range(30)]
+    return spark.createDataFrame(
+        rows + [(97, [1.0, 2.0, 3.0], None), (98, [0.0, 1.0, 2.0], None)],
+        "id long, features array<double>, label double",
+    ).coalesce(1)
+
+
+def test_fit_relief_rejects_null_labels_in_the_profiling_job(spark):
+    """A null label is its own class row of the profiling groupBy, so it
+    fails by name there — it used to end in a bare TypeError from
+    ``float(None)`` — and the profiling job is the fit's only job."""
+
+    def fit():
+        with pytest.raises(ValueError, match=r"fit_relief: 2 null 'label' value\(s\)"):
+            fit_relief(
+                _with_null_labels(spark), num_top_features=2, num_neighbors=2,
+                estimation_ratio=1.0, batch_size=1.0,
+            )
+
+    jobs = _fit_jobs(spark, "test-null-labels", fit)
+    assert len(jobs) == 1, jobs
+
+
+def test_fit_relief_sparse_rejects_null_labels(spark):
+    from spark_relieffc_fselection_spark.operators.relief_sparse import (
+        fit_relief_sparse,
+        to_long_form,
+    )
+
+    long_df, labels = to_long_form(_with_null_labels(spark))
+    with pytest.raises(ValueError, match=r"fit_relief_sparse: 2 null 'label' value\(s\)"):
+        fit_relief_sparse(long_df, labels, 3, num_top_features=2, num_neighbors=2)
+
+
+def test_estimator_rejects_null_labels(spark):
+    from spark_relieffc_fselection_spark.ml import ReliefFSelector
+
+    with pytest.raises(ValueError, match=r"2 null '\w*label' value\(s\)"):
+        ReliefFSelector(numTopFeatures=2, numNeighbors=2).fit(_with_null_labels(spark))
 
 
 @pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm", "sql", "lsh"])

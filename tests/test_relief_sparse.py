@@ -758,13 +758,13 @@ def test_batched_fits_share_one_joint_total(spark, sparse_fixture, monkeypatch):
     share = 1.0 - ratio * (1.0 / n_batches)
     assert share != 1.0 - ratio / n_batches  # the case discriminates
     seen = []
-    mi = relief_mod.mi_redundancy
+    mi = relief_mod._mi_redundancy_coo
 
     def spy(joint, marginal, total, joint_total):
         seen.append((total, joint_total))
         return mi(joint, marginal, total, joint_total)
 
-    monkeypatch.setattr(relief_mod, "mi_redundancy", spy)
+    monkeypatch.setattr(relief_mod, "_mi_redundancy_coo", spy)
     df, X, _ = sparse_fixture
     kwargs = dict(num_top_features=3, num_neighbors=3, redundancy_removal=True, batch_size=0.3)
     dense = relief_mod.fit_relief(
@@ -840,8 +840,13 @@ def test_sparse_fit_rejects_duplicate_ids_at_the_norms_fetch(spark, sparse_fixtu
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     tracker = sc.statusTracker()
+    # evicted stage infos (getStageInfo gives None, see above) are skipped
     jobs = [
-        [tracker.getStageInfo(st).name for st in tracker.getJobInfo(j).stageIds]
+        [
+            info.name
+            for info in map(tracker.getStageInfo, tracker.getJobInfo(j).stageIds)
+            if info is not None
+        ]
         for j in sorted(tracker.getJobIdsForGroup(group))
     ]
     fetches = [i for i, names in enumerate(jobs) if any("toArrow" in n for n in names)]

@@ -604,8 +604,8 @@ def test_driver_reestimate_matches_spark(spark):
 
 
 def test_log2_round6_parity_probe(spark):
-    """CI-resident form of plans/r12/log2_parity_probe.py (VERDICT r12
-    #8): _round6(_log2(u/t)) must equal Spark's ROUND(LOG2(u/t), 6)
+    """CI-resident form of the r12 log2 parity probe (OPTIMIZATION_r12.md
+    change 4, OPTIMIZATION_r13.md §6; VERDICT r12 #8): _round6(_log2(u/t)) must equal Spark's ROUND(LOG2(u/t), 6)
     bit-for-bit on THIS platform's JVM/libm pairing — the assumption
     every driver-side EM replay in unigram_lm.py rests on. Fixed-seed
     trainer-shaped sample, one Spark job."""
