@@ -213,26 +213,30 @@ class ReliefFSelector(
         # cache BEFORE fit: fit_relief runs many actions, and
         # monotonically_increasing_id must not be re-evaluated against a
         # potentially different row-to-partition layout each time — the
-        # cache pins the id assignment.
+        # cache pins the id assignment. The columns keep the user's
+        # names, so the fit's errors name them too.
+        label_col = self.getLabelCol()
         prepared = dataset.select(
             F.monotonically_increasing_id().alias("__rid"),
-            feat.alias("__features"),
-            F.col(self.getLabelCol()).cast("double").alias("__label"),
+            feat.alias(input_col),
+            F.col(label_col).cast("double").alias(label_col),
         ).cache()
-        res = fit_relief(
-            prepared,
-            id_col="__rid",
-            features_col="__features",
-            label_col="__label",
-            **self._fit_kwargs(),
-            seed=self.getOrDefault(self.seed),
-            knn_strategy=self.getOrDefault(self.knnStrategy),
-            batching=self.getOrDefault(self.batching),
-            sampling=self.getOrDefault(self.samplingMode),
-            lsh_probe_radius=self.getOrDefault(self.lshProbeRadius),
-            lsh_tables=self.getOrDefault(self.lshTables) or None,
-        )
-        prepared.unpersist()
+        try:
+            res = fit_relief(
+                prepared,
+                id_col="__rid",
+                features_col=input_col,
+                label_col=label_col,
+                **self._fit_kwargs(),
+                seed=self.getOrDefault(self.seed),
+                knn_strategy=self.getOrDefault(self.knnStrategy),
+                batching=self.getOrDefault(self.batching),
+                sampling=self.getOrDefault(self.samplingMode),
+                lsh_probe_radius=self.getOrDefault(self.lshProbeRadius),
+                lsh_tables=self.getOrDefault(self.lshTables) or None,
+            )
+        finally:
+            prepared.unpersist()
         return self._make_model(res)
 
     def _fit_sparse(self, dataset: DataFrame, n_features: int) -> "ReliefFSelectorModel":
@@ -287,15 +291,17 @@ class ReliefFSelector(
             .select("id", F.col("e.f").alias("feature_idx"), F.col("e.v").alias("value"))
             .filter(F.col("value") != 0.0)
         )
-        res = fit_relief_sparse(
-            long_df,
-            labels,
-            n_features,
-            # estimation_ratio declares the upstream sample to the
-            # batched loop's jointTotal discount
-            **self._fit_kwargs(),
-        )
-        base.unpersist()
+        try:
+            res = fit_relief_sparse(
+                long_df,
+                labels,
+                n_features,
+                # estimation_ratio declares the upstream sample to the
+                # batched loop's jointTotal discount
+                **self._fit_kwargs(),
+            )
+        finally:
+            base.unpersist()
         return self._make_model(res)
 
     def _fit_kwargs(self) -> dict:

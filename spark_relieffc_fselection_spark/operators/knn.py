@@ -30,11 +30,12 @@ join:
   re-scored by the ``(q-b)^2`` diff cube. ``'numpy-gemm'`` ranks by the
   expansion itself.
 
-The RELIEF fit's pair rows come from :func:`self_knn_pairs` on every
-tier, emitted from the broadcast batch with no pair joins. On the two
-numpy tiers each query slice scans the whole batch, so there is no
-window rank either; ``'sql'`` and ``'lsh'`` hand it :func:`knn_join`'s
-id pairs.
+The RELIEF fit reduces its pairs inside :func:`self_knn_pairs` on
+every tier: the tasks that find the neighbours in the broadcast batch
+emit only the reducer's small exact partials, with no pair joins and no
+pair rows. On the two numpy tiers each query slice scans the whole
+batch, so there is no window rank either; ``'sql'`` and ``'lsh'`` hand
+it :func:`knn_join`'s id pairs.
 
 At 100 TB the queries side stays a bounded sample (the algorithm's
 estimationRatio guarantees this — BASELINE.md complexity row), so the
@@ -44,10 +45,12 @@ broadcast is small and the scan side is never shuffled.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -445,31 +448,38 @@ def _fetch_rows(
     )
 
 
-#: feature values per list column in one Arrow batch the pair kernel
-#: emits, so the list offsets stay far below int32 at any width
-_PAIR_BATCH_VALUES = 1 << 24
+#: the pair kernel's exact domain: the fit's statistics are decimal
+#: sums of |q - n| over finite coordinates below 2^52 in magnitude (see
+#: :func:`_check_exact_domain`)
+EXACT_DOMAIN_MAX = 2.0**52
 
 
 def self_knn_pairs(
     batch: DataFrame,
     k: int,
+    reduce: Callable[[np.ndarray, np.ndarray, tuple], Iterator[pa.RecordBatch]],
+    schema: str,
     *,
     slices: int,
     exclude_self: bool = True,
     gemm: bool = False,
     neighbors: DataFrame | None = None,
-) -> DataFrame:
-    """The fit's pair rows for ``batch`` (its ``(id, features, label)``
-    frame), on every kNN tier: ``relief.pair_table(batch, knn_join(batch,
-    batch, k, strategy=...))``'s ``(query_id, neighbor_id, n_label,
-    same_class, q_features, n_features)`` rows.
+) -> tuple[DataFrame, Broadcast]:
+    """The fit's pair kernel for ``batch`` (its ``(id, features, label)``
+    frame), on every kNN tier: the tasks that find each query's
+    neighbours hand them to ``reduce`` and emit only what it yields.
 
-    The reference broadcasts the batch and looks neighbour rows up by
-    position (ReliefFRSelector.scala:254-260, 423-433). Here the driver
-    fetches the batch once as checked Arrow (:func:`_fetch_rows`),
-    rejects repeated ids and broadcasts it sorted by id; tasks emit each
-    pair's vectors and labels from it by ``searchsorted`` — no joins. An
-    id the broadcast does not hold raises instead of being indexed.
+    The reference broadcasts the batch, finds neighbour rows by position
+    and accumulates its statistics in the same partition pass
+    (ReliefFRSelector.scala:254-260, 402-475). Here the driver fetches
+    the batch once as checked Arrow (:func:`_fetch_rows`), rejects
+    repeated ids and values outside the exact domain
+    (:func:`_check_exact_domain`), and broadcasts it sorted by id. Each
+    task calls ``reduce(qi, ni, (ids, features, labels))`` with the
+    pairs' query and neighbour ROW positions in that broadcast; it
+    yields record batches of ``schema``. Pairs never leave the task
+    unless ``reduce`` emits them. An id the broadcast does not hold
+    raises instead of being indexed.
 
     ``neighbors=None`` (the exact tiers): ``slices`` tasks each run
     :func:`knn_scan` for a contiguous slice of the queries against the
@@ -481,43 +491,19 @@ def self_knn_pairs(
     grids. Otherwise ``neighbors`` is the ``(query_id, neighbor_id)``
     table of a :func:`knn_join` over ``batch`` (``'sql'``, ``'lsh'``),
     hash-partitioned into ``slices`` partitions; ``k``, ``exclude_self``
-    and ``gemm`` are then the join's."""
-    import pyarrow as pa
+    and ``gemm`` are then the join's.
 
+    Returns the output frame and the broadcast, which a later kernel
+    over the same rows reuses; the caller releases it."""
     spark = batch.sparkSession
     ids, mat, labels = _fetch_rows(batch, "id", "features", "label", side="the fit batch")
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
     _reject_duplicate_ids(ids, "knn", "the fit batch")
+    _check_exact_domain(mat, "features", "the fit batch")
     bc = spark.sparkContext.broadcast((ids, mat[order], labels[order]))
-    n_rows, d = mat.shape
+    n_rows = len(ids)
     slices = max(1, min(slices, n_rows))
-    step = max(1, _PAIR_BATCH_VALUES // max(d, 1))
-    names = ["query_id", "neighbor_id", "n_label", "same_class", "q_features", "n_features"]
-
-    def vectors(rows: np.ndarray, mat: np.ndarray) -> pa.Array:
-        offsets = np.arange(0, (len(rows) + 1) * d, d, dtype=np.int32)
-        return pa.ListArray.from_arrays(offsets, mat[rows].ravel())
-
-    def emit(q_id: np.ndarray, n_id: np.ndarray) -> Iterator[pa.RecordBatch]:
-        ids, mat, labels = bc.value
-        qi, ni = _rows_of(ids, q_id), _rows_of(ids, n_id)
-        q_lbl, n_lbl = labels[qi], labels[ni]
-        # Spark's `=` holds for NaN = NaN
-        same = (n_lbl == q_lbl) | (np.isnan(n_lbl) & np.isnan(q_lbl))
-        for a in range(0, len(qi), step):
-            b = slice(a, a + step)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(q_id[b]),
-                    pa.array(n_id[b]),
-                    pa.array(n_lbl[b]),
-                    pa.array(same[b]),
-                    vectors(qi[b], mat),
-                    vectors(ni[b], mat),
-                ],
-                names=names,
-            )
 
     def kernel(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ids, mat, _ = bc.value
@@ -528,24 +514,53 @@ def self_knn_pairs(
                     q_id, n_id, _ = knn_scan(
                         ids[lo:hi], mat[lo:hi], [(ids, mat)], k, exclude_self, gemm
                     )
-                    yield from emit(q_id, n_id)
+                    yield from reduce(_rows_of(ids, q_id), _rows_of(ids, n_id), bc.value)
 
     def lookup(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ids = bc.value[0]
         for part in parts:
-            yield from emit(part.column(0).to_numpy(), part.column(1).to_numpy())
+            qi = _rows_of(ids, part.column(0).to_numpy())
+            yield from reduce(qi, _rows_of(ids, part.column(1).to_numpy()), bc.value)
 
-    schema = (
-        "query_id long, neighbor_id long, n_label double, same_class boolean, "
-        "q_features array<double>, n_features array<double>"
-    )
     if neighbors is None:
-        return spark.range(0, slices, numPartitions=slices).mapInArrow(kernel, schema)
-    # an explicit count: AQE would coalesce the small id table into a
-    # few partitions and serialize every explode downstream
-    return (
-        neighbors.select("query_id", "neighbor_id")
-        .repartition(slices, "query_id", "neighbor_id")
-        .mapInArrow(lookup, schema)
+        out = spark.range(0, slices, numPartitions=slices).mapInArrow(kernel, schema)
+    else:
+        # an explicit count: AQE would coalesce the small id table into
+        # a few partitions and serialize every reduce downstream
+        out = (
+            neighbors.select("query_id", "neighbor_id")
+            .repartition(slices, "query_id", "neighbor_id")
+            .mapInArrow(lookup, schema)
+        )
+    return out, bc
+
+
+def _check_exact_domain(mat: np.ndarray, features_col: str, side: str) -> None:
+    """Raise a ValueError naming the feature columns (positions in the
+    array, up to 10) and counting the values of ``mat`` outside the pair
+    kernel's exact domain: NaN, +-inf and magnitudes of 2^52 or more.
+    NaN and inf would cast to NULL and drop out of the decimal sums;
+    past 2^52 a difference can reach 2^53, beyond which JDK 17's
+    ``Double.toString`` (the engine's decimal cast) is not always the
+    shortest decimal the kernel reproduces (SCALE.md)."""
+    bad = ~(np.abs(mat) < EXACT_DOMAIN_MAX)
+    if not bad.any():
+        return
+    vals = mat[bad]
+    kinds = [
+        (int(np.isnan(vals).sum()), "NaN"),
+        (int((vals == np.inf).sum()), "+inf"),
+        (int((vals == -np.inf).sum()), "-inf"),
+        (int(np.isfinite(vals).sum()), "|x| >= 2^52"),
+    ]
+    per_col = bad.sum(axis=0)
+    cols = np.flatnonzero(per_col)
+    raise ValueError(
+        f"knn: {len(vals)} value(s) of {features_col!r} on {side} are outside the exact "
+        f"domain (finite, |x| < 2^52): {', '.join(f'{n} {what}' for n, what in kinds if n)}; "
+        f"feature column(s) "
+        + ", ".join(f"{c} ({per_col[c]})" for c in cols[:10])
+        + (", ..." if len(cols) > 10 else "")
     )
 
 

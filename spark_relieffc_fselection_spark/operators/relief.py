@@ -43,12 +43,15 @@ reference's dense per-feature row-vector memory hazard (SURVEY §7.3).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
+from decimal import localcontext
 from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -74,6 +77,12 @@ from spark_relieffc_fselection_spark.operators.knn import (
 #: bought nothing and carried a silent-overflow hazard for
 #: non-contractual inputs.
 DEC = "decimal(38,18)"
+
+#: Python ``Decimal`` precision for the driver's exact sums: a 38-digit
+#: decimal(38,18) sum of many partials, or a contribution quantized to
+#: 18 places, stays far below it (the default 28 digits would round or
+#: raise past 1e10).
+_DEC_SUM_DIGITS = 80
 
 
 def pair_table(
@@ -311,12 +320,11 @@ def joint_counts_from_pairs(
 
 def _mirror_and_sum(ordered: DataFrame, continuous: bool) -> DataFrame:
     # Aggregate ONE orientation per ordered (a in scope, b) combo, then
-    # mirror the TINY aggregated COO: joint(f1,f2) = agg(f1,f2) +
-    # agg(f2,f1) because each unordered collision contributes the same
-    # jv to both cells. Halves the rows through the expensive decimal
-    # aggregation (the combination explode is the pipeline's widest
-    # stage); decimal addition is associative, so regrouping the sum is
-    # bit-identical to the orientation-exploded plan.
+    # mirror the TINY aggregated COO (see _mirror_sum). Halves the rows
+    # through the expensive decimal aggregation (the combination explode
+    # is the pipeline's widest stage); decimal addition is associative,
+    # so regrouping the sum is bit-identical to the orientation-exploded
+    # plan.
     #
     # Discrete data: every vote is exactly 1.0 (collision_table), so
     # sum(jv) IS the combo count — a plain long count, no decimal at
@@ -329,6 +337,13 @@ def _mirror_and_sum(ordered: DataFrame, continuous: bool) -> DataFrame:
         agg = ordered.groupBy("f1", "f2").agg(
             F.count("*").cast(DEC).alias("j_part")
         )
+    return _mirror_sum(agg)
+
+
+def _mirror_sum(agg: DataFrame) -> DataFrame:
+    """``joint(f1, f2) = agg(f1, f2) + agg(f2, f1)`` as a double, from
+    one-orientation ``(f1, f2, j_part)`` rows, one per key: each
+    unordered collision contributes the same jv to both cells."""
     # Mirror in ONE pass over the aggregated rows: a self-union
     # (agg.unionByName(agg.select(...))) would embed the un-cached agg
     # subplan TWICE in the physical plan, and Spark executes both
@@ -351,6 +366,216 @@ def _mirror_and_sum(ordered: DataFrame, continuous: bool) -> DataFrame:
     return mirrored.groupBy("f1", "f2").agg(
         F.sum("j_part").cast("double").alias("joint")
     )
+
+
+# ---------------------------------------------------------------------
+# The pair kernel's reducers (knn.self_knn_pairs): the statistics of
+# feature_bin_stats, the pair counts and joint_counts_from_pairs'
+# one-orientation partials, computed in the tasks that find the pairs.
+# ---------------------------------------------------------------------
+
+#: values per (pairs x features) block a reducer holds at once
+_STATS_BLOCK_VALUES = 1 << 20
+
+#: Arrow type of a decimal(38,18) value
+_DEC_ARROW = pa.decimal128(38, 18)
+
+#: the stats kernel's rows: a bin partial (f, n_label, same_class,
+#: bin_sum, vote_sum), a pair-count partial (n_label, same_class, n) or,
+#: when the joint needs them later, a pair (qi, ni) of batch rows
+_PAIR_STATS_SCHEMA = (
+    "f int, n_label double, same_class boolean, bin_sum decimal(38,18), "
+    "vote_sum decimal(38,18), n long, qi int, ni int"
+)
+
+
+def _dec18_units(x: np.ndarray) -> np.ndarray:
+    """Spark's ``cast(x AS decimal(38,18))`` of each double of the 1-D
+    ``x`` (finite, |x| < 2^53) as an unscaled integer in units of 1e-18,
+    in decimal128 layout: an int64 ``(n, 2)`` array of (low word as
+    unsigned bits, signed high word).
+
+    Spark casts through ``BigDecimal(Double.toString(x))`` and rounds
+    half-up (away from zero) to 18 places. Arrow's float-to-string cast
+    is the shortest round-trip decimal, which is ``Double.toString``'s
+    value in this range (SCALE.md). From |x| >= 0.01 on, that string has
+    at most 18 decimals and parses into decimal128(38,18) exactly; below
+    0.01 it is parsed at 40 places and rounded. Below 1e-20 the cast is
+    0 and nothing is parsed (which also keeps every string within 40
+    places)."""
+    out = np.zeros((len(x), 2), dtype=np.int64)
+    a = np.abs(x)
+    direct = a >= 0.01
+    for mask, exact in ((direct, True), ((a >= 1e-20) & ~direct, False)):
+        if not mask.any():
+            continue
+        text = pc.cast(pa.array(x[mask]), pa.string())
+        if exact:
+            dec = pc.cast(text, _DEC_ARROW)
+        else:
+            wide = pc.cast(text, pa.decimal256(76, 40))
+            dec = pc.cast(pc.round(wide, 18, round_mode="half_towards_infinity"), _DEC_ARROW)
+        words = np.frombuffer(
+            dec.buffers()[1], dtype=np.int64, count=2 * len(dec), offset=16 * dec.offset
+        )
+        out[mask] = words.reshape(-1, 2)
+    return out
+
+
+def _dec18_col_sums(x: np.ndarray) -> np.ndarray:
+    """Exact per-column sums of :func:`_dec18_units` over the 2-D ``x``,
+    as a 1-D object array of Python ints (units of 1e-18). Each 128-bit
+    value is split into four 32-bit limbs, so the int64 column sums
+    cannot overflow below 2^31 rows."""
+    rows, cols = x.shape
+    words = _dec18_units(x.ravel())
+    lo, hi = words[:, 0].view(np.uint64), words[:, 1]
+    limbs = (
+        (lo & 0xFFFFFFFF).astype(np.int64),
+        (lo >> np.uint64(32)).astype(np.int64),
+        (hi.view(np.uint64) & 0xFFFFFFFF).astype(np.int64),
+        hi >> 32,
+    )
+    total = np.zeros(cols, dtype=object)
+    for j, limb in enumerate(limbs):
+        total += limb.reshape(rows, cols).sum(axis=0).astype(object) << (32 * j)
+    return total
+
+
+def _dec18_array(units: Iterable[int]) -> pa.Array:
+    """A decimal128(38,18) Arrow array of unscaled Python ints."""
+    words = [(u & 0xFFFFFFFFFFFFFFFF, u >> 64) for u in map(int, units)]
+    buf = np.array(
+        [w for lo, hi in words for w in (lo, hi & 0xFFFFFFFFFFFFFFFF)], dtype=np.uint64
+    )
+    return pa.Array.from_buffers(_DEC_ARROW, len(words), [None, pa.py_buffer(buf.tobytes())])
+
+
+def _collision_votes(fdist: np.ndarray, continuous: bool, threshold: float) -> np.ndarray:
+    """``collision_table``'s votes, 0.0 where a feature does not collide:
+    the same IEEE operations as ``collision_vote``."""
+    vote = 1.0 - np.minimum(6.0, fdist) / 6.0 if continuous else np.ones_like(fdist)
+    return np.where(fdist <= threshold, vote, 0.0)
+
+
+def _pair_stats(
+    continuous: bool, threshold: float, keep_pairs: bool
+) -> Callable[[np.ndarray, np.ndarray, tuple], Iterator[pa.RecordBatch]]:
+    """The stats reducer of the fit's pair kernel (``_PAIR_STATS_SCHEMA``
+    rows). Per (n_label, same_class) bin of its pairs it emits one
+    partial row per feature with the exact decimal sums of
+    ``feature_bin_stats`` (``bin_sum``, ``vote_sum``) and one row with
+    the bin's pair count; ``keep_pairs`` also emits every pair's (query
+    row, neighbour row) for the joint kernel. Partials of one key sum
+    exactly to the Spark aggregate's value: every element is cast as
+    Spark casts it (:func:`_dec18_units`) and decimal addition is
+    associative."""
+
+    def reduce(qi: np.ndarray, ni: np.ndarray, batch: tuple) -> Iterator[pa.RecordBatch]:
+        _, mat, labels = batch
+        q_lbl, n_lbl = labels[qi], labels[ni]
+        # Spark's `=` holds for NaN = NaN
+        same = (n_lbl == q_lbl) | (np.isnan(n_lbl) & np.isnan(q_lbl))
+        lbls = np.unique(n_lbl)
+        code = np.searchsorted(lbls, n_lbl) * 2 + same
+        d = mat.shape[1]
+        step = max(1, _STATS_BLOCK_VALUES // max(d, 1))
+        for c in np.unique(code):
+            rows = np.flatnonzero(code == c)
+            bin_sum = np.zeros(d, dtype=object)
+            vote_sum = np.zeros(d, dtype=object)
+            for s in range(0, len(rows), step):
+                r = rows[s : s + step]
+                fdist = np.abs(mat[qi[r]] - mat[ni[r]])
+                bin_sum += _dec18_col_sums(fdist)
+                vote_sum += _dec18_col_sums(_collision_votes(fdist, continuous, threshold))
+            lbl, sc = lbls[c // 2], bool(c % 2)
+            yield _stats_batch(
+                f=pa.array(np.arange(d, dtype=np.int32)),
+                n_label=pa.array(np.full(d, lbl)),
+                same_class=pa.array(np.full(d, sc)),
+                bin_sum=_dec18_array(bin_sum),
+                vote_sum=_dec18_array(vote_sum),
+            )
+            yield _stats_batch(
+                n_label=pa.array([lbl]), same_class=pa.array([sc]), n=pa.array([len(rows)])
+            )
+        if keep_pairs and len(qi):
+            yield _stats_batch(qi=pa.array(qi.astype(np.int32)), ni=pa.array(ni.astype(np.int32)))
+
+    return reduce
+
+
+def _stats_batch(**cols: pa.Array) -> pa.RecordBatch:
+    """One ``_PAIR_STATS_SCHEMA`` record batch: ``cols`` and nulls."""
+    n = len(next(iter(cols.values())))
+    types = {
+        "f": pa.int32(), "n_label": pa.float64(), "same_class": pa.bool_(),
+        "bin_sum": _DEC_ARROW, "vote_sum": _DEC_ARROW, "n": pa.int64(),
+        "qi": pa.int32(), "ni": pa.int32(),
+    }
+    return pa.RecordBatch.from_arrays(
+        [cols.get(name, pa.nulls(n, t)) for name, t in types.items()], names=list(types)
+    )
+
+
+def _kernel_joint(
+    pairs: DataFrame,
+    bc,
+    top_features: list[int],
+    continuous: bool,
+    threshold: float,
+) -> DataFrame:
+    """:func:`joint_counts_from_pairs` over the pair kernel's cached
+    ``(qi, ni)`` rows and its broadcast batch ``bc``: each task emits
+    its one-orientation partials per (f1 in scope, f2) — combo counts
+    on discrete data, exact decimal sums of ``(va + vb) / 2`` on
+    continuous data — for every key at least one of its pairs hits,
+    and :func:`_mirror_sum` finishes as the Spark plan does."""
+    if len(top_features) == 0:
+        return pairs.sparkSession.createDataFrame([], "f1 int, f2 int, joint double")
+    top = np.asarray(top_features, dtype=np.int64)
+
+    def kernel(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _, mat, _ = bc.value
+        d = mat.shape[1]
+        cnt = np.zeros((len(top), d), dtype=np.int64)
+        acc = np.zeros((len(top), d), dtype=object)
+        step = max(1, _STATS_BLOCK_VALUES // max(d, 1))
+        for part in parts:
+            qi, ni = part.column(0).to_numpy(), part.column(1).to_numpy()
+            for s in range(0, len(qi), step):
+                fdist = np.abs(mat[qi[s : s + step]] - mat[ni[s : s + step]])
+                coll = fdist <= threshold
+                if not continuous:
+                    # 0/1 products: the float64 matmul counts exactly
+                    both = coll[:, top].T.astype(np.float64) @ coll.astype(np.float64)
+                    both[np.arange(len(top)), top] = 0
+                    cnt += both.astype(np.int64)
+                    continue
+                vote = _collision_votes(fdist, continuous, threshold)
+                for j, a in enumerate(top):
+                    hit = coll[:, a]
+                    if not hit.any():
+                        continue
+                    pair = coll[hit]
+                    pair[:, a] = False
+                    cnt[j] += pair.sum(axis=0)
+                    jv = np.where(pair, (vote[hit, a][:, None] + vote[hit]) / 2.0, 0.0)
+                    acc[j] += _dec18_col_sums(jv)
+        j, f2 = np.nonzero(cnt)
+        part = (
+            _dec18_array(acc[j, f2]) if continuous else pa.array(cnt[j, f2].astype(np.int64))
+        )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(top[j].astype(np.int32)), pa.array(f2.astype(np.int32)), part],
+            names=["f1", "f2", "part"],
+        )
+
+    schema = f"f1 int, f2 int, part {'decimal(38,18)' if continuous else 'long'}"
+    parts = pairs.mapInArrow(kernel, schema)
+    j_part = F.sum("part") if continuous else F.sum("part").cast(DEC)
+    return _mirror_sum(parts.groupBy("f1", "f2").agg(j_part.alias("j_part")))
 
 
 def _joint_selfjoin(
@@ -644,8 +869,12 @@ def _collapse_bins_local(
     ``Decimal(repr(x)).quantize(1e-18, HALF_UP)`` — Spark's double->
     decimal cast goes through BigDecimal.valueOf(Double.toString),
     and ``repr``'s shortest round-trip string quantizes identically
-    (verified over 1M doubles spanning the engine's magnitude ranges,
-    0 mismatches; scripts in OPTIMIZATION_r12.md). The final
+    below 1e16 (verified over 1M doubles below that magnitude, 0
+    mismatches, scripts in OPTIMIZATION_r12.md; from 1e16 up JDK 17's
+    Double.toString is not always the shortest decimal, SCALE.md). The
+    pair kernel's domain (|x| < 2^52) keeps every contribution below
+    2^53. Sums and quantizing run at ``_DEC_SUM_DIGITS`` digits, so no
+    large weight rounds or raises where Spark's sum is exact. The final
     ``cast(.. as double)`` is ``float(Decimal)`` — both correctly
     rounded. The marginal is an exact decimal sum of the collected
     ``vote_sum`` values, matching ``sum(vote_sum).cast('double')``.
@@ -660,31 +889,33 @@ def _collapse_bins_local(
     zero = Decimal(0)
     rel_acc: dict[int, Decimal] = {}
     marg_acc: dict[int, Decimal] = {}
-    for f, lbl, sc, bin_sum, vote_sum in bins_rows:
-        f = int(f)
-        # Diagnosable failure instead of a bare KeyError (ADVICE r12):
-        # the Spark collapse's inner join silently DROPPED bins with no
-        # matching pair-count/prior row; that is unreachable
-        # when bins and counts derive from the same neighbor table, so
-        # a miss here means a caller passed partial inputs — name it.
-        bin_cnt_raw = pair_counts.get((lbl, sc))
-        prior = priors.get(lbl)
-        if bin_cnt_raw is None or prior is None:
-            raise ValueError(
-                f"_collapse_bins_local: bin (label={lbl!r}, "
-                f"same_class={sc!r}) has no matching "
-                f"{'pair count' if bin_cnt_raw is None else 'prior'} — "
-                "bins and pair_counts/priors must derive from the same "
-                "neighbor table"
+    with localcontext(prec=_DEC_SUM_DIGITS):
+        for f, lbl, sc, bin_sum, vote_sum in bins_rows:
+            f = int(f)
+            # Diagnosable failure instead of a bare KeyError (ADVICE
+            # r12): the Spark collapse's inner join silently DROPPED
+            # bins with no matching pair-count/prior row; that is
+            # unreachable when bins and counts derive from the same
+            # neighbor table, so a miss here means a caller passed
+            # partial inputs — name it.
+            bin_cnt_raw = pair_counts.get((lbl, sc))
+            prior = priors.get(lbl)
+            if bin_cnt_raw is None or prior is None:
+                raise ValueError(
+                    f"_collapse_bins_local: bin (label={lbl!r}, "
+                    f"same_class={sc!r}) has no matching "
+                    f"{'pair count' if bin_cnt_raw is None else 'prior'} — "
+                    "bins and pair_counts/priors must derive from the same "
+                    "neighbor table"
+                )
+            bin_cnt = float(bin_cnt_raw)
+            sign = -1.0 if sc else 1.0
+            contrib = ((sign * prior) * float(bin_sum)) / bin_cnt
+            rel_acc[f] = rel_acc.get(f, zero) + Decimal(repr(contrib)).quantize(
+                q18, rounding=ROUND_HALF_UP
             )
-        bin_cnt = float(bin_cnt_raw)
-        sign = -1.0 if sc else 1.0
-        contrib = ((sign * prior) * float(bin_sum)) / bin_cnt
-        rel_acc[f] = rel_acc.get(f, zero) + Decimal(repr(contrib)).quantize(
-            q18, rounding=ROUND_HALF_UP
-        )
-        if vote_sum is not None:
-            marg_acc[f] = marg_acc.get(f, zero) + vote_sum
+            if vote_sum is not None:
+                marg_acc[f] = marg_acc.get(f, zero) + vote_sum
     return (
         {f: float(v) for f, v in rel_acc.items()},
         {f: float(v) for f, v in marg_acc.items()},
@@ -793,32 +1024,54 @@ def _hash_batch(i: int, n_batches: int) -> Column:
 
 class _Neighbourhood(NamedTuple):
     """One batch as the engine consumes it, whatever the neighbourhood
-    source: the ``feature_bin_stats`` frame, the pair-level
-    ``(n_label, same_class, bin_cnt)`` counts, the joint COO for a
-    given top-feature scope, the caches to release after the fit, and
-    the kNN route the batch ran."""
+    source: its statistics as partial ``(f, n_label, same_class,
+    bin_sum, vote_sum, n)`` rows (see :func:`_probe_batches`), the joint
+    COO for a given top-feature scope, and the kNN route the batch ran.
+    """
 
-    bins: DataFrame
-    pair_counts: DataFrame
+    stats: DataFrame
     joint: Callable[[list[int]], DataFrame]
-    caches: tuple[DataFrame, ...]
     route: str
 
 
-def _probe_batches(
-    batch_stats: list[tuple[DataFrame, DataFrame]], priors: dict[float, float]
-) -> list[tuple[dict[int, float], dict[int, float], int]]:
-    """ONE tagged collect for the statistics of EVERY batch.
+def _stats_rows(bins: DataFrame, pair_counts: DataFrame) -> DataFrame:
+    """A ``feature_bin_stats`` frame and its ``(n_label, same_class,
+    bin_cnt)`` pair counts as :class:`_Neighbourhood` stats rows."""
+    null_dec = F.lit(None).cast(DEC)
+    return bins.select(
+        F.col("feature_idx").alias("f"),
+        "n_label",
+        "same_class",
+        "bin_sum",
+        "vote_sum",
+        F.lit(None).cast("long").alias("n"),
+    ).unionAll(
+        pair_counts.select(
+            F.lit(None).cast(bins.schema["feature_idx"].dataType).alias("f"),
+            "n_label",
+            "same_class",
+            null_dec.alias("bin_sum"),
+            null_dec.alias("vote_sum"),
+            F.col("bin_cnt").cast("long").alias("n"),
+        )
+    )
 
-    ``batch_stats`` holds each batch's ``(bins, pair_counts)`` frames
-    (see :class:`_Neighbourhood`). Per batch ``b`` the union carries the
-    ``feature_bin_stats`` aggregate (tag 0: bin_sum AND the collision
-    vote mass, so no separate collision scan; decimal addition is
-    associative, so summing the per-bin vote_sum reproduces the
-    per-feature marginal exactly) and the pair-level bin counts (tag 1),
-    keyed by ``b``. The collected
-    stats are batches x nFeat x nClasses x 2 rows; each batch's
-    relevance and marginal collapse then run on the driver via
+
+def _probe_batches(
+    batch_stats: list[DataFrame], priors: dict[float, float]
+) -> list[tuple[dict[int, float], dict[int, float], int]]:
+    """ONE collect for the statistics of EVERY batch.
+
+    ``batch_stats`` holds each batch's stats rows (see
+    :class:`_Neighbourhood`): bin rows ``(f, n_label, same_class,
+    bin_sum, vote_sum)`` — the relevance sums AND the collision vote
+    mass, so no separate collision scan — and pair-count rows
+    ``(n_label, same_class, n)`` with a null ``f``. A key may arrive as
+    several partial rows (one per kernel task); the driver sums them
+    exactly, which gives the Spark aggregate's decimal bit for bit
+    (decimal addition is associative). The collected stats are about
+    tasks x nFeat x nClasses x 2 rows per batch; each batch's relevance
+    and marginal collapse then run on the driver via
     :func:`_collapse_bins_local` (bit-exact, see its docstring).
 
     Returns ``(relevance, marginal, n_pairs)`` per batch, in batch
@@ -826,45 +1079,39 @@ def _probe_batches(
     bin counts sum to the batch's pair total (the classCounter total,
     ReliefFRSelector.scala:469-470).
     """
-    null_dec = F.lit(None).cast(DEC)
-    legs = []
-    for b, (bins, pair_counts) in enumerate(batch_stats):
-        legs.append(
-            bins.select(
-                F.lit(b).alias("b"),
-                F.lit(0).alias("tag"),
-                F.col("feature_idx").cast("long").alias("f"),
-                F.col("n_label").alias("lbl"),
-                F.col("same_class").alias("sc"),
-                F.col("bin_sum").alias("d1"),
-                F.col("vote_sum").alias("d2"),
-                F.lit(None).cast("long").alias("c1"),
-            )
+    legs = [
+        st.select(
+            F.lit(b).alias("b"),
+            F.col("f").cast("long").alias("f"),
+            "n_label",
+            "same_class",
+            "bin_sum",
+            "vote_sum",
+            "n",
         )
-        legs.append(
-            pair_counts.select(
-                F.lit(b).alias("b"),
-                F.lit(1).alias("tag"),
-                F.lit(None).cast("long").alias("f"),
-                F.col("n_label").alias("lbl"),
-                F.col("same_class").alias("sc"),
-                null_dec.alias("d1"),
-                null_dec.alias("d2"),
-                F.col("bin_cnt").cast("long").alias("c1"),
-            )
-        )
-    by_batch: list[list] = [[] for _ in batch_stats]
-    for r in reduce(DataFrame.unionAll, legs).collect():
-        by_batch[r["b"]].append(r)
+        for b, st in enumerate(batch_stats)
+    ]
+    bins: list[dict] = [{} for _ in batch_stats]
+    counts: list[dict] = [{} for _ in batch_stats]
+    # wide enough that no partial sum of decimal(38,18) values rounds
+    with localcontext(prec=_DEC_SUM_DIGITS):
+        for b, f, lbl, sc, bin_sum, vote_sum, n in reduce(DataFrame.unionAll, legs).collect():
+            if f is None:
+                counts[b][(lbl, sc)] = counts[b].get((lbl, sc), 0) + n
+                continue
+            acc = bins[b].get((f, lbl, sc))
+            if acc is None:
+                bins[b][(f, lbl, sc)] = [bin_sum, vote_sum]
+            else:
+                acc[0] += bin_sum
+                if vote_sum is not None:
+                    acc[1] = vote_sum if acc[1] is None else acc[1] + vote_sum
     out = []
-    for rows in by_batch:
-        pc = {(r["lbl"], r["sc"]): int(r["c1"]) for r in rows if r["tag"] == 1}
+    for b_bins, pc_b in zip(bins, counts):
         rel_b, marg_b = _collapse_bins_local(
-            ((r["f"], r["lbl"], r["sc"], r["d1"], r["d2"]) for r in rows if r["tag"] == 0),
-            pc,
-            priors,
+            ((f, lbl, sc, bs, vs) for (f, lbl, sc), (bs, vs) in b_bins.items()), pc_b, priors
         )
-        out.append((rel_b, marg_b, sum(pc.values())))
+        out.append((rel_b, marg_b, sum(pc_b.values())))
     return out
 
 
@@ -900,7 +1147,7 @@ def _finalize_relevance(
 
 def _run_batches(
     batches: Iterable,
-    neighbourhood: Callable[[object], _Neighbourhood],
+    neighbourhood: Callable[[object, Callable], _Neighbourhood],
     *,
     plan: _FitPlan,
     n_features: int,
@@ -915,7 +1162,7 @@ def _run_batches(
     differs only in its ``neighbourhood`` source. Two phases, each one
     action, however many batches:
 
-    1. Every batch's neighbourhood is built, and ONE tagged collect
+    1. Every batch's neighbourhood is built, and ONE collect
        (:func:`_probe_batches`) returns every batch's bin statistics and
        pair counts. The driver collapses each batch and sums them in
        batch order, then replays the top-N feedback
@@ -923,14 +1170,15 @@ def _run_batches(
        top-N of the last non-empty batch before it. The scope only
        steers the joint, so nothing in phase 1 waits for it.
     2. The union of every batch's scoped joint goes straight into
-       :func:`_mi_redundancy_coo`'s one collect; then every cache is
-       released.
+       :func:`_mi_redundancy_coo`'s one collect.
 
     Then min-max + std ranking and greedy selection, on the driver. The
     result records batch 0's kNN route: batches share the data regime,
-    so it is the fit's. Every batch's caches are alive together until
-    phase 2 ends: the footprint of a single-batch fit on the same
-    sample, which the broadcast guard already admits.
+    so it is the fit's. ``neighbourhood(batch, hold)`` passes every
+    cache and broadcast it makes through ``hold``; all of them are alive
+    together until phase 2 ends (the footprint of a single-batch fit on
+    the same sample, which the broadcast guard already admits) and are
+    released when the engine returns or raises.
 
     Batch 0's joint scope is empty, as in the reference, and jointTotal
     omits that batch's share of the pairs (computeRedudancy,
@@ -938,68 +1186,80 @@ def _run_batches(
     joint of a single pass to the FINAL std ranking, over all its
     pairs — the single-pass sparse contract.
     """
-    nbs = [neighbourhood(batch) for batch in batches]
-    stats = _probe_batches([(nb.bins, nb.pair_counts) for nb in nbs], plan.priors)
-    mark("batch stats probe")
-    top_features: list[int] = []
-    scopes: list[list[int]] = []
-    rel_sum: dict[int, float] = {}
-    marg_sum: dict[int, float] = {}
-    n_pairs = 0
-    for rel_b, marg_b, n in stats:
-        scopes.append(top_features)
-        n_pairs += n
-        # Cross-batch sums on the driver, added in batch order.
-        # Bit-identity to the old Spark union-reduce holds for the
-        # <=2-batch configurations every gate and test pins (a
-        # two-operand IEEE add is commutative); with 3+ batches the
-        # fixed batch order may differ at ulp level from the old plan's
-        # shuffle order — which was itself nondeterministic (ADVICE r12).
-        for f, v in rel_b.items():
-            rel_sum[f] = rel_sum.get(f, 0.0) + v
-        if redundancy_removal:
-            for f, v in marg_b.items():
-                marg_sum[f] = marg_sum.get(f, 0.0) + v
-        # batch top-N steers the next batch's joint-stat scope
-        # (ReliefFRSelector.scala:281-283). The reference min-max
-        # normalizes before takeOrdered (:281, 328-332), but min-max is
-        # strictly monotone, so ranking the RAW relevance selects the
-        # identical feature set.
-        # Sort key mirrors orderBy(desc(relevance), asc(feature_idx)).
-        top_b = [
-            f for f, _ in sorted(rel_b.items(), key=lambda kv: (-kv[1], kv[0]))[: plan.lower_feat]
-        ]
-        if top_b:
-            # empty batches keep the previous ranking — the reference
-            # only replaces topFeatures when results are non-empty
-            # (ReliefFRSelector.scala:279-283)
-            top_features = top_b
+    held: list = []
 
-    relevance, std_sel = _finalize_relevance(rel_sum, n_features, num_top_features)
-    mark("final weights")
-    red_coo: dict[tuple[int, int], float] = {}
-    if redundancy_removal:
-        if final_scope:
-            scopes = [std_sel]
-        joint_share = 1.0 if final_scope else 1.0 - estimation_ratio * (1.0 / len(nbs))
-        joint_total = n_pairs * joint_share
-        if n_pairs > 0 and joint_total > 0:
-            joint_all = (
-                reduce(DataFrame.unionByName, [nb.joint(s) for nb, s in zip(nbs, scopes)])
-                .groupBy("f1", "f2")
-                .agg(F.sum("joint").alias("joint"))
-            )
-            marg_all = joint_all.sparkSession.createDataFrame(
-                [(int(f), float(v)) for f, v in sorted(marg_sum.items())],
-                "feature_idx long, marginal double",
-            )
-            red_coo = _mi_redundancy_coo(joint_all, marg_all, float(n_pairs), joint_total)
-    # Everything is driver-side from here: release the caches so a
-    # long-lived session doesn't accumulate dead entries (each live
-    # entry also taxes every later cache lookup).
-    for nb in nbs:
-        for cached in nb.caches:
-            cached.unpersist()
+    def hold(cache):
+        held.append(cache)
+        return cache
+
+    try:
+        nbs = [neighbourhood(batch, hold) for batch in batches]
+        stats = _probe_batches([nb.stats for nb in nbs], plan.priors)
+        mark("batch stats probe")
+        top_features: list[int] = []
+        scopes: list[list[int]] = []
+        rel_sum: dict[int, float] = {}
+        marg_sum: dict[int, float] = {}
+        n_pairs = 0
+        for rel_b, marg_b, n in stats:
+            scopes.append(top_features)
+            n_pairs += n
+            # Cross-batch sums on the driver, added in batch order.
+            # Bit-identity to the old Spark union-reduce holds for the
+            # <=2-batch configurations every gate and test pins (a
+            # two-operand IEEE add is commutative); with 3+ batches the
+            # fixed batch order may differ at ulp level from the old
+            # plan's shuffle order — which was itself nondeterministic
+            # (ADVICE r12).
+            for f, v in rel_b.items():
+                rel_sum[f] = rel_sum.get(f, 0.0) + v
+            if redundancy_removal:
+                for f, v in marg_b.items():
+                    marg_sum[f] = marg_sum.get(f, 0.0) + v
+            # batch top-N steers the next batch's joint-stat scope
+            # (ReliefFRSelector.scala:281-283). The reference min-max
+            # normalizes before takeOrdered (:281, 328-332), but min-max
+            # is strictly monotone, so ranking the RAW relevance selects
+            # the identical feature set.
+            # Sort key mirrors orderBy(desc(relevance), asc(feature_idx)).
+            top_b = [
+                f
+                for f, _ in sorted(rel_b.items(), key=lambda kv: (-kv[1], kv[0]))[
+                    : plan.lower_feat
+                ]
+            ]
+            if top_b:
+                # empty batches keep the previous ranking — the reference
+                # only replaces topFeatures when results are non-empty
+                # (ReliefFRSelector.scala:279-283)
+                top_features = top_b
+
+        relevance, std_sel = _finalize_relevance(rel_sum, n_features, num_top_features)
+        mark("final weights")
+        red_coo: dict[tuple[int, int], float] = {}
+        if redundancy_removal:
+            if final_scope:
+                scopes = [std_sel]
+            joint_share = 1.0 if final_scope else 1.0 - estimation_ratio * (1.0 / len(nbs))
+            joint_total = n_pairs * joint_share
+            if n_pairs > 0 and joint_total > 0:
+                joint_all = (
+                    reduce(DataFrame.unionByName, [nb.joint(s) for nb, s in zip(nbs, scopes)])
+                    .groupBy("f1", "f2")
+                    .agg(F.sum("joint").alias("joint"))
+                )
+                marg_all = joint_all.sparkSession.createDataFrame(
+                    [(int(f), float(v)) for f, v in sorted(marg_sum.items())],
+                    "feature_idx long, marginal double",
+                )
+                red_coo = _mi_redundancy_coo(joint_all, marg_all, float(n_pairs), joint_total)
+    finally:
+        # Everything is driver-side from here: release the caches so a
+        # long-lived session doesn't accumulate dead entries (each live
+        # entry also taxes every later cache lookup), also when a batch
+        # fails.
+        for cache in held:
+            cache.unpersist()
     mark("redundancy mi collect")
 
     red_sel = (
@@ -1046,18 +1306,26 @@ def fit_relief(
 
     sample -> randomSplit/hash batches -> the shared two-phase batch
     engine (:func:`_run_batches`) over the dense neighbourhood source.
-    Per batch, one pair builder serves every kNN tier
+    Per batch, one pair kernel serves every kNN tier
     (:func:`knn.self_knn_pairs`): it fetches the batch once as checked
-    Arrow (null ids, null or ragged arrays, null elements and repeated
-    ids fail by name), broadcasts it and emits the pair rows from the
-    broadcast arrays. On the exact tiers (``numpy``, ``numpy-gemm``)
-    each slice task finds its queries' k nearest neighbours in the
-    whole batch; on ``sql`` and ``lsh`` the tasks take the id pairs of
-    a :func:`knn_join` over the cached batch. The compact pair table is
-    cached. Then ONE stats probe covers every batch, the driver sums
+    Arrow (null ids, null or ragged arrays, null elements, repeated ids
+    and values outside the exact domain — NaN, +-inf, |x| >= 2^52 — fail
+    by name), broadcasts it, and its tasks reduce their pairs on the
+    spot (:func:`_pair_stats`): per (feature, n_label, same_class) the
+    exact decimal(38,18) partials of ``feature_bin_stats``' bin_sum and
+    vote_sum, and the per-bin pair counts, as the reference accumulates
+    in its partition pass (ReliefFRSelector.scala:402-475). No pair
+    rows with vectors are built, exploded or hash-aggregated. On the
+    exact tiers (``numpy``, ``numpy-gemm``) each slice task finds its
+    queries' k nearest neighbours in the whole batch; on ``sql`` and
+    ``lsh`` the tasks take the id pairs of a :func:`knn_join` over the
+    cached batch. With redundancy removal the kernel also emits each
+    pair's (query row, neighbour row), cached. Then ONE stats collect
+    covers every batch and the driver sums the partials exactly, sums
     the batches and replays the top-N feedback into each batch's joint
-    scope, and ONE action unions the scoped joints into the MI ->
-    min-max -> greedy selection.
+    scope; ONE action unions the scoped joints — each a kernel over the
+    cached row pairs and the same broadcast (:func:`_kernel_joint`) —
+    into the MI -> min-max -> greedy selection.
 
     DELIBERATE DEVIATION (SURVEY §8.5): per batch this engine scans
     the BATCH for neighbors, while the reference scans the FULL
@@ -1177,20 +1445,20 @@ def fit_relief(
         # production fit would pick.
         batches = [sample.filter(_hash_batch(i, n_batches)) for i in range(n_batches)]
 
-    # Pair-cache partition COUNT is volume-derived (r12): its widest
-    # consumer is the joint combination explode (~n_pairs x n_feat x
-    # (|top|+1) rows), so size for ~256k exploded rows per task, capped
-    # at defaultParallelism. Sums downstream are decimal/integer
-    # (order-independent), so the layout changes cost, never values.
+    # Kernel partition COUNT is volume-derived (r12): its widest work is
+    # the joint kernel's combinations (~n_pairs x n_feat x (|top|+1)),
+    # so size for ~256k of them per task, capped at defaultParallelism.
+    # Sums downstream are exact decimal/integer (order-independent), so
+    # the layout changes cost, never values.
     top_mult = min(lower_feat, n_feat) if redundancy_removal else 0
     pair_vol = max(batch_rows, 1) * k * n_feat * (1 + top_mult)
     parallelism = spark.sparkContext.defaultParallelism
     pair_parts = max(1, min(parallelism, -(-pair_vol // 262144)))
     continuous = not discrete_data
-    # Every tier's pairs come from knn.self_knn_pairs: one checked Arrow
-    # fetch of the batch, broadcast, and tasks that emit the pair rows
-    # from it. The exact tiers find the neighbours in those tasks; the
-    # other tiers hand it knn_join's id pairs.
+    # Every tier's statistics come from knn.self_knn_pairs: one checked
+    # Arrow fetch of the batch, broadcast, and tasks that reduce their
+    # pairs to exact partial sums. The exact tiers find the neighbours
+    # in those tasks; the other tiers hand it knn_join's id pairs.
     exact_tier = knn_strategy in ("numpy", "numpy-gemm")
     # The kernel's slices are also its kNN tasks, whose work grows with
     # the batch squared: give them at least the ~256-rows-per-task
@@ -1202,15 +1470,18 @@ def fit_relief(
     # (VERDICT r6 #2).
     sample_parts = None if exact_tier else sample.rdd.getNumPartitions()
 
-    def neighbourhood(batch: DataFrame) -> _Neighbourhood:
+    threshold = 6.0 * (1.0 - lower_distance_threshold) if continuous else 0.0
+    stats_reducer = _pair_stats(continuous, threshold, keep_pairs=redundancy_removal)
+
+    def neighbourhood(batch: DataFrame, hold: Callable) -> _Neighbourhood:
         # No emptiness probe: an empty batch flows through as empty
-        # DataFrames everywhere below (empty kNN -> empty pairs ->
-        # empty aggregates -> empty top-N, which keeps the previous
-        # ranking) — one fewer job per batch.
+        # DataFrames everywhere below (empty kNN -> no stats rows ->
+        # empty top-N, which keeps the previous ranking) — one fewer
+        # job per batch.
         neighbors = None
         if not exact_tier:
             # cached so the fetch and knn_join read the same rows
-            batch = batch.cache()
+            batch = hold(batch.cache())
             # num_instances/num_queries: sizing estimates that save a
             # count() job and let lsh drop its probe-table broadcast
             # hint at escalation size. Multiprobe: single-probe's ~4-27%
@@ -1223,31 +1494,21 @@ def fit_relief(
                 scan_partitions=sample_parts, lsh_tables=lsh_tables,
                 lsh_multiprobe=True, lsh_probe_radius=lsh_probe_radius,
             )
-        # No materializing count: the stats probe is the pair cache's
-        # first consumer, and block-level loading locks let its two legs
-        # compute each cached partition once (as in relief_sparse).
-        pairs = self_knn_pairs(
-            batch, k, slices=slices, exclude_self=exclude_self,
-            gemm=knn_strategy == "numpy-gemm", neighbors=neighbors,
-        ).cache()
+        rows, bc = self_knn_pairs(
+            batch, k, stats_reducer, _PAIR_STATS_SCHEMA, slices=slices,
+            exclude_self=exclude_self, gemm=knn_strategy == "numpy-gemm",
+            neighbors=neighbors,
+        )
+        hold(bc)
+        if redundancy_removal:
+            # the stats probe fills the cache; the joint kernel then
+            # reads only its (qi, ni) rows
+            rows = hold(rows.cache())
         _mark("batch pairs")
+        pairs = rows.filter(F.col("qi").isNotNull()).select("qi", "ni")
         return _Neighbourhood(
-            bins=feature_bin_stats(
-                explode_pairs(pairs), continuous, lower_distance_threshold
-            ),
-            # pair-level bin counts — no distinct over the exploded table
-            pair_counts=pairs.groupBy("n_label", "same_class").agg(
-                F.count("*").alias("bin_cnt")
-            ),
-            # joint stats straight from the cached compact pair table —
-            # no explode-then-collect_list round trip (decimal-identical,
-            # see joint_counts_from_pairs)
-            joint=lambda top: joint_counts_from_pairs(
-                pairs, top, continuous, lower_distance_threshold, n_feat
-            ),
-            # the exact tiers never cache the batch: its unpersist is a
-            # no-op there
-            caches=(pairs, batch),
+            stats=rows.filter(F.col("qi").isNull()),
+            joint=lambda top: _kernel_joint(pairs, bc, top, continuous, threshold),
             route=knn_strategy,
         )
 

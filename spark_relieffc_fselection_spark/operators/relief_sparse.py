@@ -33,7 +33,7 @@ can be millions wide.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import NamedTuple
 
 import numpy as np
@@ -49,6 +49,7 @@ from spark_relieffc_fselection_spark.operators.relief import (
     _Neighbourhood,
     _plan_fit,
     _run_batches,
+    _stats_rows,
     collision_table,
     feature_bin_stats,
     joint_counts,
@@ -477,17 +478,16 @@ def fit_relief_sparse(
     # partition-sizing estimate only: hash batches split evenly
     b_n = max(1, n_elems // n_batches)
 
-    def neighbourhood(b: int) -> _Neighbourhood:
+    def neighbourhood(b: int, hold: Callable) -> _Neighbourhood:
         if n_batches == 1:
-            b_long, b_labels, owned = long_df, labels, ()
+            b_long, b_labels = long_df, labels
         else:
             in_batch = _hash_batch(b, n_batches)
-            b_labels = labels.filter(in_batch).cache()
-            b_long = long_df.filter(in_batch).cache()
-            owned = (b_long, b_labels)
-        neigh = sparse_knn_join(
-            b_long, b_labels, b_labels.select("id"), k, num_corpus=b_n
-        ).cache()
+            b_labels = hold(labels.filter(in_batch).cache())
+            b_long = hold(long_df.filter(in_batch).cache())
+        neigh = hold(
+            sparse_knn_join(b_long, b_labels, b_labels.select("id"), k, num_corpus=b_n).cache()
+        )
         # No materializing count(): the engine's stats probe is the
         # first consumer of both caches, and block-level loading locks
         # compute each cached partition once.
@@ -496,14 +496,16 @@ def fit_relief_sparse(
         # the per-pair active-feature union. Its consumers are narrow
         # map-side reads, where an under-estimate costs only a few
         # oversized cheap tasks; at scale the coalesce is a no-op.
-        lp = (
+        lp = hold(
             sparse_pair_feature_table(b_long, b_labels, neigh)
             .coalesce(max(1, -(-b_n * k * 4 // _ROWS_PER_TASK)))
             .cache()
         )
         return _Neighbourhood(
-            bins=feature_bin_stats(lp, continuous, lower_distance_threshold),
-            pair_counts=_pair_bin_counts(neigh, b_labels),
+            stats=_stats_rows(
+                feature_bin_stats(lp, continuous, lower_distance_threshold),
+                _pair_bin_counts(neigh, b_labels),
+            ),
             # self-join plan: sparse inputs can be millions-wide, keep
             # the O(1)-memory joint
             joint=lambda top: joint_counts(
@@ -511,7 +513,6 @@ def fit_relief_sparse(
                 top,
                 continuous,
             ),
-            caches=(lp, neigh, *owned),
             route=SPARSE_ROUTE,
         )
 

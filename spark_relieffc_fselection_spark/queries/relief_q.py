@@ -783,7 +783,7 @@ SPARSE_QUERY_MOD = 10  # deterministic 1-in-10 query sample (estimationRatio ana
         "deterministic, so the whole dataflow is SQL-oracle-able.",
 )
 def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_relieffc_fselection_spark.operators.relief import _probe_batches
+    from spark_relieffc_fselection_spark.operators.relief import _probe_batches, _stats_rows
     from spark_relieffc_fselection_spark.operators.relief_sparse import (
         _pair_bin_counts,
         sparse_knn_join,
@@ -823,7 +823,7 @@ def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sparse fit's own stats probe and driver collapse, one action
     [(relevance, _, _)] = _probe_batches(
         [
-            (
+            _stats_rows(
                 feature_bin_stats(
                     sparse_pair_feature_table(long_df, labels, neigh),
                     continuous=True,

@@ -633,3 +633,36 @@ def test_transform_slices_kddb_width_sparse_vectors(spark):
         assert "vector_to_array" not in plan, plan
     assert out[1 << 24] == out[32]
     assert any(any(v != 0.0 for v in row) for row in out[32][1])
+
+
+@pytest.mark.parametrize(
+    "route, match",
+    [
+        # the dense route's columns keep the user's names
+        ("dense", r"fit_relief: 1 null 'y' value\(s\)"),
+        ("sparse", r"fit_relief_sparse: 1 null 'label' value\(s\)"),
+    ],
+)
+def test_failed_fit_leaves_nothing_cached(spark, route, match):
+    """A fit that raises releases what it cached: the Estimator's own
+    frame (``prepared`` on the dense route, ``base`` on the sparse
+    one) and every batch cache of the engine. Seen before with one null
+    label: the frame stayed in the session's cache manager."""
+    rows = [
+        (Vectors.dense([float(i % 3), float(i % 5), 1.0]), float(i % 2)) for i in range(30)
+    ]
+    rows.append((Vectors.dense([1.0, 2.0, 3.0]), None))
+    if route == "sparse":
+        rows = [(Vectors.sparse(3, {0: v[0] + 1.0, 2: v[2]}), y) for v, y in rows]
+    df = spark.createDataFrame(rows, ["vec", "y"])
+    # caches are transparent to results: empty the manager so the check
+    # below sees only what this fit leaves behind
+    spark.catalog.clearCache()
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    assert manager.isEmpty()
+    with pytest.raises(ValueError, match=match):
+        ReliefFSelector(
+            inputCol="vec", labelCol="y", numTopFeatures=2, numNeighbors=2,
+            estimationRatio=1.0, batchSize=1.0,
+        ).fit(df)
+    assert manager.isEmpty()

@@ -6,7 +6,16 @@ from pyspark.sql import functions as F
 
 from spark_relieffc_fselection_spark.operators import knn as knn_mod
 from spark_relieffc_fselection_spark.operators.knn import knn_join, knn_scan, self_knn_pairs
-from spark_relieffc_fselection_spark.operators.relief import pair_table
+from spark_relieffc_fselection_spark.operators.relief import (
+    _JOINT_COMBOS_MAX_FEATURES,
+    _PAIR_STATS_SCHEMA,
+    _kernel_joint,
+    _pair_stats,
+    explode_pairs,
+    feature_bin_stats,
+    joint_counts_from_pairs,
+    pair_table,
+)
 from tests.oracle_relief import diffcube_scan_oracle, knn_oracle
 
 
@@ -390,8 +399,8 @@ def test_knn_negative_ids_agree_across_strategies(spark):
 
 def _pair_fixture(kind: str) -> tuple[np.ndarray, np.ndarray]:
     """(ids, features) of one batch for the pair-kernel property test.
-    Every fixture but 'continuous' is an integer grid, where numpy-gemm
-    distances are exact."""
+    Every fixture but 'continuous' and the decimal-boundary ones is an
+    integer grid, where numpy-gemm distances are exact."""
     rng = np.random.default_rng(zlib.crc32(kind.encode()))
     if kind == "ties":  # few coordinate values: most distances tie
         return np.arange(40), rng.integers(0, 3, size=(40, 3)).astype(float)
@@ -404,56 +413,139 @@ def _pair_fixture(kind: str) -> tuple[np.ndarray, np.ndarray]:
         return np.array([9, 2, 5, 0, 7]), rng.integers(0, 4, size=(5, 3)).astype(float)
     if kind == "empty":
         return np.arange(0), np.zeros((0, 3))
+    if kind in ("halfway", "tiny"):
+        # 'halfway': differences on the 18th place's half-way points and
+        # their neighbours, where Double.toString's decimal rounds
+        # half-up but the binary value may lie below the tie; 'tiny':
+        # below 1e-20 and subnormal, where every cast is 0. Column 0's
+        # powers of two give every pair its own distance: a tie of two
+        # square roots would let the window rank and the kernel's scan
+        # pick different neighbours.
+        vals = (
+            [5e-19, 1.5e-18, 2.5e-18, 0.1 + 0.2, 0.3, 0.1, 4.5e-18, 1.05e-17, 7e-3, 5e-3, 0.0]
+            if kind == "halfway"
+            else [1e-21, 3e-25, 5e-324, 2.2250738585072014e-308, 1e-300, 0.0]
+        )
+        X = rng.choice(vals, size=(30, 4)) * rng.choice([-1.0, 1.0], size=(30, 4))
+        X[:, 0] = 2.0 ** rng.permutation(30)
+        return np.arange(30), X
+    if kind == "wide":  # past joint_counts_from_pairs' combination width
+        X = rng.integers(0, 2, size=(5, _JOINT_COMBOS_MAX_FEATURES + 3)).astype(float)
+        return np.arange(5), X
     X = rng.normal(size=(50, 6)).round(3) * (10.0 ** rng.integers(-3, 4, size=(1, 6)))
     return np.arange(50), X  # 'continuous'
 
 
+def _kernel_stats(rows) -> tuple[dict, dict]:
+    """The pair kernel's partial stats rows summed per key: ``{(f,
+    n_label, same_class): (bin_sum, vote_sum)}`` and ``{(n_label,
+    same_class): pairs}``."""
+    from decimal import localcontext
+
+    bins: dict = {}
+    counts: dict = {}
+    with localcontext(prec=80):
+        for r in rows:
+            if r["qi"] is not None:
+                continue
+            if r["f"] is None:
+                key = (r["n_label"], r["same_class"])
+                counts[key] = counts.get(key, 0) + r["n"]
+                continue
+            key = (r["f"], r["n_label"], r["same_class"])
+            b, v = bins.get(key, (0, 0))
+            bins[key] = (b + r["bin_sum"], v + r["vote_sum"])
+    return bins, counts
+
+
 @pytest.mark.parametrize("exclude_self", [True, False])
 @pytest.mark.parametrize(
-    "kind", ["ties", "identical_rows", "negative_ids", "few_rows", "empty", "continuous"]
+    "kind",
+    [
+        "ties", "identical_rows", "negative_ids", "few_rows", "empty", "continuous",
+        "halfway", "tiny", "wide",
+    ],
 )
 @pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm", "sql", "lsh"])
 def test_self_knn_pairs_equal_pair_table_of_knn_join(spark, strategy, kind, exclude_self):
-    """The fit's one pair builder emits pair rows from the broadcast
-    batch. Its rows must equal ``pair_table(batch, knn_join(batch,
-    batch, k))``'s, whatever the slice count: on distance ties,
-    identical rows under distinct ids, negative ids, k >= rows - 1,
-    with and without self pairs, and on an empty batch. The exact tiers
-    find the neighbours in the kernel; sql and lsh hand it the
-    ``knn_join`` table itself. numpy-gemm is compared on integer grids
-    only: elsewhere its last bits follow the matrix shapes, so a
+    """The fit's pair kernel reduces its pairs to exact partial
+    statistics in the tasks that find them. Summed per key, they must
+    equal, as decimals, the Spark plan over ``pair_table(batch,
+    knn_join(batch, batch, k))``: ``feature_bin_stats`` of its exploded
+    rows, its per-(n_label, same_class) pair counts and, over the cached
+    (query row, neighbour row) pairs, ``joint_counts_from_pairs`` for a
+    scope, continuous and discrete, whatever the slice count. Fixtures:
+    distance ties, identical rows under distinct ids, negative ids, k >=
+    rows - 1, with and without self pairs, an empty batch, differences
+    on the 18th place's half-way points, values below 1e-20 and
+    subnormals, and a width past ``_JOINT_COMBOS_MAX_FEATURES``. The
+    exact tiers find the neighbours in the kernel; sql and lsh hand it
+    the ``knn_join`` table itself. numpy-gemm is compared on integer
+    grids only: elsewhere its last bits follow the matrix shapes, so a
     different slicing may rank near-ties differently."""
-    if strategy == "numpy-gemm" and kind == "continuous":
+    if strategy == "numpy-gemm" and kind in ("continuous", "halfway", "tiny"):
         pytest.skip("numpy-gemm distances are exact on integer grids only")
+    if kind == "wide" and strategy != "numpy":
+        pytest.skip("the width only matters to the statistics, one tier covers it")
     ids, X = _pair_fixture(kind)
     labels = (np.arange(len(ids)) % 3).astype(float)
     batch = spark.createDataFrame(
         [(int(i), x.tolist(), float(lbl)) for i, x, lbl in zip(ids, X, labels)],
         "id long, features array<double>, label double",
     )
-    k = 6
-    cols = ["query_id", "neighbor_id", "n_label", "same_class", "q_features", "n_features"]
+    k, d = 6, X.shape[1]
     neigh = knn_join(batch, batch, k, exclude_self=exclude_self, strategy=strategy)
-    want = sorted(map(tuple, pair_table(batch, neigh).select(*cols).collect()))
+    pairs = pair_table(batch, neigh).cache()
+    want_counts = {
+        (r["n_label"], r["same_class"]): r["n"]
+        for r in pairs.groupBy("n_label", "same_class").agg(F.count("*").alias("n")).collect()
+    }
     if kind == "few_rows" and strategy != "lsh":
-        assert len(want) == len(ids) * (len(ids) - (1 if exclude_self else 0))
-    for slices in (1, 3):
-        got = self_knn_pairs(
-            batch, k, slices=slices, exclude_self=exclude_self,
-            gemm=strategy == "numpy-gemm",
+        assert sum(want_counts.values()) == len(ids) * (len(ids) - (1 if exclude_self else 0))
+    top = list(range(0, min(d, 6), 2))
+    for continuous, slices in ((True, 3), (False, 1)):
+        ldt = 0.8
+        threshold = 6.0 * (1.0 - ldt) if continuous else 0.0
+        want_bins = {
+            (r["feature_idx"], r["n_label"], r["same_class"]): (r["bin_sum"], r["vote_sum"])
+            for r in feature_bin_stats(explode_pairs(pairs), continuous, ldt).collect()
+        }
+        want_joint = {
+            (r["f1"], r["f2"]): r["joint"]
+            for r in joint_counts_from_pairs(pairs, top, continuous, ldt, d).collect()
+        }
+        rows, bc = self_knn_pairs(
+            batch, k, _pair_stats(continuous, threshold, keep_pairs=True), _PAIR_STATS_SCHEMA,
+            slices=slices, exclude_self=exclude_self, gemm=strategy == "numpy-gemm",
             neighbors=neigh if strategy in ("sql", "lsh") else None,
         )
-        assert got.columns == cols
-        assert sorted(map(tuple, got.collect())) == want, slices
+        rows = rows.cache()
+        got_bins, got_counts = _kernel_stats(rows.collect())
+        pair_rows = rows.filter(F.col("qi").isNotNull()).select("qi", "ni")
+        got_joint = {
+            (r["f1"], r["f2"]): r["joint"]
+            for r in _kernel_joint(pair_rows, bc, top, continuous, threshold).collect()
+        }
+        rows.unpersist()
+        bc.unpersist()
+        case = (continuous, slices)
+        assert got_counts == want_counts, case
+        assert got_bins == want_bins, case
+        assert got_joint == want_joint, case
+    pairs.unpersist()
 
 
 def test_self_knn_pairs_names_a_neighbour_id_missing_from_the_batch(spark):
     """A neighbour table naming an id the broadcast batch does not hold
-    fails by name instead of emitting another row's vectors."""
+    fails by name instead of reducing another row's vectors."""
     batch = spark.createDataFrame(
         [(i, [float(i), 1.0], float(i % 2)) for i in (2, 4, 6)],
         "id long, features array<double>, label double",
     )
     neigh = spark.createDataFrame([(2, 4), (4, 5), (6, 999)], "query_id long, neighbor_id long")
+    rows, _ = self_knn_pairs(
+        batch, 1, _pair_stats(True, 1.2, keep_pairs=False), _PAIR_STATS_SCHEMA,
+        slices=1, neighbors=neigh,
+    )
     with pytest.raises(Exception, match=r"2 neighbour-table id\(s\) not in the fit batch: 5, 999"):
-        self_knn_pairs(batch, 1, slices=1, neighbors=neigh).collect()
+        rows.collect()

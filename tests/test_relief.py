@@ -435,11 +435,13 @@ def test_decimal_cast_replay_parity_probe(spark):
 
 
 def test_dense_numpy_fit_job_count_pinned(spark, labeled):
-    """A single-batch dense fit with the exact numpy kNN issues 6 Spark
+    """A single-batch dense fit with the exact numpy kNN issues 4 Spark
     jobs, counted by the status tracker under a dedicated job group: the
-    profiling collect, the one Arrow fetch of the batch, and the stats
-    probe, whose first pass also fills the pair cache the kernel emits
-    (no rank shuffle, no pair joins, no materializing count)."""
+    profiling collect (its AQE stage job and the final one), the one
+    Arrow fetch of the batch, and the stats collect, one job over the
+    pair kernel's tasks: the statistics are reduced where the
+    neighbours are found (no rank shuffle, no pair joins, no exploded
+    pair table, no hash aggregate)."""
     df, _, _ = labeled
     sc = spark.sparkContext
     group = "test-dense-numpy-fit-jobs"
@@ -458,7 +460,7 @@ def test_dense_numpy_fit_job_count_pinned(spark, labeled):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
 
 
 def _hash_batched_fit_jobs(spark, df, strategy: str) -> int:
@@ -487,20 +489,25 @@ def _hash_batched_fit_jobs(spark, df, strategy: str) -> int:
 
 def test_dense_hash_batched_fit_job_count_pinned(spark, labeled):
     """The two-batch hash-batched dense fit with redundancy removal
-    issues 13 Spark jobs (same job-group count as the single-batch pin
-    above): the profiling collect, one Arrow fetch per batch, ONE stats
-    probe for both batches and ONE joint/MI collect, whose rows become
-    the redundancy COO on the driver. A change to the batch engine that
-    adds or drops an action shows here."""
-    assert _hash_batched_fit_jobs(spark, labeled[0], "numpy") == 13
+    issues 9 Spark jobs (same job-group count as the single-batch pin
+    above): the profiling collect (2 jobs), one Arrow fetch per batch,
+    ONE stats collect for both batches (one job: it also fills the
+    kernels' row-pair caches) and ONE joint/MI collect (4 jobs: the AQE
+    stage jobs of the joint kernels' partial sums, the mirror and the
+    marginal joins), whose rows become the redundancy COO on the
+    driver. A change to the batch engine that adds or drops an action
+    shows here."""
+    assert _hash_batched_fit_jobs(spark, labeled[0], "numpy") == 9
 
 
 def test_dense_sql_hash_batched_fit_job_count_pinned(spark, labeled):
     """The same fit on the sql tier runs the same actions through the
-    same pair builder (the batch cache fills under the batch's Arrow
-    fetch); the extra jobs are the AQE stage jobs of its kNN window and
-    joins under the stats probe."""
-    assert _hash_batched_fit_jobs(spark, labeled[0], "sql") == 19
+    same pair kernel (the batch cache fills under the batch's Arrow
+    fetch): 17 jobs. The extra ones are the AQE stage jobs of its kNN
+    cross join and window and of the kernel's id repartition under the
+    stats collect (6 jobs instead of 1), and one more under the MI
+    collect (5)."""
+    assert _hash_batched_fit_jobs(spark, labeled[0], "sql") == 17
 
 
 def _fit_jobs(spark, group: str, fit) -> list[list[str]]:
@@ -568,6 +575,115 @@ def test_fit_rejects_malformed_rows_on_both_exact_tiers(spark, strategy, bad_row
             df, num_top_features=2, num_neighbors=2, estimation_ratio=1.0,
             batch_size=1.0, knn_strategy=strategy,
         )
+
+
+@pytest.mark.parametrize("strategy", ["numpy", "sql"])
+@pytest.mark.parametrize(
+    "value, kind",
+    [
+        (float("nan"), "NaN"),
+        (float("inf"), r"\+inf"),
+        (float("-inf"), "-inf"),
+        (2.0**52, r"\|x\| >= 2\^52"),
+    ],
+)
+def test_fit_rejects_values_outside_the_exact_domain_at_the_batch_fetch(
+    spark, strategy, value, kind
+):
+    """The pair kernel's statistics are exact decimal sums over finite
+    values below 2^52. A NaN or an infinity used to cast to NULL and
+    drop out of the sums silently; from 2^52 on a difference can leave
+    the range where the kernel's cast equals Spark's. The fetched batch
+    matrix is checked before the broadcast: the error names the
+    feature column and counts the values, and no job runs after the
+    fetch."""
+    rows = [(i, [float(i % 3), float(i % 5), float(i % 7)], float(i % 2)) for i in range(30)]
+    rows[4] = (4, [1.0, 2.0, value], 0.0)
+    rows[9] = (9, [1.0, 2.0, value], 1.0)
+    df = spark.createDataFrame(rows, "id long, features array<double>, label double")
+
+    def fit():
+        with pytest.raises(
+            ValueError,
+            match=(
+                r"knn: 2 value\(s\) of 'features' on the fit batch are outside the exact "
+                rf"domain \(finite, \|x\| < 2\^52\): 2 {kind}; feature column\(s\) 2 \(2\)$"
+            ),
+        ):
+            fit_relief(
+                df, num_top_features=2, num_neighbors=2, estimation_ratio=1.0,
+                batch_size=1.0, knn_strategy=strategy,
+            )
+
+    jobs = _fit_jobs(spark, f"test-exact-domain-{strategy}-{value}", fit)
+    fetches = [i for i, stages in enumerate(jobs) if any("toArrow" in n for n in stages)]
+    assert fetches == [len(jobs) - 1], jobs
+
+
+def test_pair_kernel_decimal_cast_equals_sparks_cast(spark):
+    """The kernel casts every difference and vote the way Spark's
+    ``cast(x AS decimal(38,18))`` does, bit for bit, over its domain:
+    ~200k doubles from 2^-1074 to 2^52 (every binary exponent, with
+    most samples where the cast is not 0), decimal-looking values of
+    every length, and the 18th place's half-way points."""
+    import pandas as pd
+
+    from spark_relieffc_fselection_spark.operators.relief import _dec18_units
+
+    rng = np.random.default_rng(20261019)
+    x = np.concatenate(
+        [
+            np.ldexp(rng.uniform(1, 2, 50_000), rng.integers(-1074, 52, 50_000)),
+            np.ldexp(rng.uniform(1, 2, 100_000), rng.integers(-70, 52, 100_000)),
+            np.concatenate([np.round(rng.uniform(0, 1e3, 2_000), k) for k in range(20)]),
+            np.array([float(f"{m}5e-19") for m in rng.integers(0, 10**6, 10_000)]),
+            [0.0, 5e-324, 2.2250738585072014e-308, 5e-19, 1.5e-18, 0.1 + 0.2, 2.0**52 - 1],
+        ]
+    )
+    x = np.concatenate([x, -x[:1000]])
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(x)), "x": x}))
+    spark_dec = (
+        df.orderBy("i").select(F.col("x").cast("decimal(38,18)").alias("d")).toArrow().column(0)
+    ).combine_chunks()
+    want = np.frombuffer(spark_dec.buffers()[1], dtype=np.int64)[
+        2 * spark_dec.offset : 2 * (spark_dec.offset + len(spark_dec))
+    ].reshape(-1, 2)
+    got = _dec18_units(x)
+    bad = np.flatnonzero((got != want).any(axis=1))
+    assert spark_dec.null_count == 0
+    assert len(bad) == 0, [repr(v) for v in x[bad[:5]]]
+
+
+def test_fit_builds_no_pair_table(spark, labeled, monkeypatch):
+    """The fit reduces its pairs inside the kernel tasks: it calls none
+    of the pair-table operators, and the rows it caches carry no
+    feature vectors, on every tier, with redundancy removal on."""
+    from spark_relieffc_fselection_spark.operators import relief
+
+    def banned(*_args, **_kwargs):
+        raise AssertionError("the fit built a pair table")
+
+    for name in ("pair_table", "explode_pairs", "feature_bin_stats", "joint_counts_from_pairs"):
+        monkeypatch.setattr(relief, name, banned)
+    df, _, _ = labeled
+    cached = []
+    real_cache = type(df).cache
+
+    def cache(frame):
+        cached.append(frame.schema)
+        return real_cache(frame)
+
+    monkeypatch.setattr(type(df), "cache", cache)
+    for strategy in ("numpy", "numpy-gemm", "sql", "lsh"):
+        fit_relief(
+            df, num_top_features=2, num_neighbors=3, estimation_ratio=1.0,
+            batch_size=0.5, batching="hash", knn_strategy=strategy,
+        )
+    pair_caches = [s for s in cached if "qi" in s.names]
+    assert len(pair_caches) == 8
+    assert not any(
+        f.dataType.typeName() == "array" for s in pair_caches for f in s.fields
+    ), pair_caches
 
 
 def _with_null_labels(spark):
