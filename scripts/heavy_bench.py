@@ -10,7 +10,9 @@ and compare per-query seconds; results are stamped in SCALE.md.
 Usage: SPARK_GRAFT_CPUS=N python scripts/heavy_bench.py [K] [sf_dir] [q ...]
 
 The replicated dir is built once per (K, sf) into a deterministic
-tmp path and reused by the second core-count run (it is INPUT data —
+tmp path and reused by the second core-count run while the source
+files' names, sizes and mtimes match the ones recorded in its
+``_BUILT`` marker (it is INPUT data —
 a bigger synthetic corpus — not a cached result; every query still
 computes from parquet). Each copy shifts every join-key column by
 i * 2**40 so copies are disjoint key universes: per-copy join
@@ -58,12 +60,28 @@ DEFAULT_HEAVIES = [
 ]
 
 
+def source_fingerprint(sf_dir: str) -> str:
+    """One line per source parquet file the replicated copy is built
+    from: its path under ``sf_dir``, size and mtime."""
+    lines = []
+    for table in [*KEYS, *VERBATIM]:
+        root = Path(sf_dir) / f"{table}.parquet"
+        files = [root] if root.is_file() else sorted(p for p in root.rglob("*") if p.is_file())
+        for f in files:
+            st = f.stat()
+            lines.append(f"{f.relative_to(sf_dir)} {st.st_size} {st.st_mtime_ns}")
+    return "\n".join(lines) + "\n"
+
+
 def build_heavy_dir(spark, sf_dir: str, k: int) -> str:
     from pyspark.sql import functions as F
 
     out = f"/tmp/spark_graft_heavy_{Path(sf_dir.rstrip('/')).name}_x{k}"
     marker = Path(out) / "_BUILT"
-    if marker.exists():
+    # the marker holds the sources' fingerprint: a copy built from other
+    # source files is rebuilt, not reused
+    fingerprint = source_fingerprint(sf_dir)
+    if marker.exists() and marker.read_text() == fingerprint:
         return out
     os.makedirs(out, exist_ok=True)
     t0 = time.time()
@@ -81,7 +99,7 @@ def build_heavy_dir(spark, sf_dir: str, k: int) -> str:
         spark.read.parquet(f"{sf_dir}/{table}.parquet").write.mode(
             "overwrite"
         ).parquet(f"{out}/{table}.parquet")
-    marker.write_text("ok")
+    marker.write_text(fingerprint)
     print(f"# heavy dir built in {time.time() - t0:.1f}s: {out}", file=sys.stderr)
     return out
 

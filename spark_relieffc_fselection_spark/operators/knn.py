@@ -22,7 +22,8 @@ join:
   but the distance kernel is an Arrow-batched ``mapInPandas`` numpy
   matrix computation (vectorized, ~10-100x a per-row expression for
   wide vectors), emitting only the per-partition top-k candidates
-  (the map-side 'heap'), finished by the same global window rank.
+  (the map-side 'heap'), finished by the same global window rank, on
+  the squared distance the kernel ranks by.
   Shuffle volume is O(partitions * queries * k), never O(n * queries).
   The kernel is exact: BLAS-expansion distances with a rigorous error
   radius prune every pair that cannot reach the top-k (lower-bound
@@ -153,7 +154,9 @@ def knn_join(
     """k nearest neighbors of each query among ``instances``.
 
     Returns ``(query_id, neighbor_id, distance, rank)`` with
-    ``rank`` in 1..k ordered by (distance, neighbor_id).
+    ``rank`` in 1..k ordered by (distance, neighbor_id); the numpy tiers
+    order by the squared distance their kernel ranks by, so a query's
+    neighbours do not depend on how the scan side is partitioned.
 
     The approximate tier's RECALL CONTRACT (strategy='lsh'): candidates
     are the union over ``lsh_tables`` sign-hash tables of same-bucket
@@ -237,10 +240,15 @@ def knn_join(
         if exclude_self:
             cand = cand.filter(F.col(query_id_col) != F.col("neighbor_id"))
 
-    w = Window.partitionBy(query_id_col).orderBy(F.col("distance").asc(), F.col("neighbor_id").asc())
+    # distinct squared distances can share a square root: a window on
+    # the root would break that tie by whichever candidates each scan
+    # partition kept
+    key = "d2" if strategy in ("numpy", "numpy-gemm") else "distance"
+    w = Window.partitionBy(query_id_col).orderBy(F.col(key).asc(), F.col("neighbor_id").asc())
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
+        .drop("d2")
     )
 
 
@@ -373,7 +381,8 @@ def _candidates_numpy(
     exclude_self: bool,
     gemm: bool = False,
 ) -> DataFrame:
-    """Arrow-batched blockwise scan emitting per-partition top-k; the
+    """Arrow-batched blockwise scan emitting per-partition top-k with
+    the distance and the squared distance ``d2`` it ranks by; the
     per-partition work is :func:`knn_scan`."""
     spark = instances.sparkSession
     ids, mat, _ = _fetch_rows(queries, id_col, features_col)
@@ -383,7 +392,7 @@ def _candidates_numpy(
         ids, mat = bc.value
         if len(ids) == 0:
             return
-        q_id, n_id, dist = knn_scan(
+        q_id, n_id, d2 = knn_scan(
             ids,
             mat,
             (
@@ -397,9 +406,11 @@ def _candidates_numpy(
             exclude_self,
             gemm,
         )
-        yield pd.DataFrame({query_id_col: q_id, "neighbor_id": n_id, "distance": dist})
+        yield pd.DataFrame(
+            {query_id_col: q_id, "neighbor_id": n_id, "distance": np.sqrt(d2), "d2": d2}
+        )
 
-    out_schema = f"{query_id_col} long, neighbor_id long, distance double"
+    out_schema = f"{query_id_col} long, neighbor_id long, distance double, d2 double"
     return instances.select(id_col, features_col).mapInPandas(scan, schema=out_schema)
 
 
@@ -483,14 +494,16 @@ def self_knn_pairs(
 
     ``neighbors=None`` (the exact tiers): ``slices`` tasks each run
     :func:`knn_scan` for a contiguous slice of the queries against the
-    WHOLE batch, so each slice's top-k is already global by (distance,
-    neighbor_id): no rank merge, no shuffle. The exact tier's distances
+    WHOLE batch, so each slice's top-k is already global by (squared
+    distance, neighbor_id): no rank merge, no shuffle. The exact tier's distances
     are per-pair diff-cube values, independent of the slicing;
     ``gemm=True`` ranks by the BLAS expansion, whose last bits follow
     the matrix shapes, so it matches ``'numpy-gemm'`` exactly on integer
     grids. Otherwise ``neighbors`` is the ``(query_id, neighbor_id)``
-    table of a :func:`knn_join` over ``batch`` (``'sql'``, ``'lsh'``),
-    hash-partitioned into ``slices`` partitions; ``k``, ``exclude_self``
+    table of a :func:`knn_join` whose queries and neighbours are rows of
+    ``batch`` (the fit's ``'sql'`` and ``'lsh'`` tiers, or a query
+    sample against the whole table), hash-partitioned into ``slices``
+    partitions; ``k``, ``exclude_self``
     and ``gemm`` are then the join's.
 
     Returns the output frame and the broadcast, which a later kernel
@@ -586,13 +599,16 @@ def knn_scan(
     exclude_self: bool = True,
     gemm: bool = False,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """One scan partition's top-k per query, by (distance, neighbor_id).
+    """One scan partition's top-k per query, by (squared distance,
+    neighbor_id).
 
     ``q_ids``/``q_mat`` are the (Q,) ids and (Q, d) features of the
     queries; ``blocks`` yields ``(ids (B,), features (B, d))`` scan
-    blocks. Returns ``(query_id, neighbor_id, distance)`` arrays with
-    at most k rows per query; pairs with equal ids are excluded when
-    ``exclude_self``, and non-finite distances are never emitted.
+    blocks. Returns ``(query_id, neighbor_id, squared distance)`` arrays
+    with at most k rows per query; pairs with equal ids are excluded
+    when ``exclude_self``, and non-finite distances are never emitted.
+    The squared distance is the ranking key: two of them can differ and
+    still share a square root.
 
     ``gemm=False``: the squared distance of every emitted pair is the
     diff cube's einsum reduction of ``(q - n)^2``, a deterministic
@@ -651,7 +667,7 @@ def knn_scan(
     # valid id (gemm) — they must not leak out as rank-k "neighbors"
     # when a partition has fewer than k rows.
     qi, slot = np.nonzero(np.isfinite(best_d))
-    return q_ids[qi], best_i[qi, slot], np.sqrt(best_d[qi, slot])
+    return q_ids[qi], best_i[qi, slot], best_d[qi, slot]
 
 
 def _dense_merge(

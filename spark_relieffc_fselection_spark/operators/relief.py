@@ -1,10 +1,15 @@
-"""RELIEF-F weighting + collision-redundancy as DataFrame aggregations.
+"""RELIEF-F weighting + collision-redundancy.
 
-This re-expresses the reference's hand-rolled per-partition breeze
-accumulation (ReliefFRSelector.scala:377-602 dense/sparse paths) as a
-long/exploded table + ``groupBy`` aggregations, so Catalyst's
-partial/final hash aggregation does the map-side combine the reference
-wrote by hand (SURVEY §4 'map-side combine' row).
+The reference accumulates its statistics by hand in each partition
+(breeze, ReliefFRSelector.scala:377-602 dense/sparse paths). The dense
+fit does the same: the tasks of its pair kernel
+(:func:`knn.self_knn_pairs`) reduce their pairs to small exact decimal
+partials (:func:`_pair_stats`, :func:`_kernel_joint`) that the driver
+sums. The long/exploded-table form — :func:`pair_table`,
+:func:`explode_pairs` and ``groupBy`` aggregations such as
+:func:`feature_bin_stats` — serves the sparse fit, whose long table is
+sparse by construction, and is the reference the kernel is tested
+against.
 
 Semantics implemented (citations into /root/reference):
 
@@ -35,9 +40,9 @@ Semantics implemented (citations into /root/reference):
   inherently sequential over a tiny (nFeat) frame.
 
 Scale notes: all wide work is keyed by feature_idx or (f1, f2) — the
-shuffle volume is O(sample * k * nFeat) for relevance and
-O(sample * k * collisions^2) for the joint COO, independent of total
-dataset size. The joint table is COO (absent = zero), fixing the
+dense kernel shuffles O(tasks * nFeat * nClasses) partials for
+relevance and O(tasks * |scope| * nFeat) for the joint COO, independent
+of total dataset size. The joint table is COO (absent = zero), fixing the
 reference's dense per-feature row-vector memory hazard (SURVEY §7.3).
 """
 
@@ -91,26 +96,22 @@ def pair_table(
     id_col: str = "id",
     features_col: str = "features",
     label_col: str = "label",
-    instances: DataFrame | None = None,
 ) -> DataFrame:
     """(query, neighbor) pairs with both feature vectors attached.
 
     Returns ``(query_id, neighbor_id, n_label, same_class, q_features,
-    n_features)`` by two equi-joins (SURVEY J3). The fit emits the same
-    rows from its broadcast batch (:func:`knn.self_knn_pairs`); this
-    join form serves neighbour tables against a larger corpus.
-
-    ``instances`` supplies the NEIGHBOR side; it defaults to ``batch``
-    (self-kNN) but MUST be the full corpus whenever ``neighbors`` was
-    computed against a superset of the query batch — otherwise
-    out-of-batch neighbors silently drop out of the join.
+    n_features)`` for the self-kNN table ``neighbors`` of ``batch`` by
+    two equi-joins (SURVEY J3). The dense fit never builds these rows:
+    its kernel reduces each pair where it finds it
+    (:func:`knn.self_knn_pairs`). This Spark form is the reference that
+    kernel is tested against.
     """
     q = batch.select(
         F.col(id_col).alias("query_id"),
         F.col(features_col).alias("q_features"),
         F.col(label_col).alias("q_label"),
     )
-    n = (instances if instances is not None else batch).select(
+    n = batch.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(features_col).alias("n_features"),
         F.col(label_col).alias("n_label"),
@@ -153,8 +154,8 @@ def feature_bin_stats(
     Returns ``(feature_idx, n_label, same_class, bin_sum, vote_sum,
     n_collisions)``; ~nFeat x nClasses x 2 rows, tiny at any scale.
     ``_collapse_bins_local`` collapses ``bin_sum``; summing ``vote_sum``
-    / ``n_collisions`` over bins reproduces ``marginal_counts`` and the
-    per-feature collision counts exactly (decimal addition is
+    / ``n_collisions`` over bins gives the per-feature marginal
+    collision mass and collision counts exactly (decimal addition is
     associative, so the two-level sum is bit-identical). The collapse
     divisor, the bin's PAIR count (classCounter, ReliefFRSelector.scala:
     436-437, 469), comes from the pair or neighbor table: a sparse long
@@ -191,13 +192,6 @@ def collision_table(
     return (
         long_pairs.filter(F.col("fdist") <= F.lit(threshold))
         .select("query_id", "neighbor_id", "feature_idx", vote.alias("vote"))
-    )
-
-
-def marginal_counts(collisions: DataFrame) -> DataFrame:
-    """Per-feature marginal collision mass (SURVEY A5)."""
-    return collisions.groupBy("feature_idx").agg(
-        F.sum(F.col("vote").cast(DEC)).cast("double").alias("marginal")
     )
 
 
@@ -381,8 +375,9 @@ _STATS_BLOCK_VALUES = 1 << 20
 _DEC_ARROW = pa.decimal128(38, 18)
 
 #: the stats kernel's rows: a bin partial (f, n_label, same_class,
-#: bin_sum, vote_sum), a pair-count partial (n_label, same_class, n) or,
-#: when the joint needs them later, a pair (qi, ni) of batch rows
+#: bin_sum, vote_sum, n = the bin's collision count), a pair-count
+#: partial (n_label, same_class, n) with a null f or, when the joint
+#: needs them later, a pair (qi, ni) of batch rows
 _PAIR_STATS_SCHEMA = (
     "f int, n_label double, same_class boolean, bin_sum decimal(38,18), "
     "vote_sum decimal(38,18), n long, qi int, ni int"
@@ -464,9 +459,10 @@ def _pair_stats(
     """The stats reducer of the fit's pair kernel (``_PAIR_STATS_SCHEMA``
     rows). Per (n_label, same_class) bin of its pairs it emits one
     partial row per feature with the exact decimal sums of
-    ``feature_bin_stats`` (``bin_sum``, ``vote_sum``) and one row with
-    the bin's pair count; ``keep_pairs`` also emits every pair's (query
-    row, neighbour row) for the joint kernel. Partials of one key sum
+    ``feature_bin_stats`` (``bin_sum``, ``vote_sum``) and its collision
+    count (``n_collisions``, in ``n``), and one row with the bin's pair
+    count; ``keep_pairs`` also emits every pair's (query row, neighbour
+    row) for the joint kernel. Partials of one key sum
     exactly to the Spark aggregate's value: every element is cast as
     Spark casts it (:func:`_dec18_units`) and decimal addition is
     associative."""
@@ -484,11 +480,13 @@ def _pair_stats(
             rows = np.flatnonzero(code == c)
             bin_sum = np.zeros(d, dtype=object)
             vote_sum = np.zeros(d, dtype=object)
+            n_coll = np.zeros(d, dtype=np.int64)
             for s in range(0, len(rows), step):
                 r = rows[s : s + step]
                 fdist = np.abs(mat[qi[r]] - mat[ni[r]])
                 bin_sum += _dec18_col_sums(fdist)
                 vote_sum += _dec18_col_sums(_collision_votes(fdist, continuous, threshold))
+                n_coll += (fdist <= threshold).sum(axis=0)
             lbl, sc = lbls[c // 2], bool(c % 2)
             yield _stats_batch(
                 f=pa.array(np.arange(d, dtype=np.int32)),
@@ -496,6 +494,7 @@ def _pair_stats(
                 same_class=pa.array(np.full(d, sc)),
                 bin_sum=_dec18_array(bin_sum),
                 vote_sum=_dec18_array(vote_sum),
+                n=pa.array(n_coll),
             )
             yield _stats_batch(
                 n_label=pa.array([lbl]), same_class=pa.array([sc]), n=pa.array([len(rows)])
@@ -960,8 +959,9 @@ def _plan_fit(
     zero-neighbour kNN fails inside the kernel or yields no pairs to
     weigh); then ``count_labels`` runs the fit's one profiling action,
     returning per-class rows with ``label`` and count ``n``. An empty
-    dataset, and a null label (its own class row), fail the same way in
-    every fit."""
+    dataset, a null label (its own class row) and fewer than two classes
+    fail the same way in every fit: with one class every neighbour is a
+    hit, and the weights would be noise."""
     for name, value in (("num_top_features", num_top_features), ("num_neighbors", num_neighbors)):
         if value < 1:
             raise ValueError(f"{fit_name}: {name} must be >= 1, got {value!r}")
@@ -974,6 +974,11 @@ def _plan_fit(
     n_null = sum(int(r["n"]) for r in rows if r["label"] is None)
     if n_null:
         raise ValueError(f"{fit_name}: {n_null} null {label_col!r} value(s) in the input")
+    if len(rows) < 2:
+        raise ValueError(
+            f"{fit_name}: {label_col!r} has a single class ({rows[0]['label']!r}); "
+            "RELIEF weighs features by how they separate classes and needs at least two"
+        )
     n = sum(int(r["n"]) for r in rows)
     priors = {float(r["label"]): r["n"] / n for r in rows}
     return _FitPlan(
@@ -1044,7 +1049,7 @@ def _stats_rows(bins: DataFrame, pair_counts: DataFrame) -> DataFrame:
         "same_class",
         "bin_sum",
         "vote_sum",
-        F.lit(None).cast("long").alias("n"),
+        F.col("n_collisions").cast("long").alias("n"),
     ).unionAll(
         pair_counts.select(
             F.lit(None).cast(bins.schema["feature_idx"].dataType).alias("f"),
@@ -1059,14 +1064,15 @@ def _stats_rows(bins: DataFrame, pair_counts: DataFrame) -> DataFrame:
 
 def _probe_batches(
     batch_stats: list[DataFrame], priors: dict[float, float]
-) -> list[tuple[dict[int, float], dict[int, float], int]]:
+) -> list[tuple[dict[int, float], dict[int, float], int, dict[int, int]]]:
     """ONE collect for the statistics of EVERY batch.
 
     ``batch_stats`` holds each batch's stats rows (see
     :class:`_Neighbourhood`): bin rows ``(f, n_label, same_class,
-    bin_sum, vote_sum)`` — the relevance sums AND the collision vote
-    mass, so no separate collision scan — and pair-count rows
-    ``(n_label, same_class, n)`` with a null ``f``. A key may arrive as
+    bin_sum, vote_sum, n)`` — the relevance sums, the collision vote
+    mass and the collision count ``n``, so no separate collision scan —
+    and pair-count rows ``(n_label, same_class, n)`` with a null ``f``.
+    A key may arrive as
     several partial rows (one per kernel task); the driver sums them
     exactly, which gives the Spark aggregate's decimal bit for bit
     (decimal addition is associative). The collected stats are about
@@ -1074,10 +1080,11 @@ def _probe_batches(
     and marginal collapse then run on the driver via
     :func:`_collapse_bins_local` (bit-exact, see its docstring).
 
-    Returns ``(relevance, marginal, n_pairs)`` per batch, in batch
-    order: every pair has exactly one (n_label, same_class) bin, so the
-    bin counts sum to the batch's pair total (the classCounter total,
-    ReliefFRSelector.scala:469-470).
+    Returns ``(relevance, marginal, n_pairs, n_collisions)`` per batch,
+    in batch order: every pair has exactly one (n_label, same_class)
+    bin, so the bin counts sum to the batch's pair total (the
+    classCounter total, ReliefFRSelector.scala:469-470);
+    ``n_collisions`` maps each feature to its collision count.
     """
     legs = [
         st.select(
@@ -1093,12 +1100,14 @@ def _probe_batches(
     ]
     bins: list[dict] = [{} for _ in batch_stats]
     counts: list[dict] = [{} for _ in batch_stats]
+    n_coll: list[dict] = [{} for _ in batch_stats]
     # wide enough that no partial sum of decimal(38,18) values rounds
     with localcontext(prec=_DEC_SUM_DIGITS):
         for b, f, lbl, sc, bin_sum, vote_sum, n in reduce(DataFrame.unionAll, legs).collect():
             if f is None:
                 counts[b][(lbl, sc)] = counts[b].get((lbl, sc), 0) + n
                 continue
+            n_coll[b][f] = n_coll[b].get(f, 0) + n
             acc = bins[b].get((f, lbl, sc))
             if acc is None:
                 bins[b][(f, lbl, sc)] = [bin_sum, vote_sum]
@@ -1107,11 +1116,11 @@ def _probe_batches(
                 if vote_sum is not None:
                     acc[1] = vote_sum if acc[1] is None else acc[1] + vote_sum
     out = []
-    for b_bins, pc_b in zip(bins, counts):
+    for b_bins, pc_b, nc_b in zip(bins, counts, n_coll):
         rel_b, marg_b = _collapse_bins_local(
             ((f, lbl, sc, bs, vs) for (f, lbl, sc), (bs, vs) in b_bins.items()), pc_b, priors
         )
-        out.append((rel_b, marg_b, sum(pc_b.values())))
+        out.append((rel_b, marg_b, sum(pc_b.values()), nc_b))
     return out
 
 
@@ -1201,7 +1210,7 @@ def _run_batches(
         rel_sum: dict[int, float] = {}
         marg_sum: dict[int, float] = {}
         n_pairs = 0
-        for rel_b, marg_b, n in stats:
+        for rel_b, marg_b, n, _ in stats:
             scopes.append(top_features)
             n_pairs += n
             # Cross-batch sums on the driver, added in batch order.

@@ -41,7 +41,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_relieffc_fselection_spark.operators.knn import _reject_duplicate_ids, _sparse_merge
+from spark_relieffc_fselection_spark.operators.knn import (
+    _listed,
+    _reject_duplicate_ids,
+    _sparse_merge,
+)
 from spark_relieffc_fselection_spark.operators.relief import (
     DEC,
     ReliefFitResult,
@@ -109,7 +113,8 @@ def sparse_knn_join(
     Spark computes the decimal-exact squared norms and, from the
     inverted-index join, the dot of every pair that shares an active
     feature. The driver fetches the corpus's ``(id, sq_norm)`` once as
-    Arrow, rejecting null and repeated ids, and broadcasts it sorted by
+    Arrow, rejecting null and repeated ids and ids with NaN or +-inf
+    values (counted in the norms aggregation), and broadcasts it sorted by
     (sq_norm, id). The dot terms, plus one sentinel row per query (a
     query sharing no feature still appears), are partitioned by query
     and sorted, and one ``mapInArrow`` merge (:func:`_merge_queries`)
@@ -140,23 +145,33 @@ def sparse_knn_join(
     records :data:`SPARSE_ROUTE`.
     """
     spark = long_df.sparkSession
+    value = F.col("value")
     norms = (
         labels.select("id")
         .join(
             long_df.groupBy("id").agg(
-                F.sum((F.col("value") * F.col("value")).cast(DEC))
-                .cast("double")
-                .alias("sq_norm")
+                F.sum((value * value).cast(DEC)).cast("double").alias("sq_norm"),
+                # NaN and +-inf cast to NULL and would drop out of every sum
+                F.count(F.when(F.isnan(value) | (F.abs(value) == float("inf")), 1)).alias(
+                    "n_bad"
+                ),
             ),
             "id",
             "left",
         )
-        .na.fill({"sq_norm": 0.0})
+        .na.fill({"sq_norm": 0.0, "n_bad": 0})
         .toArrow()
     )
     ids_col = norms.column("id")
     if ids_col.null_count:
         raise ValueError(f"sparse_knn_join: {ids_col.null_count} null 'id' value(s) in labels")
+    n_bad = norms.column("n_bad").to_numpy()
+    if n_bad.any():
+        bad_ids = np.sort(ids_col.to_numpy()[n_bad > 0])
+        raise ValueError(
+            f"sparse_knn_join: {int(n_bad.sum())} NaN or +-inf 'value' value(s) in the "
+            f"long table, on id(s) {_listed(bad_ids)}"
+        )
     corpus = _Corpus.of(
         ids_col.to_numpy().astype(np.int64, copy=False),
         norms.column("sq_norm").to_numpy().astype(np.float64, copy=False),
@@ -462,7 +477,8 @@ def fit_relief_sparse(
     (ReliefFRSelector.scala:642). Single-pass fits ignore it.
 
     Every batch's kNN is :func:`sparse_knn_join`, whose norms fetch
-    names repeated ids before any statistics job runs.
+    names repeated ids and NaN or +-inf values before any statistics
+    job runs.
     """
     plan = _plan_fit(
         lambda: labels.groupBy("label").agg(F.count("*").alias("n")).collect(),

@@ -8,15 +8,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_relieffc_fselection_spark.operators.knn import knn_join
+from spark_relieffc_fselection_spark.operators.knn import self_knn_pairs
 from spark_relieffc_fselection_spark.operators.relief import (
-    collision_table,
-    explode_pairs,
-    joint_counts_from_pairs,
-    marginal_counts,
-    pair_table,
+    _PAIR_STATS_SCHEMA,
+    _kernel_joint,
+    _pair_stats,
 )
-from spark_relieffc_fselection_spark.queries import localize, register
+from spark_relieffc_fselection_spark.queries import register
 from spark_relieffc_fselection_spark.functions.partitioning import morton16_sql
 from spark_relieffc_fselection_spark.queries.relational import DEC, dsum, r6
 from spark_relieffc_fselection_spark.sources import load_table
@@ -58,49 +56,6 @@ coll AS (
 """
 
 
-def _discrete_long_pairs(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """Returns (exploded long pairs, the LAZILY cached compact pair
-    table, embedding dim).
-
-    The caller owns the cached pair table and must unpersist it once
-    its derived results are materialized; the cache fills as a side
-    effect of the caller's first materializing action.
-    """
-    emb = load_table(spark, sf_dir, "embeddings")
-    # one job yields row count (feeds knn_join's partition sizing) AND
-    # the embedding dim — vs separate count() + first() actions.
-    n_total, first_emb = emb.agg(
-        F.count("*"), F.first("embedding")
-    ).first()
-    dim = len(first_emb)
-    inst = emb.select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            F.col("embedding").cast("array<double>"), lambda x: F.round(x, 0)
-        ).alias("features"),
-        F.col("label").cast("double").alias("label"),
-    )
-    # gemm kernel is safe here even for the rank tiebreak: discretized
-    # coordinates are small integers, so |q|^2 - 2qb + |b|^2 is exact in
-    # float64 (integer products/sums) — identical ranks to the diff
-    # kernel and the SQL fold, at ~10x the kernel throughput.
-    neigh = knn_join(inst, inst, DISC_K, strategy="numpy-gemm", num_instances=n_total)
-    # cache the compact pair table — the downstream marginal + joint
-    # aggregations both re-derive the explode from it in-core instead
-    # of re-running the kNN per branch.
-    # Repartition by pair key: AQE would otherwise coalesce this small
-    # table to ~1 partition and serialize every downstream explode.
-    par = spark.sparkContext.defaultParallelism
-    pairs = (
-        pair_table(inst, neigh)
-        .repartition(par, "query_id", "neighbor_id")
-        .cache()
-    )
-    return explode_pairs(pairs), pairs, dim
-
-
 @register(
     "q37_relief_discrete_collisions",
     oracle=f"""
@@ -136,36 +91,50 @@ def _discrete_long_pairs(
         "scala:417, 444 discrete branch; de-denormalized per SURVEY)",
 )
 def q37_relief_discrete_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lp, pairs, emb_dim = _discrete_long_pairs(spark, sf_dir)
-    coll = collision_table(lp, continuous=False, lower_distance_threshold=0.8).cache()
-    # ONE materializing job fills the pair cache AND the collision
-    # cache before the marginal/joint branches fan out — without it the
-    # two branches of the final join would race to compute the same
-    # cached partitions and duplicate the kNN + explode work.
-    coll.count()
-    marg = coll.groupBy("feature_idx").agg(F.count("*").alias("n_collisions"))
-    # joint straight from the cached compact pair table (decimal-
-    # identical; skips the explode -> collect_list regroup)
-    joint = joint_counts_from_pairs(
-        pairs, DISC_TOP, continuous=False,
-        lower_distance_threshold=0.8, num_features=emb_dim,
+    emb = load_table(spark, sf_dir, "embeddings")
+    inst = emb.select(
+        F.col("vec_id").alias("id"),
+        F.transform(
+            F.col("embedding").cast("array<double>"), lambda x: F.round(x, 0)
+        ).alias("features"),
+        F.col("label").cast("double").alias("label"),
     )
-    per_f = joint.groupBy(F.col("f1").alias("feature_idx")).agg(
-        F.round(
-            F.sum(F.col("joint").cast("decimal(38,18)")).cast("double"), 6
-        ).alias("total_joint")
+    # The fit's pair kernel with the discrete reducer (threshold 0,
+    # vote 1). The gemm ranking is exact here: discretized coordinates
+    # are small integers, so |q|^2 - 2qb + |b|^2 is exact in float64 —
+    # the diff kernel's and the SQL fold's ranks at ~10x the throughput.
+    rows, bc = self_knn_pairs(
+        inst, DISC_K, _pair_stats(False, 0.0, keep_pairs=True), _PAIR_STATS_SCHEMA,
+        slices=spark.sparkContext.defaultParallelism, gemm=True,
     )
-    # localize the tiny (nFeat-row) result, then free the cached
-    # intermediates — every cache entry left behind slows later
-    # queries' cache-lookup plan comparisons for the whole session.
-    out = localize(
-        marg.join(per_f, "feature_idx", "left")
-        .na.fill({"total_joint": 0.0})
-        .select("feature_idx", "n_collisions", "total_joint")
+    # the collision-count collect fills the cache; the joint kernel
+    # then reads only its (qi, ni) rows
+    rows = rows.cache()
+    try:
+        n_coll = (
+            rows.filter(F.col("f").isNotNull())
+            .groupBy("f")
+            .agg(F.sum("n").alias("n"))
+            .filter(F.col("n") > 0)
+            .collect()
+        )
+        joint = _kernel_joint(
+            rows.filter(F.col("qi").isNotNull()).select("qi", "ni"),
+            bc, DISC_TOP, continuous=False, threshold=0.0,
+        )
+        total_joint = {
+            r["f1"]: r["total_joint"]
+            for r in joint.groupBy("f1")
+            .agg(F.round(F.sum(F.col("joint").cast(DEC)).cast("double"), 6).alias("total_joint"))
+            .collect()
+        }
+    finally:
+        rows.unpersist()
+        bc.unpersist()
+    return spark.createDataFrame(
+        [(r["f"], r["n"], total_joint.get(r["f"], 0.0)) for r in n_coll],
+        "feature_idx int, n_collisions long, total_joint double",
     )
-    coll.unpersist()
-    pairs.unpersist()
-    return out
 
 
 @register(

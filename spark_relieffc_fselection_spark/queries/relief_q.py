@@ -17,14 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spark_relieffc_fselection_spark.operators.knn import knn_join
+from spark_relieffc_fselection_spark.operators.knn import knn_join, self_knn_pairs
 from spark_relieffc_fselection_spark.operators.relief import (
-    _collapse_bins_local,
+    _PAIR_STATS_SCHEMA,
+    _kernel_joint,
+    _pair_stats,
+    _probe_batches,
     dual_ranking,
-    explode_pairs,
-    feature_bin_stats,
-    joint_counts_from_pairs,
-    pair_table,
 )
 from spark_relieffc_fselection_spark.queries import localize, register
 from spark_relieffc_fselection_spark.sources import load_table
@@ -97,12 +96,16 @@ _PIPE_CACHE: dict[tuple[str, str], dict] = {}
 
 
 def _pipe(spark: SparkSession, sf_dir: str) -> dict:
-    # numpy kernel: ~4x faster than the SQL expression at sf0.1 and rank-
-    # identical (tests/test_knn.py pins cross-strategy agreement); only
-    # ranks feed downstream, not raw distances, so oracle parity holds.
-    # q14-q17 all share the kNN -> pair-explode -> collision prefix, so
-    # memoize the cached DataFrames per (session, sf_dir) — pure
-    # memoization, results unchanged.
+    """q14-q17 and q72b's shared statistics, memoized per (session,
+    sf_dir) — pure memoization, results unchanged.
+
+    The numpy kNN of the 1-in-4 queries against the whole table (~4x
+    faster than the SQL expression at sf0.1 and rank-identical;
+    tests/test_knn.py pins cross-strategy agreement) hands its id pairs
+    to the fit's pair kernel over the whole table: exact decimal bin
+    sums, collision votes and counts and pair counts, reduced where the
+    pairs are looked up (:func:`knn.self_knn_pairs`), then the joint
+    kernel over the cached (query row, neighbour row) pairs."""
     # applicationId, not id(spark): CPython reuses object addresses, so
     # a fresh session could otherwise hit a cache entry bound to a
     # stopped SparkContext.
@@ -115,88 +118,51 @@ def _pipe(spark: SparkSession, sf_dir: str) -> dict:
         _mark = stage_timer("pipe")
 
         inst = _embeddings(spark, sf_dir)
-        # One job yields priors, total count AND dim (dim from any
-        # collected feature row) — vs three separate actions.
-        label_rows = (
-            inst.groupBy("label")
-            .agg(F.count("*").alias("n"), F.first("features").alias("fx"))
-            .collect()
-        )
+        label_rows = inst.groupBy("label").agg(F.count("*").alias("n")).collect()
         n_total = sum(r["n"] for r in label_rows)
-        dim = len(label_rows[0]["fx"])
         priors = {float(r["label"]): r["n"] / n_total for r in label_rows}
-        _mark("priors+dim")
+        _mark("priors")
         # estimationRatio analogue: deterministic 1-in-4 query sample
         # (must mirror RELIEF_QPRED in the oracles)
         queries = inst.filter(F.col("id") % 4 == 0)
         neigh = knn_join(
             inst, queries, RELIEF_K, strategy="numpy", num_instances=n_total
         )
-        # Cache the COMPACT pair table (the exploded long form is nFeat
-        # times bigger — never cached, re-derived per consumer in one
-        # in-core pass). NOT materialized eagerly: the bin-stats job
-        # below is its first and only consumer before the joint job, so
-        # the cache fills as a side effect of useful work.
-        # Repartition by the pair key before caching: AQE coalesces the
-        # small join output to very few partitions, and every cached
-        # consumer (explode passes) would inherit that near-serial
-        # layout. The shuffle moves only the compact pair rows.
-        par = spark.sparkContext.defaultParallelism
-        pairs = (
-            pair_table(queries, neigh, instances=inst)
-            .repartition(par, "query_id", "neighbor_id")
-            .cache()
+        threshold = 6.0 * (1.0 - 0.8)  # lowerDistanceThreshold 0.8
+        rows, bc = self_knn_pairs(
+            inst, RELIEF_K, _pair_stats(True, threshold, keep_pairs=True),
+            _PAIR_STATS_SCHEMA, slices=spark.sparkContext.defaultParallelism,
+            neighbors=neigh,
         )
-        # TWO passes over the exploded long form total: one fused
-        # bin-stats aggregation (relevance sums, marginal votes and
-        # collision counts), one collision explode feeding the joint
-        # combos. Both results are TINY (64..~1000 rows): compute them
-        # now, then release the big pair cache — a leaked
-        # multi-hundred-MB cache per sf_dir piles GC pressure onto
-        # every later query in the session.
-        bins = feature_bin_stats(
-            explode_pairs(pairs), continuous=True, lower_distance_threshold=0.8
-        ).collect()
-        _mark("bins")
-        # joint stats straight from the cached compact pair table — the
-        # generic joint_counts would explode to long rows only to
-        # collect_list them back per pair (decimal-identical result,
-        # see joint_counts_from_pairs). localize, not cache: the
-        # memoized results live for the whole session, and every
-        # retained cache entry slows later queries' cache lookups by its
-        # (huge) plan size. LocalRelations don't.
-        joint = localize(
-            joint_counts_from_pairs(
-                pairs, JOINT_TOP, continuous=True,
-                lower_distance_threshold=0.8, num_features=dim,
+        # the stats collect fills the cache; the joint kernel then reads
+        # only its (qi, ni) rows
+        rows = rows.cache()
+        try:
+            [(relevance, marginal, n_pairs, n_coll)] = _probe_batches(
+                [rows.filter(F.col("qi").isNull())], priors
             )
-        )
-        _mark("joint")
-        # classCounter per bin (the collapse divisor); its total is
-        # q72b's MI normalizer (ReliefFRSelector.scala:469-470).
-        pair_counts = {
-            (r["n_label"], r["same_class"]): r["count"]
-            for r in pairs.groupBy("n_label", "same_class").count().collect()
-        }
-        pairs.unpersist()
-        relevance, marginal = _collapse_bins_local(
-            (
-                (r["feature_idx"], r["n_label"], r["same_class"], r["bin_sum"], r["vote_sum"])
-                for r in bins
-            ),
-            pair_counts,
-            priors,
-        )
-        n_coll = dict.fromkeys(relevance, 0)
-        for r in bins:
-            n_coll[r["feature_idx"]] += r["n_collisions"]
+            _mark("bins")
+            # localize, not cache: the memoized results live for the
+            # whole session, and every retained cache entry slows later
+            # queries' cache lookups by its plan size. LocalRelations
+            # don't.
+            joint = localize(
+                _kernel_joint(
+                    rows.filter(F.col("qi").isNotNull()).select("qi", "ni"),
+                    bc, JOINT_TOP, continuous=True, threshold=threshold,
+                )
+            )
+            _mark("joint")
+        finally:
+            rows.unpersist()
+            bc.unpersist()
         perfeat = spark.createDataFrame(
             [(f, relevance[f], marginal[f], n_coll[f]) for f in sorted(relevance)],
             "feature_idx int, relevance double, marginal double, n_collisions long",
         )
-        _PIPE_CACHE[key] = {
-            "perfeat": perfeat, "joint": joint, "n_pairs": sum(pair_counts.values()),
-        }
+        # n_pairs, the classCounter total, is q72b's MI normalizer
+        # (ReliefFRSelector.scala:469-470)
+        _PIPE_CACHE[key] = {"perfeat": perfeat, "joint": joint, "n_pairs": n_pairs}
     return _PIPE_CACHE[key]
 
 
@@ -783,7 +749,10 @@ SPARSE_QUERY_MOD = 10  # deterministic 1-in-10 query sample (estimationRatio ana
         "deterministic, so the whole dataflow is SQL-oracle-able.",
 )
 def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_relieffc_fselection_spark.operators.relief import _probe_batches, _stats_rows
+    from spark_relieffc_fselection_spark.operators.relief import (
+        _stats_rows,
+        feature_bin_stats,
+    )
     from spark_relieffc_fselection_spark.operators.relief_sparse import (
         _pair_bin_counts,
         sparse_knn_join,
@@ -821,7 +790,7 @@ def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
     neigh.count()
     # the sparse fit's own stats probe and driver collapse, one action
-    [(relevance, _, _)] = _probe_batches(
+    [(relevance, _, _, _)] = _probe_batches(
         [
             _stats_rows(
                 feature_bin_stats(

@@ -6,10 +6,11 @@ Semantics match spark_relieffc_fselection_spark.operators.relief:
 within-batch kNN, self excluded, ties by id, class-bin collapse with
 priors, deterministic collision threshold, symmetric joint updates.
 
-:func:`relevance_weights` and :func:`sparse_single_pass_reference`
-are the exceptions: Spark dataflows, kept as the references the
-engine's driver-side bin collapse and its sparse single-pass fit are
-pinned to.
+:func:`relevance_weights`, :func:`marginal_counts` and
+:func:`sparse_single_pass_reference` are the exceptions: Spark
+dataflows, kept as the references the engine's driver-side bin
+collapse, its marginal sums and its sparse single-pass fit are pinned
+to.
 """
 
 from __future__ import annotations
@@ -82,8 +83,9 @@ def diffcube_scan_oracle(
     exclude_self: bool = True,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """The exact numpy kNN scan as it was before BLAS pruning: the full
-    (q - n)^2 diff cube in chunks of 4e6 // (Q * d) scan rows, merged into a running top-k by (distance, neighbor_id) after
-    each chunk. Same signature and output as operators.knn.knn_scan."""
+    (q - n)^2 diff cube in chunks of 4e6 // (Q * d) scan rows, merged into a running top-k by (squared distance, neighbor_id)
+    after each chunk. Same signature and output, squared distances, as
+    operators.knn.knn_scan."""
     nq = len(q_ids)
     best_d = np.full((nq, k), np.inf)
     best_i = np.full((nq, k), -1, dtype=np.int64)
@@ -108,7 +110,7 @@ def diffcube_scan_oracle(
                 best_d = merged_d[rows, sel]
                 best_i = merged_i[rows, sel]
     qi, slot = np.nonzero(np.isfinite(best_d))
-    return q_ids[qi], best_i[qi, slot], np.sqrt(best_d[qi, slot])
+    return q_ids[qi], best_i[qi, slot], best_d[qi, slot]
 
 
 def relief_relevance_oracle(
@@ -179,6 +181,19 @@ def relevance_weights(long_pairs, priors: dict[float, float], pair_counts=None):
         F.sum(F.col("fdist").cast(DEC)).alias("bin_sum"),
     )
     return _collapse_bins(bin_sums, prior_df, pair_counts)
+
+
+def marginal_counts(collisions):
+    """Per-feature marginal collision mass (SURVEY A5) of a
+    ``collision_table`` frame: the Spark aggregate the engine's
+    ``vote_sum`` partials must sum to."""
+    from pyspark.sql import functions as F
+
+    from spark_relieffc_fselection_spark.operators.relief import DEC
+
+    return collisions.groupBy("feature_idx").agg(
+        F.sum(F.col("vote").cast(DEC)).cast("double").alias("marginal")
+    )
 
 
 def _collapse_bins(bin_sums, prior_df, pair_counts):
@@ -318,7 +333,6 @@ def sparse_single_pass_reference(
     from spark_relieffc_fselection_spark.operators.relief import (
         collision_table,
         joint_counts,
-        marginal_counts,
         mi_redundancy,
     )
     from spark_relieffc_fselection_spark.operators.relief_sparse import (

@@ -341,8 +341,8 @@ def _scan_case(rng, family):
 )
 def test_knn_scan_bit_identical_to_diff_cube(monkeypatch, family, exclude_self, max_cells):
     """The exact scan prunes with BLAS distances and re-scores the
-    survivors by the diff cube: its (query_id, neighbor_id, distance)
-    rows must equal the full diff-cube scan's bit for bit — on ties,
+    survivors by the diff cube: its (query_id, neighbor_id, squared
+    distance) rows must equal the full diff-cube scan's bit for bit — on ties,
     duplicate rows and ids, 1e-6..1e6 column scales, points far from the
     origin (BLAS cancellation), overflow/underflow
     magnitudes, NaN/inf coordinates and blocks smaller than k. A tiny
@@ -418,9 +418,7 @@ def _pair_fixture(kind: str) -> tuple[np.ndarray, np.ndarray]:
         # their neighbours, where Double.toString's decimal rounds
         # half-up but the binary value may lie below the tie; 'tiny':
         # below 1e-20 and subnormal, where every cast is 0. Column 0's
-        # powers of two give every pair its own distance: a tie of two
-        # square roots would let the window rank and the kernel's scan
-        # pick different neighbours.
+        # powers of two give every pair its own distance.
         vals = (
             [5e-19, 1.5e-18, 2.5e-18, 0.1 + 0.2, 0.3, 0.1, 4.5e-18, 1.05e-17, 7e-3, 5e-3, 0.0]
             if kind == "halfway"
@@ -438,8 +436,8 @@ def _pair_fixture(kind: str) -> tuple[np.ndarray, np.ndarray]:
 
 def _kernel_stats(rows) -> tuple[dict, dict]:
     """The pair kernel's partial stats rows summed per key: ``{(f,
-    n_label, same_class): (bin_sum, vote_sum)}`` and ``{(n_label,
-    same_class): pairs}``."""
+    n_label, same_class): (bin_sum, vote_sum, n_collisions)}`` and
+    ``{(n_label, same_class): pairs}``."""
     from decimal import localcontext
 
     bins: dict = {}
@@ -453,8 +451,8 @@ def _kernel_stats(rows) -> tuple[dict, dict]:
                 counts[key] = counts.get(key, 0) + r["n"]
                 continue
             key = (r["f"], r["n_label"], r["same_class"])
-            b, v = bins.get(key, (0, 0))
-            bins[key] = (b + r["bin_sum"], v + r["vote_sum"])
+            b, v, n = bins.get(key, (0, 0, 0))
+            bins[key] = (b + r["bin_sum"], v + r["vote_sum"], n + r["n"])
     return bins, counts
 
 
@@ -472,7 +470,8 @@ def test_self_knn_pairs_equal_pair_table_of_knn_join(spark, strategy, kind, excl
     statistics in the tasks that find them. Summed per key, they must
     equal, as decimals, the Spark plan over ``pair_table(batch,
     knn_join(batch, batch, k))``: ``feature_bin_stats`` of its exploded
-    rows, its per-(n_label, same_class) pair counts and, over the cached
+    rows (sums and collision counts), its per-(n_label, same_class) pair
+    counts and, over the cached
     (query row, neighbour row) pairs, ``joint_counts_from_pairs`` for a
     scope, continuous and discrete, whatever the slice count. Fixtures:
     distance ties, identical rows under distinct ids, negative ids, k >=
@@ -507,7 +506,9 @@ def test_self_knn_pairs_equal_pair_table_of_knn_join(spark, strategy, kind, excl
         ldt = 0.8
         threshold = 6.0 * (1.0 - ldt) if continuous else 0.0
         want_bins = {
-            (r["feature_idx"], r["n_label"], r["same_class"]): (r["bin_sum"], r["vote_sum"])
+            (r["feature_idx"], r["n_label"], r["same_class"]): (
+                r["bin_sum"], r["vote_sum"], r["n_collisions"]
+            )
             for r in feature_bin_stats(explode_pairs(pairs), continuous, ldt).collect()
         }
         want_joint = {
@@ -533,6 +534,41 @@ def test_self_knn_pairs_equal_pair_table_of_knn_join(spark, strategy, kind, excl
         assert got_bins == want_bins, case
         assert got_joint == want_joint, case
     pairs.unpersist()
+
+
+@pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm"])
+@pytest.mark.parametrize("scan_partitions", [1, 4])
+def test_knn_join_ranks_by_squared_distance_at_any_partitioning(spark, strategy, scan_partitions):
+    """Ids 5 and 3 lie at squared distances 2.0 and 2.0000000000000004
+    from query 0; both square roots are 1.4142135623730951. The numpy
+    scan ranks by the squared distance, and the window that merges its
+    partitions must too: neighbour 5 on one scan partition and on four
+    (a window on the root used to pick 3 there), as the fit's pair
+    kernel picks."""
+    import pyarrow as pa
+
+    rows = [(0, [0.0, 0.0]), (5, [1.0, 1.0]), (3, [1.4142135623730951, 0.0]), (7, [9.0, 9.0])]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i, x, 0.0) for i, x in rows], scan_partitions),
+        "id long, features array<double>, label double",
+    )
+    assert df.rdd.getNumPartitions() == scan_partitions
+    got = knn_join(df, df.filter("id = 0"), 1, strategy=strategy).collect()
+    assert [(r["query_id"], r["neighbor_id"], r["rank"]) for r in got] == [(0, 5, 1)]
+    assert got[0]["distance"] == 1.4142135623730951
+
+    def id_pairs(qi, ni, batch):
+        ids = batch[0]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids[qi]), pa.array(ids[ni])], names=["query_id", "neighbor_id"]
+        )
+
+    kernel, bc = self_knn_pairs(
+        df, 1, id_pairs, "query_id long, neighbor_id long", slices=2,
+        gemm=strategy == "numpy-gemm",
+    )
+    assert kernel.filter("query_id = 0").select("neighbor_id").collect()[0][0] == 5
+    bc.unpersist()
 
 
 def test_self_knn_pairs_names_a_neighbour_id_missing_from_the_batch(spark):

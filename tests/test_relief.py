@@ -9,12 +9,12 @@ from spark_relieffc_fselection_spark.operators.relief import (
     fit_relief,
     greedy_select,
     joint_counts,
-    marginal_counts,
     pair_table,
     std_ranking,
 )
 from tests.oracle_relief import (
     collision_stats_oracle,
+    marginal_counts,
     relevance_weights,
     relief_relevance_oracle,
 )
@@ -726,6 +726,70 @@ def test_estimator_rejects_null_labels(spark):
 
     with pytest.raises(ValueError, match=r"2 null '\w*label' value\(s\)"):
         ReliefFSelector(numTopFeatures=2, numNeighbors=2).fit(_with_null_labels(spark))
+
+
+def _one_class_rows() -> list:
+    return [(i, [float(i % 3), float(i % 5), float(i % 7), float(i % 4)], 1.0) for i in range(30)]
+
+
+def _one_class(spark):
+    return spark.createDataFrame(
+        _one_class_rows(), "id long, features array<double>, label double"
+    ).coalesce(1)
+
+
+def test_fit_relief_rejects_a_single_class_in_the_profiling_job(spark):
+    """With one class every neighbour is a hit: a 30x4 one-class fit
+    used to return weights with no error. The profiling rows hold the
+    classes, so it fails by name there, and that job is the fit's only
+    job."""
+
+    def fit():
+        with pytest.raises(ValueError, match=r"fit_relief: 'label' has a single class \(1\.0\)"):
+            fit_relief(
+                _one_class(spark), num_top_features=2, num_neighbors=2,
+                estimation_ratio=1.0, batch_size=1.0,
+            )
+
+    jobs = _fit_jobs(spark, "test-single-class", fit)
+    assert len(jobs) == 1, jobs
+
+
+def test_fit_relief_sparse_rejects_a_single_class(spark):
+    from spark_relieffc_fselection_spark.operators.relief_sparse import (
+        fit_relief_sparse,
+        to_long_form,
+    )
+
+    long_df, labels = to_long_form(_one_class(spark))
+
+    def fit():
+        with pytest.raises(
+            ValueError, match=r"fit_relief_sparse: 'label' has a single class \(1\.0\)"
+        ):
+            fit_relief_sparse(long_df, labels, 4, num_top_features=2, num_neighbors=2)
+
+    jobs = _fit_jobs(spark, "test-single-class-sparse", fit)
+    assert len(jobs) == 1, jobs
+
+
+@pytest.mark.parametrize("route", ["dense", "sparse"])
+def test_estimator_rejects_a_single_class(spark, route):
+    from pyspark.ml.linalg import SparseVector
+
+    from spark_relieffc_fselection_spark.ml import ReliefFSelector
+
+    df = _one_class(spark)
+    if route == "sparse":
+        df = spark.createDataFrame(
+            [
+                (SparseVector(len(x), {j: v for j, v in enumerate(x) if v}), lbl)
+                for _, x, lbl in _one_class_rows()
+            ],
+            ["features", "label"],
+        )
+    with pytest.raises(ValueError, match=r"'label' has a single class \(1\.0\)"):
+        ReliefFSelector(numTopFeatures=2, numNeighbors=2).fit(df)
 
 
 @pytest.mark.parametrize("strategy", ["numpy", "numpy-gemm", "sql", "lsh"])

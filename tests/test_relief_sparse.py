@@ -853,6 +853,64 @@ def test_sparse_fit_rejects_duplicate_ids_at_the_norms_fetch(spark, sparse_fixtu
     assert fetches and fetches == list(range(fetches[0], len(jobs))), jobs
 
 
+def _with_non_finite(df, X, value):
+    """The sparse fixture's long table with ``value`` in place of the
+    first active entry of ids 18 and 42 (both in hash batch 0 of 2)."""
+    long_df, labels = to_long_form(df)
+    hit = F.lit(False)
+    for i in (18, 42):
+        hit = hit | ((F.col("id") == i) & (F.col("feature_idx") == int(np.flatnonzero(X[i])[0])))
+    return long_df.withColumn("value", F.when(hit, F.lit(value)).otherwise(F.col("value"))), labels
+
+
+_NON_FINITE = r"sparse_knn_join: 2 NaN or \+-inf 'value' value\(s\) in the long table, on id\(s\) 18, 42"
+
+
+@pytest.mark.parametrize("value", [float("nan"), float("inf"), float("-inf")])
+@pytest.mark.parametrize("batch_size", [1.0, 0.5])
+def test_sparse_fit_rejects_non_finite_values_at_the_norms_fetch(
+    spark, sparse_fixture, batch_size, value
+):
+    """A NaN or an infinity used to cast to NULL in the decimal norm and
+    dot sums (an infinite row's norm became 0) and moved the weights
+    with no error. The norms aggregation counts them per id, so each
+    batch's norms fetch names them: it is the fit's last action."""
+    from tests.test_relief import _fit_jobs
+
+    df, X, _ = sparse_fixture
+    long_df, labels = _with_non_finite(df, X, value)
+
+    def fit():
+        with pytest.raises(ValueError, match=_NON_FINITE):
+            fit_relief_sparse(
+                long_df, labels, n_features=X.shape[1], num_top_features=3,
+                num_neighbors=4, batch_size=batch_size,
+            )
+
+    jobs = _fit_jobs(spark, f"test-sparse-non-finite-{batch_size}-{value}", fit)
+    fetches = [i for i, names in enumerate(jobs) if any("toArrow" in n for n in names)]
+    assert fetches and fetches == list(range(fetches[0], len(jobs))), jobs
+
+
+def test_estimator_sparse_route_rejects_non_finite_values(spark, sparse_fixture):
+    from pyspark.ml.linalg import SparseVector
+
+    from spark_relieffc_fselection_spark.ml import ReliefFSelector
+
+    _, X, y = sparse_fixture
+    X = X.copy()
+    X[18, np.flatnonzero(X[18])[0]] = np.nan
+    rows = [
+        (SparseVector(X.shape[1], {j: v for j, v in enumerate(x) if v != 0.0}), float(lbl))
+        for x, lbl in zip(X, y)
+    ]
+    df = spark.createDataFrame(rows, ["features", "label"])
+    with pytest.raises(ValueError, match=r"1 NaN or \+-inf 'value' value\(s\)"):
+        ReliefFSelector(
+            numTopFeatures=3, numNeighbors=4, estimationRatio=1.0, batchSize=1.0
+        ).fit(df)
+
+
 @pytest.mark.parametrize("batch_size", [1.0, 0.5])
 def test_fit_relief_sparse_empty_input_raises_clearly(spark, batch_size):
     """Empty long/labels tables fail with the same named ValueError as
