@@ -31,12 +31,13 @@ join:
   re-scored by the ``(q-b)^2`` diff cube. ``'numpy-gemm'`` ranks by the
   expansion itself.
 
-The RELIEF fit reduces its pairs inside :func:`self_knn_pairs` on
+The RELIEF fits reduce their pairs inside :func:`self_knn_pairs` on
 every tier: the tasks that find the neighbours in the broadcast batch
 emit only the reducer's small exact partials, with no pair joins and no
 pair rows. On the two numpy tiers each query slice scans the whole
 batch, so there is no window rank either; ``'sql'`` and ``'lsh'`` hand
-it :func:`knn_join`'s id pairs.
+:func:`knn_join`'s id pairs to its lookup task (:func:`lookup_pairs`),
+as the sparse fit hands it ``sparse_knn_join``'s.
 
 At 100 TB the queries side stays a bounded sample (the algorithm's
 estimationRatio guarantees this — BASELINE.md complexity row), so the
@@ -475,6 +476,7 @@ def self_knn_pairs(
     exclude_self: bool = True,
     gemm: bool = False,
     neighbors: DataFrame | None = None,
+    queries: Callable[[np.ndarray], np.ndarray] | None = None,
 ) -> tuple[DataFrame, Broadcast]:
     """The fit's pair kernel for ``batch`` (its ``(id, features, label)``
     frame), on every kNN tier: the tasks that find each query's
@@ -495,16 +497,17 @@ def self_knn_pairs(
     ``neighbors=None`` (the exact tiers): ``slices`` tasks each run
     :func:`knn_scan` for a contiguous slice of the queries against the
     WHOLE batch, so each slice's top-k is already global by (squared
-    distance, neighbor_id): no rank merge, no shuffle. The exact tier's distances
-    are per-pair diff-cube values, independent of the slicing;
-    ``gemm=True`` ranks by the BLAS expansion, whose last bits follow
-    the matrix shapes, so it matches ``'numpy-gemm'`` exactly on integer
-    grids. Otherwise ``neighbors`` is the ``(query_id, neighbor_id)``
-    table of a :func:`knn_join` whose queries and neighbours are rows of
-    ``batch`` (the fit's ``'sql'`` and ``'lsh'`` tiers, or a query
-    sample against the whole table), hash-partitioned into ``slices``
-    partitions; ``k``, ``exclude_self``
-    and ``gemm`` are then the join's.
+    distance, neighbor_id): no rank merge, no shuffle. The queries are
+    every row, or the rows whose id the mask ``queries(ids)`` selects
+    (a query sample against the whole table, fetched once). The exact
+    tier's distances are per-pair diff-cube values, independent of the
+    slicing; ``gemm=True`` ranks by the BLAS expansion, whose last bits
+    follow the matrix shapes, so it matches ``'numpy-gemm'`` exactly on
+    integer grids. Otherwise ``neighbors`` is the ``(query_id,
+    neighbor_id)`` table of a :func:`knn_join` whose queries and
+    neighbours are rows of ``batch`` (the fit's ``'sql'`` and ``'lsh'``
+    tiers), handed to :func:`lookup_pairs`; ``k``, ``exclude_self`` and
+    ``gemm`` are then the join's.
 
     Returns the output frame and the broadcast, which a later kernel
     over the same rows reuses; the caller releases it."""
@@ -515,37 +518,57 @@ def self_knn_pairs(
     _reject_duplicate_ids(ids, "knn", "the fit batch")
     _check_exact_domain(mat, "features", "the fit batch")
     bc = spark.sparkContext.broadcast((ids, mat[order], labels[order]))
-    n_rows = len(ids)
-    slices = max(1, min(slices, n_rows))
+    q_rows = None if queries is None else np.flatnonzero(queries(ids))
+    n_q = len(ids) if q_rows is None else len(q_rows)
+    slices = max(1, min(slices, n_q))
+    if neighbors is not None:
+        return lookup_pairs(neighbors, bc, reduce, schema, slices=slices), bc
 
     def kernel(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ids, mat, _ = bc.value
         for part in parts:
             for s in part.column(0).to_numpy():
-                lo, hi = s * n_rows // slices, (s + 1) * n_rows // slices
+                lo, hi = s * n_q // slices, (s + 1) * n_q // slices
                 if hi > lo:
+                    q = slice(lo, hi) if q_rows is None else q_rows[lo:hi]
                     q_id, n_id, _ = knn_scan(
-                        ids[lo:hi], mat[lo:hi], [(ids, mat)], k, exclude_self, gemm
+                        ids[q], mat[q], [(ids, mat)], k, exclude_self, gemm
                     )
                     yield from reduce(_rows_of(ids, q_id), _rows_of(ids, n_id), bc.value)
 
-    def lookup(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ids = bc.value[0]
-        for part in parts:
-            qi = _rows_of(ids, part.column(0).to_numpy())
-            yield from reduce(qi, _rows_of(ids, part.column(1).to_numpy()), bc.value)
+    return spark.range(0, slices, numPartitions=slices).mapInArrow(kernel, schema), bc
 
-    if neighbors is None:
-        out = spark.range(0, slices, numPartitions=slices).mapInArrow(kernel, schema)
-    else:
-        # an explicit count: AQE would coalesce the small id table into
-        # a few partitions and serialize every reduce downstream
-        out = (
-            neighbors.select("query_id", "neighbor_id")
-            .repartition(slices, "query_id", "neighbor_id")
-            .mapInArrow(lookup, schema)
-        )
-    return out, bc
+
+def lookup_pairs(
+    neighbors: DataFrame,
+    bc: Broadcast,
+    reduce: Callable[[np.ndarray, np.ndarray, tuple], Iterator[pa.RecordBatch]],
+    schema: str,
+    *,
+    slices: int,
+) -> DataFrame:
+    """The pair kernel's lookup task, the one every fit with a
+    neighbour table runs: the ``(query_id, neighbor_id)`` rows of
+    ``neighbors``, hash-partitioned into ``slices`` tasks, become ROW
+    positions in the broadcast batch ``bc`` (a tuple whose first field
+    holds its ids, ascending), and each task calls ``reduce(qi, ni,
+    bc.value)`` and emits only what it yields, as record batches of
+    ``schema``. An id the broadcast does not hold raises instead of
+    being indexed."""
+
+    def lookup(parts: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batch = bc.value
+        for part in parts:
+            qi = _rows_of(batch[0], part.column(0).to_numpy())
+            yield from reduce(qi, _rows_of(batch[0], part.column(1).to_numpy()), batch)
+
+    # an explicit count: AQE would coalesce the small id table into a
+    # few partitions and serialize every reduce downstream
+    return (
+        neighbors.select("query_id", "neighbor_id")
+        .repartition(slices, "query_id", "neighbor_id")
+        .mapInArrow(lookup, schema)
+    )
 
 
 def _check_exact_domain(mat: np.ndarray, features_col: str, side: str) -> None:

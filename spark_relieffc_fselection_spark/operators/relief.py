@@ -1,15 +1,16 @@
 """RELIEF-F weighting + collision-redundancy.
 
 The reference accumulates its statistics by hand in each partition
-(breeze, ReliefFRSelector.scala:377-602 dense/sparse paths). The dense
-fit does the same: the tasks of its pair kernel
-(:func:`knn.self_knn_pairs`) reduce their pairs to small exact decimal
-partials (:func:`_pair_stats`, :func:`_kernel_joint`) that the driver
-sums. The long/exploded-table form — :func:`pair_table`,
-:func:`explode_pairs` and ``groupBy`` aggregations such as
-:func:`feature_bin_stats` — serves the sparse fit, whose long table is
-sparse by construction, and is the reference the kernel is tested
-against.
+(breeze, ReliefFRSelector.scala:377-602 dense/sparse paths). Every fit
+does the same: the tasks of its pair kernel (:func:`knn.self_knn_pairs`,
+:func:`knn.lookup_pairs`) reduce their pairs to small exact decimal
+partials that the driver sums — :func:`_pair_stats` and
+:func:`_kernel_joint` over the dense batch, their CSR twins in
+``relief_sparse`` over the sparse one. The long/exploded-table form —
+:func:`pair_table`, :func:`explode_pairs` and ``groupBy`` aggregations
+such as :func:`feature_bin_stats`, :func:`collision_table` and
+:func:`joint_counts` — runs in no fit: it is the reference the kernels
+are tested against.
 
 Semantics implemented (citations into /root/reference):
 
@@ -217,8 +218,8 @@ def joint_counts(
     (discrete; identical since discrete votes are all 1.0).
 
     Physical plan: self-join of the collision rows on the pair id (two
-    shuffles but O(1) memory per row), the safe plan for the sparse
-    fits' millions-wide feature spaces.
+    shuffles but O(1) memory per row). No fit runs it: it is the
+    reference the sparse fit's COO joint kernel is tested against.
     """
     if top_features is not None and len(top_features) == 0:
         spark = collisions.sparkSession
@@ -417,23 +418,37 @@ def _dec18_units(x: np.ndarray) -> np.ndarray:
     return out
 
 
-def _dec18_col_sums(x: np.ndarray) -> np.ndarray:
-    """Exact per-column sums of :func:`_dec18_units` over the 2-D ``x``,
-    as a 1-D object array of Python ints (units of 1e-18). Each 128-bit
-    value is split into four 32-bit limbs, so the int64 column sums
-    cannot overflow below 2^31 rows."""
-    rows, cols = x.shape
-    words = _dec18_units(x.ravel())
+def _dec18_limbs(x: np.ndarray) -> tuple[np.ndarray, ...]:
+    """:func:`_dec18_units` of the 1-D ``x`` split into four int64 arrays
+    of 32-bit limbs, low first (the last one signed): limb sums cannot
+    overflow below 2^31 values."""
+    words = _dec18_units(x)
     lo, hi = words[:, 0].view(np.uint64), words[:, 1]
-    limbs = (
+    return (
         (lo & 0xFFFFFFFF).astype(np.int64),
         (lo >> np.uint64(32)).astype(np.int64),
         (hi.view(np.uint64) & 0xFFFFFFFF).astype(np.int64),
         hi >> 32,
     )
+
+
+def _dec18_col_sums(x: np.ndarray) -> np.ndarray:
+    """Exact per-column sums of :func:`_dec18_units` over the 2-D ``x``,
+    as a 1-D object array of Python ints (units of 1e-18)."""
+    rows, cols = x.shape
     total = np.zeros(cols, dtype=object)
-    for j, limb in enumerate(limbs):
+    for j, limb in enumerate(_dec18_limbs(x.ravel())):
         total += limb.reshape(rows, cols).sum(axis=0).astype(object) << (32 * j)
+    return total
+
+
+def _dec18_group_sums(x: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Exact sums of :func:`_dec18_units` over the runs of the 1-D ``x``
+    that begin at ``starts`` (ascending, the first 0), as an object
+    array of Python ints (units of 1e-18)."""
+    total = np.zeros(len(starts), dtype=object)
+    for j, limb in enumerate(_dec18_limbs(x)):
+        total += np.add.reduceat(limb, starts).astype(object) << (32 * j)
     return total
 
 
@@ -453,6 +468,16 @@ def _collision_votes(fdist: np.ndarray, continuous: bool, threshold: float) -> n
     return np.where(fdist <= threshold, vote, 0.0)
 
 
+def _bin_codes(q_lbl: np.ndarray, n_lbl: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The (n_label, same_class) bin of each pair as ``(lbls, code)``:
+    bin ``code`` is neighbour label ``lbls[code // 2]`` with same_class
+    ``code % 2 == 1``."""
+    # Spark's `=` holds for NaN = NaN
+    same = (n_lbl == q_lbl) | (np.isnan(n_lbl) & np.isnan(q_lbl))
+    lbls = np.unique(n_lbl)
+    return lbls, np.searchsorted(lbls, n_lbl) * 2 + same
+
+
 def _pair_stats(
     continuous: bool, threshold: float, keep_pairs: bool
 ) -> Callable[[np.ndarray, np.ndarray, tuple], Iterator[pa.RecordBatch]]:
@@ -469,11 +494,7 @@ def _pair_stats(
 
     def reduce(qi: np.ndarray, ni: np.ndarray, batch: tuple) -> Iterator[pa.RecordBatch]:
         _, mat, labels = batch
-        q_lbl, n_lbl = labels[qi], labels[ni]
-        # Spark's `=` holds for NaN = NaN
-        same = (n_lbl == q_lbl) | (np.isnan(n_lbl) & np.isnan(q_lbl))
-        lbls = np.unique(n_lbl)
-        code = np.searchsorted(lbls, n_lbl) * 2 + same
+        lbls, code = _bin_codes(labels[qi], labels[ni])
         d = mat.shape[1]
         step = max(1, _STATS_BLOCK_VALUES // max(d, 1))
         for c in np.unique(code):
@@ -571,6 +592,14 @@ def _kernel_joint(
             names=["f1", "f2", "part"],
         )
 
+    return _joint_of_parts(pairs, kernel, continuous)
+
+
+def _joint_of_parts(pairs: DataFrame, kernel: Callable, continuous: bool) -> DataFrame:
+    """The joint COO of a joint kernel: ``kernel`` maps the ``(qi, ni)``
+    rows to ``(f1, f2, part)`` one-orientation partials (decimal sums on
+    continuous data, combo counts on discrete data), summed per key and
+    finished by :func:`_mirror_sum` as the Spark plan does."""
     schema = f"f1 int, f2 int, part {'decimal(38,18)' if continuous else 'long'}"
     parts = pairs.mapInArrow(kernel, schema)
     j_part = F.sum("part") if continuous else F.sum("part").cast(DEC)
@@ -1037,29 +1066,6 @@ class _Neighbourhood(NamedTuple):
     stats: DataFrame
     joint: Callable[[list[int]], DataFrame]
     route: str
-
-
-def _stats_rows(bins: DataFrame, pair_counts: DataFrame) -> DataFrame:
-    """A ``feature_bin_stats`` frame and its ``(n_label, same_class,
-    bin_cnt)`` pair counts as :class:`_Neighbourhood` stats rows."""
-    null_dec = F.lit(None).cast(DEC)
-    return bins.select(
-        F.col("feature_idx").alias("f"),
-        "n_label",
-        "same_class",
-        "bin_sum",
-        "vote_sum",
-        F.col("n_collisions").cast("long").alias("n"),
-    ).unionAll(
-        pair_counts.select(
-            F.lit(None).cast(bins.schema["feature_idx"].dataType).alias("f"),
-            "n_label",
-            "same_class",
-            null_dec.alias("bin_sum"),
-            null_dec.alias("vote_sum"),
-            F.col("bin_cnt").cast("long").alias("n"),
-        )
-    )
 
 
 def _probe_batches(

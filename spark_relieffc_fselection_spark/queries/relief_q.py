@@ -99,13 +99,12 @@ def _pipe(spark: SparkSession, sf_dir: str) -> dict:
     """q14-q17 and q72b's shared statistics, memoized per (session,
     sf_dir) — pure memoization, results unchanged.
 
-    The numpy kNN of the 1-in-4 queries against the whole table (~4x
-    faster than the SQL expression at sf0.1 and rank-identical;
-    tests/test_knn.py pins cross-strategy agreement) hands its id pairs
-    to the fit's pair kernel over the whole table: exact decimal bin
-    sums, collision votes and counts and pair counts, reduced where the
-    pairs are looked up (:func:`knn.self_knn_pairs`), then the joint
-    kernel over the cached (query row, neighbour row) pairs."""
+    The fit's pair kernel over the whole table, fetched once
+    (:func:`knn.self_knn_pairs`): each task finds the exact k nearest
+    neighbours of its slice of the 1-in-4 query rows and reduces them to
+    exact decimal bin sums, collision votes and counts and pair counts;
+    then the joint kernel over the cached (query row, neighbour row)
+    pairs."""
     # applicationId, not id(spark): CPython reuses object addresses, so
     # a fresh session could otherwise hit a cache entry bound to a
     # stopped SparkContext.
@@ -122,17 +121,13 @@ def _pipe(spark: SparkSession, sf_dir: str) -> dict:
         n_total = sum(r["n"] for r in label_rows)
         priors = {float(r["label"]): r["n"] / n_total for r in label_rows}
         _mark("priors")
-        # estimationRatio analogue: deterministic 1-in-4 query sample
-        # (must mirror RELIEF_QPRED in the oracles)
-        queries = inst.filter(F.col("id") % 4 == 0)
-        neigh = knn_join(
-            inst, queries, RELIEF_K, strategy="numpy", num_instances=n_total
-        )
         threshold = 6.0 * (1.0 - 0.8)  # lowerDistanceThreshold 0.8
         rows, bc = self_knn_pairs(
             inst, RELIEF_K, _pair_stats(True, threshold, keep_pairs=True),
             _PAIR_STATS_SCHEMA, slices=spark.sparkContext.defaultParallelism,
-            neighbors=neigh,
+            # estimationRatio analogue: deterministic 1-in-4 query sample
+            # (must mirror RELIEF_QPRED in the oracles)
+            queries=lambda ids: ids % 4 == 0,
         )
         # the stats collect fills the cache; the joint kernel then reads
         # only its (qi, ni) rows
@@ -742,21 +737,18 @@ SPARSE_QUERY_MOD = 10  # deterministic 1-in-10 query sample (estimationRatio ana
     FROM contrib GROUP BY feature_idx
     """,
     doc="Sparse-path RELIEF relevance end-to-end (relief_sparse.py: "
-        "inverted-index kNN via decimal-exact norm expansion, full-outer "
-        "union-of-active pair explode, shared bin collapse — "
-        "ReliefFRSelector.scala:483-602 semantics with corrected feature "
-        "indexing per SURVEY §8.1). Sparsifier keeps |x| > 1 — "
-        "deterministic, so the whole dataflow is SQL-oracle-able.",
+        "inverted-index kNN via decimal-exact norm expansion, then the "
+        "sparse fit's pair kernel over the broadcast CSR batch — exact "
+        "decimal bin sums over each pair's union of active features, "
+        "shared bin collapse — ReliefFRSelector.scala:483-602 semantics "
+        "with corrected feature indexing per SURVEY §8.1). The oracle "
+        "spells the same statistics as a full-outer pair explode. "
+        "Sparsifier keeps |x| > 0.15 — deterministic, so the whole "
+        "dataflow is SQL-oracle-able.",
 )
 def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_relieffc_fselection_spark.operators.relief import (
-        _stats_rows,
-        feature_bin_stats,
-    )
     from spark_relieffc_fselection_spark.operators.relief_sparse import (
-        _pair_bin_counts,
-        sparse_knn_join,
-        sparse_pair_feature_table,
+        _sparse_neighbourhood,
         to_long_form,
     )
 
@@ -773,43 +765,29 @@ def q44_sparse_relief_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
     long_df, labels = long_df.cache(), labels.cache()
     query_ids = labels.select("id").filter(F.col("id") % SPARSE_QUERY_MOD == 0)
     # ONE job for the priors (sum of label counts == total); it fills
-    # the LABELS cache. The kNN's norms fetch is the long cache's first
+    # the LABELS cache. The batch fetch is the long cache's first
     # consumer and reads it once, so it fills that cache before the dot
     # join's two references read it (racing consumers of an unfilled
     # cache would each recompute the sparsify+explode).
     label_rows = labels.groupBy("label").agg(F.count("*").alias("n")).collect()
     n_inst = sum(r["n"] for r in label_rows)
     priors = {float(r["label"]): r["n"] / n_inst for r in label_rows}
-    # Cache + materialize the tiny neighbor table: it feeds the pair
-    # explode THREE times (q-side, n-side, final label join) plus the
-    # pair-count aggregation — uncached, the whole inverted-index kNN
-    # subplan (dot join + per-query merge) would re-execute per
-    # consumer.
-    neigh = sparse_knn_join(
-        long_df, labels, query_ids, SPARSE_K, num_corpus=n_inst
-    ).cache()
-    neigh.count()
-    # the sparse fit's own stats probe and driver collapse, one action
-    [(relevance, _, _, _)] = _probe_batches(
-        [
-            _stats_rows(
-                feature_bin_stats(
-                    sparse_pair_feature_table(long_df, labels, neigh),
-                    continuous=True,
-                    lower_distance_threshold=0.8,
-                ),
-                _pair_bin_counts(neigh, labels),
-            )
-        ],
-        priors,
-    )
-    out = spark.createDataFrame(
+    held: list = []
+    try:
+        # the sparse fit's neighbourhood on the query subset, then its
+        # stats collect and driver collapse
+        nb = _sparse_neighbourhood(
+            long_df, labels, query_ids, SPARSE_K, held.append,
+            continuous=True, threshold=6.0 * (1.0 - 0.8), keep_pairs=False,
+            num_corpus=n_inst,
+        )
+        [(relevance, _, _, _)] = _probe_batches([nb.stats], priors)
+    finally:
+        for h in [*held, long_df, labels]:
+            h.unpersist()
+    return spark.createDataFrame(
         sorted(relevance.items()), "feature_idx int, relevance double"
     ).select("feature_idx", F.round("relevance", 6).alias("relevance"))
-    neigh.unpersist()
-    long_df.unpersist()
-    labels.unpersist()
-    return out
 
 
 # --- Discretization front end (ml/discretizer.py) ---------------------------

@@ -6,11 +6,11 @@ Semantics match spark_relieffc_fselection_spark.operators.relief:
 within-batch kNN, self excluded, ties by id, class-bin collapse with
 priors, deterministic collision threshold, symmetric joint updates.
 
-:func:`relevance_weights`, :func:`marginal_counts` and
-:func:`sparse_single_pass_reference` are the exceptions: Spark
-dataflows, kept as the references the engine's driver-side bin
-collapse, its marginal sums and its sparse single-pass fit are pinned
-to.
+:func:`relevance_weights`, :func:`marginal_counts`,
+:func:`_pair_bin_counts` and :func:`sparse_single_pass_reference` are
+the exceptions: Spark dataflows, kept as the references the engine's
+driver-side bin collapse, its marginal sums, its sparse pair counts and
+its sparse single-pass fit are pinned to.
 """
 
 from __future__ import annotations
@@ -196,6 +196,33 @@ def marginal_counts(collisions):
     )
 
 
+def _pair_bin_counts(neighbors, labels):
+    """classCounter from the neighbor table, ``(n_label, same_class,
+    bin_cnt)``: counts EVERY pair, even ones whose rows are fully absent
+    from the sparse long table — the Spark form of the per-bin pair
+    counts the sparse pair kernel emits.
+
+    Invariant: both label joins are inner joins that must keep every
+    neighbor row (query and neighbor ids are drawn from ``labels``), so
+    ``sum(bin_cnt) == neighbors.count()``."""
+    from pyspark.sql import functions as F
+
+    return (
+        neighbors.select("query_id", "neighbor_id")
+        .join(
+            labels.select(F.col("id").alias("query_id"), F.col("label").alias("q_label")),
+            "query_id",
+        )
+        .join(
+            labels.select(F.col("id").alias("neighbor_id"), F.col("label").alias("n_label")),
+            "neighbor_id",
+        )
+        .withColumn("same_class", F.col("n_label") == F.col("q_label"))
+        .groupBy("n_label", "same_class")
+        .agg(F.count("*").alias("bin_cnt"))
+    )
+
+
 def _collapse_bins(bin_sums, prior_df, pair_counts):
     from pyspark.sql import functions as F
 
@@ -336,7 +363,6 @@ def sparse_single_pass_reference(
         mi_redundancy,
     )
     from spark_relieffc_fselection_spark.operators.relief_sparse import (
-        _pair_bin_counts,
         sparse_knn_join,
         sparse_pair_feature_table,
     )

@@ -59,7 +59,7 @@ def test_sparse_pair_table_matches_dense_relevance(spark, sparse_fixture):
         r["feature_idx"]: r["relevance"]
         for r in relevance_weights(dense_lp, priors).collect()
     }
-    from spark_relieffc_fselection_spark.operators.relief_sparse import _pair_bin_counts
+    from tests.oracle_relief import _pair_bin_counts
 
     sparse_neigh = sparse_knn_join(long_df, labels, labels.select("id"), k)
     sparse_lp = sparse_pair_feature_table(long_df, labels, sparse_neigh)
@@ -80,7 +80,7 @@ def test_pair_bin_counts_preserve_every_neighbor_row(spark, sparse_fixture):
     """_pair_bin_counts' label joins must keep every neighbor row: the
     sparse fits recover n_pairs as sum(bin_cnt) instead of counting the
     neighbor table."""
-    from spark_relieffc_fselection_spark.operators.relief_sparse import _pair_bin_counts
+    from tests.oracle_relief import _pair_bin_counts
 
     df, _, _ = sparse_fixture
     long_df, labels = to_long_form(df)
@@ -780,9 +780,14 @@ def test_batched_fits_share_one_joint_total(spark, sparse_fixture, monkeypatch):
         assert joint_total == total * share
 
 
-#: the largest job count of each sparse fit over six runs (two sessions
-#: of three) on the one exact sparse kNN route
-_SPARSE_FIT_MAX_JOBS = {(1.0, True): 35, (1.0, False): 28, (0.5, True): 55, (0.5, False): 49}
+#: Spark jobs of each sparse fit, identical over 10 runs in one session:
+#: the profiling collect (2), per batch the one Arrow fetch of its long
+#: rows and norms (4), the one stats collect (6 for one batch: the dot
+#: join's broadcast query rows, the dot aggregation, the merge's and the
+#: lookup's repartitions and the result; 11 for 2 batches; one more per
+#: batch that fills the pair cache) and, with redundancy removal, the
+#: one joint/MI collect (4)
+_SPARSE_FIT_JOBS = {(1.0, True): 17, (1.0, False): 12, (0.5, True): 27, (0.5, False): 21}
 
 
 @pytest.mark.parametrize(
@@ -790,19 +795,17 @@ _SPARSE_FIT_MAX_JOBS = {(1.0, True): 35, (1.0, False): 28, (0.5, True): 55, (0.5
     [(1.0, True, 60), (1.0, False, 50), (0.5, True, 87), (0.5, False, 77)],
 )
 def test_sparse_fit_job_count_bounded(spark, sparse_fixture, batch_size, redundancy, max_jobs):
-    """Spark jobs per sparse fit, counted under a job group. A bound,
-    not an exact pin: the same fit's count varies between runs (by up
-    to three), as AQE's shuffle-stage jobs vary. ``max_jobs`` is the
-    largest count measured over six runs of the fit before both sparse
-    fits ran through the shared batch engine; the assertion uses the
-    tighter :data:`_SPARSE_FIT_MAX_JOBS`, measured the same way once the
-    norm probe loop, the norms grid and the density and per-batch
-    counts were gone."""
+    """Spark jobs per sparse fit, counted under a job group like the
+    dense pins: an exact pin (:data:`_SPARSE_FIT_JOBS`). ``max_jobs`` is
+    the largest count measured over six runs of the fit before both
+    sparse fits ran through the shared batch engine. The count used to
+    vary by up to three between runs, in the AQE stage jobs of the Spark
+    pair-table chain; the pair kernel's lookup replaced that chain."""
     df, X, _ = sparse_fixture
     long_df, labels = to_long_form(df)
     sc = spark.sparkContext
     group = f"test-sparse-fit-jobs-{batch_size}-{redundancy}"
-    sc.setJobGroup(group, "sparse fit job-count bound")
+    sc.setJobGroup(group, "sparse fit job-count pin")
     try:
         fit_relief_sparse(
             long_df, labels, n_features=X.shape[1],
@@ -812,9 +815,9 @@ def test_sparse_fit_job_count_bounded(spark, sparse_fixture, batch_size, redunda
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    bound = _SPARSE_FIT_MAX_JOBS[(batch_size, redundancy)]
-    assert bound < max_jobs
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= bound
+    pinned = _SPARSE_FIT_JOBS[(batch_size, redundancy)]
+    assert pinned < max_jobs
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == pinned
 
 
 @pytest.mark.parametrize("batch_size", [1.0, 0.5])
@@ -922,3 +925,238 @@ def test_fit_relief_sparse_empty_input_raises_clearly(spark, batch_size):
             long_df, labels, n_features=4, num_top_features=2,
             num_neighbors=2, batch_size=batch_size,
         )
+
+
+def _explicit_zeros():
+    """:func:`_two_of_fifty` plus an explicit 0.0 entry on a third
+    feature of every third row: active, so its slot counts."""
+    rng = np.random.default_rng(13)
+    rows = _two_of_fifty()
+    taken = {(i, f) for i, f, _ in rows}
+    for i in range(0, 120, 3):
+        f = int(rng.choice([f for f in range(50) if (i, f) not in taken]))
+        rows.append((i, f, 0.0))
+    return rows
+
+
+#: name -> (long rows, label ids, k, declared width)
+_KERNEL_FIXTURES = {
+    "integer-ties": (
+        [(i, f, float((i + f) % 3)) for i in range(30) for f in range(4) if (i + f) % 3],
+        range(30), 5, 4,
+    ),
+    "explicit-zeros": (_explicit_zeros(), range(120), 6, 50),
+    "all-zero-rows": (_two_of_fifty(), range(125), 7, 50),
+    "binary-values": (_binary(), range(95), 5, 30),
+    "wide": (
+        [(i, f * 40_009 + 3, v) for i, f, v in _two_of_fifty()], range(125), 6, 1 << 21,
+    ),
+}
+
+
+@pytest.mark.parametrize("fixture", list(_KERNEL_FIXTURES))
+def test_sparse_pair_kernel_equals_the_pair_table_chain(spark, fixture):
+    """The sparse fit's pair kernel reduces each (query, neighbour) pair
+    over its union of active slots in the lookup task. Summed per key,
+    its partials must equal, as decimals, the Spark chain over the same
+    ``sparse_knn_join`` table: ``feature_bin_stats(
+    sparse_pair_feature_table(...))`` (sums and collision counts),
+    ``_pair_bin_counts`` and ``joint_counts(collision_table(...))`` for a
+    scope, on continuous and discrete data. Fixtures: integer distance
+    ties, explicit 0.0 long rows, all-zero rows, binary rows and a
+    declared width of 2^21."""
+    from spark_relieffc_fselection_spark.operators.relief import (
+        collision_table,
+        feature_bin_stats,
+        joint_counts,
+    )
+    from spark_relieffc_fselection_spark.operators.relief_sparse import _sparse_neighbourhood
+    from tests.oracle_relief import _pair_bin_counts
+    from tests.test_knn import _kernel_stats
+
+    rows, label_ids, k, width = _KERNEL_FIXTURES[fixture]
+    long_df = spark.createDataFrame(rows, "id long, feature_idx int, value double")
+    labels = spark.createDataFrame(
+        [(i, float(i % 3)) for i in label_ids], "id long, label double"
+    )
+    neigh = sparse_knn_join(long_df, labels, labels.select("id"), k).cache()
+    lp = sparse_pair_feature_table(long_df, labels, neigh).cache()
+    want_counts = {
+        (r["n_label"], r["same_class"]): r["bin_cnt"]
+        for r in _pair_bin_counts(neigh, labels).collect()
+    }
+    top = sorted({f for _, f, _ in rows})[:5]
+    joints = 0
+    for continuous in (True, False):
+        ldt = 0.8
+        threshold = 6.0 * (1.0 - ldt) if continuous else 0.0
+        want_bins = {
+            (r["feature_idx"], r["n_label"], r["same_class"]): (
+                r["bin_sum"], r["vote_sum"], r["n_collisions"]
+            )
+            for r in feature_bin_stats(lp, continuous, ldt).collect()
+        }
+        want_joint = {
+            (r["f1"], r["f2"]): r["joint"]
+            for r in joint_counts(collision_table(lp, continuous, ldt), top, continuous).collect()
+        }
+        held: list = []
+        nb = _sparse_neighbourhood(
+            long_df, labels, labels.select("id"), k, held.append,
+            continuous=continuous, threshold=threshold, keep_pairs=True, n_features=width,
+        )
+        try:
+            got_bins, got_counts = _kernel_stats(nb.stats.collect())
+            got_joint = {(r["f1"], r["f2"]): r["joint"] for r in nb.joint(top).collect()}
+        finally:
+            for h in held:
+                h.unpersist()
+        assert got_counts == want_counts, continuous
+        assert got_bins == want_bins, continuous
+        assert got_joint == want_joint, continuous
+        joints += len(want_joint)
+    neigh.unpersist()
+    lp.unpersist()
+    assert want_counts and joints  # the comparison covered real entries
+
+
+def test_sparse_fit_and_q44_build_no_pair_table(spark, sparse_fixture, monkeypatch):
+    """The sparse fit and q44 reduce their pairs inside the pair
+    kernel's lookup task: they call none of the Spark pair-table
+    operators, and the rows the fit caches carry no feature values,
+    single pass and 2 hash batches with redundancy removal on."""
+    from spark_relieffc_fselection_spark.operators import relief, relief_sparse
+    from spark_relieffc_fselection_spark.queries.relief_q import q44_sparse_relief_relevance
+    from tests.conftest import SF_DIR
+
+    def banned(*_args, **_kwargs):
+        raise AssertionError("a sparse fit built a pair table")
+
+    for mod, name in (
+        (relief_sparse, "sparse_pair_feature_table"),
+        (relief, "feature_bin_stats"),
+        (relief, "collision_table"),
+        (relief, "joint_counts"),
+    ):
+        monkeypatch.setattr(mod, name, banned)
+    df, X, _ = sparse_fixture
+    long_df, labels = to_long_form(df)
+    cached = []
+    real_cache = type(df).cache
+
+    def cache(frame):
+        cached.append(frame.schema)
+        return real_cache(frame)
+
+    monkeypatch.setattr(type(df), "cache", cache)
+    for batch_size in (1.0, 0.5):
+        res = fit_relief_sparse(
+            long_df, labels, n_features=X.shape[1], num_top_features=3,
+            num_neighbors=4, redundancy_removal=True, batch_size=batch_size,
+        )
+        assert res.redundancy_coo
+    assert q44_sparse_relief_relevance(spark, SF_DIR).count() > 0
+    pair_caches = [s for s in cached if "qi" in s.names]
+    assert len(pair_caches) == 3
+    assert not any(
+        f.dataType.typeName() == "array" or f.name == "value"
+        for s in pair_caches
+        for f in s.fields
+    ), pair_caches
+
+
+def _entry_of(X, i):
+    """The feature of id ``i``'s first active entry in the fixture."""
+    return int(np.flatnonzero(X[i])[0])
+
+
+def _first_entries(X):
+    hit = F.lit(False)
+    for i in (18, 42):
+        hit = hit | ((F.col("id") == i) & (F.col("feature_idx") == _entry_of(X, i)))
+    return hit
+
+
+def _null_column(df, X, column):
+    long_df, labels = to_long_form(df)
+    return long_df.withColumn(
+        column, F.when(_first_entries(X), F.lit(None)).otherwise(F.col(column))
+    ), labels
+
+
+def _repeated_keys(df, X, _column):
+    long_df, labels = to_long_form(df)
+    return long_df.unionByName(long_df.filter(_first_entries(X))), labels
+
+
+def _out_of_range(df, X, _column):
+    long_df, labels = to_long_form(df)
+    f = F.when((F.col("id") == 18) & (F.col("feature_idx") == _entry_of(X, 18)), F.lit(-1))
+    f = f.when((F.col("id") == 42) & (F.col("feature_idx") == _entry_of(X, 42)), F.lit(X.shape[1]))
+    return long_df.withColumn("feature_idx", f.otherwise(F.col("feature_idx"))), labels
+
+
+@pytest.mark.parametrize(
+    "make, column, message",
+    [
+        (_null_column, "feature_idx", r"2 null 'feature_idx' value\(s\) in the long table, on id\(s\) 18, 42"),
+        (_null_column, "value", r"2 null 'value' value\(s\) in the long table, on id\(s\) 18, 42"),
+        (
+            _repeated_keys, None,
+            r"2 repeated \(id, feature_idx\) key\(s\) in the long table: \(18, \d+\), \(42, \d+\)",
+        ),
+        (
+            _out_of_range, None,
+            r"2 'feature_idx' value\(s\) outside \[0, 10\) in the long table: -1, 10, on id\(s\) 18, 42",
+        ),
+    ],
+    ids=["null-feature_idx", "null-value", "repeated-key", "out-of-range"],
+)
+@pytest.mark.parametrize("batch_size", [1.0, 0.5])
+def test_sparse_fit_checks_the_long_rows_at_the_batch_fetch(
+    spark, sparse_fixture, batch_size, make, column, message
+):
+    """The sparse fit's long-row contract, checked in each batch's one
+    Arrow fetch (no extra job; the fetch is the fit's last action):
+    null ``feature_idx`` or ``value``, a repeated ``(id, feature_idx)``
+    — the norms and dots would add both rows — and a ``feature_idx``
+    outside ``[0, n_features)``, which the finalize's numpy index used
+    to wrap (-1 ranked as the last feature). Ids 18 and 42 both land
+    in hash batch 0 of 2."""
+    from tests.test_relief import _fit_jobs
+
+    df, X, _ = sparse_fixture
+    long_df, labels = make(df, X, column)
+
+    def fit():
+        with pytest.raises(ValueError, match=message):
+            fit_relief_sparse(
+                long_df, labels, n_features=X.shape[1], num_top_features=3,
+                num_neighbors=4, batch_size=batch_size,
+            )
+
+    jobs = _fit_jobs(spark, f"test-sparse-contract-{batch_size}-{make.__name__}-{column}", fit)
+    fetches = [i for i, names in enumerate(jobs) if any("toArrow" in n for n in names)]
+    assert fetches and fetches == list(range(fetches[0], len(jobs))), jobs
+
+
+def test_sparse_fit_names_a_batch_past_the_broadcast_bound(spark, sparse_fixture, monkeypatch):
+    """The sparse twin of the dense fit's ~2 GiB broadcast guard
+    (ReliefFRSelector.scala:225-228): a batch whose CSR rows take more
+    than SPARSE_BROADCAST_MAX_BYTES fails by name at its fetch, before
+    it is broadcast or any statistics job runs."""
+    from spark_relieffc_fselection_spark.operators import relief_sparse
+    from tests.test_relief import _fit_jobs
+
+    df, X, _ = sparse_fixture
+    long_df, labels = to_long_form(df)
+    monkeypatch.setattr(relief_sparse, "SPARSE_BROADCAST_MAX_BYTES", 1000)
+
+    def fit():
+        with pytest.raises(ValueError, match=r"sparse rows take \d+ bytes, past the 1000-byte"):
+            fit_relief_sparse(
+                long_df, labels, n_features=X.shape[1], num_top_features=3, num_neighbors=4,
+            )
+
+    jobs = _fit_jobs(spark, "test-sparse-broadcast-bound", fit)
+    assert any("toArrow" in n for n in jobs[-1]), jobs
